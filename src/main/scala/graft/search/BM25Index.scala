@@ -1,12 +1,12 @@
 package graft.search
 
+import graft.similarity.AnnMeta
 import graft.util.CacheLedger.CacheOps
-import graft.util.{Stamp, StoreLock, Tables}
+import graft.util.{Stamp, StoreFs, StoreLock, Tables, Tombstones}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 
 /** Persistent BM25 serving index — the Spark-native analogue of the
   * reference's Solr collection index (`Ranking Model/src/main/java/Main/
@@ -17,7 +17,7 @@ import java.nio.file.{Files, Paths}
   *
   * Layout under one index directory:
   * {{{
-  *   params.txt             termBuckets=<B>  (persisted at build — index identity)
+  *   params.txt             termBuckets=<B>, gen=<G>  (persisted at build)
   *   postings/tb=<0..B-1>/  (doc, term, tf, positions, len)  sorted by (term, doc)
   *   termstats/tb=<0..B-1>/ (term, df)                       sorted by term
   *   corpus/                (n, avglen)                      one row
@@ -46,6 +46,12 @@ import java.nio.file.{Files, Paths}
   * vocabulary, which is how the count grows as segments fold in. Per-
   * bucket files bucketed by doc (for co-partitioned score joins) remain
   * the 100-TB follow-on.
+  *
+  * Appended segments live under `segments/<name>/` with the same layout.
+  * Updates and deletes follow the shared [[graft.util.Tombstones]]
+  * contract at PART granularity: each part's `gen` is the generation
+  * that wrote it (the base is 0) and stands in for the `__gen` of every
+  * posting in it.
   *
   * Why directory partitioning instead of [[graft.sources.Sinks.bucketedTable]]
   * (bucketBy + saveAsTable): bucketed-table reads resolve through the session
@@ -76,8 +82,7 @@ object BM25Index {
   /** The PERSISTED bucket count of an index part — the only value a
     * probe may use (a guessed modulus prunes to the wrong directory).
     */
-  def termBuckets(part: String): Int =
-    graft.similarity.AnnMeta.readKey(part, "termBuckets")
+  def termBuckets(part: String): Int = AnnMeta.readKey(part, "termBuckets")
 
   /** Engine-independent term bucket, computable as a Column at build time
     * and on the driver at query time (java.util.zip.CRC32 and Spark's
@@ -105,11 +110,14 @@ object BM25Index {
     */
   def build(docs: DataFrame, idCol: String, textCol: String, dest: String): Unit = {
     // a rebuild starts from a clean delete state: stale tombstones would
-    // exclude rebuilt docs whose upsert segments no longer exist. ONE
-    // canonical clear (tombstone dir + generation counter, both through
-    // the StoreFs seam) — re-implementing it here split the delete
-    // across two filesystems under a swapped Fs.
-    graft.util.Tombstones.clear(dest)
+    // exclude rebuilt docs whose upsert segments no longer exist
+    Tombstones.clear(dest)
+    writePart(docs, idCol, textCol, dest, gen = 0L)
+  }
+
+  /** One index part (base or segment) at generation `gen`. */
+  private def writePart(docs: DataFrame, idCol: String, textCol: String,
+                        dest: String, gen: Long): Unit = {
     // positional postings (Lucene stores positions alongside tf the same
     // way): tf and the sorted position list come out of ONE aggregation
     // over the positional token stream, so adding positions costs no extra
@@ -131,7 +139,8 @@ object BM25Index {
         val buckets = autoTermBuckets(tstats.count())
         // metadata BEFORE artifacts (the AnnMeta ordering): a reader
         // never sees postings without the modulus that routes them
-        graft.similarity.AnnMeta.write(dest, "termBuckets" -> buckets)
+        AnnMeta.write(dest, "termBuckets" -> buckets,
+          "gen" -> Math.toIntExact(gen))
         val lens = post.groupBy(col("doc")).agg(sum(col("tf")).as("len"))
         post.join(lens, "doc")
           .withColumn("tb", termBucketCol(col("term"), buckets))
@@ -158,10 +167,14 @@ object BM25Index {
     * index. [[topKMerged]] serves the union with globally merged df/N/
     * avglen, which makes segment-append + merged-serve EXACTLY equal to a
     * full rebuild (spec-asserted). Contract: appended docs are NEW ids
-    * (dedup upstream) — re-adding an id would double-count its postings,
-    * the same contract Solr's add-without-delete has. Background segment
-    * compaction (merge small segments into the base) is the standard
-    * follow-on and reuses [[build]] unchanged.
+    * (dedup upstream) — re-adding a live id would double-count its
+    * postings, the same contract Solr's add-without-delete has.
+    *
+    * The segment is built in a staging dir beside `segments/` and
+    * published by ONE atomic rename, so a concurrent reader lists either
+    * no segment or a complete one — never a directory whose params,
+    * postings or corpus are still being written. A crashed append leaves
+    * only the staging dir, which [[StoreAdmin.gcOrphans]] reclaims.
     */
   def appendSegment(docs: DataFrame, idCol: String, textCol: String,
                     dest: String, name: String): Unit =
@@ -169,41 +182,51 @@ object BM25Index {
     // segment delete is a whole-index rewrite with no segment-file
     // model, so a racing append must collide loudly, not vanish
     StoreLock.withLock(dest, "append") {
-      appendSegmentUnlocked(docs, idCol, textCol, dest, name)
+      publishSegment(docs, idCol, textCol, dest, name, upsert = false)
     }
-
-  private def appendSegmentUnlocked(docs: DataFrame, idCol: String,
-                                    textCol: String, dest: String,
-                                    name: String): Unit =
-    build(docs, idCol, textCol, s"$dest/segments/$name")
 
   /** Id-keyed OVERWRITE — the reference indexer's `addBean`-with-existing-
     * id semantics (`SolrIndexer.java:47-59`), expressed the way Lucene
     * expresses it: delete + add with tombstones folded at merge. The
-    * batch's ids are tombstoned at a fresh generation with the NEW
-    * segment recorded as the one part their postings may still be served
-    * from, then the batch indexes as a normal segment. Serving
-    * ([[topKMerged]]/[[topKPhrase]]) drops a tombstoned doc's rows from
-    * every part EXCEPT that segment, so exactly the latest version
-    * scores; corpus statistics (df/N/avglen) keep counting the dead
-    * version until [[compact]] — precisely Lucene's deleted-docs-in-
-    * stats behavior, and compaction is the stats-refresh event (after
-    * it the index equals a fresh build over the updated corpus,
-    * spec-asserted bit-equal). Tombstone-first ordering: a crash between
-    * the two writes leaves the doc ABSENT (recoverable — retry the
-    * upsert with the SAME segment name and it converges at a higher
-    * generation) rather than serving two versions.
+    * batch indexes as a segment at a fresh generation and its ids are
+    * tombstoned at that same generation, which kills every older version
+    * and spares the new segment. Corpus statistics (df/N/avglen) keep
+    * counting the dead version until [[compact]] — precisely Lucene's
+    * deleted-docs-in-stats behavior, and compaction is the stats-refresh
+    * event (after it the index equals a fresh build over the updated
+    * corpus, spec-asserted bit-equal). The tombstone lands after the
+    * staged segment is built and before it is published: a crash leaves
+    * the doc absent (retry the upsert and it converges at a higher
+    * generation), never served twice, and the doc is absent only for
+    * the rename.
     */
   def upsertSegment(docs: DataFrame, idCol: String, textCol: String,
-                    dest: String, name: String): Unit = {
-    // trim-nonEmpty: a blank name could collide with a real segment on
-    // sloppy input (NoPart itself is the unmatchable NUL sentinel below)
-    require(name.trim.nonEmpty, "upsert segment needs a non-blank name")
+                    dest: String, name: String): Unit =
     StoreLock.withLock(dest, "append") {
-      writeTombstones(docs.select(col(idCol).cast("string").as("__id")),
-        dest, exceptPart = name)
-      appendSegmentUnlocked(docs, idCol, textCol, dest, name)
+      publishSegment(docs, idCol, textCol, dest, name, upsert = true)
     }
+
+  /** Test seam: runs with the segment fully staged (and an upsert's
+    * tombstone written), just before the publishing rename.
+    */
+  private[search] var testHookBeforePublish: String => Unit = _ => ()
+
+  private def publishSegment(docs: DataFrame, idCol: String, textCol: String,
+                             dest: String, name: String,
+                             upsert: Boolean): Unit = {
+    require(name.trim.nonEmpty, "a segment needs a non-blank name")
+    val gen = Tombstones.nextGen(dest)
+    val staged = Paths.get(dest, s"segment-$name-rewrite-tmp")
+    StoreFs.deleteRecursively(staged)
+    writePart(docs, idCol, textCol, staged.toString, gen)
+    if (upsert)
+      Tombstones.write(docs.select(col(idCol)), dest, gen, Tombstones.StringKey)
+    testHookBeforePublish(dest)
+    val target = Paths.get(dest, "segments", name)
+    // a reused name replaces its segment, so a re-run batch converges
+    StoreFs.deleteRecursively(target)
+    StoreFs.createDirectories(target.getParent)
+    StoreFs.atomicMove(staged, target)
   }
 
   /** Tombstone-only delete (Solr's deleteById): the ids stop being
@@ -213,80 +236,27 @@ object BM25Index {
   def deleteDocs(spark: SparkSession, dest: String, ids: Seq[Any]): Unit =
     StoreLock.withLock(dest, "append") {
       import spark.implicits._
-      writeTombstones(ids.map(String.valueOf).toDF("__id"), dest,
-        exceptPart = NoPart)
+      Tombstones.write(ids.map(String.valueOf).toDF("__id"), dest,
+        Tombstones.nextGen(dest), Tombstones.StringKey)
     }
 
-  // never a valid part tag (base = "", segment names are required
-  // nonempty), so a delete's tombstone excludes the doc from every part
-  private val NoPart = "\u0000"
-
-  private val tombSchema = StructType(Seq(
-    StructField("__id", StringType), StructField("__gen", LongType),
-    StructField("__except", StringType)))
-
-  private def writeTombstones(ids: DataFrame, dest: String,
-                              exceptPart: String): Unit = {
-    // generation-counter IO rides the StoreFs seam (safe under the
-    // store lock every writer holds)
-    val gen = {
-      val f = Paths.get(dest, "_gen.txt")
-      val g = (if (graft.util.StoreFs.exists(f))
-        graft.util.StoreFs.readString(f).trim.toLong else 0L) + 1
-      graft.util.StoreFs.createDirectories(f.getParent)
-      graft.util.StoreFs.writeString(f, g.toString)
-      g
-    }
-    ids.select(col(ids.columns.head).cast("string").as("__id")).distinct()
-      .withColumn("__gen", lit(gen))
-      .withColumn("__except", lit(exceptPart))
-      .coalesce(1).write.mode("append").parquet(s"$dest/_tombstones")
-  }
-
-  /** The LATEST tombstone per doc id (an id upserted twice is governed
-    * only by its newest tombstone — applying both would kill every
-    * version), broadcast-sized by the same argument as Lucene's live-docs
-    * bitmaps: proportional to deletes since the last merge.
-    */
-  private def latestTombstones(spark: SparkSession,
-                               dest: String): Option[DataFrame] = {
-    val dir = Paths.get(dest, "_tombstones")
-    if (!Files.isDirectory(dir)) None
-    else {
-      import org.apache.spark.sql.expressions.Window
-      Some(spark.read.schema(tombSchema).parquet(dir.toString)
-        .withColumn("__rn", row_number().over(Window.partitionBy("__id")
-          .orderBy(col("__gen").desc, col("__except").asc)))
-        .filter(col("__rn") === 1).drop("__rn", "__gen"))
-    }
-  }
-
-  /** Part-tagged postings union with the tombstone exclusion applied: a
-    * tombstoned doc's rows survive only in the tombstone's `__except`
-    * part. No-op (no tag column, no join) when the index has never seen
-    * an upsert/delete.
+  /** Union of the parts' postings with the tombstone kill applied, each
+    * part's rows at the part's generation. No-op (no generation column,
+    * no join) when the index has never seen an upsert/delete.
     */
   private def livePostings(spark: SparkSession, dest: String,
                            parts: Seq[String],
                            prune: (String, DataFrame) => DataFrame): DataFrame = {
-    latestTombstones(spark, dest) match {
-      case None =>
-        parts.map(p => prune(p, spark.read.parquet(s"$p/postings")))
-          .reduce(_.unionAll(_))
-      case Some(tomb) =>
-        val tagged = parts.map(p =>
-            prune(p, spark.read.parquet(s"$p/postings"))
-              .withColumn("__part", lit(partTag(dest, p))))
-          .reduce(_.unionAll(_))
-        tagged.join(broadcast(tomb),
-            tagged("doc").cast("string") === tomb("__id") &&
-              tagged("__part") =!= tomb("__except"), "left_anti")
-          .drop("__part")
-    }
+    val tombs = Tombstones.snapshot(dest)
+    val rows = parts.map { p =>
+      val post = prune(p, spark.read.parquet(s"$p/postings"))
+      if (tombs.isEmpty) post
+      else post.withColumn("__gen", lit(AnnMeta.readKey(p, "gen").toLong))
+    }.reduce(_.unionAll(_))
+    if (tombs.isEmpty) rows
+    else Tombstones.kill(spark, tombs, rows, "doc", Tombstones.StringKey)
+      .drop("__gen")
   }
-
-  private def partTag(dest: String, part: String): String =
-    if (part == dest) "" else Paths.get(part).getFileName.toString
 
   /** Segment compaction — fold every appended segment back into the base,
     * WITHOUT re-tokenizing any document: postings rows are already the
@@ -300,8 +270,7 @@ object BM25Index {
     */
   def compact(spark: SparkSession, dest: String): Unit = StoreLock.withLock(dest, "compact") {
     val parts = partDirs(dest)
-    val purging = Files.isDirectory(Paths.get(dest, "_tombstones"))
-    if (parts.size > 1 || purging) {
+    if (parts.size > 1 || Tombstones.has(dest)) {
       val post = livePostings(spark, dest, parts, (_, df) => df)
         .drop("tb").persistBounded()
       // corpus stats recomputed from the SURVIVING per-(doc, term) ground
@@ -322,7 +291,7 @@ object BM25Index {
         val tstats = post.groupBy(col("term"))
           .agg(count(lit(1)).cast("double").as("df")).persistBounded()
         val buckets = autoTermBuckets(tstats.count())
-        graft.similarity.AnnMeta.write(tmp, "termBuckets" -> buckets)
+        AnnMeta.write(tmp, "termBuckets" -> buckets, "gen" -> 0)
         post
           .withColumn("tb", termBucketCol(col("term"), buckets))
           .repartition(col("tb"))
@@ -347,31 +316,23 @@ object BM25Index {
         // removed after, a crash between the corpus move and the segment
         // delete would leave a valid sentinel alongside the old segments
         // and topKMerged would double-count every compacted segment doc.
-        val swapOrder = Seq("corpus", graft.similarity.AnnMeta.File,
-          "postings", "termstats")
-        swapOrder.foreach(sub =>
-          graft.util.StoreFs.deleteRecursively(Paths.get(dest, sub)))
-        graft.util.StoreFs.deleteRecursively(Paths.get(dest, "segments"))
+        val swapOrder = Seq("corpus", AnnMeta.File, "postings", "termstats")
+        swapOrder.foreach(sub => StoreFs.deleteRecursively(Paths.get(dest, sub)))
+        StoreFs.deleteRecursively(Paths.get(dest, "segments"))
         // tombstones go with the segments: their deletes are now folded
-        // physically (and the stats refreshed), like Lucene's merge
-        graft.util.StoreFs.deleteRecursively(Paths.get(dest, "_tombstones"))
+        // physically (and the stats refreshed), like Lucene's merge — and
+        // the folded base is generation 0 again
+        Tombstones.clear(dest)
         swapOrder.reverse.foreach(sub =>
-          graft.util.StoreFs.move(Paths.get(tmp, sub), Paths.get(dest, sub)))
-        graft.util.StoreFs.deleteRecursively(Paths.get(tmp))
+          StoreFs.move(Paths.get(tmp, sub), Paths.get(dest, sub)))
+        StoreFs.deleteRecursively(Paths.get(tmp))
       } finally post.unpersist()
     }
   }
 
   /** All index parts: the base plus any appended segments. */
-  private def partDirs(dest: String): Seq[String] = {
-    val segRoot = Paths.get(dest, "segments")
-    val segs =
-      if (Files.isDirectory(segRoot)) {
-        val s = Files.list(segRoot)
-        try s.toArray.map(_.toString).toSeq.sorted finally s.close()
-      } else Seq.empty
-    dest +: segs
-  }
+  private def partDirs(dest: String): Seq[String] =
+    dest +: StoreFs.list(Paths.get(dest, "segments")).map(_.toString).sorted
 
   /** Serving-path top-k over base + segments: per-part bucket/term-pruned
     * postings reads unioned, df summed per term across parts, corpus stats
@@ -410,17 +371,17 @@ object BM25Index {
   }
 
   def isBuilt(dest: String): Boolean =
-    Files.exists(Paths.get(dest, "corpus", "_SUCCESS"))
+    StoreFs.exists(Paths.get(dest, "corpus", "_SUCCESS"))
 
   /** Canonical index location for a testdata sf dir: under the repo's build
     * dir by default (`user.dir` = the sbt fork's working directory), or
     * `GRAFT_INDEX_DIR` when set — never a hardcoded absolute path.
     */
   def defaultDir(sfDir: String): String = {
-    // v4: termBuckets persisted per part (the v3 layout routed by a
-    // compile-time constant; the bump orphans it so stamped stores can
-    // never be probed under a modulus they weren't built with)
-    graft.util.StoreDirs.resolve("bm25-index-v4", sfDir)
+    // v5: each part persists its generation and tombstones carry the
+    // shared (__id, __gen) schema — the bump orphans older layouts so a
+    // stamped store is never read under a contract it wasn't built with
+    graft.util.StoreDirs.resolve("bm25-index-v5", sfDir)
   }
 
   /** Build-if-absent-or-stale for a testdata documents corpus; returns the
@@ -447,9 +408,9 @@ object BM25Index {
     val dest = defaultDir(sfDir) + "__incr"
     val stamp = Stamp.sourceStamp(sfDir)
     val fresh = isBuilt(dest) && Stamp.isFresh(dest, stamp) &&
-      Files.isDirectory(Paths.get(dest, "segments"))
+      StoreFs.isDirectory(Paths.get(dest, "segments"))
     if (!fresh) {
-      deleteRecursively(Paths.get(dest))
+      StoreFs.deleteRecursively(Paths.get(dest))
       val docs = Tables.documents(spark, sfDir)
       build(docs.filter(col("doc_id") % 5 =!= 0), "doc_id", "text", dest)
       appendSegment(docs.filter(col("doc_id") % 5 === 0), "doc_id", "text",
@@ -458,14 +419,6 @@ object BM25Index {
     }
     dest
   }
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit =
-    if (Files.exists(p)) {
-      val s = Files.walk(p)
-      try s.sorted(java.util.Comparator.reverseOrder())
-        .forEach(q => Files.delete(q))
-      finally s.close()
-    }
 
   /** Serving-path top-k: reads only the bucket-pruned, term-filtered
     * postings/termstats slices plus the 1-row corpus; the whole query is two

@@ -1,12 +1,10 @@
 package graft.search
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Path, Paths}
 
-import scala.jdk.CollectionConverters._
-
-import graft.util.{StoreFs, StoreLock}
+import graft.util.{StoreFs, StoreLock, Tombstones}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** Persisted request-time layouts for the two non-keyword REST routes —
@@ -65,25 +63,22 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * loss. All maintenance ops hold the lock, serializing maintenance
   * against maintenance; a crashed holder's lock is stolen when stale.
   * Writers are additionally single-writer per store AMONG THEMSELVES
-  * (the generation counter below is read-inc-write) — the contract the
+  * (the generation counter is read-inc-write) — the contract the
   * live ingest loop already has, stated here like
   * [[StoreAdmin.gcOrphans]]'s.
   *
   * == Update/delete semantics (tombstones) ==
   *
-  * Every row carries `__gen`, the store generation that wrote it (build
-  * = 0; each append/upsert bumps the persisted `_gen.txt` counter). An
-  * upsert appends the batch's ids to a small `_tombstones/` side table
-  * as `(__id, __gen)` BEFORE appending the batch's new rows at that same
-  * generation — a tombstone kills every row of that id with a STRICTLY
-  * LOWER generation, so the upsert's own rows survive it, a later
-  * upsert's tombstone kills them, and a crash between the two writes
-  * (or a retried upsert) converges instead of serving two versions.
-  * Probes anti-join the broadcast tombstone set when one exists (zero
-  * cost for never-upserted stores); full compaction and rebucketing
-  * apply the filter physically and clear exactly the tombstone files
-  * they folded — Lucene's delete+add with tombstones folded at merge.
-  * [[deleteIds]] is the tombstone-only half (Solr's deleteById).
+  * The shared [[graft.util.Tombstones]] contract, keyed on the string
+  * form of the identity column the first upsert/delete names
+  * (`_idcol.txt`): each append/upsert writes its rows at a fresh
+  * generation, an upsert tombstones the batch's ids at that generation
+  * BEFORE appending the new rows (a crash between the writes leaves the
+  * doc absent, never served twice), and probes drop what a tombstone
+  * outranks. Full compaction and rebucketing apply the filter
+  * physically and clear exactly the tombstone files they folded —
+  * Lucene's delete+add with tombstones folded at merge. [[deleteIds]]
+  * is the tombstone-only half (Solr's deleteById).
   *
   * All rewrites land in a sibling tmp first with `_buckets.txt` as the
   * swap sentinel (stamp deleted first, restored last — the
@@ -96,10 +91,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 object ServingStores {
 
   val DefaultBuckets = 64
-
-  private val TombstoneDir = "_tombstones"
-  private val tombSchema = StructType(Seq(
-    StructField("__id", StringType), StructField("__gen", LongType)))
 
   /** Test seam: runs after a fold's tmp generation is fully materialized
     * and before the swap — the widest window in which a concurrent
@@ -162,7 +153,8 @@ object ServingStores {
                      dropCols: Seq[String] = Nil): Unit = {
     assertWritable(dest)
     val buckets = readBuckets(dest)
-    writeLayout(postingRows(batch, keysCol, buckets, dropCols, nextGen(dest)),
+    writeLayout(postingRows(batch, keysCol, buckets, dropCols,
+        Tombstones.nextGen(dest)),
       Seq(col("__key")), dest, "append")
     assertNoRebucketRace(dest)
   }
@@ -181,9 +173,9 @@ object ServingStores {
                      dest: String, dropCols: Seq[String] = Nil): Unit = {
     assertWritable(dest)
     val buckets = readBuckets(dest)
-    val gen = nextGen(dest)
+    val gen = Tombstones.nextGen(dest)
     writeIdCol(dest, idCol)
-    writeTombstones(batch.select(col(idCol)), dest, gen)
+    Tombstones.write(batch.select(col(idCol)), dest, gen, Tombstones.StringKey)
     writeLayout(postingRows(batch, keysCol, buckets, dropCols, gen),
       Seq(col("__key")), dest, "append")
     assertNoRebucketRace(dest)
@@ -196,20 +188,13 @@ object ServingStores {
   def deleteIds(spark: SparkSession, dest: String, idCol: String,
                 ids: Seq[Any]): Unit = {
     assertWritable(dest)
-    val gen = nextGen(dest)
+    val gen = Tombstones.nextGen(dest)
     writeIdCol(dest, idCol)
     import spark.implicits._
-    writeTombstones(ids.map(String.valueOf).toDF("__id"), dest, gen)
+    Tombstones.write(ids.map(String.valueOf).toDF("__id"), dest, gen,
+      Tombstones.StringKey)
     assertNoRebucketRace(dest)
   }
-
-  private def writeTombstones(ids: DataFrame, dest: String, gen: Long): Unit =
-    ids.select(ids.columns.head)
-      .select(col(ids.columns.head).cast("string").as("__id"))
-      .distinct()
-      .withColumn("__gen", lit(gen))
-      .coalesce(1)
-      .write.mode("append").parquet(s"$dest/$TombstoneDir")
 
   /** Fold accumulated small files back into one read-optimized
     * generation per bucket and physically purge tombstoned rows: every
@@ -276,7 +261,8 @@ object ServingStores {
     val rows = readStore(spark, dest)
       .filter(col("__bucket") === bucketOf(lit(key), buckets) &&
         col("__key") === key)
-    dropDead(spark, dest, rows).drop("__key", "__bucket", "__gen")
+    dropDead(spark, dest, rows, Tombstones.snapshot(dest))
+      .drop("__key", "__bucket", "__gen")
   }
 
   /** Fact rows partitioned by `pmod(hash(fk), buckets)`, sorted by
@@ -301,7 +287,7 @@ object ServingStores {
                      sortCols: Seq[Column] = Nil): Unit = {
     assertWritable(dest)
     val buckets = readBuckets(dest)
-    writeLayout(batch.withColumn("__gen", lit(nextGen(dest)))
+    writeLayout(batch.withColumn("__gen", lit(Tombstones.nextGen(dest)))
         .withColumn("__bucket", bucketOf(col(fkCol), buckets)),
       col(fkCol) +: sortCols, dest, "append")
     assertNoRebucketRace(dest)
@@ -315,9 +301,9 @@ object ServingStores {
                      dest: String, sortCols: Seq[Column] = Nil): Unit = {
     assertWritable(dest)
     val buckets = readBuckets(dest)
-    val gen = nextGen(dest)
+    val gen = Tombstones.nextGen(dest)
     writeIdCol(dest, idCol)
-    writeTombstones(batch.select(col(idCol)), dest, gen)
+    Tombstones.write(batch.select(col(idCol)), dest, gen, Tombstones.StringKey)
     writeLayout(batch.withColumn("__gen", lit(gen))
         .withColumn("__bucket", bucketOf(col(fkCol), buckets)),
       col(fkCol) +: sortCols, dest, "append")
@@ -364,8 +350,8 @@ object ServingStores {
         .map(v => col("__bucket") === bucketOf(lit(v), buckets) &&
           col(fkCol) === lit(v))
         .reduce(_ || _)
-      dropDead(spark, dest, readStore(spark, dest).filter(pred))
-        .drop("__bucket", "__gen")
+      dropDead(spark, dest, readStore(spark, dest).filter(pred),
+        Tombstones.snapshot(dest)).drop("__bucket", "__gen")
     }
   }
 
@@ -418,7 +404,7 @@ object ServingStores {
     val dest = defaultDir(sfDir) + "/doc_postings_incr"
     val stamp = graft.util.Stamp.sourceStamp(sfDir)
     if (!graft.util.Stamp.isFresh(dest, stamp)) {
-      deleteRecursively(Paths.get(dest))
+      StoreFs.deleteRecursively(Paths.get(dest))
       def docs = graft.util.Tables.documents(spark, sfDir)
         .select(col("doc_id"), col("source"), col("n_chars"),
           split(col("text"), " ").as("__words"))
@@ -447,7 +433,7 @@ object ServingStores {
     val dest = defaultDir(sfDir) + "/orders_by_cust_incr"
     val stamp = graft.util.Stamp.sourceStamp(sfDir, "orders.parquet")
     if (!graft.util.Stamp.isFresh(dest, stamp)) {
-      deleteRecursively(Paths.get(dest))
+      StoreFs.deleteRecursively(Paths.get(dest))
       def orders = graft.util.Tables.orders(spark, sfDir)
       val sorts = Seq(col("o_orderdate").desc)
       buildTimeline(orders.filter(col("o_orderkey") % 5 =!= 0), "o_custkey",
@@ -476,7 +462,7 @@ object ServingStores {
     val dest = defaultDir(sfDir) + "/doc_postings_upsert"
     val stamp = graft.util.Stamp.sourceStamp(sfDir)
     if (!graft.util.Stamp.isFresh(dest, stamp)) {
-      deleteRecursively(Paths.get(dest))
+      StoreFs.deleteRecursively(Paths.get(dest))
       val docs = graft.util.Tables.documents(spark, sfDir)
         .select(col("doc_id"), col("source"), col("n_chars"), col("text"))
       buildPostings(
@@ -517,7 +503,7 @@ object ServingStores {
     val dest = defaultDir(sfDir) + "/orders_by_cust_upsert"
     val stamp = graft.util.Stamp.sourceStamp(sfDir, "orders.parquet")
     if (!graft.util.Stamp.isFresh(dest, stamp)) {
-      deleteRecursively(Paths.get(dest))
+      StoreFs.deleteRecursively(Paths.get(dest))
       val orders = graft.util.Tables.orders(spark, sfDir)
       val sorts = Seq(col("o_orderdate").desc)
       buildTimeline(orders, "o_custkey", dest, sortCols = sorts)
@@ -535,22 +521,15 @@ object ServingStores {
   /** Parquet data files currently in the store (bucket dirs only — the
     * tombstone side table is maintenance metadata, not servable data).
     */
-  def dataFileCount(dest: String): Int = {
-    val root = Paths.get(dest)
-    if (!Files.isDirectory(root)) 0
-    else {
-      val s = Files.list(root)
-      try s.iterator().asScala
-        .filter(p => Files.isDirectory(p) &&
-          p.getFileName.toString.startsWith("__bucket="))
-        .map(p => parquetFiles(p).size)
-        .sum
-      finally s.close()
-    }
-  }
+  def dataFileCount(dest: String): Int =
+    StoreFs.list(Paths.get(dest))
+      .filter(p => p.getFileName.toString.startsWith("__bucket=") &&
+        StoreFs.isDirectory(p))
+      .map(p => StoreFs.parquetFiles(p).size)
+      .sum
 
   /** True iff the store has tombstones a probe still needs to apply. */
-  def hasTombstones(dest: String): Boolean = tombstoneFiles(dest).nonEmpty
+  def hasTombstones(dest: String): Boolean = Tombstones.has(dest)
 
   /** Atomic full rewrite for REBUCKETING (`reBucket` = the key column
     * whose hash re-derives `__bucket` under `newBuckets`) — the one
@@ -564,50 +543,63 @@ object ServingStores {
     * tmp for [[StoreAdmin.gcOrphans]]); a crash after the stamp delete
     * leaves a store `Stamp.isFresh` rejects, so the build-if-stale
     * callers REBUILD — whether probes still serve the old generation
-    * (sentinel intact) or fail loudly (sentinel gone). The inverted
-    * order (stamp restored before `_buckets.txt` is written, or the
-    * sentinel deleted while the stamp survives) would leave a
-    * fresh-stamped store with no bucket sentinel: ensure* skips it and
-    * every probe crashes, forever. The stamp's VALUE survives a
-    * completed rewrite (compaction does not change what source the store
-    * was built from), and so does the generation counter — surviving
-    * rows keep their `__gen`, and future tombstones must outrank them.
+    * (sentinel intact) or fail loudly (sentinel gone). The stamp's VALUE
+    * survives a completed rewrite (compaction does not change what
+    * source the store was built from), and so does the generation
+    * counter — surviving rows keep their `__gen`, and future tombstones
+    * must outrank them.
     */
   private def rewriteStore(spark: SparkSession, dest: String,
                            newBuckets: Int, sortCols: Seq[Column],
                            reBucket: Column): Unit =
     StoreLock.withLock(dest, "rebucket") {
-      val rows = dropDead(spark, dest, readStore(spark, dest))
+      val rows = dropDead(spark, dest, readStore(spark, dest),
+        Tombstones.snapshot(dest))
         .drop("__bucket")
         .withColumn("__bucket", bucketOf(reBucket, newBuckets))
-      val stampFile = Paths.get(dest, "source_stamp.txt")
-      val stamp = if (StoreFs.exists(stampFile))
-                    Some(StoreFs.readString(stampFile))
-                  else None
       val tmp = dest.stripSuffix("/") + "-rewrite-tmp"
       writeLayout(rows, sortCols, tmp, "overwrite")
-      val schema = rows.schema
-      testHookBeforeSwap(dest)
-      StoreFs.deleteIfExists(stampFile)
-      StoreFs.deleteIfExists(Paths.get(dest, "_buckets.txt"))
-      // wipe the old generation's CONTENT but keep the maintenance lock
-      // (deleting it mid-swap would void the writers' entry AND
-      // post-write race checks — a batch landing here would be silently
-      // destroyed with no one throwing) and the generation counter +
-      // identity column (a fresh upsert racing the counter's restore
-      // would mint a tombstone that never outranks the surviving rows).
-      // The sentinel is already down, so anything that slips past the
-      // lock check still fails loudly at readBuckets.
-      val keep = Set(StoreLock.LockFile, "_gen.txt", "_idcol.txt")
-      listDir(Paths.get(dest))
-        .filterNot(p => keep.contains(p.getFileName.toString))
-        .foreach(deleteRecursively)
-      listDir(Paths.get(tmp)).foreach(p =>
-        StoreFs.move(p, Paths.get(dest).resolve(p.getFileName)))
-      StoreFs.deleteIfExists(Paths.get(tmp))
-      writeMeta(dest, newBuckets, schema)
-      stamp.foreach(StoreFs.writeString(stampFile, _))
+      swap(dest, newBuckets) {
+        // wipe the old generation's CONTENT but keep the maintenance lock
+        // (deleting it mid-swap would void the writers' entry AND
+        // post-write race checks — a batch landing here would be silently
+        // destroyed with no one throwing) and the generation counter +
+        // identity column (a fresh upsert racing the counter's restore
+        // would mint a tombstone that never outranks the surviving rows).
+        // The sentinel is already down, so anything that slips past the
+        // lock check still fails loudly at readBuckets.
+        val keep = Set(StoreLock.LockFile, Tombstones.GenFile, "_idcol.txt")
+        StoreFs.list(Paths.get(dest))
+          .filterNot(p => keep.contains(p.getFileName.toString))
+          .foreach(StoreFs.deleteRecursively)
+        StoreFs.list(Paths.get(tmp)).foreach(p =>
+          StoreFs.move(p, Paths.get(dest).resolve(p.getFileName)))
+        StoreFs.deleteIfExists(Paths.get(tmp))
+        StoreFs.writeString(Paths.get(dest, "_schema.json"), rows.schema.json)
+      }
     }
+
+  /** The swap window of every rewrite: after [[testHookBeforeSwap]], the
+    * staleness stamp comes down FIRST and the `_buckets.txt` sentinel
+    * second; `body` swaps the content; then the sentinel goes back up
+    * and the stamp LAST — the [[graft.util.AtomicRewrite]] invariant. The
+    * inverted order (stamp restored before the sentinel, or the sentinel
+    * deleted while the stamp survives) would leave a fresh-stamped store
+    * with no bucket sentinel: ensure* skips it and every probe crashes,
+    * forever.
+    */
+  private def swap(dest: String, buckets: Int)(body: => Unit): Unit = {
+    testHookBeforeSwap(dest)
+    val stampFile = Paths.get(dest, "source_stamp.txt")
+    val stamp = if (StoreFs.exists(stampFile))
+                  Some(StoreFs.readString(stampFile))
+                else None
+    StoreFs.deleteIfExists(stampFile)
+    StoreFs.deleteIfExists(Paths.get(dest, "_buckets.txt"))
+    body
+    StoreFs.writeString(Paths.get(dest, "_buckets.txt"), buckets.toString)
+    stamp.foreach(StoreFs.writeString(stampFile, _))
+  }
 
   /** Segment-model selective fold shared by the two layouts and both
     * compaction flavors. SNAPSHOT: the explicit parquet file list of
@@ -633,94 +625,54 @@ object ServingStores {
       val buckets = readBuckets(dest) // fails loudly on a mid-swap store
       val snap: Map[Int, Seq[Path]] =
         (0 until buckets).map(b =>
-          b -> parquetFiles(Paths.get(dest, s"__bucket=$b"))).toMap
-      val tombSnap = tombstoneFiles(dest)
+          b -> StoreFs.parquetFiles(Paths.get(dest, s"__bucket=$b"))).toMap
+      val tombSnap = Tombstones.snapshot(dest)
       val hot = (0 until buckets).filter(b => snap(b).size >= minFiles)
       if (hot.nonEmpty) {
         val rowSchema = readSchema(dest).getOrElse(
           spark.read.parquet(dest).schema)
         val fileSchema = StructType(rowSchema.filterNot(_.name == "__bucket"))
         val tmpRoot = dest.stripSuffix("/") + "-rewrite-tmp"
-        deleteRecursively(Paths.get(tmpRoot))
-        val tomb =
-          if (tombSnap.isEmpty) None
-          else Some((readIdCol(dest), spark.read.schema(tombSchema)
-            .parquet(tombSnap.map(_.toString): _*)))
+        StoreFs.deleteRecursively(Paths.get(tmpRoot))
         // 1. materialize every replacement before touching the store
         hot.foreach { b =>
           val raw = spark.read.schema(fileSchema)
             .parquet(snap(b).map(_.toString): _*)
-          val live = tomb match {
-            case Some((idc, tb)) => raw.join(broadcast(tb),
-              raw(idc).cast("string") === tb("__id") &&
-                raw("__gen") < tb("__gen"), "left_anti")
-            case None => raw
-          }
-          live.coalesce(1).sortWithinPartitions(sortCols: _*)
+          dropDead(spark, dest, raw, tombSnap)
+            .coalesce(1).sortWithinPartitions(sortCols: _*)
             .write.mode("overwrite").parquet(s"$tmpRoot/__bucket=$b")
         }
-        testHookBeforeSwap(dest)
-        // 2. stamp first, sentinel second (the rewriteStore ordering)
-        val stampFile = Paths.get(dest, "source_stamp.txt")
-        val stamp = if (StoreFs.exists(stampFile))
-                      Some(StoreFs.readString(stampFile))
-                    else None
-        StoreFs.deleteIfExists(stampFile)
-        StoreFs.deleteIfExists(Paths.get(dest, "_buckets.txt"))
-        hot.foreach { b =>
-          val dir = Paths.get(dest, s"__bucket=$b")
-          StoreFs.createDirectories(dir)
-          parquetFiles(Paths.get(tmpRoot, s"__bucket=$b"))
-            .foreach(f => StoreFs.move(f, dir.resolve(f.getFileName)))
-          snap(b).foreach(StoreFs.deleteIfExists(_))
+        // 2. per-bucket swaps under the downed stamp + sentinel
+        swap(dest, buckets) {
+          hot.foreach { b =>
+            val dir = Paths.get(dest, s"__bucket=$b")
+            StoreFs.createDirectories(dir)
+            StoreFs.parquetFiles(Paths.get(tmpRoot, s"__bucket=$b"))
+              .foreach(f => StoreFs.move(f, dir.resolve(f.getFileName)))
+            snap(b).foreach(StoreFs.deleteIfExists(_))
+          }
+          val foldedEverything = (0 until buckets)
+            .forall(b => snap(b).isEmpty || hot.contains(b))
+          if (foldedEverything) tombSnap.foreach(StoreFs.deleteIfExists(_))
+          StoreFs.deleteRecursively(Paths.get(tmpRoot))
         }
-        val foldedEverything = (0 until buckets)
-          .forall(b => snap(b).isEmpty || hot.contains(b))
-        if (foldedEverything) tombSnap.foreach(StoreFs.deleteIfExists(_))
-        StoreFs.deleteRecursively(Paths.get(tmpRoot))
-        // 3. sentinel back, stamp last
-        StoreFs.writeString(Paths.get(dest, "_buckets.txt"), buckets.toString)
-        stamp.foreach(StoreFs.writeString(stampFile, _))
       }
       hot
     }
 
   /** Parquet data files currently in one bucket dir. */
   def bucketFileCount(dest: String, bucket: Int): Int =
-    parquetFiles(Paths.get(dest, s"__bucket=$bucket")).size
+    StoreFs.parquetFiles(Paths.get(dest, s"__bucket=$bucket")).size
 
-  private def parquetFiles(dir: Path): Seq[Path] =
-    if (!Files.isDirectory(dir)) Nil
-    else {
-      val s = Files.list(dir)
-      try s.iterator().asScala.filter { p =>
-        val n = p.getFileName.toString
-        Files.isRegularFile(p) && n.endsWith(".parquet") &&
-          !n.startsWith("_") && !n.startsWith(".")
-      }.toList
-      finally s.close()
-    }
-
-  private def tombstoneFiles(dest: String): Seq[Path] =
-    parquetFiles(Paths.get(dest, TombstoneDir))
-
-  /** Anti-join the broadcast tombstone set when one exists: a row is
-    * dead iff SOME tombstone of its id outranks its generation (strict
-    * `<`, so an upsert's own rows survive the tombstone written with
-    * them). Never-upserted stores skip the join entirely.
+  /** [[graft.util.Tombstones.kill]] keyed on the store's identity
+    * column; never-upserted stores (empty snapshot) skip the join and
+    * need no `_idcol.txt`.
     */
-  private def dropDead(spark: SparkSession, dest: String,
-                       rows: DataFrame): DataFrame = {
-    val tf = tombstoneFiles(dest)
-    if (tf.isEmpty) rows
-    else {
-      val idc = readIdCol(dest)
-      val tb = spark.read.schema(tombSchema).parquet(tf.map(_.toString): _*)
-      rows.join(broadcast(tb),
-        rows(idc).cast("string") === tb("__id") &&
-          rows("__gen") < tb("__gen"), "left_anti")
-    }
-  }
+  private def dropDead(spark: SparkSession, dest: String, rows: DataFrame,
+                       snap: Seq[Path]): DataFrame =
+    if (snap.isEmpty) rows
+    else Tombstones.kill(spark, snap, rows, readIdCol(dest),
+      Tombstones.StringKey)
 
   /** Loud-failure entry check for writers: any live maintenance except
     * a compaction (which the segment model makes safe to race) rejects
@@ -760,7 +712,7 @@ object ServingStores {
 
   // metadata files ride the StoreFs seam (read-after-write visibility
   // is contract primitive 3) — an object-store binding inherits every
-  // _schema/_buckets/_gen/_idcol read-write without a call-site hunt
+  // _schema/_buckets/_idcol read-write without a call-site hunt
   private def writeMeta(dest: String, buckets: Int, schema: StructType): Unit = {
     StoreFs.createDirectories(Paths.get(dest))
     StoreFs.writeString(Paths.get(dest, "_schema.json"), schema.json)
@@ -779,23 +731,6 @@ object ServingStores {
     else None
   }
 
-  /** Monotonic per-store generation counter (`_gen.txt`; build = 0).
-    * Read-inc-write under the single-writer-per-store contract.
-    */
-  private def nextGen(dest: String): Long = {
-    val g = readGen(dest) + 1
-    writeGen(dest, g)
-    g
-  }
-
-  private def readGen(dest: String): Long = {
-    val f = Paths.get(dest, "_gen.txt")
-    if (StoreFs.exists(f)) StoreFs.readString(f).trim.toLong else 0L
-  }
-
-  private def writeGen(dest: String, gen: Long): Unit =
-    StoreFs.writeString(Paths.get(dest, "_gen.txt"), gen.toString)
-
   /** The row-identity column tombstones key on — persisted at first
     * upsert/delete; later ones must agree (a store has ONE identity).
     */
@@ -810,22 +745,4 @@ object ServingStores {
 
   private def readIdCol(dest: String): String =
     StoreFs.readString(Paths.get(dest, "_idcol.txt")).trim
-
-  private def readIdColOpt(dest: String): Option[String] = {
-    val f = Paths.get(dest, "_idcol.txt")
-    if (StoreFs.exists(f)) Some(StoreFs.readString(f).trim) else None
-  }
-
-  private def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p)) {
-      val s = Files.walk(p)
-      try s.sorted(java.util.Comparator.reverseOrder[Path]())
-        .forEach(f => Files.delete(f))
-      finally s.close()
-    }
-
-  private def listDir(dir: Path): Seq[Path] = {
-    val s = Files.list(dir)
-    try s.iterator().asScala.toList finally s.close()
-  }
 }

@@ -1,9 +1,10 @@
 package graft.search
 
 import java.nio.file.{Files, Path, Paths}
-import java.util.Comparator
 
 import scala.jdk.CollectionConverters._
+
+import graft.util.StoreFs
 
 /** Serving-store lifecycle admin — the engine's analogue of the
   * reference's collection cleanup (`Ranking Model/src/main/java/Main/
@@ -64,7 +65,7 @@ object StoreAdmin {
   /** Empty one store (data + stamp). Idempotent; the parent root and
     * other corpora's stores are untouched.
     */
-  def truncate(dest: String): Unit = deleteRecursively(Paths.get(dest))
+  def truncate(dest: String): Unit = StoreFs.deleteRecursively(Paths.get(dest))
 
   /** Empty every store for a corpus — the "drop all collections" admin
     * sweep before a from-scratch rebuild.
@@ -258,16 +259,16 @@ object StoreAdmin {
 
   /** Reclaim rewrite leftovers: every atomic-swap rewrite
     * ([[graft.util.AtomicRewrite]], [[ServingStores]]' compaction/
-    * rebucketing) materializes its new generation in a sibling
-    * `<path>-rewrite-tmp` before touching the store, so a crash during
-    * the write leaves the store fully valid plus an orphan tmp holding a
-    * dead generation's bytes. This sweep deletes them — correctness
-    * never depends on it (rewrites wipe their own tmp before writing),
-    * it is the disk-reclaim half of crash recovery. Not safe to run
-    * CONCURRENTLY with an in-flight rewrite (it would delete the tmp
-    * being written; the rewrite's swap then fails loudly, store
-    * untouched) — run it like [[truncate]], between jobs. Returns the
-    * deleted roots so callers can log them.
+    * rebucketing, [[BM25Index]]'s staged segments) materializes its new
+    * generation in a `…-rewrite-tmp` dir before touching the store, so
+    * a crash during the write leaves the store fully valid plus an
+    * orphan tmp holding a dead generation's bytes. This sweep deletes
+    * them — correctness never depends on it (rewrites wipe their own
+    * tmp before writing), it is the disk-reclaim half of crash
+    * recovery. Not safe to run CONCURRENTLY with an in-flight rewrite
+    * (it would delete the tmp being written; the rewrite's swap then
+    * fails loudly, store untouched) — run it like [[truncate]], between
+    * jobs. Returns the deleted roots so callers can log them.
     */
   def gcOrphans(sfDir: String): Seq[String] = {
     val tmps = storeDirs(sfDir).flatMap { root =>
@@ -281,7 +282,7 @@ object StoreAdmin {
               q.getFileName.toString.endsWith("-rewrite-tmp"))
             .toList
           finally s.close()
-        orphans.foreach(deleteRecursively)
+        orphans.foreach(StoreFs.deleteRecursively)
         orphans.map(_.toString)
       }
     }
@@ -300,12 +301,12 @@ object StoreAdmin {
     // directory that was never ours.
     val legacyRoots = Seq("ivfpq-store-v1", "ivfpq-store-v2",
       "ivfpq-store-v3", "pq-store-v2", "ivf-store-v1", "ivf-store-v2",
-      "sq8-store-v1", "srp-label-v1", "bm25-index-v3")
+      "sq8-store-v1", "srp-label-v1", "bm25-index-v3", "bm25-index-v4")
       .map(v => Paths.get(s"${sys.props("user.dir")}/target/$v"))
     val legacySwept =
       if (sys.env.contains("GRAFT_INDEX_DIR")) Nil
       else legacyRoots.filter(p => Files.isDirectory(p) && isAnnStoreRoot(p))
-        .map { p => deleteRecursively(p); p.toString }
+        .map { p => StoreFs.deleteRecursively(p); p.toString }
     tmps ++ legacySwept
   }
 
@@ -329,13 +330,4 @@ object StoreAdmin {
       }
     }
   }
-
-  private def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p)) {
-      val s = Files.walk(p)
-      try
-        s.sorted(Comparator.reverseOrder[Path]())
-          .forEach(f => Files.deleteIfExists(f))
-      finally s.close()
-    }
 }

@@ -150,6 +150,16 @@ object StoreFs {
   /** Child paths of a directory (empty for a non-directory). */
   def list(p: Path): Seq[Path] = current.list(p)
 
+  /** Parquet data files directly under `dir` (no subdirectories, no
+    * `_`/`.`-prefixed commit or checksum files).
+    */
+  def parquetFiles(dir: Path): Seq[Path] =
+    list(dir).filter { p =>
+      val n = p.getFileName.toString
+      n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".") &&
+        !isDirectory(p)
+    }
+
   def deleteRecursively(p: Path): Unit = current.deleteRecursively(p)
 
   def size(p: Path): Long = current.size(p)

@@ -179,6 +179,111 @@ class BM25Spec extends SparkSpec {
     assert(after == before)
   }
 
+  test("a segment is published by one rename: a read while it is staged " +
+      "serves the base without error, and an upsert's doc is absent only " +
+      "until the rename") {
+    val dest = java.nio.file.Files.createTempDirectory("bm25pub").toString
+    BM25Index.build(docs.filter("doc_id <= 3"), "doc_id", "text", dest)
+    def served(terms: Seq[String]) = BM25Index.topKMerged(spark, dest, terms, 5)
+      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toSeq
+    val base = served(Seq("spark", "query"))
+    var staged: Seq[(Long, Double)] = Nil
+    BM25Index.testHookBeforePublish = _ => staged = served(Seq("spark", "query"))
+    try BM25Index.appendSegment(docs.filter("doc_id > 3"), "doc_id", "text",
+      dest, "seg-00001")
+    finally BM25Index.testHookBeforePublish = _ => ()
+    assert(staged == base, "a staged segment leaked into serving")
+    assert(served(Seq("spark", "query")).map(_._1).contains(5L),
+      "the published segment must serve")
+    val edited = Seq((2L, "query rewrite query planner")).toDF("doc_id", "text")
+    var stagedUpsert: Seq[Long] = Nil
+    BM25Index.testHookBeforePublish = _ =>
+      stagedUpsert = served(Seq("spark", "rewrite")).map(_._1)
+    try BM25Index.upsertSegment(edited, "doc_id", "text", dest, "seg-edit01")
+    finally BM25Index.testHookBeforePublish = _ => ()
+    assert(!stagedUpsert.contains(2L),
+      "between tombstone and rename the doc is absent, never served twice")
+    assert(served(Seq("rewrite")).map(_._1) == Seq(2L))
+    assert(!served(Seq("spark")).map(_._1).contains(2L))
+    assert(!java.nio.file.Files.list(java.nio.file.Paths.get(dest))
+      .anyMatch(_.getFileName.toString.endsWith("-rewrite-tmp")),
+      "the staging dir must be consumed by the publishing rename")
+  }
+
+  test("property: any append/upsert/delete/compact sequence serves exactly " +
+      "the latest live version of each id; compact ≡ a fresh build") {
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    sealed trait Op
+    case class Append(docs: Seq[(Long, String)]) extends Op
+    case class Upsert(docs: Seq[(Long, String)]) extends Op
+    case class Delete(ids: Seq[Long]) extends Op
+    case object Compact extends Op
+    val vocab = Seq("spark", "query", "jobs", "scala")
+    val textGen = Gen.chooseNum(1, 3)
+      .flatMap(n => Gen.listOfN(n, Gen.oneOf(vocab))).map(_.mkString(" "))
+    val docsGen = Gen.chooseNum(1, 2)
+      .flatMap(n => Gen.listOfN(n, Gen.zip(Gen.chooseNum(1L, 6L), textGen)))
+      .map(_.toMap.toSeq.sorted)
+    // ids 1 and 2 are never deleted, so the corpus is never empty
+    val deleteGen = Gen.chooseNum(1, 2)
+      .flatMap(n => Gen.listOfN(n, Gen.chooseNum(3L, 6L))).map(_.distinct)
+    val opGen: Gen[Op] = Gen.frequency(3 -> docsGen.map(Append(_)),
+      3 -> docsGen.map(Upsert(_)), 2 -> deleteGen.map(Delete(_)),
+      1 -> Gen.const(Compact))
+    val generated = (1 to 3).flatMap(i =>
+      Gen.listOfN(4, opGen).apply(Gen.Parameters.default, Seed(4242L + i)))
+    // the orderings a single example misses, pinned explicitly
+    val pinned = Seq(
+      Seq(Delete(Seq(3L)), Upsert(Seq(3L -> "jobs scala"))),
+      Seq(Upsert(Seq(2L -> "scala")), Upsert(Seq(2L -> "spark jobs")),
+        Delete(Seq(2L, 3L))),
+      Seq(Append(Seq(5L -> "spark")), Compact, Append(Seq(6L -> "spark query"))))
+    val base = Seq(1L -> "spark query", 2L -> "jobs spark", 3L -> "query scala",
+      4L -> "scala spark jobs")
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.getLong(0)).sorted.toSeq
+    def scored(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getDouble(1)).toSeq
+    (pinned ++ generated).zipWithIndex.foreach { case (ops, n) =>
+      val dest = java.nio.file.Files.createTempDirectory("bm25prop").toString
+      BM25Index.build(base.toDF("doc_id", "text"), "doc_id", "text", dest)
+      var live = base.toMap
+      ops.zipWithIndex.foreach { case (op, i) =>
+        op match {
+          case Append(ds) =>
+            // the append contract: ids not currently live
+            val fresh = ds.filterNot(d => live.contains(d._1))
+            if (fresh.nonEmpty) {
+              BM25Index.appendSegment(fresh.toDF("doc_id", "text"), "doc_id",
+                "text", dest, s"seg-$i")
+              live ++= fresh
+            }
+          case Upsert(ds) =>
+            BM25Index.upsertSegment(ds.toDF("doc_id", "text"), "doc_id",
+              "text", dest, s"seg-$i")
+            live ++= ds
+          case Delete(ds) =>
+            BM25Index.deleteDocs(spark, dest, ds)
+            live --= ds
+          case Compact => BM25Index.compact(spark, dest)
+        }
+        val corpus = live.toSeq.toDF("doc_id", "text")
+        for (t <- Seq("spark", "jobs"))
+          assert(ids(BM25Index.topKMerged(spark, dest, Seq(t), 100)) ==
+            ids(BM25.scoreTopK(corpus, "doc_id", "text", Seq(t), 100)),
+            s"sequence $n ${ops.take(i + 1)}: '$t' membership diverged")
+      }
+      BM25Index.compact(spark, dest)
+      val fresh = java.nio.file.Files.createTempDirectory("bm25propfresh").toString
+      BM25Index.build(live.toSeq.toDF("doc_id", "text"), "doc_id", "text", fresh)
+      for (terms <- Seq(vocab, Seq("spark"), Seq("query", "scala")))
+        assert(scored(BM25Index.topK(spark, dest, terms, 100)) ==
+          scored(BM25Index.topK(spark, fresh, terms, 100)),
+          s"sequence $n $ops: compact diverged from a fresh build on $terms")
+    }
+  }
+
   test("serving scan is pruned to the query terms' buckets") {
     val dest = java.nio.file.Files.createTempDirectory("bm25idx").toString
     BM25Index.build(docs, "doc_id", "text", dest)
