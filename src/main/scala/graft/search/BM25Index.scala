@@ -283,7 +283,7 @@ object BM25Index {
           (sum(col("len")) / count(lit(1)).cast("double")).as("avglen"),
           sum(col("len")).cast("long").as("total_len"))
       try {
-        val tmp = s"$dest/compact-tmp"
+        val tmp = s"$dest/compact-rewrite-tmp"
         // the bucket count is RE-DERIVED over the merged vocabulary —
         // this is how the count grows as segments fold in (the folded
         // base routes by ITS modulus; the segments' own counts die with

@@ -179,7 +179,7 @@ object HttpServing {
     ServingStores.buildPostings(tweets, col("tweetHashtags"),
       dest + "/hashtags")
     ServingStores.buildTimeline(tweets, "userID", dest + "/by_user",
-      sortCols = Seq(col("tweetDateTime").desc))
+      sortDesc = Seq("tweetDateTime"))
     // the users lookup is a posting store keyed by screen name (array of
     // one) — same bucket-pruned probe shape
     ServingStores.buildPostings(users, array(col("userScreenName")),
@@ -199,8 +199,7 @@ object HttpServing {
                        dest: String): Unit = {
     ServingStores.appendPostings(tweetsBatch, col("tweetHashtags"),
       dest + "/hashtags")
-    ServingStores.appendTimeline(tweetsBatch, "userID", dest + "/by_user",
-      sortCols = Seq(col("tweetDateTime").desc))
+    ServingStores.appendTimeline(tweetsBatch, dest + "/by_user")
     ServingStores.appendPostings(usersBatch, array(col("userScreenName")),
       dest + "/users")
   }
@@ -218,8 +217,7 @@ object HttpServing {
                        dest: String): Unit = {
     ServingStores.upsertPostings(tweetsBatch, "id", col("tweetHashtags"),
       dest + "/hashtags")
-    ServingStores.upsertTimeline(tweetsBatch, "id", "userID",
-      dest + "/by_user", sortCols = Seq(col("tweetDateTime").desc))
+    ServingStores.upsertTimeline(tweetsBatch, "id", dest + "/by_user")
     ServingStores.upsertPostings(usersBatch, "id",
       array(col("userScreenName")), dest + "/users")
   }
@@ -231,10 +229,9 @@ object HttpServing {
     */
   def compactTweetIndex(spark: org.apache.spark.sql.SparkSession,
                         dest: String): Unit = {
-    ServingStores.compactPostings(spark, dest + "/hashtags")
-    ServingStores.compactTimeline(spark, dest + "/by_user", "userID",
-      sortCols = Seq(col("tweetDateTime").desc))
-    ServingStores.compactPostings(spark, dest + "/users")
+    ServingStores.compact(spark, dest + "/hashtags")
+    ServingStores.compact(spark, dest + "/by_user")
+    ServingStores.compact(spark, dest + "/users")
   }
 
   private def parseQuery(raw: String): Map[String, String] =

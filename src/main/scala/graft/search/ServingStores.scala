@@ -4,49 +4,56 @@ import java.nio.file.{Path, Paths}
 
 import graft.util.{StoreFs, StoreLock, Tombstones}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.json4s.{DefaultFormats, Formats, JArray, JObject, JString}
+import org.json4s.jackson.JsonMethods
 
 /** Persisted request-time layouts for the two non-keyword REST routes —
   * the serving-store treatment [[BM25Index]] gives the keyword route
   * (round-10 verdict item 7), applied to exact-match and FK-expansion
-  * queries:
+  * queries. There is ONE layout: rows partitioned by
+  * `pmod(hash(CAST(key AS STRING)), buckets)` and sorted within each
+  * bucket by (key ascending, sort columns descending), so a probe
+  * statically prunes to ONE bucket directory (the partition filter folds
+  * to a literal) and min/max row-group stats cut inside it. Hashing the
+  * key's string form on BOTH build and probe sides makes the bucket
+  * function insensitive to the key column's physical type.
   *
-  *  - POSTING store ([[buildPostings]]/[[postingProbe]]): one row per
-  *    (key, source row) from an exploded key array — the hashtag
-  *    route's `tweetHashtags:'<tag>'` shape. Laid out partitioned by
-  *    `pmod(hash(key), buckets)` and sorted by key within, so a probe
-  *    statically prunes to ONE bucket directory (the partition filter
-  *    folds to a literal) and min/max row-group stats cut inside it —
-  *    request cost is the matching postings, never an `array_contains`
-  *    scan of the corpus.
   *  - TIMELINE store ([[buildTimeline]]/[[timelineProbe]]): the fact
-  *    table partitioned by a foreign-key bucket and sorted by
-  *    (fk, order cols) within — the user-timeline route's FK expansion
-  *    reads one bucket, one key's row span.
+  *    table keyed on a foreign key — the user-timeline route's FK
+  *    expansion reads one bucket, one key's row span.
+  *  - POSTING store ([[buildPostings]]/[[postingProbe]]): the same
+  *    layout keyed on `__key`, built over
+  *    `explode(array_distinct(keysCol))` — one row per (key, source row),
+  *    the hashtag route's `tweetHashtags:'<tag>'` shape. Request cost is
+  *    the matching postings, never an `array_contains` scan of the
+  *    corpus.
   *
-  * Both hash `CAST(key AS STRING)` on BOTH build and probe sides so the
-  * bucket function is insensitive to the key column's physical type.
-  * The bucket count is written into the store (`_buckets.txt` — the
-  * underscore keeps it out of the parquet file index) — probes can
-  * never disagree with the layout. The row schema is persisted too
-  * (`_schema.json`), so a store built from an all-empty-keys source
-  * (zero parquet files) still probes to a typed empty frame instead of
-  * a schema-inference error.
+  * The layout contract is written into the store once, at build time,
+  * and never restated: `_layout.json` holds the row schema (so a store
+  * built from an all-empty-keys source — zero parquet files — still
+  * probes to a typed empty frame), the key column and the columns sorted
+  * descending after it. `_buckets.txt` holds the bucket count and is the
+  * serve sentinel, written after `_layout.json` (the underscores keep
+  * both out of the parquet file index). Every writer and maintainer
+  * reads the two back, so an appender can never split the key space
+  * differently and a compaction can never restore a different order. A
+  * store without `_layout.json` fails loudly.
   *
   * Maintenance lifecycle (the reference's indexer is a CONTINUOUS
   * keyed-upsert loop — SolrIndexer's addBean+commit per batch — with
   * Solr compacting segments beneath it; this is that full cycle):
-  * [[appendPostings]]/[[appendTimeline]] add a batch's rows into the
-  * existing bucket dirs at batch cost; [[upsertPostings]]/
-  * [[upsertTimeline]] REPLACE existing row ids (the reference's
+  * [[appendTimeline]]/[[appendPostings]] add a batch's rows into the
+  * existing bucket dirs at batch cost; [[upsertTimeline]]/
+  * [[upsertPostings]] REPLACE existing row ids (the reference's
   * `addBean` overwrite semantics — `SolrIndexer.java:47-59`) via
-  * generation-numbered tombstones (below); [[compactPostings]]/
-  * [[compactTimeline]] fold the accumulated small files back into one
+  * generation-numbered tombstones (below); [[compact]] and
+  * [[compactHotBuckets]] fold the accumulated small files back into one
   * read-optimized generation (bounded file count, restored row-group
-  * pruning, dead rows physically purged); [[rebucketPostings]]/
-  * [[rebucketTimeline]] change the bucket count in place when growth
-  * makes buckets hot — the one remedy short of a full rebuild.
+  * pruning, dead rows physically purged); [[rebucket]] changes the
+  * bucket count in place when growth makes buckets hot — the one remedy
+  * short of a full rebuild.
   *
   * == Concurrency contract (the Lucene IndexWriter-lock semantics) ==
   *
@@ -92,14 +99,31 @@ object ServingStores {
 
   val DefaultBuckets = 64
 
+  private val LayoutFile = "_layout.json"
+
   /** Test seam: runs after a fold's tmp generation is fully materialized
     * and before the swap — the widest window in which a concurrent
     * append's files must survive the segment-model deletion.
     */
   private[search] var testHookBeforeSwap: String => Unit = _ => ()
 
+  /** A store's persisted contract (`_layout.json`): the row schema
+    * (including `__gen` and the `__bucket` partition column), the key
+    * column the buckets hash, and the columns sorted descending after it.
+    */
+  private case class Layout(schema: StructType, key: String,
+                            sortDesc: Seq[String]) {
+    def order: Seq[Column] = col(key) +: sortDesc.map(col(_).desc)
+  }
+
   private def bucketOf(key: Column, buckets: Int): Column =
     pmod(hash(key.cast("string")), lit(buckets))
+
+  /** A batch's rows tagged with their write generation and key bucket. */
+  private def tagged(rows: DataFrame, key: String, gen: Long,
+                     buckets: Int): DataFrame =
+    rows.withColumn("__gen", lit(gen))
+      .withColumn("__bucket", bucketOf(col(key), buckets))
 
   /** Bucket-partitioned layout write. The sort leads with `__bucket`:
     * `repartition(col)` can co-locate several bucket values in one task
@@ -110,76 +134,41 @@ object ServingStores {
     * enables). Leading with `__bucket` satisfies the writer's required
     * ordering outright; no re-sort is inserted.
     */
-  private def writeLayout(rows: DataFrame, sortCols: Seq[Column],
-                          dest: String, mode: String): Unit =
+  private def writeRows(rows: DataFrame, order: Seq[Column],
+                        dest: String, mode: String): Unit =
     rows.repartition(col("__bucket"))
-      .sortWithinPartitions(col("__bucket") +: sortCols: _*)
+      .sortWithinPartitions(col("__bucket") +: order: _*)
       .write.mode(mode).partitionBy("__bucket").parquet(dest)
 
-  private def postingRows(df: DataFrame, keysCol: Column, buckets: Int,
-                          dropCols: Seq[String], gen: Long): DataFrame =
-    // array_distinct: a key repeated within one row must post the row
-    // ONCE — the probe replays `array_contains` semantics, not explode's
+  // array_distinct: a key repeated within one row must post the row
+  // ONCE — the probe replays `array_contains` semantics, not explode's
+  private def postingRows(df: DataFrame, keysCol: Column,
+                          dropCols: Seq[String]): DataFrame =
     df.withColumn("__key", explode(array_distinct(keysCol)))
       .drop(dropCols: _*)
-      .withColumn("__gen", lit(gen))
-      .withColumn("__bucket", bucketOf(col("__key"), buckets))
 
   /** Explode `keysCol` (an array column) into a posting table carrying
-    * every source column, bucket-partitioned and key-sorted.
+    * every source column: the timeline layout keyed on `__key`.
     */
   def buildPostings(df: DataFrame, keysCol: Column, dest: String,
                     buckets: Int = DefaultBuckets,
-                    dropCols: Seq[String] = Nil): Unit = {
-    val rows = postingRows(df, keysCol, buckets, dropCols, gen = 0L)
-    writeLayout(rows, Seq(col("__key")), dest, "overwrite")
-    writeMeta(dest, buckets, rows.schema)
-  }
+                    dropCols: Seq[String] = Nil): Unit =
+    buildTimeline(postingRows(df, keysCol, dropCols), "__key", dest,
+      buckets = buckets)
 
-  /** Append a NEW batch's postings into an existing store — the
-    * [[BM25Index.appendSegment]] lifecycle for the exact-match routes:
-    * the batch is exploded/bucketed with the layout's OWN bucket count
-    * (read back from `_buckets.txt`, so an appender can never split the
-    * key space differently) and written `mode(append)` into the same
-    * bucket directories. Probes need no change — they read every file
-    * in the key's bucket, base and appended alike. Per-batch cost is the
-    * batch explode + one write; the store is never rewritten. When small
-    * appended files accumulate, [[compactPostings]] folds them back into
-    * one read-optimized generation — the BM25Index compaction contract.
-    * Safe to race a compaction (segment model); fails loudly against a
-    * rebucket (entry + post-write lock checks).
-    */
+  /** [[appendTimeline]] over the batch's exploded postings. */
   def appendPostings(batch: DataFrame, keysCol: Column, dest: String,
-                     dropCols: Seq[String] = Nil): Unit = {
-    assertWritable(dest)
-    val buckets = readBuckets(dest)
-    writeLayout(postingRows(batch, keysCol, buckets, dropCols,
-        Tombstones.nextGen(dest)),
-      Seq(col("__key")), dest, "append")
-    assertNoRebucketRace(dest)
-  }
+                     dropCols: Seq[String] = Nil): Unit =
+    appendTimeline(postingRows(batch, keysCol, dropCols), dest)
 
-  /** Id-keyed OVERWRITE through the persisted store — the reference
-    * indexer's `addBean`-with-existing-id semantics
-    * (`SolrIndexer.java:47-59`: a re-posted id replaces the stored doc).
-    * Tombstones the batch's ids at a fresh generation, THEN appends the
-    * batch's new postings at that same generation — tombstone-first so a
-    * crash between the writes leaves the doc absent (a retried upsert
-    * converges at a higher generation) rather than serving two versions.
-    * `idCol` is the row-identity column (persisted as `_idcol.txt`; all
-    * upserts of one store must agree on it).
+  /** [[upsertTimeline]] over the batch's exploded postings. The
+    * tombstones come from the UNEXPLODED batch, so an edited row that
+    * lost every key still kills its old postings.
     */
   def upsertPostings(batch: DataFrame, idCol: String, keysCol: Column,
-                     dest: String, dropCols: Seq[String] = Nil): Unit = {
-    assertWritable(dest)
-    val buckets = readBuckets(dest)
-    val gen = Tombstones.nextGen(dest)
-    writeIdCol(dest, idCol)
-    Tombstones.write(batch.select(col(idCol)), dest, gen, Tombstones.StringKey)
-    writeLayout(postingRows(batch, keysCol, buckets, dropCols, gen),
-      Seq(col("__key")), dest, "append")
-    assertNoRebucketRace(dest)
-  }
+                     dest: String, dropCols: Seq[String] = Nil): Unit =
+    ingest(postingRows(batch, keysCol, dropCols), dest,
+      Some(idCol -> batch.select(col(idCol))))
 
   /** Tombstone-only delete (Solr's deleteById): every stored row of the
     * given ids — at any generation so far — stops being served on the
@@ -200,130 +189,155 @@ object ServingStores {
     * generation per bucket and physically purge tombstoned rows: every
     * nonempty bucket is folded when tombstones exist (the purge must
     * visit every file), otherwise only buckets fragmented by appends
-    * (≥2 files). File count drops back to O(buckets), within-bucket key
-    * order (and its min/max row-group pruning) is restored, and the
-    * tombstone files this pass applied are cleared. Segment-model: a
-    * concurrent append survives (see the object scaladoc). Probe results
-    * are identical before/after (spec-asserted against a fresh rebuild).
+    * (≥2 files). File count drops back to O(buckets), within-bucket
+    * (key, sort) order (and its min/max row-group pruning) is restored,
+    * and the tombstone files this pass applied are cleared.
+    * Segment-model: a concurrent append survives (see the object
+    * scaladoc). Probe results are identical before/after (spec-asserted
+    * against a fresh rebuild).
     */
-  def compactPostings(spark: SparkSession, dest: String): Unit =
-    fold(spark, dest, Seq(col("__key")),
-      minFiles = if (hasTombstones(dest)) 1 else 2)
+  def compact(spark: SparkSession, dest: String): Unit =
+    fold(spark, dest, minFiles = if (hasTombstones(dest)) 1 else 2)
 
-  /** [[compactPostings]] scoped to the buckets that NEED it — the
-    * 100-TB maintenance shape: a full-store rewrite is O(store) per
-    * cycle, but appends only fragment the buckets they touched, and
-    * bucket dirs are independent, so compaction can pay O(hot buckets)
-    * instead. Buckets with ≥ `minFiles` data files are each folded to
-    * one key-sorted file (tombstoned rows purged from those buckets);
-    * cold buckets' files are left byte-untouched, so tombstones are NOT
-    * cleared unless this pass happened to fold every nonempty bucket.
-    * Crash contract: all tmps are materialized FIRST, then the stamp and
-    * the `_buckets.txt` sentinel come down for the per-bucket swaps and
-    * are restored last — probes fail loudly DURING the short swap window
-    * (not the long tmp write); a crash anywhere mid-swap leaves a loud
-    * store a build-if-stale caller rebuilds. Returns the compacted
-    * bucket ids.
+  /** [[compact]] scoped to the buckets that NEED it — the 100-TB
+    * maintenance shape: a full-store rewrite is O(store) per cycle, but
+    * appends only fragment the buckets they touched, and bucket dirs are
+    * independent, so compaction can pay O(hot buckets) instead. Buckets
+    * with ≥ `minFiles` data files are each folded to one sorted file
+    * (tombstoned rows purged from those buckets); cold buckets' files are
+    * left byte-untouched, so tombstones are NOT cleared unless this pass
+    * happened to fold every nonempty bucket. Crash contract: all tmps are
+    * materialized FIRST, then the stamp and the `_buckets.txt` sentinel
+    * come down for the per-bucket swaps and are restored last — probes
+    * fail loudly DURING the short swap window (not the long tmp write); a
+    * crash anywhere mid-swap leaves a loud store a build-if-stale caller
+    * rebuilds. Returns the compacted bucket ids.
     */
   def compactHotBuckets(spark: SparkSession, dest: String,
                         minFiles: Int = 4): Seq[Int] =
-    fold(spark, dest, Seq(col("__key")), minFiles)
+    fold(spark, dest, minFiles)
 
-  /** [[compactHotBuckets]] for the timeline layout — the caller
-    * restates the (fk, sort) contract like [[compactTimeline]].
+  /** Change the bucket count of an existing store IN PLACE — the growth
+    * remedy when a fixed build-time bucket count leaves hot buckets at
+    * 100 TB: every live row's `__bucket` is recomputed from its key under
+    * the new count (tombstoned rows purged — this IS a full rewrite) and
+    * the store is atomically rewritten, `_buckets.txt` updated last so
+    * probes can never pair the new layout with the old count. Runs under
+    * the store lock; appenders fail loudly for its duration and read the
+    * new count on their next batch. Probe ≡ `array_contains` across any
+    * rebucket (property-spec-asserted for 3 → 7 → 1).
+    *
+    * The rewrite lands in a sibling tmp dir first; then the staleness
+    * stamp is the FIRST thing deleted and the LAST thing restored — the
+    * [[graft.util.AtomicRewrite]] invariant. That ordering is what makes
+    * every crash window recoverable: a crash during the tmp write leaves
+    * the old store untouched (plus an orphan tmp for
+    * [[StoreAdmin.gcOrphans]]); a crash after the stamp delete leaves a
+    * store `Stamp.isFresh` rejects, so the build-if-stale callers
+    * REBUILD — whether probes still serve the old generation (sentinel
+    * intact) or fail loudly (sentinel gone). The stamp's VALUE survives a
+    * completed rewrite (rebucketing does not change what source the store
+    * was built from), and so do the layout and the generation counter —
+    * surviving rows keep their `__gen`, and future tombstones must
+    * outrank them.
     */
-  def compactHotTimeline(spark: SparkSession, dest: String, fkCol: String,
-                         sortCols: Seq[Column] = Nil,
-                         minFiles: Int = 4): Seq[Int] =
-    fold(spark, dest, col(fkCol) +: sortCols, minFiles)
-
-  /** Change the bucket count of an existing posting store IN PLACE —
-    * the growth remedy when a fixed build-time bucket count leaves hot
-    * buckets at 100 TB: every live row's `__bucket` is recomputed from
-    * its `__key` under the new count (tombstoned rows purged — this IS
-    * a full rewrite) and the store is atomically rewritten,
-    * `_buckets.txt` updated last so probes can never pair the new
-    * layout with the old count. Runs under the store lock; appenders
-    * fail loudly for its duration and read the new count on their next
-    * batch. Probe ≡ `array_contains` across any rebucket
-    * (property-spec-asserted for 1 → 3 → 64).
-    */
-  def rebucketPostings(spark: SparkSession, dest: String,
-                       newBuckets: Int): Unit =
-    rewriteStore(spark, dest, newBuckets, Seq(col("__key")),
-      reBucket = col("__key"))
+  def rebucket(spark: SparkSession, dest: String, newBuckets: Int): Unit =
+    StoreLock.withLock(dest, "rebucket") {
+      val layout = readLayout(dest)
+      val rows = dropDead(spark, dest, readStore(spark, dest, layout),
+        Tombstones.snapshot(dest))
+        .drop("__bucket")
+        .withColumn("__bucket", bucketOf(col(layout.key), newBuckets))
+      val tmp = dest.stripSuffix("/") + "-rewrite-tmp"
+      writeRows(rows, layout.order, tmp, "overwrite")
+      swap(dest, newBuckets) {
+        // wipe the old generation's CONTENT but keep the maintenance lock
+        // (deleting it mid-swap would void the writers' entry AND
+        // post-write race checks — a batch landing here would be silently
+        // destroyed with no one throwing), the layout, and the generation
+        // counter + identity column (a fresh upsert racing the counter's
+        // restore would mint a tombstone that never outranks the
+        // surviving rows). The sentinel is already down, so anything that
+        // slips past the lock check still fails loudly at readBuckets.
+        val keep = Set(StoreLock.LockFile, Tombstones.GenFile, "_idcol.txt",
+          LayoutFile)
+        StoreFs.list(Paths.get(dest))
+          .filterNot(p => keep.contains(p.getFileName.toString))
+          .foreach(StoreFs.deleteRecursively)
+        StoreFs.list(Paths.get(tmp)).foreach(p =>
+          StoreFs.move(p, Paths.get(dest).resolve(p.getFileName)))
+        StoreFs.deleteIfExists(Paths.get(tmp))
+      }
+    }
 
   /** All source rows posted under `key` — a one-bucket pruned scan (plus
     * a broadcast tombstone anti-join when the store has live deletes).
     */
-  def postingProbe(spark: SparkSession, dest: String, key: String): DataFrame = {
-    val buckets = readBuckets(dest)
-    val rows = readStore(spark, dest)
-      .filter(col("__bucket") === bucketOf(lit(key), buckets) &&
-        col("__key") === key)
-    dropDead(spark, dest, rows, Tombstones.snapshot(dest))
-      .drop("__key", "__bucket", "__gen")
-  }
+  def postingProbe(spark: SparkSession, dest: String, key: String): DataFrame =
+    timelineProbe(spark, dest, "__key", key).drop("__key")
 
   /** Fact rows partitioned by `pmod(hash(fk), buckets)`, sorted by
-    * (fk, sortCols) within each bucket file.
+    * (fk, `sortDesc` descending) within each bucket file. `fkCol` and
+    * `sortDesc` are persisted in `_layout.json`; no later call restates
+    * them.
     */
   def buildTimeline(df: DataFrame, fkCol: String, dest: String,
-                    sortCols: Seq[Column] = Nil,
+                    sortDesc: Seq[String] = Nil,
                     buckets: Int = DefaultBuckets): Unit = {
-    val rows = df.withColumn("__gen", lit(0L))
-      .withColumn("__bucket", bucketOf(col(fkCol), buckets))
-    writeLayout(rows, col(fkCol) +: sortCols, dest, "overwrite")
-    writeMeta(dest, buckets, rows.schema)
+    val rows = tagged(df, fkCol, 0L, buckets)
+    val layout = Layout(rows.schema, fkCol, sortDesc)
+    writeRows(rows, layout.order, dest, "overwrite")
+    writeMeta(dest, buckets, layout)
   }
 
-  /** [[appendPostings]] for the FK-expansion layout: a new fact batch
-    * bucketed with the store's own count and appended into the existing
-    * bucket dirs — the continuous-ingest half the timeline route was
-    * missing. Same contract: probes read base + appended files alike;
-    * compact via [[compactTimeline]] when small files accumulate.
+  /** Append a NEW batch into an existing store — the
+    * [[BM25Index.appendSegment]] lifecycle for the exact-match routes:
+    * the batch is bucketed by the store's OWN key and bucket count and
+    * sorted by its own order (all read back from the store), then written
+    * `mode(append)` into the same bucket directories. Probes need no
+    * change — they read every file in the key's bucket, base and appended
+    * alike. Per-batch cost is one write; the store is never rewritten.
+    * When small appended files accumulate, [[compact]] folds them back
+    * into one read-optimized generation. Safe to race a compaction
+    * (segment model); fails loudly against a rebucket (entry + post-write
+    * lock checks).
     */
-  def appendTimeline(batch: DataFrame, fkCol: String, dest: String,
-                     sortCols: Seq[Column] = Nil): Unit = {
-    assertWritable(dest)
-    val buckets = readBuckets(dest)
-    writeLayout(batch.withColumn("__gen", lit(Tombstones.nextGen(dest)))
-        .withColumn("__bucket", bucketOf(col(fkCol), buckets)),
-      col(fkCol) +: sortCols, dest, "append")
-    assertNoRebucketRace(dest)
-  }
+  def appendTimeline(batch: DataFrame, dest: String): Unit =
+    ingest(batch, dest, None)
 
-  /** [[upsertPostings]] for the timeline layout: `idCol` identifies the
-    * FACT row (e.g. the order/tweet id), not the FK — an edited fact
-    * replaces its predecessor inside whatever FK bucket it hashes to.
+  /** Id-keyed OVERWRITE through the persisted store — the reference
+    * indexer's `addBean`-with-existing-id semantics
+    * (`SolrIndexer.java:47-59`: a re-posted id replaces the stored doc).
+    * Tombstones the batch's ids at a fresh generation, THEN appends the
+    * batch's rows at that same generation — tombstone-first so a crash
+    * between the writes leaves the row absent (a retried upsert converges
+    * at a higher generation) rather than serving two versions. `idCol`
+    * identifies the FACT row (e.g. the order/tweet id), not the key — an
+    * edited fact replaces its predecessor inside whatever bucket it
+    * hashes to. It is persisted as `_idcol.txt`; all upserts of one store
+    * must agree on it.
     */
-  def upsertTimeline(batch: DataFrame, idCol: String, fkCol: String,
-                     dest: String, sortCols: Seq[Column] = Nil): Unit = {
+  def upsertTimeline(batch: DataFrame, idCol: String, dest: String): Unit =
+    ingest(batch, dest, Some(idCol -> batch.select(col(idCol))))
+
+  /** The one write path of [[appendTimeline]]/[[upsertTimeline]]: rows
+    * at a fresh generation, preceded by `replace`'s (identity column,
+    * ids) tombstones at that generation.
+    */
+  private def ingest(rows: DataFrame, dest: String,
+                     replace: Option[(String, DataFrame)]): Unit = {
     assertWritable(dest)
     val buckets = readBuckets(dest)
+    val layout = readLayout(dest)
     val gen = Tombstones.nextGen(dest)
-    writeIdCol(dest, idCol)
-    Tombstones.write(batch.select(col(idCol)), dest, gen, Tombstones.StringKey)
-    writeLayout(batch.withColumn("__gen", lit(gen))
-        .withColumn("__bucket", bucketOf(col(fkCol), buckets)),
-      col(fkCol) +: sortCols, dest, "append")
+    replace.foreach { case (idCol, ids) =>
+      writeIdCol(dest, idCol)
+      Tombstones.write(ids, dest, gen, Tombstones.StringKey)
+    }
+    writeRows(tagged(rows, layout.key, gen, buckets), layout.order, dest,
+      "append")
     assertNoRebucketRace(dest)
   }
-
-  /** [[compactPostings]] for the timeline layout — the caller restates
-    * the layout's (fk, sort) contract because parquet does not persist
-    * it; the fk/sort columns must match the build's.
-    */
-  def compactTimeline(spark: SparkSession, dest: String, fkCol: String,
-                      sortCols: Seq[Column] = Nil): Unit =
-    fold(spark, dest, col(fkCol) +: sortCols,
-      minFiles = if (hasTombstones(dest)) 1 else 2)
-
-  /** [[rebucketPostings]] for the timeline layout. */
-  def rebucketTimeline(spark: SparkSession, dest: String, fkCol: String,
-                       newBuckets: Int, sortCols: Seq[Column] = Nil): Unit =
-    rewriteStore(spark, dest, newBuckets, col(fkCol) +: sortCols,
-      reBucket = col(fkCol))
 
   /** All fact rows for one FK value — a one-bucket pruned scan plus a
     * row-group-prunable equality on the sorted fk column.
@@ -338,25 +352,30 @@ object ServingStores {
     * to exactly the keys' bucket directories — request cost is the
     * matching spans, independent of table size. An EMPTY key set (the
     * entity resolved to nothing on this corpus) returns a typed empty
-    * frame — served and ad-hoc routes degrade identically.
+    * frame — served and ad-hoc routes degrade identically. `fkCol` must
+    * be the store's persisted key.
     */
   def timelineProbeMany(spark: SparkSession, dest: String, fkCol: String,
                         values: Seq[Any]): DataFrame = {
+    val layout = readLayout(dest)
+    require(fkCol == layout.key,
+      s"store at $dest is keyed on '${layout.key}', not '$fkCol'")
     if (values.isEmpty)
-      readStore(spark, dest).filter(lit(false)).drop("__bucket", "__gen")
+      readStore(spark, dest, layout).filter(lit(false))
+        .drop("__bucket", "__gen")
     else {
       val buckets = readBuckets(dest)
       val pred = values
         .map(v => col("__bucket") === bucketOf(lit(v), buckets) &&
           col(fkCol) === lit(v))
         .reduce(_ || _)
-      dropDead(spark, dest, readStore(spark, dest).filter(pred),
+      dropDead(spark, dest, readStore(spark, dest, layout).filter(pred),
         Tombstones.snapshot(dest)).drop("__bucket", "__gen")
     }
   }
 
   def defaultDir(sfDir: String): String = {
-    graft.util.StoreDirs.resolve("serving-store-v2", sfDir)
+    graft.util.StoreDirs.resolve("serving-store-v3", sfDir)
   }
 
   /** Build-if-stale: word-posting store over the documents table (the
@@ -385,7 +404,7 @@ object ServingStores {
     val stamp = graft.util.Stamp.sourceStamp(sfDir, "orders.parquet")
     if (!graft.util.Stamp.isFresh(dest, stamp)) {
       buildTimeline(graft.util.Tables.orders(spark, sfDir), "o_custkey",
-        dest, sortCols = Seq(col("o_orderdate").desc))
+        dest, sortDesc = Seq("o_orderdate"))
       graft.util.Stamp.write(dest, stamp)
     }
     dest
@@ -419,7 +438,7 @@ object ServingStores {
       appendPostings(docs.filter(col("doc_id") % 5 === 0), col("__words"),
         dest, dropCols = Seq("__words"))
       compactHotBuckets(spark, dest, minFiles = 2)
-      rebucketPostings(spark, dest, DefaultBuckets)
+      rebucket(spark, dest, DefaultBuckets)
       graft.util.Stamp.write(dest, stamp)
     }
     dest
@@ -435,11 +454,9 @@ object ServingStores {
     if (!graft.util.Stamp.isFresh(dest, stamp)) {
       StoreFs.deleteRecursively(Paths.get(dest))
       def orders = graft.util.Tables.orders(spark, sfDir)
-      val sorts = Seq(col("o_orderdate").desc)
       buildTimeline(orders.filter(col("o_orderkey") % 5 =!= 0), "o_custkey",
-        dest, sortCols = sorts)
-      appendTimeline(orders.filter(col("o_orderkey") % 5 === 0), "o_custkey",
-        dest, sortCols = sorts)
+        dest, sortDesc = Seq("o_orderdate"))
+      appendTimeline(orders.filter(col("o_orderkey") % 5 === 0), dest)
       // the fold arrives via the one-call MAINTENANCE SWEEP, not a direct
       // compact call — so the driver's hash gate exercises the sweep's
       // policy decisions (hot-bucket selection here) every round
@@ -472,7 +489,7 @@ object ServingStores {
       upsertPostings(
         edited.withColumn("__words", split(col("text"), " ")).drop("text"),
         "doc_id", col("__words"), dest, dropCols = Seq("__words"))
-      compactPostings(spark, dest)
+      compact(spark, dest)
       graft.util.Stamp.write(dest, stamp)
     }
     dest
@@ -505,12 +522,11 @@ object ServingStores {
     if (!graft.util.Stamp.isFresh(dest, stamp)) {
       StoreFs.deleteRecursively(Paths.get(dest))
       val orders = graft.util.Tables.orders(spark, sfDir)
-      val sorts = Seq(col("o_orderdate").desc)
-      buildTimeline(orders, "o_custkey", dest, sortCols = sorts)
+      buildTimeline(orders, "o_custkey", dest, sortDesc = Seq("o_orderdate"))
       upsertTimeline(
         orders.filter(col("o_orderkey") % 7 === 0)
           .withColumn("o_totalprice", col("o_totalprice") + 1000000),
-        "o_orderkey", "o_custkey", dest, sortCols = sorts)
+        "o_orderkey", dest)
       // via the sweep (tombstones present → it runs the FULL purge fold)
       graft.search.StoreAdmin.maintain(spark, sfDir, minFiles = 2)
       graft.util.Stamp.write(dest, stamp)
@@ -530,54 +546,6 @@ object ServingStores {
 
   /** True iff the store has tombstones a probe still needs to apply. */
   def hasTombstones(dest: String): Boolean = Tombstones.has(dest)
-
-  /** Atomic full rewrite for REBUCKETING (`reBucket` = the key column
-    * whose hash re-derives `__bucket` under `newBuckets`) — the one
-    * rewrite that must exclude writers, so it runs under the store lock.
-    * Tombstoned rows are purged and the tombstone table cleared (a full
-    * rewrite visits every row). The rewrite lands in a sibling tmp dir
-    * first; then the staleness stamp is the FIRST thing deleted and the
-    * LAST thing restored — the [[graft.util.AtomicRewrite]] invariant.
-    * That ordering is what makes every crash window recoverable: a crash
-    * during the tmp write leaves the old store untouched (plus an orphan
-    * tmp for [[StoreAdmin.gcOrphans]]); a crash after the stamp delete
-    * leaves a store `Stamp.isFresh` rejects, so the build-if-stale
-    * callers REBUILD — whether probes still serve the old generation
-    * (sentinel intact) or fail loudly (sentinel gone). The stamp's VALUE
-    * survives a completed rewrite (compaction does not change what
-    * source the store was built from), and so does the generation
-    * counter — surviving rows keep their `__gen`, and future tombstones
-    * must outrank them.
-    */
-  private def rewriteStore(spark: SparkSession, dest: String,
-                           newBuckets: Int, sortCols: Seq[Column],
-                           reBucket: Column): Unit =
-    StoreLock.withLock(dest, "rebucket") {
-      val rows = dropDead(spark, dest, readStore(spark, dest),
-        Tombstones.snapshot(dest))
-        .drop("__bucket")
-        .withColumn("__bucket", bucketOf(reBucket, newBuckets))
-      val tmp = dest.stripSuffix("/") + "-rewrite-tmp"
-      writeLayout(rows, sortCols, tmp, "overwrite")
-      swap(dest, newBuckets) {
-        // wipe the old generation's CONTENT but keep the maintenance lock
-        // (deleting it mid-swap would void the writers' entry AND
-        // post-write race checks — a batch landing here would be silently
-        // destroyed with no one throwing) and the generation counter +
-        // identity column (a fresh upsert racing the counter's restore
-        // would mint a tombstone that never outranks the surviving rows).
-        // The sentinel is already down, so anything that slips past the
-        // lock check still fails loudly at readBuckets.
-        val keep = Set(StoreLock.LockFile, Tombstones.GenFile, "_idcol.txt")
-        StoreFs.list(Paths.get(dest))
-          .filterNot(p => keep.contains(p.getFileName.toString))
-          .foreach(StoreFs.deleteRecursively)
-        StoreFs.list(Paths.get(tmp)).foreach(p =>
-          StoreFs.move(p, Paths.get(dest).resolve(p.getFileName)))
-        StoreFs.deleteIfExists(Paths.get(tmp))
-        StoreFs.writeString(Paths.get(dest, "_schema.json"), rows.schema.json)
-      }
-    }
 
   /** The swap window of every rewrite: after [[testHookBeforeSwap]], the
     * staleness stamp comes down FIRST and the `_buckets.txt` sentinel
@@ -601,14 +569,14 @@ object ServingStores {
     stamp.foreach(StoreFs.writeString(stampFile, _))
   }
 
-  /** Segment-model selective fold shared by the two layouts and both
-    * compaction flavors. SNAPSHOT: the explicit parquet file list of
-    * every bucket plus the tombstone file list. FOLD: every bucket whose
-    * snapshot holds ≥ `minFiles` files is read through the persisted row
-    * schema (minus the partition column, which the files do not carry),
-    * filtered against the tombstone SNAPSHOT, and folded to ONE sorted
-    * file in a sibling tmp. SWAP (under the downed stamp+sentinel pair):
-    * per bucket, the folded file moves IN under its unique part name and
+  /** Segment-model selective fold shared by both compaction flavors.
+    * SNAPSHOT: the explicit parquet file list of every bucket plus the
+    * tombstone file list. FOLD: every bucket whose snapshot holds ≥
+    * `minFiles` files is read through the persisted row schema (minus the
+    * partition column, which the files do not carry), filtered against
+    * the tombstone SNAPSHOT, and folded to ONE file in the persisted
+    * (key, sort) order in a sibling tmp. SWAP (under the downed
+    * stamp+sentinel pair): per bucket, the folded file moves IN under its unique part name and
     * exactly the snapshot's files are deleted — files a concurrent
     * append landed after the snapshot are neither read nor deleted, so
     * they survive; the appender's rows simply wait for the next fold.
@@ -620,7 +588,7 @@ object ServingStores {
     * buckets only.
     */
   private def fold(spark: SparkSession, dest: String,
-                   sortCols: Seq[Column], minFiles: Int): Seq[Int] =
+                   minFiles: Int): Seq[Int] =
     StoreLock.withLock(dest, "compact") {
       val buckets = readBuckets(dest) // fails loudly on a mid-swap store
       val snap: Map[Int, Seq[Path]] =
@@ -629,9 +597,9 @@ object ServingStores {
       val tombSnap = Tombstones.snapshot(dest)
       val hot = (0 until buckets).filter(b => snap(b).size >= minFiles)
       if (hot.nonEmpty) {
-        val rowSchema = readSchema(dest).getOrElse(
-          spark.read.parquet(dest).schema)
-        val fileSchema = StructType(rowSchema.filterNot(_.name == "__bucket"))
+        val layout = readLayout(dest)
+        val fileSchema =
+          StructType(layout.schema.filterNot(_.name == "__bucket"))
         val tmpRoot = dest.stripSuffix("/") + "-rewrite-tmp"
         StoreFs.deleteRecursively(Paths.get(tmpRoot))
         // 1. materialize every replacement before touching the store
@@ -639,7 +607,7 @@ object ServingStores {
           val raw = spark.read.schema(fileSchema)
             .parquet(snap(b).map(_.toString): _*)
           dropDead(spark, dest, raw, tombSnap)
-            .coalesce(1).sortWithinPartitions(sortCols: _*)
+            .coalesce(1).sortWithinPartitions(layout.order: _*)
             .write.mode("overwrite").parquet(s"$tmpRoot/__bucket=$b")
         }
         // 2. per-bucket swaps under the downed stamp + sentinel
@@ -701,21 +669,22 @@ object ServingStores {
 
   /** Read the store's rows (including `__bucket`) through the persisted
     * schema, so an all-empty store (zero parquet files) yields a typed
-    * empty frame instead of an inference error. Legacy stores without
-    * `_schema.json` fall back to inference.
+    * empty frame instead of an inference error.
     */
-  private def readStore(spark: SparkSession, dest: String): DataFrame =
-    readSchema(dest) match {
-      case Some(s) => spark.read.schema(s).parquet(dest)
-      case None => spark.read.parquet(dest)
-    }
+  private def readStore(spark: SparkSession, dest: String,
+                        layout: Layout): DataFrame =
+    spark.read.schema(layout.schema).parquet(dest)
 
   // metadata files ride the StoreFs seam (read-after-write visibility
   // is contract primitive 3) — an object-store binding inherits every
-  // _schema/_buckets/_idcol read-write without a call-site hunt
-  private def writeMeta(dest: String, buckets: Int, schema: StructType): Unit = {
+  // _layout/_buckets/_idcol read-write without a call-site hunt
+  private def writeMeta(dest: String, buckets: Int, layout: Layout): Unit = {
     StoreFs.createDirectories(Paths.get(dest))
-    StoreFs.writeString(Paths.get(dest, "_schema.json"), schema.json)
+    StoreFs.writeString(Paths.get(dest, LayoutFile),
+      JsonMethods.compact(JObject(
+        "schema" -> JsonMethods.parse(layout.schema.json),
+        "key" -> JString(layout.key),
+        "sortDesc" -> JArray(layout.sortDesc.map(JString(_)).toList))))
     // _buckets.txt LAST: it is the store's serve sentinel
     StoreFs.writeString(Paths.get(dest, "_buckets.txt"), buckets.toString)
   }
@@ -723,12 +692,13 @@ object ServingStores {
   private def readBuckets(dest: String): Int =
     StoreFs.readString(Paths.get(dest, "_buckets.txt")).trim.toInt
 
-  private def readSchema(dest: String): Option[StructType] = {
-    val f = Paths.get(dest, "_schema.json")
-    if (StoreFs.exists(f))
-      Some(org.apache.spark.sql.types.DataType.fromJson(StoreFs.readString(f))
-        .asInstanceOf[StructType])
-    else None
+  /** The store's `_layout.json`; a store without one fails loudly. */
+  private def readLayout(dest: String): Layout = {
+    implicit val formats: Formats = DefaultFormats
+    val j = JsonMethods.parse(StoreFs.readString(Paths.get(dest, LayoutFile)))
+    Layout(DataType.fromJson(JsonMethods.compact(j \ "schema"))
+        .asInstanceOf[StructType],
+      (j \ "key").extract[String], (j \ "sortDesc").extract[List[String]])
   }
 
   /** The row-identity column tombstones key on — persisted at first

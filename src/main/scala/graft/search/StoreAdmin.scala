@@ -74,7 +74,7 @@ object StoreAdmin {
 
   /** True iff no store for this corpus holds any artifact. */
   def isEmpty(sfDir: String): Boolean =
-    storeDirs(sfDir).forall(d => !Files.exists(Paths.get(d)))
+    storeDirs(sfDir).forall(d => !StoreFs.exists(Paths.get(d)))
 
   /** ONE-CALL maintenance sweep across every store family of a corpus —
     * the merge policy a real serving tier runs on a timer (Lucene's
@@ -93,8 +93,7 @@ object StoreAdmin {
     *  - Serving layouts (postings/timelines, incl. the incr/upsert
     *    twins): selective hot-bucket compaction at `minFiles`, upgraded
     *    to a FULL fold whenever tombstones exist (a full pass is what
-    *    clears them). The corpus stores' (fk, sort) contracts are
-    *    restated here — parquet does not persist them.
+    *    clears them).
     *
     * The thresholds are PARAMETERS because a real merge policy is tuned
     * per deployment (Lucene's tiered-merge factors): a write-heavy tier
@@ -117,7 +116,6 @@ object StoreAdmin {
                minFiles: Int = 4, foldAtGenerations: Int = 2,
                foldAtSegments: Int = 1,
                retrainAt: Option[Double] = None): Seq[String] = {
-    import org.apache.spark.sql.functions.col
     require(foldAtGenerations >= 2,
       "maintain: foldAtGenerations < 2 would re-fold a store every sweep" +
         " (one generation is the compacted steady state) — idempotence gone")
@@ -125,7 +123,7 @@ object StoreAdmin {
     val log = scala.collection.mutable.Buffer[String]()
     def sweepFlat(root: String, sub: String, fold: String => Unit): Unit = {
       val d = Paths.get(root, sub)
-      if (Files.isDirectory(d) && writeGenerations(d) >= foldAtGenerations) {
+      if (StoreFs.isDirectory(d) && writeGenerations(d) >= foldAtGenerations) {
         fold(root)
         log += s"fold $root/$sub"
       }
@@ -174,39 +172,24 @@ object StoreAdmin {
       // nonempty LISTING, not directory existence: an empty segments dir
       // (crashed append) would otherwise make every sweep log a no-op
       // fold forever, breaking idempotence
-      val segCount = if (!Files.isDirectory(segs)) 0 else {
-        val s = Files.list(segs)
-        try s.iterator().asScala.size finally s.close()
-      }
-      if (segCount >= foldAtSegments) {
+      if (StoreFs.list(segs).size >= foldAtSegments) {
         BM25Index.compact(spark, bm)
         log += s"fold $bm (segments)"
       }
     }
-    val serving = ServingStores.defaultDir(sfDir)
-    def sweepLayout(name: String, full: String => Unit,
-                    hot: String => Seq[Int]): Unit = {
-      val d = s"$serving/$name"
-      if (Files.isDirectory(Paths.get(d))) {
+    for (name <- Seq("doc_postings", "doc_postings_incr", "doc_postings_upsert",
+        "orders_by_cust", "orders_by_cust_incr", "orders_by_cust_upsert")) {
+      val d = s"${ServingStores.defaultDir(sfDir)}/$name"
+      if (StoreFs.isDirectory(Paths.get(d))) {
         if (ServingStores.hasTombstones(d)) {
-          full(d); log += s"purge $d"
+          ServingStores.compact(spark, d)
+          log += s"purge $d"
         } else {
-          val h = hot(d)
+          val h = ServingStores.compactHotBuckets(spark, d, minFiles)
           if (h.nonEmpty) log += s"fold $d buckets=${h.mkString(",")}"
         }
       }
     }
-    for (name <- Seq("doc_postings", "doc_postings_incr", "doc_postings_upsert"))
-      sweepLayout(name,
-        d => ServingStores.compactPostings(spark, d),
-        d => ServingStores.compactHotBuckets(spark, d, minFiles))
-    val orderSorts = Seq(col("o_orderdate").desc)
-    for (name <- Seq("orders_by_cust", "orders_by_cust_incr",
-        "orders_by_cust_upsert"))
-      sweepLayout(name,
-        d => ServingStores.compactTimeline(spark, d, "o_custkey", orderSorts),
-        d => ServingStores.compactHotTimeline(spark, d, "o_custkey",
-          orderSorts, minFiles))
     // ROUTER RETRAIN (opt-in): the drift audits measured WHAT retraining
     // buys (`q_ann_drift_lloyd_big`: +0.095 recall@10 at production cell
     // counts — loss a rerank cannot recover); this is the hook that
@@ -224,7 +207,7 @@ object StoreAdmin {
     retrainAt.foreach { t =>
       for (suffix <- Seq("", "__incr", "__auto")) {
         val d = graft.similarity.IvfStore.defaultDir(sfDir) + suffix
-        if (Files.isDirectory(Paths.get(d)) && RetrainPolicy.hasTrainMass(d)) {
+        if (StoreFs.isDirectory(Paths.get(d)) && RetrainPolicy.hasTrainMass(d)) {
           val dec = RetrainPolicy.maybeRetrain(spark, d, t)(
             graft.similarity.IvfStore.rebuildFromSelf(spark, d))
           if (dec.retrain)
@@ -259,21 +242,23 @@ object StoreAdmin {
 
   /** Reclaim rewrite leftovers: every atomic-swap rewrite
     * ([[graft.util.AtomicRewrite]], [[ServingStores]]' compaction/
-    * rebucketing, [[BM25Index]]'s staged segments) materializes its new
-    * generation in a `…-rewrite-tmp` dir before touching the store, so
-    * a crash during the write leaves the store fully valid plus an
-    * orphan tmp holding a dead generation's bytes. This sweep deletes
-    * them — correctness never depends on it (rewrites wipe their own
-    * tmp before writing), it is the disk-reclaim half of crash
-    * recovery. Not safe to run CONCURRENTLY with an in-flight rewrite
-    * (it would delete the tmp being written; the rewrite's swap then
-    * fails loudly, store untouched) — run it like [[truncate]], between
-    * jobs. Returns the deleted roots so callers can log them.
+    * rebucketing, [[BM25Index]]'s staged segments and compaction)
+    * materializes its new generation in a `…-rewrite-tmp` dir before
+    * touching the store, so a crash during the write leaves the store
+    * fully valid plus an orphan tmp holding a dead generation's bytes
+    * (a crash inside a swap leaves a store that rebuilds, plus the same
+    * orphan). This sweep deletes them — correctness never depends on
+    * it (rewrites wipe their own tmp before writing), it is the
+    * disk-reclaim half of crash recovery. Not safe to run CONCURRENTLY
+    * with an in-flight rewrite (it would delete the tmp being written;
+    * the rewrite's swap then fails loudly, store untouched) — run it
+    * like [[truncate]], between jobs. Returns the deleted roots so
+    * callers can log them.
     */
   def gcOrphans(sfDir: String): Seq[String] = {
     val tmps = storeDirs(sfDir).flatMap { root =>
       val p = Paths.get(root)
-      if (!Files.isDirectory(p)) Nil
+      if (!StoreFs.isDirectory(p)) Nil
       else {
         val s = Files.walk(p)
         val orphans =
@@ -305,7 +290,7 @@ object StoreAdmin {
       .map(v => Paths.get(s"${sys.props("user.dir")}/target/$v"))
     val legacySwept =
       if (sys.env.contains("GRAFT_INDEX_DIR")) Nil
-      else legacyRoots.filter(p => Files.isDirectory(p) && isAnnStoreRoot(p))
+      else legacyRoots.filter(p => StoreFs.isDirectory(p) && isAnnStoreRoot(p))
         .map { p => StoreFs.deleteRecursively(p); p.toString }
     tmps ++ legacySwept
   }
@@ -319,15 +304,7 @@ object StoreAdmin {
     val markers = Set("source_stamp.txt", "codes.parquet", "codebook.parquet",
       "centroids.parquet", "byid.parquet", "vectors.parquet", "sig.parquet",
       "params.txt")
-    val s = Files.list(root)
-    val children = try s.iterator().asScala.toList finally s.close()
-    children.forall { c =>
-      Files.isDirectory(c) && {
-        val cs = Files.list(c)
-        try cs.iterator().asScala.exists(e =>
-          markers.contains(e.getFileName.toString))
-        finally cs.close()
-      }
-    }
+    StoreFs.list(root).forall(c => StoreFs.isDirectory(c) &&
+      StoreFs.list(c).exists(e => markers.contains(e.getFileName.toString)))
   }
 }

@@ -71,7 +71,7 @@ class HttpServingSpec extends SparkSpec {
         duringSwap = get(port, "/api/search/hashtag?tag=jobs").body()
         java.nio.file.Files.writeString(sentinel, saved)
       }
-      try ServingStores.compactPostings(spark, s"$tidx/hashtags")
+      try ServingStores.compact(spark, s"$tidx/hashtags")
       finally ServingStores.testHookBeforeSwap = _ => ()
       assert(duringTmp == before, "mid-maintenance request diverged from the old generation")
       assert(json(duringSwap, "$.status_code") == "500", duringSwap)

@@ -1,9 +1,13 @@
 package graft.search
 
+import java.nio.file.Paths
+
 import scala.jdk.CollectionConverters._
 
 import graft.SparkSpec
+import graft.util.StoreFs
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Column, DataFrame}
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
@@ -89,7 +93,7 @@ class ServingStoresPropertySpec extends SparkSpec {
     batches.tail.foreach(b =>
       ServingStores.appendPostings(b, col("tags"), dest))
     val appendedFiles = ServingStores.dataFileCount(dest)
-    ServingStores.compactPostings(spark, dest)
+    ServingStores.compact(spark, dest)
     val compactFiles = ServingStores.dataFileCount(dest)
     assert(compactFiles < appendedFiles,
       s"compaction must shrink the file count ($appendedFiles -> $compactFiles)")
@@ -107,7 +111,7 @@ class ServingStoresPropertySpec extends SparkSpec {
     // the staleness stamp survives compaction (compaction does not change
     // the source generation the store was built from)
     graft.util.Stamp.write(dest, "stamp-x")
-    ServingStores.compactPostings(spark, dest)
+    ServingStores.compact(spark, dest)
     assert(graft.util.Stamp.isFresh(dest, "stamp-x"))
     StoreAdmin.truncate(dest); StoreAdmin.truncate(fresh)
   }
@@ -180,11 +184,9 @@ class ServingStoresPropertySpec extends SparkSpec {
     val tl = java.nio.file.Files
       .createTempDirectory("graft-tl-hot").toString
     ServingStores.buildTimeline(base, "fk", tl,
-      sortCols = Seq(col("seq").desc), buckets = 8)
-    ServingStores.appendTimeline(batch, "fk", tl,
-      sortCols = Seq(col("seq").desc))
-    val tlHot = ServingStores.compactHotTimeline(spark, tl, "fk",
-      sortCols = Seq(col("seq").desc), minFiles = 2)
+      sortDesc = Seq("seq"), buckets = 8)
+    ServingStores.appendTimeline(batch, tl)
+    val tlHot = ServingStores.compactHotBuckets(spark, tl, minFiles = 2)
     assert(tlHot.nonEmpty)
     val union = base.unionAll(batch)
     (1L to 2L).foreach { k =>
@@ -213,45 +215,96 @@ class ServingStoresPropertySpec extends SparkSpec {
           .select(col("id")).collect().map(_.getLong(0)).sorted.toSeq
         assert(probed == expected, s"tag '$tag': $probed != $expected")
       }
-    ServingStores.rebucketPostings(spark, dest, 7)
+    ServingStores.rebucket(spark, dest, 7)
     check(base)
     // an append AFTER the rebucket must split keys with the new count
     val batch = Seq((9L, List("late", "jobs"))).toDF("id", "tags")
     ServingStores.appendPostings(batch, col("tags"), dest)
     check(base.unionAll(batch))
-    ServingStores.rebucketPostings(spark, dest, 1)
+    ServingStores.rebucket(spark, dest, 1)
     check(base.unionAll(batch))
     StoreAdmin.truncate(dest)
   }
 
   test("timeline lifecycle: append + compact + rebucket ≡ fk filter over " +
       "the union, within-bucket (fk, sort) order restored by compact") {
+    // every bucket file, read back in FILE order, must follow the
+    // (key asc, sort desc) order the store persisted at build — no
+    // maintenance call below restates it
+    def assertOrdered(dest: String, cols: Seq[String], order: Seq[Column],
+                      step: String): Unit =
+      StoreFs.list(Paths.get(dest))
+        .filter(_.getFileName.toString.startsWith("__bucket="))
+        .flatMap(StoreFs.parquetFiles)
+        .foreach { f =>
+          val file = spark.read.parquet(f.toString)
+          val inFile = file.select(cols.map(col): _*).collect().toSeq
+          val sorted = file.orderBy(order: _*)
+            .select(cols.map(col): _*).collect().toSeq
+          assert(inFile == sorted, s"$step: $f out of order: $inFile")
+        }
+    // one lifecycle per layout: append, full compact, append, hot-bucket
+    // compact, rebucket — checked against the source after every step
+    def lifecycle(dest: String, append: DataFrame => Unit,
+                  batches: Seq[DataFrame], check: () => Unit,
+                  cols: Seq[String], order: Seq[Column]): Unit = {
+      append(batches(0))
+      check()
+      ServingStores.compact(spark, dest)
+      check()
+      assertOrdered(dest, cols, order, "compact")
+      assert(ServingStores.dataFileCount(dest) <= 4)
+      append(batches(1))
+      assert(ServingStores.compactHotBuckets(spark, dest, minFiles = 2)
+        .nonEmpty)
+      check()
+      assertOrdered(dest, cols, order, "compactHotBuckets")
+      ServingStores.rebucket(spark, dest, 2)
+      check()
+      assertOrdered(dest, cols, order, "rebucket")
+      StoreAdmin.truncate(dest)
+    }
+
     val base = Seq((1L, 10, "a"), (1L, 30, "b"), (2L, 20, "c"))
       .toDF("fk", "seq", "v")
-    val batch = Seq((1L, 20, "d"), (3L, 5, "e")).toDF("fk", "seq", "v")
+    val batches = Seq(Seq((1L, 20, "d"), (3L, 5, "e")),
+      Seq((1L, 25, "f"), (2L, 40, "g"))).map(_.toDF("fk", "seq", "v"))
     val dest = java.nio.file.Files
       .createTempDirectory("graft-tl-life").toString
     ServingStores.buildTimeline(base, "fk", dest,
-      sortCols = Seq(col("seq").desc), buckets = 4)
-    ServingStores.appendTimeline(batch, "fk", dest,
-      sortCols = Seq(col("seq").desc))
-    val union = base.unionAll(batch)
-    def check(): Unit = (1L to 4L).foreach { k =>
-      val probed = ServingStores.timelineProbe(spark, dest, "fk", k)
-        .collect().map(_.toString).sorted.toSeq
-      val expected = union.filter(col("fk") === k)
-        .collect().map(_.toString).sorted.toSeq
-      assert(probed == expected, s"fk $k: $probed != $expected")
-    }
-    check()
-    ServingStores.compactTimeline(spark, dest, "fk",
-      sortCols = Seq(col("seq").desc))
-    check()
-    assert(ServingStores.dataFileCount(dest) <= 4)
-    ServingStores.rebucketTimeline(spark, dest, "fk", 2,
-      sortCols = Seq(col("seq").desc))
-    check()
-    StoreAdmin.truncate(dest)
+      sortDesc = Seq("seq"), buckets = 4)
+    var union = base
+    lifecycle(dest, { b =>
+        ServingStores.appendTimeline(b, dest); union = union.unionAll(b)
+      }, batches, () => (1L to 4L).foreach { k =>
+        val probed = ServingStores.timelineProbe(spark, dest, "fk", k)
+          .collect().map(_.toString).sorted.toSeq
+        val expected = union.filter(col("fk") === k)
+          .collect().map(_.toString).sorted.toSeq
+        assert(probed == expected, s"fk $k: $probed != $expected")
+      }, Seq("fk", "seq"), Seq(col("fk").asc, col("seq").desc))
+
+    // the posting store is the same layout keyed on the exploded `__key`
+    val tagBase = Seq((1L, List("jobs", "perf")), (2L, List("jobs")),
+      (3L, List("x", "perf"))).toDF("id", "tags")
+    val tagBatches = Seq(Seq((4L, List("jobs", "new")), (5L, List("perf"))),
+      Seq((6L, List("jobs", "x")), (7L, List("new", "perf"))))
+      .map(_.toDF("id", "tags"))
+    val posting = java.nio.file.Files
+      .createTempDirectory("graft-post-life").toString
+    ServingStores.buildPostings(tagBase, col("tags"), posting, buckets = 4)
+    var tagUnion = tagBase
+    lifecycle(posting, { b =>
+        ServingStores.appendPostings(b, col("tags"), posting)
+        tagUnion = tagUnion.unionAll(b)
+      }, tagBatches, () =>
+        Seq("jobs", "perf", "x", "new", "absent").foreach { tag =>
+          val probed = ServingStores.postingProbe(spark, posting, tag)
+            .select(col("id")).collect().map(_.getLong(0)).sorted.toSeq
+          val expected = tagUnion.filter(array_contains(col("tags"), tag))
+            .select(col("id")).collect().map(_.getLong(0)).sorted.toSeq
+          assert(probed == expected, s"tag '$tag': $probed != $expected")
+        }, Seq("__key"), Seq(col("__key").asc))
   }
 
   test("q_hashtag_served / q_user_timeline_served stay value-identical " +
@@ -270,7 +323,7 @@ class ServingStoresPropertySpec extends SparkSpec {
       col("__words"), s"$tmp/postings", dropCols = Seq("__words"))
     ServingStores.appendPostings(docs.filter(col("doc_id") % 5 === 0),
       col("__words"), s"$tmp/postings", dropCols = Seq("__words"))
-    ServingStores.compactPostings(spark, s"$tmp/postings")
+    ServingStores.compact(spark, s"$tmp/postings")
     def hashtagServed(store: String): Seq[String] =
       ServingStores.postingProbe(spark, store, "spark")
         .orderBy(col("doc_id").asc).limit(1000)
@@ -283,11 +336,10 @@ class ServingStoresPropertySpec extends SparkSpec {
     // key-set shape
     val orders = graft.util.Tables.orders(spark, sfDir)
     ServingStores.buildTimeline(orders.filter(col("o_orderkey") % 5 =!= 0),
-      "o_custkey", s"$tmp/timeline", sortCols = Seq(col("o_orderdate").desc))
+      "o_custkey", s"$tmp/timeline", sortDesc = Seq("o_orderdate"))
     ServingStores.appendTimeline(orders.filter(col("o_orderkey") % 5 === 0),
-      "o_custkey", s"$tmp/timeline", sortCols = Seq(col("o_orderdate").desc))
-    ServingStores.compactTimeline(spark, s"$tmp/timeline", "o_custkey",
-      sortCols = Seq(col("o_orderdate").desc))
+      s"$tmp/timeline")
+    ServingStores.compact(spark, s"$tmp/timeline")
     val keys = graft.util.Tables.customer(spark, sfDir)
       .select(col("c_custkey")).limit(3).collect().map(_.getLong(0)).toSeq
     def timelineServed(store: String): Seq[String] =

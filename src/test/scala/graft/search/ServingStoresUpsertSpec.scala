@@ -56,7 +56,7 @@ class ServingStoresUpsertSpec extends SparkSpec {
       "id", col("tags"), dest)
     ServingStores.deleteIds(spark, dest, "id", Seq(1L))
     assert(ServingStores.hasTombstones(dest))
-    ServingStores.compactPostings(spark, dest)
+    ServingStores.compact(spark, dest)
     assert(!ServingStores.hasTombstones(dest),
       "a full compact must clear the tombstones it folded")
     // physically purged: the raw store (no probe filter) holds no ghost
@@ -87,7 +87,7 @@ class ServingStoresUpsertSpec extends SparkSpec {
     assert(ServingStores.hasTombstones(dest),
       "a pass that folded nothing must not clear tombstones")
     assert(probe(dest, "jobs") == Seq("[1,v2]"))
-    ServingStores.rebucketPostings(spark, dest, 3)
+    ServingStores.rebucket(spark, dest, 3)
     assert(!ServingStores.hasTombstones(dest),
       "a rebucket is a full rewrite — tombstones folded and cleared")
     assert(probe(dest, "jobs") == Seq("[1,v2]"))
@@ -109,16 +109,15 @@ class ServingStoresUpsertSpec extends SparkSpec {
     val facts = Seq((10L, 1L, "a"), (11L, 1L, "b"), (12L, 2L, "c"))
       .toDF("fact_id", "fk", "payload")
     ServingStores.buildTimeline(facts, "fk", dest,
-      sortCols = Seq(col("fact_id").desc), buckets = 2)
+      sortDesc = Seq("fact_id"), buckets = 2)
     ServingStores.upsertTimeline(
       Seq((11L, 1L, "b-edited")).toDF("fact_id", "fk", "payload"),
-      "fact_id", "fk", dest, sortCols = Seq(col("fact_id").desc))
+      "fact_id", dest)
     def tl(fk: Long) = ServingStores.timelineProbe(spark, dest, "fk", fk)
       .collect().map(_.toString).sorted.toSeq
     assert(tl(1L) == Seq("[10,1,a]", "[11,1,b-edited]"))
     assert(tl(2L) == Seq("[12,2,c]"))
-    ServingStores.compactTimeline(spark, dest, "fk",
-      sortCols = Seq(col("fact_id").desc))
+    ServingStores.compact(spark, dest)
     assert(!ServingStores.hasTombstones(dest))
     assert(tl(1L) == Seq("[10,1,a]", "[11,1,b-edited]"))
     StoreAdmin.truncate(dest)

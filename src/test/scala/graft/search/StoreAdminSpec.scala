@@ -1,8 +1,9 @@
 package graft.search
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 
 import graft.{SparkEntry, SparkSpec}
+import graft.util.StoreFs
 
 /** The serving-store lifecycle contract (SolrCleanup analogue): every
   * persisted store can be emptied and rebuilt cleanly, and the rebuilt
@@ -118,6 +119,47 @@ class StoreAdminSpec extends SparkSpec {
       .collect().map(_.toString).sorted.toSeq == before,
       "gc changed a live store's probe result")
     assert(StoreAdmin.gcOrphans(dir).isEmpty, "gc is not idempotent")
+
+    // a BM25 compaction that crashes mid-swap leaves its staging dir
+    // behind — gc must reclaim that too (isolated corpus key, so the
+    // broken index is no other suite's)
+    import spark.implicits._
+    val fakeSf = Files.createTempDirectory("graft-gc-bm25").toString
+    val bm = BM25Index.defaultDir(fakeSf)
+    BM25Index.build(Seq((1L, "spark jobs")).toDF("id", "text"), "id", "text", bm)
+    BM25Index.appendSegment(Seq((2L, "more jobs")).toDF("id", "text"),
+      "id", "text", bm, "s1")
+    val crashOnSwap = new StoreFs.Fs {
+      private val fs = StoreFs.LocalFs
+      def createExclusive(p: Path, c: String): Unit = fs.createExclusive(p, c)
+      def atomicMove(src: Path, dst: Path): Unit = fs.atomicMove(src, dst)
+      def move(src: Path, dst: Path): Unit =
+        if (dst.getParent == Paths.get(bm))
+          throw new java.io.IOException(s"crash moving $src")
+        else fs.move(src, dst)
+      def readString(p: Path): String = fs.readString(p)
+      def writeString(p: Path, s: String): Unit = fs.writeString(p, s)
+      def exists(p: Path): Boolean = fs.exists(p)
+      def isDirectory(p: Path): Boolean = fs.isDirectory(p)
+      def createDirectories(p: Path): Unit = fs.createDirectories(p)
+      def deleteIfExists(p: Path): Unit = fs.deleteIfExists(p)
+      def list(p: Path): Seq[Path] = fs.list(p)
+      def deleteRecursively(p: Path): Unit = fs.deleteRecursively(p)
+      def size(p: Path): Long = fs.size(p)
+      def mtimeMillis(p: Path): Long = fs.mtimeMillis(p)
+    }
+    intercept[java.io.IOException](
+      StoreFs.withFs(crashOnSwap)(BM25Index.compact(spark, bm)))
+    val staged = StoreFs.list(Paths.get(bm))
+      .filter(_.getFileName.toString.contains("tmp"))
+    assert(staged.nonEmpty, "the crashed compaction left no staging dir")
+    val reclaimed = StoreAdmin.gcOrphans(fakeSf)
+    staged.foreach { p =>
+      assert(reclaimed.contains(p.toString), s"gc missed $p: $reclaimed")
+      assert(!Files.exists(p))
+    }
+    assert(StoreAdmin.gcOrphans(fakeSf).isEmpty, "gc is not idempotent")
+    StoreAdmin.truncate(bm)
   }
 
   test("maintain: the one-call sweep folds fragmented stores, purges " +

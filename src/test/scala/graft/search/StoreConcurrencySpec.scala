@@ -46,14 +46,14 @@ class StoreConcurrencySpec extends SparkSpec with BeforeAndAfterEach {
       ServingStores.appendPostings(
         Seq((4L, List("jobs", "late"))).toDF("id", "tags"), col("tags"), d)
     }
-    ServingStores.compactPostings(spark, dest)
+    ServingStores.compact(spark, dest)
     assert(fired, "the interleaved append never ran")
     assert(probeIds(dest, "jobs") == Seq(1L, 2L, 3L, 4L),
       "a row appended during the compact was lost")
     assert(probeIds(dest, "late") == Seq(4L))
     // and the next compact folds the straggler in, file count bounded
     ServingStores.testHookBeforeSwap = _ => ()
-    ServingStores.compactPostings(spark, dest)
+    ServingStores.compact(spark, dest)
     assert(ServingStores.dataFileCount(dest) <= 2)
     assert(probeIds(dest, "jobs") == Seq(1L, 2L, 3L, 4L))
     StoreAdmin.truncate(dest)
@@ -75,7 +75,7 @@ class StoreConcurrencySpec extends SparkSpec with BeforeAndAfterEach {
       ServingStores.upsertPostings(
         Seq((1L, List("jobs", "v2"))).toDF("id", "tags"), "id", col("tags"), d)
     }
-    ServingStores.compactPostings(spark, dest)
+    ServingStores.compact(spark, dest)
     assert(fired)
     assert(ServingStores.hasTombstones(dest),
       "the mid-compact upsert's tombstone was wrongly cleared")
@@ -98,7 +98,7 @@ class StoreConcurrencySpec extends SparkSpec with BeforeAndAfterEach {
       }
       assert(ex.getMessage.contains("rebucket"))
     }
-    ServingStores.rebucketPostings(spark, dest, 5)
+    ServingStores.rebucket(spark, dest, 5)
     assert(sawReject, "the racing append was not rejected")
     // the rebucket completed and the rejected batch is absent (the caller
     // re-applies it), not half-applied
@@ -118,14 +118,14 @@ class StoreConcurrencySpec extends SparkSpec with BeforeAndAfterEach {
     // a live holder rejects a second maintainer
     StoreLock.acquire(dest, "compact")
     val ex = intercept[IllegalStateException] {
-      ServingStores.compactPostings(spark, dest)
+      ServingStores.compact(spark, dest)
     }
     assert(ex.getMessage.contains("compact"))
     StoreLock.release(dest)
     // a CRASHED holder (stale timestamp) is stolen, maintenance proceeds
     Files.writeString(Paths.get(dest, StoreLock.LockFile),
       s"compact ${System.currentTimeMillis() - StoreLock.DefaultStaleMs - 1}")
-    ServingStores.compactPostings(spark, dest)
+    ServingStores.compact(spark, dest)
     assert(!Files.exists(Paths.get(dest, StoreLock.LockFile)),
       "lock must be released after a completed pass")
     assert(probeIds(dest, "jobs") == Seq(1L, 2L, 3L))
@@ -162,7 +162,7 @@ class StoreConcurrencySpec extends SparkSpec with BeforeAndAfterEach {
       intercept[Exception] { probeIds(d, "jobs") }
       Files.writeString(sentinel, saved)
     }
-    ServingStores.compactPostings(spark, dest)
+    ServingStores.compact(spark, dest)
     assert(duringSwap == Seq(1L, 2L, 3L),
       "a probe before the swap must serve the complete old generation")
     assert(probeIds(dest, "jobs") == Seq(1L, 2L, 3L),
