@@ -347,7 +347,8 @@ object SearchQueries extends QueryPack {
     // — Solr never re-analyzes per query). Build-once-if-absent, then every
     // run reads only the bucket-pruned postings slice. Identical top-10.
     "q_keyword_bm25_served" -> ((s, dir) =>
-      BM25Index.topK(s, BM25Index.ensureBuilt(s, dir), QueryTerms, k = 10)),
+      BM25Index.topKMerged(s, BM25Index.ensureBuilt(s, dir), QueryTerms,
+        k = 10)),
 
     // Incremental index maintenance (Lucene-segment style): base index on
     // 80% of the corpus, the rest appended later as a segment; merged

@@ -4,7 +4,10 @@ import graft.similarity.AnnMeta
 import graft.util.CacheLedger.CacheOps
 import graft.util.{Stamp, StoreFs, StoreLock, Tables, Tombstones}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.json4s.JObject
+import org.json4s.jackson.JsonMethods
 
 import java.nio.file.Paths
 
@@ -18,10 +21,20 @@ import java.nio.file.Paths
   * Layout under one index directory:
   * {{{
   *   params.txt             termBuckets=<B>, gen=<G>  (persisted at build)
+  *   schema.json            the three tables' schemas   (persisted at build)
   *   postings/tb=<0..B-1>/  (doc, term, tf, positions, len)  sorted by (term, doc)
   *   termstats/tb=<0..B-1>/ (term, df)                       sorted by term
-  *   corpus/                (n, avglen)                      one row
+  *   corpus/                (n, avglen, total_len)           one row
   * }}}
+  *
+  * `schema.json` ([[SchemaFile]]) holds `{"postings": …, "termstats": …,
+  * "corpus": …}`, each the Spark schema of the frame that was written
+  * (including the `tb` partition column). Every reader opens the tables
+  * through it, so a query infers no schema (no footer-reading job per
+  * table) and opens only the `tb=` directories its terms route to (no
+  * listing of the others). It is written before the tables, so the
+  * corpus `_SUCCESS` sentinel never stands without it; a part without it
+  * fails loudly.
   *
   * `positions` is the sorted token-ordinal list of the term within the doc
   * (Lucene's positional postings) — what serves quoted-phrase queries
@@ -30,8 +43,9 @@ import java.nio.file.Paths
   * `len` (doc length) is denormalized onto postings — Lucene stores per-doc
   * field norms alongside postings the same way — so serving needs NO
   * docstats join. Query-time reads prune twice: the term bucket
-  * `tb = crc32(term) % termBuckets` prunes whole directories at planning
-  * time (PartitionFilters) and the within-file term sort prunes row groups
+  * `tb = crc32(term) % termBuckets` picks the only directories a query
+  * opens (computed on the driver; the same predicate stays in the plan as
+  * PartitionFilters) and the within-file term sort prunes row groups
   * via parquet min/max stats (PushedFilters) — the two-level pruning a
   * sharded inverted index gives. The bucket count is NOT a compile-time
   * constant (v4 — round-15 verdict item 6): it is derived ∝ VOCABULARY at
@@ -70,6 +84,9 @@ object BM25Index {
     * postings directory far from the giant-partition regime.
     */
   val TermsPerBucket = 65536L
+
+  /** Each part's persisted table schemas (see the object scaladoc). */
+  val SchemaFile = "schema.json"
 
   /** Bucket count ∝ vocabulary: ⌈nTerms / TermsPerBucket⌉, floored at
     * [[DefaultTermBuckets]] — a 100M-term corpus derives ~1.5k buckets
@@ -136,28 +153,88 @@ object BM25Index {
         .agg(count(lit(1)).cast("double").as("df"))
         .persistBounded()
       try {
-        val buckets = autoTermBuckets(tstats.count())
-        // metadata BEFORE artifacts (the AnnMeta ordering): a reader
-        // never sees postings without the modulus that routes them
-        AnnMeta.write(dest, "termBuckets" -> buckets,
-          "gen" -> Math.toIntExact(gen))
         val lens = post.groupBy(col("doc")).agg(sum(col("tf")).as("len"))
-        post.join(lens, "doc")
-          .withColumn("tb", termBucketCol(col("term"), buckets))
-          .repartition(col("tb"))
-          .sortWithinPartitions(col("term"), col("doc"))
-          .write.mode("overwrite").partitionBy("tb").parquet(s"$dest/postings")
-        tstats
-          .withColumn("tb", termBucketCol(col("term"), buckets))
-          .repartition(col("tb"))
-          .sortWithinPartitions(col("term"))
-          .write.mode("overwrite").partitionBy("tb").parquet(s"$dest/termstats")
-        lens.agg(count(lit(1)).cast("double").as("n"),
+        writeTables(dest, autoTermBuckets(tstats.count()), gen,
+          post.join(lens, "doc"), tstats,
+          lens.agg(count(lit(1)).cast("double").as("n"),
             (sum(col("len")) / count(lit(1)).cast("double")).as("avglen"),
-            sum(col("len")).cast("long").as("total_len"))
-          .coalesce(1).write.mode("overwrite").parquet(s"$dest/corpus")
+            sum(col("len")).cast("long").as("total_len")))
       } finally tstats.unpersist()
     } finally post.unpersist()
+  }
+
+  /** A part's artifacts, metadata first and the corpus — whose `_SUCCESS`
+    * is the [[isBuilt]] sentinel — last: `params.txt` (the AnnMeta
+    * ordering: a reader never sees postings without the modulus that
+    * routes them), then [[SchemaFile]], taken from the frames about to be
+    * written (analysis only, no job), then the term-bucketed postings
+    * (doc, term, tf, positions, len) and termstats (term, df), then the
+    * corpus (n, avglen, total_len).
+    */
+  private def writeTables(dest: String, buckets: Int, gen: Long,
+                          postings: DataFrame, tstats: DataFrame,
+                          corpus: DataFrame): Unit = {
+    val post = postings.withColumn("tb", termBucketCol(col("term"), buckets))
+    val terms = tstats.withColumn("tb", termBucketCol(col("term"), buckets))
+    AnnMeta.write(dest, "termBuckets" -> buckets, "gen" -> Math.toIntExact(gen))
+    StoreFs.writeString(Paths.get(dest, SchemaFile),
+      JsonMethods.compact(JObject(Seq("postings" -> post, "termstats" -> terms,
+        "corpus" -> corpus).map { case (t, df) =>
+          t -> JsonMethods.parse(df.schema.json) }.toList)))
+    post.repartition(col("tb"))
+      .sortWithinPartitions(col("term"), col("doc"))
+      .write.mode("overwrite").partitionBy("tb").parquet(s"$dest/postings")
+    terms.repartition(col("tb"))
+      .sortWithinPartitions(col("term"))
+      .write.mode("overwrite").partitionBy("tb").parquet(s"$dest/termstats")
+    corpus.coalesce(1).write.mode("overwrite").parquet(s"$dest/corpus")
+  }
+
+  /** The persisted schema of one of a part's tables. A part without
+    * [[SchemaFile]] fails loudly with its path.
+    */
+  private def schemaOf(part: String, table: String): StructType = {
+    val f = Paths.get(part, SchemaFile)
+    require(StoreFs.exists(f), s"BM25 index part at $part has no " +
+      s"$SchemaFile — built before the persisted-schema contract (or the " +
+      "file was lost); rebuild the index")
+    DataType.fromJson(JsonMethods.compact(
+        JsonMethods.parse(StoreFs.readString(f)) \ table))
+      .asInstanceOf[StructType]
+  }
+
+  /** One of a part's tables read through its persisted schema. With
+    * `tbs`, only those term-bucket directories are opened — absent ones
+    * (no term of the part hashed there) are skipped, and a part with none
+    * of them is a typed empty frame — so the read lists no other bucket
+    * and infers nothing.
+    */
+  private def readTable(spark: SparkSession, part: String, table: String,
+                        tbs: Option[Seq[Int]] = None): DataFrame = {
+    val schema = schemaOf(part, table)
+    val root = s"$part/$table"
+    tbs match {
+      case None => spark.read.schema(schema).parquet(root)
+      case Some(bs) =>
+        val dirs = bs.map(b => Paths.get(root, s"tb=$b"))
+          .filter(StoreFs.isDirectory)
+        if (dirs.isEmpty) spark.createDataFrame(java.util.List.of[Row](), schema)
+        else spark.read.schema(schema).option("basePath", root)
+          .parquet(dirs.map(_.toString): _*)
+    }
+  }
+
+  /** A part's postings or termstats slice for the analyzed `terms`: only
+    * the terms' bucket directories (routed by the part's own persisted
+    * modulus — a segment's derived count legitimately differs from the
+    * base's), with the bucket and term predicates kept in the plan for
+    * directory and row-group pruning.
+    */
+  private def termSlice(spark: SparkSession, part: String, table: String,
+                        terms: Seq[String]): DataFrame = {
+    val tbs = terms.map(termBucket(_, termBuckets(part))).distinct
+    readTable(spark, part, table, Some(tbs))
+      .filter(col("tb").isin(tbs: _*) && col("term").isin(terms: _*))
   }
 
   /** Incremental maintenance, Lucene-segment style: NEW documents are
@@ -246,10 +323,10 @@ object BM25Index {
     */
   private def livePostings(spark: SparkSession, dest: String,
                            parts: Seq[String],
-                           prune: (String, DataFrame) => DataFrame): DataFrame = {
+                           read: String => DataFrame): DataFrame = {
     val tombs = Tombstones.snapshot(dest)
     val rows = parts.map { p =>
-      val post = prune(p, spark.read.parquet(s"$p/postings"))
+      val post = read(p)
       if (tombs.isEmpty) post
       else post.withColumn("__gen", lit(AnnMeta.readKey(p, "gen").toLong))
     }.reduce(_.unionAll(_))
@@ -271,7 +348,7 @@ object BM25Index {
   def compact(spark: SparkSession, dest: String): Unit = StoreLock.withLock(dest, "compact") {
     val parts = partDirs(dest)
     if (parts.size > 1 || Tombstones.has(dest)) {
-      val post = livePostings(spark, dest, parts, (_, df) => df)
+      val post = livePostings(spark, dest, parts, readTable(spark, _, "postings"))
         .drop("tb").persistBounded()
       // corpus stats recomputed from the SURVIVING per-(doc, term) ground
       // truth — on a tombstone-free index this equals the per-part
@@ -290,33 +367,24 @@ object BM25Index {
         // their directories)
         val tstats = post.groupBy(col("term"))
           .agg(count(lit(1)).cast("double").as("df")).persistBounded()
-        val buckets = autoTermBuckets(tstats.count())
-        AnnMeta.write(tmp, "termBuckets" -> buckets, "gen" -> 0)
-        post
-          .withColumn("tb", termBucketCol(col("term"), buckets))
-          .repartition(col("tb"))
-          .sortWithinPartitions(col("term"), col("doc"))
-          .write.mode("overwrite").partitionBy("tb").parquet(s"$tmp/postings")
-        tstats
-          .withColumn("tb", termBucketCol(col("term"), buckets))
-          .repartition(col("tb"))
-          .sortWithinPartitions(col("term"))
-          .write.mode("overwrite").partitionBy("tb").parquet(s"$tmp/termstats")
-        tstats.unpersist()
-        corpus.coalesce(1).write.mode("overwrite").parquet(s"$tmp/corpus")
+        try writeTables(tmp, autoTermBuckets(tstats.count()), 0L, post,
+          tstats, corpus)
+        finally tstats.unpersist()
         // swap with the isBuilt sentinel (corpus/_SUCCESS) handled FIRST on
         // delete and LAST on move: a crash anywhere mid-swap leaves the
         // index without its sentinel, so build-if-absent callers rebuild
         // instead of serving mixed-generation postings/termstats. The
-        // params file rides INSIDE the sentinel window (deleted right
-        // after corpus, restored right before it) so a valid sentinel
-        // can never pair new postings with the old modulus — a probe
-        // routed by the stale count would silently miss terms. The
-        // segments dir is deleted BEFORE the sentinel lands — if it were
-        // removed after, a crash between the corpus move and the segment
-        // delete would leave a valid sentinel alongside the old segments
-        // and topKMerged would double-count every compacted segment doc.
-        val swapOrder = Seq("corpus", AnnMeta.File, "postings", "termstats")
+        // params and schema files ride INSIDE the sentinel window
+        // (deleted right after corpus, restored right before it) so a
+        // valid sentinel can never pair new postings with the old modulus
+        // — a probe routed by the stale count would silently miss terms.
+        // The segments dir is deleted BEFORE the sentinel lands — if it
+        // were removed after, a crash between the corpus move and the
+        // segment delete would leave a valid sentinel alongside the old
+        // segments and topKMerged would double-count every compacted
+        // segment doc.
+        val swapOrder = Seq("corpus", AnnMeta.File, SchemaFile, "postings",
+          "termstats")
         swapOrder.foreach(sub => StoreFs.deleteRecursively(Paths.get(dest, sub)))
         StoreFs.deleteRecursively(Paths.get(dest, "segments"))
         // tombstones go with the segments: their deletes are now folded
@@ -334,30 +402,28 @@ object BM25Index {
   private def partDirs(dest: String): Seq[String] =
     dest +: StoreFs.list(Paths.get(dest, "segments")).map(_.toString).sorted
 
-  /** Serving-path top-k over base + segments: per-part bucket/term-pruned
-    * postings reads unioned, df summed per term across parts, corpus stats
-    * recombined from exact counts. With zero segments this is [[topK]]'s
-    * plan plus one no-op union.
+  /** Serving-path top-k over base + segments: per part, only the query
+    * terms' bucket directories of postings and termstats are opened
+    * ([[termSlice]]), unioned with the tombstone kill applied, df summed
+    * per term across parts, corpus stats recombined from exact counts.
+    * Every read goes through the part's persisted schema, so building
+    * the frame starts no Spark job. Score is bit-identical to
+    * [[BM25.scoreTopK]] (same idf/tfNorm/rounding over the same
+    * tf/len/df/N values).
     */
   def topKMerged(spark: SparkSession, dest: String, queryTerms: Seq[String],
                  k: Int): DataFrame = {
     val terms = BM25.analyze(queryTerms)
     require(terms.nonEmpty, "no query terms survive analysis")
     val parts = partDirs(dest)
-    // per-PART bucket literals: each part routes by its own persisted
-    // modulus (a segment's derived count legitimately differs from the
-    // base's — one global tbs list would mis-prune)
-    val tbsOf = parts.map(p => p ->
-      terms.map(termBucket(_, termBuckets(p))).distinct).toMap
-    val post = livePostings(spark, dest, parts, (p, df) =>
-      df.filter(col("tb").isin(tbsOf(p): _*) && col("term").isin(terms: _*)))
+    val post = livePostings(spark, dest, parts,
+      termSlice(spark, _, "postings", terms))
     val tstats = parts
-      .map(p => spark.read.parquet(s"$p/termstats")
-        .filter(col("tb").isin(tbsOf(p): _*) && col("term").isin(terms: _*)))
+      .map(termSlice(spark, _, "termstats", terms))
       .reduce(_.unionAll(_))
       .groupBy(col("term")).agg(sum(col("df")).as("df"))
     val corpus = parts
-      .map(p => spark.read.parquet(s"$p/corpus"))
+      .map(readTable(spark, _, "corpus"))
       .reduce(_.unionAll(_))
       .agg(sum(col("n")).as("n"),
         (sum(col("total_len")).cast("double") / sum(col("n"))).as("avglen"))
@@ -378,10 +444,10 @@ object BM25Index {
     * `GRAFT_INDEX_DIR` when set — never a hardcoded absolute path.
     */
   def defaultDir(sfDir: String): String = {
-    // v5: each part persists its generation and tombstones carry the
-    // shared (__id, __gen) schema — the bump orphans older layouts so a
-    // stamped store is never read under a contract it wasn't built with
-    graft.util.StoreDirs.resolve("bm25-index-v5", sfDir)
+    // v6: each part persists its table schemas (SchemaFile), which every
+    // reader requires — the bump orphans older layouts so a stamped store
+    // is never read under a contract it wasn't built with
+    graft.util.StoreDirs.resolve("bm25-index-v6", sfDir)
   }
 
   /** Build-if-absent-or-stale for a testdata documents corpus; returns the
@@ -420,12 +486,6 @@ object BM25Index {
     dest
   }
 
-  /** Serving-path top-k: reads only the bucket-pruned, term-filtered
-    * postings/termstats slices plus the 1-row corpus; the whole query is two
-    * broadcast joins + one groupBy(doc) over matching postings. Score is
-    * bit-identical to [[BM25.scoreTopK]] (same idf/tfNorm/rounding over the
-    * same tf/len/df/N values).
-    */
   /** Served quoted-phrase top-k — the positions-index path the ad-hoc
     * [[BM25.scoreTopKPhrase]] documents as "what a high-QPS deployment
     * would run": no document is re-tokenized; the whole query reads only
@@ -453,11 +513,8 @@ object BM25Index {
       .filter(_.nonEmpty)
     require(ordered.nonEmpty, "no phrase terms survive analysis")
     val terms = ordered.distinct
-    val parts = partDirs(dest)
-    val tbsOf = parts.map(p => p ->
-      terms.map(termBucket(_, termBuckets(p))).distinct).toMap
-    val post = livePostings(spark, dest, parts, (p, df) =>
-      df.filter(col("tb").isin(tbsOf(p): _*) && col("term").isin(terms: _*)))
+    val post = livePostings(spark, dest, partDirs(dest),
+      termSlice(spark, _, "postings", terms))
     val slot = terms.zipWithIndex.toMap
     val joined = terms.zipWithIndex.map { case (t, i) =>
         val keep = Seq(col("doc")) ++ (if (i == 0) Seq(col("len")) else Nil) ++
@@ -492,8 +549,7 @@ object BM25Index {
     */
   def suggest(spark: SparkSession, dest: String, prefix: String,
               k: Int): DataFrame = {
-    val parts = partDirs(dest)
-    parts.map(p => spark.read.parquet(s"$p/termstats"))
+    partDirs(dest).map(readTable(spark, _, "termstats"))
       .reduce(_.unionAll(_))
       .filter(col("term").startsWith(prefix.toLowerCase))
       .groupBy(col("term"))
@@ -519,10 +575,10 @@ object BM25Index {
   def moreLikeThis(spark: SparkSession, dest: String, seedId: Long,
                    nTerms: Int, k: Int, minDf: Double = 1.0): DataFrame = {
     require(nTerms > 0 && k > 0, "nTerms and k must be positive")
-    val post = spark.read.parquet(s"$dest/postings")
-    val tstats = spark.read.parquet(s"$dest/termstats")
+    val post = readTable(spark, dest, "postings")
+    val tstats = readTable(spark, dest, "termstats")
       .select(col("term"), col("df"))
-    val corpus = spark.read.parquet(s"$dest/corpus")
+    val corpus = readTable(spark, dest, "corpus")
     val seedTf = post.filter(col("doc") === seedId).select(col("term"), col("tf"))
     val seedTerms = tstats.join(broadcast(seedTf), "term")
       .filter(col("df") >= minDf)
@@ -535,25 +591,6 @@ object BM25Index {
     post.join(broadcast(seedTerms), "term")
       .filter(col("doc") =!= seedId)
       .join(broadcast(prunedStats), "term")
-      .crossJoin(broadcast(corpus))
-      .groupBy(col("doc"))
-      .agg(round(sum(BM25.idfExpr(col("n"), col("df")) *
-        BM25.tfNormExpr(col("tf"), col("len"), col("avglen"))), 6).as("score"))
-      .orderBy(col("score").desc, col("doc").asc)
-      .limit(k)
-  }
-
-  def topK(spark: SparkSession, dest: String, queryTerms: Seq[String],
-           k: Int): DataFrame = {
-    val terms = BM25.analyze(queryTerms)
-    require(terms.nonEmpty, "no query terms survive analysis")
-    val tbs = terms.map(termBucket(_, termBuckets(dest))).distinct
-    val post = spark.read.parquet(s"$dest/postings")
-      .filter(col("tb").isin(tbs: _*) && col("term").isin(terms: _*))
-    val tstats = spark.read.parquet(s"$dest/termstats")
-      .filter(col("tb").isin(tbs: _*) && col("term").isin(terms: _*))
-    val corpus = spark.read.parquet(s"$dest/corpus")
-    post.join(broadcast(tstats.select(col("term"), col("df"))), "term")
       .crossJoin(broadcast(corpus))
       .groupBy(col("doc"))
       .agg(round(sum(BM25.idfExpr(col("n"), col("df")) *

@@ -158,9 +158,7 @@ object Collections {
     *
     * Scores through [[BM25Index.topKMerged]], so documents indexed as
     * appended segments by the live-ingest loop are visible immediately —
-    * Solr's serve-after-commit semantics. With zero segments the merged
-    * plan is [[BM25Index.topK]] plus one no-op union (value-identical,
-    * same oracle).
+    * Solr's serve-after-commit semantics.
     */
   def keywordSearchIndexed(tweets: DataFrame, users: DataFrame,
                            indexDir: String, terms: Seq[String],

@@ -28,10 +28,19 @@ import org.apache.spark.sql.functions._
   * Scale note: each request runs ONE driver-side action over a serving
   * query whose result is already capped (10/1000 rows) — the per-request
   * cost is the query, never the corpus. For production QPS pass
-  * `bm25IndexDir` to [[referenceRoutes]]: the keyword route then reads
-  * the prebuilt [[BM25Index]] postings store (the `q_keyword_bm25_served`
-  * path) instead of scoring ad hoc — no tokenize scan in the request
-  * plan, byte-identical envelopes (both spec-asserted).
+  * `bm25IndexDir` and `tweetIndexDir` to [[referenceRoutes]]: the routes
+  * then read the prebuilt [[BM25Index]] and [[ServingStores]] layouts
+  * instead of scanning ad hoc — no tokenize or `array_contains` scan in
+  * the request plan, byte-identical envelopes (both spec-asserted). The
+  * stored reads are key-routed: each opens only the directories its
+  * terms or keys hash to, through a persisted schema, so building a
+  * response frame starts no Spark job (no listing of the other buckets,
+  * no schema inference) and a request's jobs and tasks follow its keys'
+  * rows, not the store's bucket count (spec-asserted with a listener).
+  *
+  * A request that fails still answers with the reference's error
+  * envelope, and its cause goes to stderr as
+  * `[httpserving] <path> failed: <exception>`.
   */
 object HttpServing {
 
@@ -42,7 +51,8 @@ object HttpServing {
 
   /** Start an HTTP server on `port` (0 = any free port; read it back from
     * `server.getAddress.getPort`). Each route's body runs on a worker
-    * thread; exceptions become the reference's error envelope.
+    * thread; exceptions become the reference's error envelope, with the
+    * cause logged to stderr.
     */
   def start(port: Int, routes: Map[String, Route]): HttpServer = {
     val server = HttpServer.create(new InetSocketAddress(port), 0)
@@ -51,7 +61,11 @@ object HttpServing {
         override def handle(ex: HttpExchange): Unit = {
           val body =
             try route(parseQuery(ex.getRequestURI.getRawQuery))
-            catch { case NonFatal(_) => ErrorJson }
+            catch {
+              case NonFatal(e) =>
+                System.err.println(s"[httpserving] $path failed: $e")
+                ErrorJson
+            }
           val bytes = body.getBytes(UTF_8)
           ex.getResponseHeaders.add("Content-Type", "application/json")
           // reference: @CrossOrigin("*") — the Angular UI is a separate origin

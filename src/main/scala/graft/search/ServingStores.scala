@@ -5,7 +5,7 @@ import java.nio.file.{Path, Paths}
 import graft.util.{StoreFs, StoreLock, Tombstones}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.json4s.{DefaultFormats, Formats, JArray, JObject, JString}
 import org.json4s.jackson.JsonMethods
 
@@ -14,11 +14,13 @@ import org.json4s.jackson.JsonMethods
   * (round-10 verdict item 7), applied to exact-match and FK-expansion
   * queries. There is ONE layout: rows partitioned by
   * `pmod(hash(CAST(key AS STRING)), buckets)` and sorted within each
-  * bucket by (key ascending, sort columns descending), so a probe
-  * statically prunes to ONE bucket directory (the partition filter folds
-  * to a literal) and min/max row-group stats cut inside it. Hashing the
-  * key's string form on BOTH build and probe sides makes the bucket
-  * function insensitive to the key column's physical type.
+  * bucket by (key ascending, sort columns descending). A probe computes
+  * its keys' buckets on the driver and opens ONLY those `__bucket=b`
+  * directories, through the persisted schema — no listing of the other
+  * buckets, no schema inference, no Spark job before the first row is
+  * read — and min/max row-group stats cut inside them. Hashing the key's
+  * string form on BOTH build and probe sides makes the bucket function
+  * insensitive to the key column's physical type.
   *
   *  - TIMELINE store ([[buildTimeline]]/[[timelineProbe]]): the fact
   *    table keyed on a foreign key — the user-timeline route's FK
@@ -244,7 +246,10 @@ object ServingStores {
   def rebucket(spark: SparkSession, dest: String, newBuckets: Int): Unit =
     StoreLock.withLock(dest, "rebucket") {
       val layout = readLayout(dest)
-      val rows = dropDead(spark, dest, readStore(spark, dest, layout),
+      // through the persisted schema: an all-empty store (zero parquet
+      // files) is a typed empty frame, not an inference error
+      val rows = dropDead(spark, dest,
+        spark.read.schema(layout.schema).parquet(dest),
         Tombstones.snapshot(dest))
         .drop("__bucket")
         .withColumn("__bucket", bucketOf(col(layout.key), newBuckets))
@@ -270,8 +275,9 @@ object ServingStores {
       }
     }
 
-  /** All source rows posted under `key` — a one-bucket pruned scan (plus
-    * a broadcast tombstone anti-join when the store has live deletes).
+  /** All source rows posted under `key` — a scan of the key's one bucket
+    * directory (plus a broadcast tombstone anti-join when the store has
+    * live deletes).
     */
   def postingProbe(spark: SparkSession, dest: String, key: String): DataFrame =
     timelineProbe(spark, dest, "__key", key).drop("__key")
@@ -339,40 +345,62 @@ object ServingStores {
     assertNoRebucketRace(dest)
   }
 
-  /** All fact rows for one FK value — a one-bucket pruned scan plus a
-    * row-group-prunable equality on the sorted fk column.
+  /** All fact rows for one FK value — a scan of the value's one bucket
+    * directory plus a row-group-prunable equality on the sorted fk column.
     */
   def timelineProbe(spark: SparkSession, dest: String, fkCol: String,
                     value: Any): DataFrame =
     timelineProbeMany(spark, dest, fkCol, Seq(value))
 
   /** [[timelineProbe]] for a SET of FK values (an entity resolving to
-    * several keys — shards, aliases, merged accounts): a disjunction of
-    * per-key (bucket literal, fk literal) conjuncts, so the scan prunes
-    * to exactly the keys' bucket directories — request cost is the
-    * matching spans, independent of table size. An EMPTY key set (the
-    * entity resolved to nothing on this corpus) returns a typed empty
-    * frame — served and ad-hoc routes degrade identically. `fkCol` must
-    * be the store's persisted key.
+    * several keys — shards, aliases, merged accounts). Key-routed: each
+    * key's bucket is computed on the driver ([[bucketsOf]]) and ONLY
+    * those existing `__bucket=b` directories are opened, through the
+    * persisted schema — building the frame lists no other directory,
+    * infers nothing and starts no Spark job, so request cost is the
+    * matching spans, independent of the store's bucket count. In the
+    * plan, a disjunction of per-key (bucket literal, fk literal)
+    * conjuncts keeps the partition filter and the row-group-prunable key
+    * equality. A key set that routes to no existing directory (EMPTY,
+    * or keys no row hashed to) returns a typed empty frame without
+    * touching the store — served and ad-hoc routes degrade identically.
+    * `fkCol` must be the store's persisted key.
     */
   def timelineProbeMany(spark: SparkSession, dest: String, fkCol: String,
                         values: Seq[Any]): DataFrame = {
+    val buckets = readBuckets(dest) // the serve sentinel: fails loudly mid-swap
     val layout = readLayout(dest)
     require(fkCol == layout.key,
       s"store at $dest is keyed on '${layout.key}', not '$fkCol'")
-    if (values.isEmpty)
-      readStore(spark, dest, layout).filter(lit(false))
-        .drop("__bucket", "__gen")
-    else {
-      val buckets = readBuckets(dest)
-      val pred = values
-        .map(v => col("__bucket") === bucketOf(lit(v), buckets) &&
-          col(fkCol) === lit(v))
-        .reduce(_ || _)
-      dropDead(spark, dest, readStore(spark, dest, layout).filter(pred),
-        Tombstones.snapshot(dest)).drop("__bucket", "__gen")
-    }
+    val dirs = bucketsOf(spark, values, buckets).distinct
+      .map(b => Paths.get(dest, s"__bucket=$b")).filter(StoreFs.isDirectory)
+    val rows =
+      if (dirs.isEmpty)
+        spark.createDataFrame(java.util.List.of[Row](), layout.schema)
+      else {
+        val pred = values
+          .map(v => col("__bucket") === bucketOf(lit(v), buckets) &&
+            col(fkCol) === lit(v))
+          .reduce(_ || _)
+        dropDead(spark, dest,
+          spark.read.schema(layout.schema).option("basePath", dest)
+            .parquet(dirs.map(_.toString): _*).filter(pred),
+          Tombstones.snapshot(dest))
+      }
+    rows.drop("__bucket", "__gen")
   }
+
+  /** Each literal key's bucket under [[bucketOf]] itself — the one bucket
+    * definition, so the driver routes exactly where [[tagged]] wrote.
+    * Evaluated as a projection over a one-row local relation, which the
+    * optimizer folds and collects on the driver without a Spark job.
+    */
+  private def bucketsOf(spark: SparkSession, values: Seq[Any],
+                        buckets: Int): Seq[Int] =
+    if (values.isEmpty) Nil
+    else spark.createDataFrame(java.util.List.of(Row()), new StructType())
+      .select(values.map(v => bucketOf(lit(v), buckets)): _*)
+      .collect().head.toSeq.map(_.asInstanceOf[Int])
 
   def defaultDir(sfDir: String): String = {
     graft.util.StoreDirs.resolve("serving-store-v3", sfDir)
@@ -666,14 +694,6 @@ object ServingStores {
           "this batch — re-apply it after maintenance completes")
       case _ => ()
     }
-
-  /** Read the store's rows (including `__bucket`) through the persisted
-    * schema, so an all-empty store (zero parquet files) yields a typed
-    * empty frame instead of an inference error.
-    */
-  private def readStore(spark: SparkSession, dest: String,
-                        layout: Layout): DataFrame =
-    spark.read.schema(layout.schema).parquet(dest)
 
   // metadata files ride the StoreFs seam (read-after-write visibility
   // is contract primitive 3) — an object-store binding inherits every

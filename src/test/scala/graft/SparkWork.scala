@@ -1,0 +1,58 @@
+package graft
+
+import scala.collection.mutable
+
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
+
+/** The Spark jobs and tasks a block of driver code starts. */
+final case class SparkWork[A](jobs: Int, tasks: Int, result: A)
+
+object SparkWork {
+
+  private val seq = new java.util.concurrent.atomic.AtomicLong
+
+  /** Run `body` on this thread under a fresh job group and count the jobs
+    * and tasks started in that group (including jobs on helper threads
+    * that inherit the group, such as file listing and broadcasts). The
+    * listener bus is asynchronous but FIFO: once a marker job run AFTER
+    * `body` has ended on the bus, every event of `body`'s jobs has been
+    * delivered too, so the counts are exact rather than "quiet for a
+    * while".
+    */
+  def apply[A](sc: SparkContext)(body: => A): SparkWork[A] = {
+    val group = s"spark-work-${seq.incrementAndGet()}"
+    val marker = s"$group-marker"
+    val l = new SparkListener {
+      var jobs = 0
+      var tasks = 0
+      val stages = mutable.Set.empty[Int]
+      val markerJobs = mutable.Set.empty[Int]
+      @volatile var drained = false
+      override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs += 1; stages ++= e.stageIds
+          case Some(`marker`) => markerJobs += e.jobId
+          case _ => ()
+        }
+      }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
+        if (stages.contains(e.stageId)) tasks += 1
+      }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
+        if (markerJobs.contains(e.jobId)) drained = true
+      }
+    }
+    sc.addSparkListener(l)
+    try {
+      sc.setJobGroup(group, group)
+      val result = try body finally sc.clearJobGroup()
+      sc.setJobGroup(marker, marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!l.drained && System.nanoTime() < deadline) Thread.sleep(5)
+      require(l.drained, "listener bus did not deliver the marker job")
+      l.synchronized(SparkWork(l.jobs, l.tasks, result))
+    } finally sc.removeSparkListener(l)
+  }
+}

@@ -102,7 +102,7 @@ class BM25Spec extends SparkSpec {
     BM25Index.build(docs, "doc_id", "text", dest)
     val adhoc = BM25.scoreTopK(docs, "doc_id", "text", Seq("spark", "query"), 5)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toSeq
-    val served = BM25Index.topK(spark, dest, Seq("spark", "query"), 5)
+    val served = BM25Index.topKMerged(spark, dest, Seq("spark", "query"), 5)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toSeq
     assert(served == adhoc)
   }
@@ -116,7 +116,7 @@ class BM25Spec extends SparkSpec {
     BM25Index.build(docs, "doc_id", "text", full)
     val merged = BM25Index.topKMerged(spark, dest, Seq("spark", "query"), 5)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toSeq
-    val rebuilt = BM25Index.topK(spark, full, Seq("spark", "query"), 5)
+    val rebuilt = BM25Index.topKMerged(spark, full, Seq("spark", "query"), 5)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toSeq
     assert(merged == rebuilt)
     // the late doc 5 (both terms, short) must rank — proof the segment
@@ -150,9 +150,9 @@ class BM25Spec extends SparkSpec {
     BM25Index.build(docs.filter("doc_id <> 2").unionAll(edited),
       "doc_id", "text", full)
     for (terms <- Seq(Seq("spark", "query"), Seq("rewrite"), Seq("filler")))
-      assert(BM25Index.topK(spark, dest, terms, 5)
+      assert(BM25Index.topKMerged(spark, dest, terms, 5)
           .collect().map(r => r.getLong(0) -> r.getDouble(1)).toSeq ==
-        BM25Index.topK(spark, full, terms, 5)
+        BM25Index.topKMerged(spark, full, terms, 5)
           .collect().map(r => r.getLong(0) -> r.getDouble(1)).toSeq,
         s"terms $terms diverge from the edited-corpus rebuild")
     // deleteDocs: the id vanishes from serving; compact purges physically
@@ -160,7 +160,7 @@ class BM25Spec extends SparkSpec {
     assert(!BM25Index.topKMerged(spark, dest, Seq("query"), 5)
       .collect().map(_.getLong(0)).contains(3L))
     BM25Index.compact(spark, dest)
-    assert(!BM25Index.topK(spark, dest, Seq("query"), 5)
+    assert(!BM25Index.topKMerged(spark, dest, Seq("query"), 5)
       .collect().map(_.getLong(0)).contains(3L))
   }
 
@@ -174,7 +174,7 @@ class BM25Spec extends SparkSpec {
     BM25Index.compact(spark, dest)
     // segments are gone; the plain base-only serving path now sees all docs
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dest, "segments")))
-    val after = BM25Index.topK(spark, dest, Seq("spark", "query"), 5)
+    val after = BM25Index.topKMerged(spark, dest, Seq("spark", "query"), 5)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toSeq
     assert(after == before)
   }
@@ -278,8 +278,8 @@ class BM25Spec extends SparkSpec {
       val fresh = java.nio.file.Files.createTempDirectory("bm25propfresh").toString
       BM25Index.build(live.toSeq.toDF("doc_id", "text"), "doc_id", "text", fresh)
       for (terms <- Seq(vocab, Seq("spark"), Seq("query", "scala")))
-        assert(scored(BM25Index.topK(spark, dest, terms, 100)) ==
-          scored(BM25Index.topK(spark, fresh, terms, 100)),
+        assert(scored(BM25Index.topKMerged(spark, dest, terms, 100)) ==
+          scored(BM25Index.topKMerged(spark, fresh, terms, 100)),
           s"sequence $n $ops: compact diverged from a fresh build on $terms")
     }
   }
@@ -287,7 +287,7 @@ class BM25Spec extends SparkSpec {
   test("serving scan is pruned to the query terms' buckets") {
     val dest = java.nio.file.Files.createTempDirectory("bm25idx").toString
     BM25Index.build(docs, "doc_id", "text", dest)
-    val plan = BM25Index.topK(spark, dest, Seq("spark"), 5)
+    val plan = BM25Index.topKMerged(spark, dest, Seq("spark"), 5)
       .queryExecution.executedPlan.toString
     // partition pruning on tb must reach the postings scan
     assert(plan.contains("PartitionFilters") && plan.contains("tb"))
@@ -317,7 +317,7 @@ class BM25Spec extends SparkSpec {
     BM25Index.build(docs, "doc_id", "text", dest)
     assert(BM25Index.termBuckets(dest) == BM25Index.DefaultTermBuckets,
       "a toy vocabulary must derive the floor count")
-    val expected = BM25Index.topK(spark, dest, Seq("spark", "query"), 5)
+    val expected = BM25Index.topKMerged(spark, dest, Seq("spark", "query"), 5)
       .collect().map(_.toString).toSeq
     // same corpus laid out under a DIFFERENT modulus: identical scores
     // (the count moves bytes, never answers) — and the probe must route
@@ -331,7 +331,7 @@ class BM25Spec extends SparkSpec {
     // verify the read path: a probe over the 16-bucket layout with the
     // meta faked to 37 MUST miss (wrong directories), proving probes
     // route by the persisted value
-    val misrouted = BM25Index.topK(spark, alt, Seq("spark", "query"), 5)
+    val misrouted = BM25Index.topKMerged(spark, alt, Seq("spark", "query"), 5)
       .collect()
     assert(misrouted.isEmpty || misrouted.map(_.toString).toSeq != expected,
       "probe ignored the persisted bucket count")
@@ -554,5 +554,40 @@ class BM25Spec extends SparkSpec {
     assert(r.getLong(0) == 3L && r.getLong(1) == 10L && r.getLong(2) == 30L)
     assert(r.getLong(3) == 60L && r.getDouble(4) == 20.0)
     assert(r.getDouble(5) == 10.0) // sqrt(((100+400+900) - 3600/3) / 2) = 10
+  }
+
+  test("a query term whose tb= dir is absent in a segment still scores " +
+      "equal to the ad-hoc ranking") {
+    val dest = java.nio.file.Files.createTempDirectory("bm25absent").toString
+    val late = Seq((6L, "filler planners planners")).toDF("doc_id", "text")
+    BM25Index.build(docs, "doc_id", "text", dest)
+    BM25Index.appendSegment(late, "doc_id", "text", dest, "seg-00001")
+    val seg = java.nio.file.Paths.get(dest, "segments", "seg-00001")
+    val buckets = BM25Index.termBuckets(seg.toString)
+    for (t <- Seq("spark", "query"); table <- Seq("postings", "termstats"))
+      assert(!java.nio.file.Files.exists(
+        seg.resolve(s"$table/tb=${BM25Index.termBucket(t, buckets)}")),
+        s"precondition: the segment must hold no $table dir for '$t'")
+    val terms = Seq("spark", "query", "filler")
+    val adhoc = BM25.scoreTopK(docs.unionAll(late), "doc_id", "text", terms, 10)
+      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toSeq
+    val served = BM25Index.topKMerged(spark, dest, terms, 10)
+      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toSeq
+    assert(served == adhoc && served.map(_._1).contains(6L))
+  }
+
+  test("an index part without its schema file fails loudly with its path") {
+    val dest = java.nio.file.Files.createTempDirectory("bm25noschema").toString
+    BM25Index.build(docs, "doc_id", "text", dest)
+    java.nio.file.Files.delete(
+      java.nio.file.Paths.get(dest, BM25Index.SchemaFile))
+    for (read <- Seq[() => Any](
+        () => BM25Index.topKMerged(spark, dest, Seq("spark"), 5),
+        () => BM25Index.suggest(spark, dest, "s", 5),
+        () => BM25Index.moreLikeThis(spark, dest, 1L, 4, 5))) {
+      val e = intercept[IllegalArgumentException](read())
+      assert(e.getMessage.contains(dest) &&
+        e.getMessage.contains(BM25Index.SchemaFile), e.getMessage)
+    }
   }
 }

@@ -3,7 +3,7 @@ package graft.search
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 
-import graft.SparkSpec
+import graft.{SparkSpec, SparkWork}
 import org.apache.spark.sql.functions._
 
 /** End-to-end HTTP serving: real server on a real port, driven with the
@@ -59,6 +59,7 @@ class HttpServingSpec extends SparkSpec {
       assert(json(before, "$.count") == "3")
       var duringTmp: String = null
       var duringSwap: String = null
+      var logged = ""
       ServingStores.testHookBeforeSwap = d => if (d.endsWith("/hashtags")) {
         // tmp materialized, store untouched: a racing request serves the
         // complete OLD generation
@@ -68,13 +69,21 @@ class HttpServingSpec extends SparkSpec {
         val sentinel = java.nio.file.Paths.get(d, "_buckets.txt")
         val saved = java.nio.file.Files.readString(sentinel)
         java.nio.file.Files.delete(sentinel)
-        duringSwap = get(port, "/api/search/hashtag?tag=jobs").body()
+        val err = new java.io.ByteArrayOutputStream()
+        val stderr = System.err
+        System.setErr(new java.io.PrintStream(err, true, "UTF-8"))
+        try duringSwap = get(port, "/api/search/hashtag?tag=jobs").body()
+        finally System.setErr(stderr)
+        logged = err.toString("UTF-8")
         java.nio.file.Files.writeString(sentinel, saved)
       }
       try ServingStores.compact(spark, s"$tidx/hashtags")
       finally ServingStores.testHookBeforeSwap = _ => ()
       assert(duringTmp == before, "mid-maintenance request diverged from the old generation")
       assert(json(duringSwap, "$.status_code") == "500", duringSwap)
+      // the 500's cause is logged, naming the route and the exception
+      assert(logged.contains("[httpserving] /api/search/hashtag failed: ") &&
+        logged.contains("_buckets.txt"), s"cause not logged: '$logged'")
       // first request after the swap: the new generation, same rows
       assert(get(port, "/api/search/hashtag?tag=jobs").body() == before,
         "first request after the swap must serve the full new generation")
@@ -171,6 +180,60 @@ class HttpServingSpec extends SparkSpec {
         assert(a == b, s"$q: served envelope differs from ad hoc")
       }
     } finally { adhoc.stop(0); served.stop(0) }
+  }
+
+  test("stored routes are key-routed: building a response frame starts no " +
+      "Spark job, a hashtag read over a 64-bucket store runs fewer than 64 " +
+      "tasks, and a user read runs at most 2 jobs") {
+    // enough distinct keys that every one of the 64 buckets holds a
+    // directory in each store — the shape in which listing the store is
+    // itself a parallel Spark job
+    val n = 600
+    val manyTweets = (1 to n).map(i => (i.toString, (i % 500 + 1).toString,
+        s"spark job post $i", Seq(s"t$i", s"t${i + n}", "jobs"),
+        f"2021-03-${i % 28 + 1}%02dT10:00:00Z"))
+      .toDF("id", "userID", "tweetText", "tweetHashtags", "tweetDateTime")
+    val manyUsers = (1 to 500).map(i => (i.toString, s"user$i", s"User $i"))
+      .toDF("id", "userScreenName", "userName")
+    val root = java.nio.file.Files.createTempDirectory("graft-http-routed")
+    val tidx = root.resolve("tidx").toString
+    val bm25 = root.resolve("bm25").toString
+    HttpServing.buildTweetIndex(manyTweets, manyUsers, tidx)
+    BM25Index.build(manyTweets, "id", "tweetText", bm25)
+    for (store <- Seq("hashtags", "by_user", "users"))
+      assert(java.nio.file.Files.list(java.nio.file.Paths.get(tidx, store))
+        .filter(_.getFileName.toString.startsWith("__bucket=")).count() == 64,
+        s"$store must fill all 64 buckets for this check")
+    val sc = spark.sparkContext
+    // 1. building each stored read's frame: no listing, no inference
+    val frames = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "keyword" -> (() => Collections.keywordSearchIndexed(manyTweets,
+        manyUsers, bm25, Seq("spark", "job"), k = 10)),
+      "hashtag" -> (() =>
+        ServingStores.postingProbe(spark, s"$tidx/hashtags", "t7")),
+      "user lookup" -> (() =>
+        ServingStores.postingProbe(spark, s"$tidx/users", "user7")),
+      "timeline" -> (() =>
+        ServingStores.timelineProbe(spark, s"$tidx/by_user", "userID", "7")))
+    frames.foreach { case (name, build) =>
+      val w = SparkWork(sc)(build())
+      assert(w.jobs == 0, s"building the $name frame started ${w.jobs} jobs")
+    }
+    // 2. whole requests through the served routes
+    val routes = HttpServing.referenceRoutes(manyTweets, manyUsers,
+      bm25IndexDir = Some(bm25), tweetIndexDir = Some(tidx))
+    val hashtag = SparkWork(sc)(routes("/api/search/hashtag")(Map("tag" -> "t7")))
+    assert(json(hashtag.result, "$.count") == "1", hashtag.result)
+    assert(hashtag.tasks < 64,
+      s"hashtag read ran ${hashtag.tasks} tasks over a 64-bucket store")
+    val user = SparkWork(sc)(routes("/api/search/user")(Map("id" -> "user7")))
+    assert(json(user.result, "$.count") == "2", user.result)
+    assert(user.jobs <= 2, s"user read ran ${user.jobs} jobs")
+    // and the answers are still the ad-hoc routes' bytes
+    val adhoc = HttpServing.referenceRoutes(manyTweets, manyUsers)
+    assert(hashtag.result ==
+      adhoc("/api/search/hashtag")(Map("tag" -> "t7")))
+    assert(user.result == adhoc("/api/search/user")(Map("id" -> "user7")))
   }
 
   test("missing params and unknown users return the error envelope, HTTP 200") {

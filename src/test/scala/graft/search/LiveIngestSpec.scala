@@ -315,7 +315,7 @@ class LiveIngestSpec extends SparkSpec {
         BM25Index.build(tweetsUpd, "id", "tweetText", freshIdx)
         assert(BM25Index.topKMerged(spark, bmDir, Seq("wizards"), 10)
             .collect().map(_.toString).toSeq ==
-          BM25Index.topK(spark, freshIdx, Seq("wizards"), 10)
+          BM25Index.topKMerged(spark, freshIdx, Seq("wizards"), 10)
             .collect().map(_.toString).toSeq,
           "compacted upserted index must equal a rebuild over the edited corpus")
         assert(get(port, "/api/search/hashtag?tag=llvmjobs") == htNew)

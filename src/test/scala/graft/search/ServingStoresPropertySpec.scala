@@ -4,7 +4,7 @@ import java.nio.file.Paths
 
 import scala.jdk.CollectionConverters._
 
-import graft.SparkSpec
+import graft.{SparkSpec, SparkWork}
 import graft.util.StoreFs
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
@@ -381,24 +381,85 @@ class ServingStoresPropertySpec extends SparkSpec {
       fk <- Gen.chooseNum(0L, 12L)
       v  <- Gen.chooseNum(0, 999)
     } yield (fk, v)), 1).head
-    val df = facts.toDF("fk", "v")
-    val dest = java.nio.file.Files
-      .createTempDirectory("graft-tl-prop").toString
-    ServingStores.buildTimeline(df, "fk", dest, buckets = 5)
-    (0L to 13L).foreach { k =>
-      val probed = ServingStores.timelineProbe(spark, dest, "fk", k)
+    // long and int keys: the driver computes each probe's bucket from the
+    // literal, so a literal/column type mismatch in the bucket function
+    // would open the wrong directory and miss rows
+    for ((keyType, key) <- Seq[(String, Long => Any)](
+        "bigint" -> (k => k), "int" -> (k => k.toInt));
+        buckets <- Seq(5, 64)) {
+      val df = facts.toDF("fk", "v").withColumn("fk", col("fk").cast(keyType))
+      val dest = java.nio.file.Files
+        .createTempDirectory("graft-tl-prop").toString
+      ServingStores.buildTimeline(df, "fk", dest, buckets = buckets)
+      def rows(d: DataFrame) = d.select(col("fk").cast("long"), col("v"))
         .collect().map(r => (r.getLong(0), r.getInt(1))).sorted.toSeq
-      val expected = df.filter(col("fk") === k)
-        .collect().map(r => (r.getLong(0), r.getInt(1))).sorted.toSeq
-      assert(probed == expected, s"fk $k: $probed != $expected")
+      (0L to 13L).foreach { k =>
+        val probed = rows(ServingStores.timelineProbe(spark, dest, "fk", key(k)))
+        val expected = rows(df.filter(col("fk") === k))
+        assert(probed == expected,
+          s"$keyType fk $k, $buckets buckets: $probed != $expected")
+      }
+      // multi-key probe = union of single probes (incl. duplicates kept)
+      val many = rows(ServingStores.timelineProbeMany(spark, dest, "fk",
+        Seq(1L, 5L, 13L).map(key)))
+      val expMany = rows(df.filter(col("fk").isin(1L, 5L, 13L)))
+      assert(many == expMany, s"$keyType, $buckets buckets")
+      // the driver's routing is pinned against the written `__bucket`:
+      // every key's rows live in exactly the directory a probe opens
+      val written = spark.read.parquet(dest)
+        .select(col("fk").cast("long"), col("__bucket")).distinct()
+        .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+      written.foreach { case (k, b) =>
+        val opened = ServingStores.timelineProbe(spark, dest, "fk", key(k))
+          .inputFiles.map(f => Paths.get(new java.net.URI(f)).getParent
+            .getFileName.toString).distinct.toSeq
+        assert(opened == Seq(s"__bucket=$b"),
+          s"$keyType fk $k written to bucket $b, probe opened $opened")
+      }
+      StoreAdmin.truncate(dest)
     }
-    // multi-key probe = union of single probes (incl. duplicates kept)
-    val many = ServingStores.timelineProbeMany(spark, dest, "fk",
-        Seq(1L, 5L, 13L))
-      .collect().map(r => (r.getLong(0), r.getInt(1))).sorted.toSeq
-    val expMany = df.filter(col("fk").isin(1L, 5L, 13L))
-      .collect().map(r => (r.getLong(0), r.getInt(1))).sorted.toSeq
-    assert(many == expMany)
+  }
+
+  test("a probe whose key routes to an absent bucket directory is a typed " +
+      "empty frame that starts no Spark job; the append that creates the " +
+      "directory is served by the next probe") {
+    val dest = java.nio.file.Files
+      .createTempDirectory("graft-tl-absent").toString
+    ServingStores.buildTimeline(Seq(("a", 1)).toDF("k", "v"), "k", dest)
+    def bucketDirs = StoreFs.list(Paths.get(dest))
+      .map(_.getFileName.toString).filter(_.startsWith("__bucket=")).toSet
+    val before = bucketDirs
+    assert(before.size == 1)
+    val absent = SparkWork(spark.sparkContext)(
+      ServingStores.timelineProbe(spark, dest, "k", "b").collect())
+    assert(absent.result.isEmpty && absent.jobs == 0,
+      s"absent-bucket probe: ${absent.result.toSeq}, ${absent.jobs} jobs")
+    assert(ServingStores.timelineProbe(spark, dest, "k", "b").columns.toSeq ==
+      Seq("k", "v"))
+    ServingStores.appendTimeline(Seq(("b", 2)).toDF("k", "v"), dest)
+    assert((bucketDirs -- before).size == 1,
+      "the probed key's bucket directory must have been absent")
+    assert(ServingStores.timelineProbe(spark, dest, "k", "b").collect()
+      .map(r => (r.getString(0), r.getInt(1))).toSeq == Seq(("b", 2)))
+    StoreAdmin.truncate(dest)
+  }
+
+  test("a tombstoned row in an opened bucket stays dropped") {
+    val dest = java.nio.file.Files
+      .createTempDirectory("graft-tl-tomb").toString
+    val facts = Seq((1L, "u1", 10), (2L, "u1", 20), (3L, "u2", 30))
+      .toDF("id", "fk", "v")
+    ServingStores.buildTimeline(facts, "fk", dest, buckets = 64)
+    ServingStores.deleteIds(spark, dest, "id", Seq(2L))
+    def probe(k: String) = ServingStores.timelineProbe(spark, dest, "fk", k)
+      .collect().map(_.getLong(0)).sorted.toSeq
+    assert(probe("u1") == Seq(1L), "the deleted row leaked past the kill")
+    assert(probe("u2") == Seq(3L))
+    // an upsert's new version survives its own tombstone; the old dies
+    ServingStores.upsertTimeline(Seq((1L, "u1", 11)).toDF("id", "fk", "v"),
+      "id", dest)
+    assert(ServingStores.timelineProbe(spark, dest, "fk", "u1")
+      .collect().map(r => (r.getLong(0), r.getInt(2))).toSeq == Seq((1L, 11)))
     StoreAdmin.truncate(dest)
   }
 }
