@@ -418,23 +418,26 @@ object BM25Index {
     val parts = partDirs(dest)
     val post = livePostings(spark, dest, parts,
       termSlice(spark, _, "postings", terms))
-    val tstats = parts
-      .map(termSlice(spark, _, "termstats", terms))
-      .reduce(_.unionAll(_))
-      .groupBy(col("term")).agg(sum(col("df")).as("df"))
-    val corpus = parts
-      .map(readTable(spark, _, "corpus"))
-      .reduce(_.unionAll(_))
-      .agg(sum(col("n")).as("n"),
-        (sum(col("total_len")).cast("double") / sum(col("n"))).as("avglen"))
+    val tstats = summedDf(parts.map(termSlice(spark, _, "termstats", terms)))
     post.join(broadcast(tstats), "term")
-      .crossJoin(broadcast(corpus))
+      .crossJoin(broadcast(mergedCorpus(spark, parts)))
       .groupBy(col("doc"))
       .agg(round(sum(BM25.idfExpr(col("n"), col("df")) *
         BM25.tfNormExpr(col("tf"), col("len"), col("avglen"))), 6).as("score"))
       .orderBy(col("score").desc, col("doc").asc)
       .limit(k)
   }
+
+  /** df per term summed across parts (additive over disjoint doc sets). */
+  private def summedDf(termstats: Seq[DataFrame]): DataFrame =
+    termstats.reduce(_.unionAll(_))
+      .groupBy(col("term")).agg(sum(col("df")).as("df"))
+
+  /** N and avglen over every part, recombined from the exact counts. */
+  private def mergedCorpus(spark: SparkSession, parts: Seq[String]): DataFrame =
+    parts.map(readTable(spark, _, "corpus")).reduce(_.unionAll(_))
+      .agg(sum(col("n")).as("n"),
+        (sum(col("total_len")).cast("double") / sum(col("n"))).as("avglen"))
 
   def isBuilt(dest: String): Boolean =
     StoreFs.exists(Paths.get(dest, "corpus", "_SUCCESS"))
@@ -559,11 +562,13 @@ object BM25Index {
   }
 
   /** Served More-Like-This: [[BM25.moreLikeThis]] re-expressed as joins
-    * over the prebuilt index. The seed's interesting terms come from its
-    * own postings rows (tf), df from termstats, N/avglen from corpus;
-    * scoring rides the term-pruned postings with denormalized `len` — no
-    * corpus re-tokenize anywhere. Must be hash-equal to the ad-hoc ranking
-    * (same rounding, same tf·idf term selection, same tiebreaks); shares
+    * over the prebuilt index, base + segments like [[topKMerged]]. The
+    * seed's interesting terms come from its own live postings rows (tf),
+    * df summed per term across parts, N/avglen recombined from exact
+    * counts; scoring rides the live postings with denormalized `len` —
+    * no corpus re-tokenize anywhere, and a tombstoned version never
+    * scores. Must be hash-equal to the ad-hoc ranking (same rounding,
+    * same tf·idf term selection, same tiebreaks); shares
     * `q_more_like_this`'s oracle.
     *
     * The seed lookup filters postings by doc across all term buckets —
@@ -575,10 +580,10 @@ object BM25Index {
   def moreLikeThis(spark: SparkSession, dest: String, seedId: Long,
                    nTerms: Int, k: Int, minDf: Double = 1.0): DataFrame = {
     require(nTerms > 0 && k > 0, "nTerms and k must be positive")
-    val post = readTable(spark, dest, "postings")
-    val tstats = readTable(spark, dest, "termstats")
-      .select(col("term"), col("df"))
-    val corpus = readTable(spark, dest, "corpus")
+    val parts = partDirs(dest)
+    val post = livePostings(spark, dest, parts, readTable(spark, _, "postings"))
+    val tstats = summedDf(parts.map(readTable(spark, _, "termstats")))
+    val corpus = mergedCorpus(spark, parts)
     val seedTf = post.filter(col("doc") === seedId).select(col("term"), col("tf"))
     val seedTerms = tstats.join(broadcast(seedTf), "term")
       .filter(col("df") >= minDf)

@@ -44,6 +44,7 @@ import org.apache.spark.sql.functions._
   */
 object HttpServing {
 
+  /** The reference's one error envelope (`Handler.java:66-71`). */
   private val ErrorJson = """{"status_code":500,"message":"Internal Server Error"}"""
 
   /** A route: decoded query params → the response JSON string. */

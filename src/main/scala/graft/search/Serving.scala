@@ -1,7 +1,7 @@
 package graft.search
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 
 /** REST response assembly — the reference API's endpoint envelopes
   * (`Ranking Model/src/main/java/api/Handler.java:34-167`, field names from
@@ -19,8 +19,6 @@ object Serving {
 
   private val HttpSuccess = 200
   private val HttpSuccessMessage = "Success"
-  private val HttpError = 500
-  private val HttpErrorMessage = "Internal Server Error"
 
   /** `{count, data: [{user, tweet}], status_code, message}` — the envelope
     * of the keyword and hashtag search endpoints (`Handler.java:34-63,
@@ -56,13 +54,5 @@ object Serving {
         expr("transform(__t, e -> e.t)").as("tweets"),
         lit(HttpSuccess).as("status_code"),
         lit(HttpSuccessMessage).as("message"))).as("response"))
-  }
-
-  /** The error envelope (`Handler.java:66-71`): `{status_code, message}`. */
-  def errorResponse(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq(1).toDF("__one").select(to_json(struct(
-      lit(HttpError).as("status_code"),
-      lit(HttpErrorMessage).as("message"))).as("response"))
   }
 }

@@ -1,12 +1,13 @@
 package graft.search
 
-import java.nio.file.{Path, Paths}
+import java.nio.file.{FileAlreadyExistsException, Path, Paths}
+import java.util.UUID
 
 import graft.util.{StoreFs, StoreLock, Tombstones}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.json4s.{DefaultFormats, Formats, JArray, JObject, JString}
+import org.json4s.{DefaultFormats, Formats, JArray, JInt, JObject, JString, JValue}
 import org.json4s.jackson.JsonMethods
 
 /** Persisted request-time layouts for the two non-keyword REST routes —
@@ -15,12 +16,12 @@ import org.json4s.jackson.JsonMethods
   * queries. There is ONE layout: rows partitioned by
   * `pmod(hash(CAST(key AS STRING)), buckets)` and sorted within each
   * bucket by (key ascending, sort columns descending). A probe computes
-  * its keys' buckets on the driver and opens ONLY those `__bucket=b`
-  * directories, through the persisted schema — no listing of the other
-  * buckets, no schema inference, no Spark job before the first row is
-  * read — and min/max row-group stats cut inside them. Hashing the key's
-  * string form on BOTH build and probe sides makes the bucket function
-  * insensitive to the key column's physical type.
+  * its keys' buckets on the driver and opens ONLY the files those
+  * buckets list in the store's manifest, through the persisted schema —
+  * no directory listing, no schema inference, no Spark job before the
+  * first row is read — and min/max row-group stats cut inside them.
+  * Hashing the key's string form on BOTH build and probe sides makes
+  * the bucket function insensitive to the key column's physical type.
   *
   *  - TIMELINE store ([[buildTimeline]]/[[timelineProbe]]): the fact
   *    table keyed on a foreign key — the user-timeline route's FK
@@ -32,90 +33,199 @@ import org.json4s.jackson.JsonMethods
   *    the matching postings, never an `array_contains` scan of the
   *    corpus.
   *
-  * The layout contract is written into the store once, at build time,
-  * and never restated: `_layout.json` holds the row schema (so a store
-  * built from an all-empty-keys source — zero parquet files — still
-  * probes to a typed empty frame), the key column and the columns sorted
-  * descending after it. `_buckets.txt` holds the bucket count and is the
-  * serve sentinel, written after `_layout.json` (the underscores keep
-  * both out of the parquet file index). Every writer and maintainer
-  * reads the two back, so an appender can never split the key space
-  * differently and a compaction can never restore a different order. A
-  * store without `_layout.json` fails loudly.
+  * == The commit model (Lucene's `segments_N`, the Delta Lake log) ==
+  *
+  * A store's whole state is its latest manifest, `_manifest/<N>.json`
+  * (N zero-padded): the row schema (so a store with zero data files
+  * still probes to a typed empty frame), the key column, the columns
+  * sorted descending after it, the bucket count, the last write
+  * generation, the identity column tombstones key on, and the names of
+  * the data files per bucket and of the tombstone files. Readers list
+  * `_manifest/`, read the highest N and open exactly the files it
+  * names. Every write — build, append, upsert, delete, compact,
+  * rebucket — takes one path: Spark writes into a sibling
+  * `<dest>-<uuid>-rewrite-tmp`, the staged parquet files move into
+  * `__bucket=b/` (or `_tombstones/`) under their unique part names,
+  * and [[commit]] publishes version N+1 naming them with
+  * [[graft.util.StoreFs.createExclusive]] — one atomic, content-complete
+  * create. A commit never deletes a file: a reader holding version N
+  * keeps reading N's files, and [[StoreAdmin.gcOrphans]] (between jobs)
+  * deletes whatever the latest manifest does not name. The one deletion
+  * outside gc is a PURGE (a fold that unlists tombstones): deleted rows
+  * must leave the disk there, so right after its commit it deletes the
+  * files it folded and the tombstone files it applied — a reader still
+  * on the previous version at that instant fails loudly (its retry
+  * serves the purged commit), never serves a dead row. A store without
+  * a manifest fails loudly, naming its `_manifest` path.
   *
   * Maintenance lifecycle (the reference's indexer is a CONTINUOUS
   * keyed-upsert loop — SolrIndexer's addBean+commit per batch — with
   * Solr compacting segments beneath it; this is that full cycle):
-  * [[appendTimeline]]/[[appendPostings]] add a batch's rows into the
-  * existing bucket dirs at batch cost; [[upsertTimeline]]/
-  * [[upsertPostings]] REPLACE existing row ids (the reference's
-  * `addBean` overwrite semantics — `SolrIndexer.java:47-59`) via
-  * generation-numbered tombstones (below); [[compact]] and
-  * [[compactHotBuckets]] fold the accumulated small files back into one
-  * read-optimized generation (bounded file count, restored row-group
-  * pruning, dead rows physically purged); [[rebucket]] changes the
-  * bucket count in place when growth makes buckets hot — the one remedy
-  * short of a full rebuild.
+  * [[appendTimeline]]/[[appendPostings]] add a batch's rows at batch
+  * cost; [[upsertTimeline]]/[[upsertPostings]] REPLACE existing row ids
+  * (the reference's `addBean` overwrite semantics —
+  * `SolrIndexer.java:47-59`) via generation-numbered tombstones (below);
+  * [[compact]] and [[compactHotBuckets]] fold the accumulated small
+  * files back into one read-optimized file per bucket (dead rows
+  * physically purged); [[rebucket]] changes the bucket count when
+  * growth makes buckets hot — the one remedy short of a full rebuild.
+  * All three are one fold: read the chosen buckets' listed files, kill
+  * what the manifest's tombstones outrank, re-tag `__bucket` under the
+  * target count, write in ONE partitioned job, commit.
   *
-  * == Concurrency contract (the Lucene IndexWriter-lock semantics) ==
+  * == Concurrency contract (which side throws in each race) ==
   *
-  * Compaction is SEGMENT-MODEL: it snapshots the explicit list of data
-  * files per bucket, folds exactly those files into one replacement, and
-  * deletes exactly those files — a concurrent append/upsert's files land
-  * after the snapshot and survive byte-untouched (spec-asserted with an
-  * append interleaved into the swap window). Rebucketing is the one
-  * rewrite a writer can never safely race (the bucket function itself
-  * changes mid-flight), so it runs under the store's
-  * [[graft.util.StoreLock]] and writers fail LOUDLY: appends/upserts
-  * check the lock at entry and re-check after their write — a collision
-  * is an IllegalStateException telling the caller to retry, never silent
-  * loss. All maintenance ops hold the lock, serializing maintenance
-  * against maintenance; a crashed holder's lock is stolen when stale.
-  * Writers are additionally single-writer per store AMONG THEMSELVES
-  * (the generation counter is read-inc-write) — the contract the
-  * live ingest loop already has, stated here like
-  * [[StoreAdmin.gcOrphans]]'s.
+  * Each commit re-reads the latest manifest, re-checks its own
+  * precondition there, and retries on a lost version race; a failed
+  * precondition is an [[IllegalStateException]] on the side that
+  * committed SECOND, and its staged files are never served.
+  *  - write vs compact: both succeed. The fold commits only if every
+  *    file it folded is still listed; a write's files and tombstones
+  *    committed meanwhile are kept, and only the tombstones the fold
+  *    snapshotted are cleared.
+  *  - write vs rebucket: a writer checks the store's
+  *    [[graft.util.StoreLock]] at entry and rejects a live rebucket
+  *    there. A write staged under b buckets commits only onto a manifest
+  *    with b buckets, so a rebucket that committed first makes the write
+  *    throw; a write that committed first makes the rebucket throw (it
+  *    commits only if nothing was committed after its snapshot).
+  *  - write vs write: the generation is read-inc-committed; the writer
+  *    that commits a generation already committed throws.
+  *  - maintenance vs maintenance: compact and rebucket hold the store
+  *    lock; the second maintainer throws, a crashed holder's stale lock
+  *    is stolen.
+  *
+  * == Crash contract ==
+  *
+  * A crash at any point leaves the last commit serving, with its
+  * staleness stamp intact: before the manifest create nothing a reader
+  * opens has changed, and the create is all-or-nothing. What a crash
+  * leaves behind — a staging dir, moved-in but uncommitted files — is
+  * unreferenced, and [[StoreAdmin.gcOrphans]] reclaims it.
   *
   * == Update/delete semantics (tombstones) ==
   *
-  * The shared [[graft.util.Tombstones]] contract, keyed on the string
-  * form of the identity column the first upsert/delete names
-  * (`_idcol.txt`): each append/upsert writes its rows at a fresh
-  * generation, an upsert tombstones the batch's ids at that generation
-  * BEFORE appending the new rows (a crash between the writes leaves the
-  * doc absent, never served twice), and probes drop what a tombstone
-  * outranks. Full compaction and rebucketing apply the filter
-  * physically and clear exactly the tombstone files they folded —
-  * Lucene's delete+add with tombstones folded at merge. [[deleteIds]]
-  * is the tombstone-only half (Solr's deleteById).
-  *
-  * All rewrites land in a sibling tmp first with `_buckets.txt` as the
-  * swap sentinel (stamp deleted first, restored last — the
-  * [[BM25Index.compact]] crash contract: a crash mid-swap leaves a
-  * store that fails loudly and rebuilds, never serves a mixed
-  * generation). At 100 TB these are the layouts a serving cluster
-  * holds per collection; the stamp-guarded lifecycle (build-once,
-  * [[StoreAdmin]]-truncatable) matches the engine's other stores.
+  * The shared [[graft.util.Tombstones]] table, keyed on the string form
+  * of the identity column the first upsert/delete names: each
+  * append/upsert writes its rows at a fresh generation, an upsert's
+  * tombstones kill every strictly older version of its ids, and probes
+  * drop what a listed tombstone outranks. An upsert's tombstones and
+  * rows land in ONE commit. A fold that covered every nonempty bucket
+  * purges the dead rows physically and unlists the tombstones it
+  * applied — Lucene's delete+add with tombstones folded at merge.
+  * [[deleteIds]] is the tombstone-only half (Solr's deleteById).
   */
 object ServingStores {
 
   val DefaultBuckets = 64
 
-  private val LayoutFile = "_layout.json"
+  private val ManifestDir = "_manifest"
 
-  /** Test seam: runs after a fold's tmp generation is fully materialized
-    * and before the swap — the widest window in which a concurrent
-    * append's files must survive the segment-model deletion.
+  /** Test seam: runs after a fold's files are fully staged and before
+    * its commit — the widest window in which a concurrent write can
+    * land between a fold's snapshot and its commit.
     */
   private[search] var testHookBeforeSwap: String => Unit = _ => ()
 
-  /** A store's persisted contract (`_layout.json`): the row schema
-    * (including `__gen` and the `__bucket` partition column), the key
-    * column the buckets hash, and the columns sorted descending after it.
+  /** One commit point of a store (`_manifest/<version>.json`): the row
+    * schema (including `__gen` and the `__bucket` partition column), the
+    * key column the buckets hash, the columns sorted descending after
+    * it, the bucket count, the last write generation, the identity
+    * column tombstones key on, and the store-relative paths of the data
+    * files (`__bucket=<b>/<part>`) and tombstone files
+    * (`_tombstones/<part>`).
     */
-  private case class Layout(schema: StructType, key: String,
-                            sortDesc: Seq[String]) {
+  private case class Manifest(version: Long, schema: JValue, key: String,
+                              sortDesc: Seq[String], buckets: Int, gen: Long,
+                              idCol: Option[String], files: Seq[String],
+                              tombstones: Seq[String]) {
+    lazy val rowSchema: StructType =
+      DataType.fromJson(JsonMethods.compact(schema)).asInstanceOf[StructType]
+
     def order: Seq[Column] = col(key) +: sortDesc.map(col(_).desc)
+
+    def inBucket(b: Int): Seq[String] = files.filter(_.startsWith(s"__bucket=$b/"))
+
+    /** [[graft.util.Tombstones.kill]] against the listed tombstones. */
+    def dropDead(spark: SparkSession, dest: String, rows: DataFrame): DataFrame =
+      Tombstones.kill(spark, tombstones.map(Paths.get(dest, _)), rows,
+        idCol.orNull, Tombstones.StringKey)
+
+    // written and read field by field, with no case-class reflection
+    def json: String = {
+      def strings(xs: Seq[String]) = JArray(xs.map(JString(_)).toList)
+      JsonMethods.compact(JObject(List("version" -> JInt(version),
+        "schema" -> schema, "key" -> JString(key), "sortDesc" -> strings(sortDesc),
+        "buckets" -> JInt(buckets), "gen" -> JInt(gen), "files" -> strings(files),
+        "tombstones" -> strings(tombstones)) ++ idCol.map("idCol" -> JString(_))))
+    }
+  }
+
+  private def parseManifest(text: String): Manifest = {
+    implicit val formats: Formats = DefaultFormats
+    val j = JsonMethods.parse(text)
+    def strings(f: String) = (j \ f).extract[List[String]]
+    Manifest((j \ "version").extract[Long], j \ "schema", (j \ "key").extract[String],
+      strings("sortDesc"), (j \ "buckets").extract[Int], (j \ "gen").extract[Long],
+      (j \ "idCol").extractOpt[String], strings("files"), strings("tombstones"))
+  }
+
+  private val VersionName = """(\d+)\.json""".r
+
+  private def manifestFile(dest: String, version: Long): Path =
+    Paths.get(dest, ManifestDir, f"$version%020d.json")
+
+  private def versions(dest: String): Seq[Long] =
+    StoreFs.list(Paths.get(dest, ManifestDir)).map(_.getFileName.toString)
+      .collect { case VersionName(n) => n.toLong }
+
+  /** The store's latest manifest; a store without one fails loudly. */
+  private def latest(dest: String): Manifest = {
+    val vs = versions(dest)
+    if (vs.isEmpty) throw new IllegalStateException(
+      s"serving store at $dest has no manifest in " +
+        s"${Paths.get(dest, ManifestDir)} — never built or not a v4 store; " +
+        "rebuild it")
+    parseManifest(StoreFs.readString(manifestFile(dest, vs.max)))
+  }
+
+  /** Publish `m` as its version: exclusive, content-atomic create. */
+  private def publish(dest: String, m: Manifest): Unit = {
+    StoreFs.createDirectories(Paths.get(dest, ManifestDir))
+    StoreFs.createExclusive(manifestFile(dest, m.version), m.json)
+  }
+
+  /** Publish `edit` applied to the latest manifest as the next version.
+    * When a concurrent commit took that version first, re-read and
+    * re-apply — `edit` re-checks its precondition against what is now
+    * latest and throws when it no longer holds.
+    */
+  private def commit(dest: String)(edit: Manifest => Manifest): Unit = {
+    val cur = latest(dest)
+    try publish(dest, edit(cur).copy(version = cur.version + 1))
+    catch { case _: FileAlreadyExistsException => commit(dest)(edit) }
+  }
+
+  /** Run `write` against a fresh sibling staging dir, then move every
+    * staged parquet file into the same subdirectory of the store under
+    * its unique part name — unlisted until a commit names it. Returns
+    * the moved files' store-relative paths.
+    */
+  private def stage(dest: String)(write: String => Unit): Seq[String] = {
+    val tmp = Paths.get(s"${dest.stripSuffix("/")}-${UUID.randomUUID()}-rewrite-tmp")
+    try {
+      write(tmp.toString)
+      StoreFs.list(tmp).flatMap { dir =>
+        val files = StoreFs.parquetFiles(dir)
+        if (files.nonEmpty)
+          StoreFs.createDirectories(Paths.get(dest, dir.getFileName.toString))
+        files.map { f =>
+          val rel = s"${dir.getFileName}/${f.getFileName}"
+          StoreFs.move(f, Paths.get(dest, rel))
+          rel
+        }
+      }
+    } finally StoreFs.deleteRecursively(tmp)
   }
 
   private def bucketOf(key: Column, buckets: Int): Column =
@@ -127,20 +237,30 @@ object ServingStores {
     rows.withColumn("__gen", lit(gen))
       .withColumn("__bucket", bucketOf(col(key), buckets))
 
-  /** Bucket-partitioned layout write. The sort leads with `__bucket`:
-    * `repartition(col)` can co-locate several bucket values in one task
-    * and the dynamic-`partitionBy` writer then requires its own sort by
-    * the partition column — which is NOT guaranteed stable, so a
-    * key-only `sortWithinPartitions` could silently lose the documented
-    * within-bucket key order (and the min/max row-group pruning it
-    * enables). Leading with `__bucket` satisfies the writer's required
-    * ordering outright; no re-sort is inserted.
+  /** Bucket-partitioned layout write — one job, one file per bucket. The
+    * sort leads with `__bucket`: `repartition(col)` can co-locate several
+    * bucket values in one task and the dynamic-`partitionBy` writer then
+    * requires its own sort by the partition column — which is NOT
+    * guaranteed stable, so a key-only `sortWithinPartitions` could
+    * silently lose the documented within-bucket key order (and the
+    * min/max row-group pruning it enables). Leading with `__bucket`
+    * satisfies the writer's required ordering outright; no re-sort is
+    * inserted.
     */
   private def writeRows(rows: DataFrame, order: Seq[Column],
-                        dest: String, mode: String): Unit =
+                        dest: String): Unit =
     rows.repartition(col("__bucket"))
       .sortWithinPartitions(col("__bucket") +: order: _*)
-      .write.mode(mode).partitionBy("__bucket").parquet(dest)
+      .write.mode("append").partitionBy("__bucket").parquet(dest)
+
+  /** The listed `files` through the persisted schema (`__bucket` comes
+    * from their directory names); no files is a typed empty frame.
+    */
+  private def scan(spark: SparkSession, dest: String, m: Manifest,
+                   files: Seq[String]): DataFrame =
+    if (files.isEmpty) spark.createDataFrame(java.util.List.of[Row](), m.rowSchema)
+    else spark.read.schema(m.rowSchema).option("basePath", dest)
+      .parquet(files.map(Paths.get(dest, _).toString): _*)
 
   // array_distinct: a key repeated within one row must post the row
   // ONCE — the probe replays `array_contains` semantics, not explode's
@@ -169,7 +289,7 @@ object ServingStores {
     */
   def upsertPostings(batch: DataFrame, idCol: String, keysCol: Column,
                      dest: String, dropCols: Seq[String] = Nil): Unit =
-    ingest(postingRows(batch, keysCol, dropCols), dest,
+    ingest(dest, Some(postingRows(batch, keysCol, dropCols)),
       Some(idCol -> batch.select(col(idCol))))
 
   /** Tombstone-only delete (Solr's deleteById): every stored row of the
@@ -178,175 +298,135 @@ object ServingStores {
     */
   def deleteIds(spark: SparkSession, dest: String, idCol: String,
                 ids: Seq[Any]): Unit = {
-    assertWritable(dest)
-    val gen = Tombstones.nextGen(dest)
-    writeIdCol(dest, idCol)
     import spark.implicits._
-    Tombstones.write(ids.map(String.valueOf).toDF("__id"), dest, gen,
-      Tombstones.StringKey)
-    assertNoRebucketRace(dest)
+    ingest(dest, None, Some(idCol -> ids.map(String.valueOf).toDF("__id")))
   }
 
-  /** Fold accumulated small files back into one read-optimized
-    * generation per bucket and physically purge tombstoned rows: every
-    * nonempty bucket is folded when tombstones exist (the purge must
-    * visit every file), otherwise only buckets fragmented by appends
-    * (≥2 files). File count drops back to O(buckets), within-bucket
-    * (key, sort) order (and its min/max row-group pruning) is restored,
-    * and the tombstone files this pass applied are cleared.
-    * Segment-model: a concurrent append survives (see the object
-    * scaladoc). Probe results are identical before/after (spec-asserted
-    * against a fresh rebuild).
+  /** Fold accumulated small files back into one read-optimized file per
+    * bucket and physically purge tombstoned rows: every nonempty bucket
+    * is folded when tombstones exist (the purge must visit every file),
+    * otherwise only buckets fragmented by appends (≥2 files). File count
+    * drops back to O(buckets), within-bucket (key, sort) order (and its
+    * min/max row-group pruning) is restored, and the tombstones this
+    * pass applied are unlisted. A concurrent write survives (see the
+    * object scaladoc). Probe results are identical before/after
+    * (spec-asserted against a fresh rebuild).
     */
   def compact(spark: SparkSession, dest: String): Unit =
     fold(spark, dest, minFiles = if (hasTombstones(dest)) 1 else 2)
 
   /** [[compact]] scoped to the buckets that NEED it — the 100-TB
     * maintenance shape: a full-store rewrite is O(store) per cycle, but
-    * appends only fragment the buckets they touched, and bucket dirs are
+    * appends only fragment the buckets they touched, and buckets are
     * independent, so compaction can pay O(hot buckets) instead. Buckets
-    * with ≥ `minFiles` data files are each folded to one sorted file
+    * with ≥ `minFiles` listed files are folded to one sorted file each
     * (tombstoned rows purged from those buckets); cold buckets' files are
-    * left byte-untouched, so tombstones are NOT cleared unless this pass
-    * happened to fold every nonempty bucket. Crash contract: all tmps are
-    * materialized FIRST, then the stamp and the `_buckets.txt` sentinel
-    * come down for the per-bucket swaps and are restored last — probes
-    * fail loudly DURING the short swap window (not the long tmp write); a
-    * crash anywhere mid-swap leaves a loud store a build-if-stale caller
-    * rebuilds. Returns the compacted bucket ids.
+    * left byte-untouched, so tombstones are NOT unlisted unless this pass
+    * happened to fold every nonempty bucket. Returns the compacted
+    * bucket ids.
     */
   def compactHotBuckets(spark: SparkSession, dest: String,
                         minFiles: Int = 4): Seq[Int] =
     fold(spark, dest, minFiles)
 
-  /** Change the bucket count of an existing store IN PLACE — the growth
-    * remedy when a fixed build-time bucket count leaves hot buckets at
-    * 100 TB: every live row's `__bucket` is recomputed from its key under
-    * the new count (tombstoned rows purged — this IS a full rewrite) and
-    * the store is atomically rewritten, `_buckets.txt` updated last so
-    * probes can never pair the new layout with the old count. Runs under
-    * the store lock; appenders fail loudly for its duration and read the
-    * new count on their next batch. Probe ≡ `array_contains` across any
-    * rebucket (property-spec-asserted for 3 → 7 → 1).
-    *
-    * The rewrite lands in a sibling tmp dir first; then the staleness
-    * stamp is the FIRST thing deleted and the LAST thing restored — the
-    * [[graft.util.AtomicRewrite]] invariant. That ordering is what makes
-    * every crash window recoverable: a crash during the tmp write leaves
-    * the old store untouched (plus an orphan tmp for
-    * [[StoreAdmin.gcOrphans]]); a crash after the stamp delete leaves a
-    * store `Stamp.isFresh` rejects, so the build-if-stale callers
-    * REBUILD — whether probes still serve the old generation (sentinel
-    * intact) or fail loudly (sentinel gone). The stamp's VALUE survives a
-    * completed rewrite (rebucketing does not change what source the store
-    * was built from), and so do the layout and the generation counter —
-    * surviving rows keep their `__gen`, and future tombstones must
-    * outrank them.
+  /** Change the bucket count of an existing store — the growth remedy
+    * when a fixed build-time bucket count leaves hot buckets at 100 TB:
+    * every live row's `__bucket` is recomputed from its key under the
+    * new count (tombstoned rows purged — this IS a full rewrite) and the
+    * new files and count land in one commit, so probes can never pair
+    * the new layout with the old count. Runs under the store lock;
+    * writers racing it fail loudly (object scaladoc) and read the new
+    * count on their next batch. Surviving rows keep their `__gen`, so
+    * future tombstones still outrank them; the staleness stamp is never
+    * touched. Probe ≡ `array_contains` across any rebucket
+    * (property-spec-asserted for 3 → 7 → 1).
     */
   def rebucket(spark: SparkSession, dest: String, newBuckets: Int): Unit =
-    StoreLock.withLock(dest, "rebucket") {
-      val layout = readLayout(dest)
-      // through the persisted schema: an all-empty store (zero parquet
-      // files) is a typed empty frame, not an inference error
-      val rows = dropDead(spark, dest,
-        spark.read.schema(layout.schema).parquet(dest),
-        Tombstones.snapshot(dest))
-        .drop("__bucket")
-        .withColumn("__bucket", bucketOf(col(layout.key), newBuckets))
-      val tmp = dest.stripSuffix("/") + "-rewrite-tmp"
-      writeRows(rows, layout.order, tmp, "overwrite")
-      swap(dest, newBuckets) {
-        // wipe the old generation's CONTENT but keep the maintenance lock
-        // (deleting it mid-swap would void the writers' entry AND
-        // post-write race checks — a batch landing here would be silently
-        // destroyed with no one throwing), the layout, and the generation
-        // counter + identity column (a fresh upsert racing the counter's
-        // restore would mint a tombstone that never outranks the
-        // surviving rows). The sentinel is already down, so anything that
-        // slips past the lock check still fails loudly at readBuckets.
-        val keep = Set(StoreLock.LockFile, Tombstones.GenFile, "_idcol.txt",
-          LayoutFile)
-        StoreFs.list(Paths.get(dest))
-          .filterNot(p => keep.contains(p.getFileName.toString))
-          .foreach(StoreFs.deleteRecursively)
-        StoreFs.list(Paths.get(tmp)).foreach(p =>
-          StoreFs.move(p, Paths.get(dest).resolve(p.getFileName)))
-        StoreFs.deleteIfExists(Paths.get(tmp))
-      }
-    }
+    fold(spark, dest, minFiles = 0, newBuckets = Some(newBuckets))
 
-  /** All source rows posted under `key` — a scan of the key's one bucket
-    * directory (plus a broadcast tombstone anti-join when the store has
-    * live deletes).
+  /** All source rows posted under `key` — a scan of the key's one
+    * bucket's listed files (plus a broadcast tombstone anti-join when the
+    * store has live deletes).
     */
   def postingProbe(spark: SparkSession, dest: String, key: String): DataFrame =
     timelineProbe(spark, dest, "__key", key).drop("__key")
 
   /** Fact rows partitioned by `pmod(hash(fk), buckets)`, sorted by
-    * (fk, `sortDesc` descending) within each bucket file. `fkCol` and
-    * `sortDesc` are persisted in `_layout.json`; no later call restates
-    * them.
+    * (fk, `sortDesc` descending) within each bucket file, committed as
+    * manifest version 0 of a fresh store (any previous store at `dest`
+    * is deleted first). `fkCol` and `sortDesc` are persisted in the
+    * manifest; no later call restates them.
     */
   def buildTimeline(df: DataFrame, fkCol: String, dest: String,
                     sortDesc: Seq[String] = Nil,
                     buckets: Int = DefaultBuckets): Unit = {
     val rows = tagged(df, fkCol, 0L, buckets)
-    val layout = Layout(rows.schema, fkCol, sortDesc)
-    writeRows(rows, layout.order, dest, "overwrite")
-    writeMeta(dest, buckets, layout)
+    val m = Manifest(0L, JsonMethods.parse(rows.schema.json), fkCol, sortDesc,
+      buckets, 0L, None, Nil, Nil)
+    StoreFs.deleteRecursively(Paths.get(dest))
+    publish(dest, m.copy(files = stage(dest)(writeRows(rows, m.order, _))))
   }
 
   /** Append a NEW batch into an existing store — the
     * [[BM25Index.appendSegment]] lifecycle for the exact-match routes:
     * the batch is bucketed by the store's OWN key and bucket count and
-    * sorted by its own order (all read back from the store), then written
-    * `mode(append)` into the same bucket directories. Probes need no
-    * change — they read every file in the key's bucket, base and appended
-    * alike. Per-batch cost is one write; the store is never rewritten.
-    * When small appended files accumulate, [[compact]] folds them back
-    * into one read-optimized generation. Safe to race a compaction
-    * (segment model); fails loudly against a rebucket (entry + post-write
-    * lock checks).
+    * sorted by its own order (all read from the manifest), staged, and
+    * committed. Probes need no change — they read every listed file in
+    * the key's bucket, base and appended alike. Per-batch cost is one
+    * write; the store is never rewritten. When small appended files
+    * accumulate, [[compact]] folds them back. Safe to race a compaction;
+    * fails loudly against a rebucket (object scaladoc).
     */
   def appendTimeline(batch: DataFrame, dest: String): Unit =
-    ingest(batch, dest, None)
+    ingest(dest, Some(batch), None)
 
   /** Id-keyed OVERWRITE through the persisted store — the reference
     * indexer's `addBean`-with-existing-id semantics
     * (`SolrIndexer.java:47-59`: a re-posted id replaces the stored doc).
-    * Tombstones the batch's ids at a fresh generation, THEN appends the
-    * batch's rows at that same generation — tombstone-first so a crash
-    * between the writes leaves the row absent (a retried upsert converges
-    * at a higher generation) rather than serving two versions. `idCol`
-    * identifies the FACT row (e.g. the order/tweet id), not the key — an
-    * edited fact replaces its predecessor inside whatever bucket it
-    * hashes to. It is persisted as `_idcol.txt`; all upserts of one store
-    * must agree on it.
+    * The batch's rows and its ids' tombstones are written at one fresh
+    * generation and land in ONE commit, so a probe sees either the old
+    * version or the new one, never both or neither. `idCol` identifies
+    * the FACT row (e.g. the order/tweet id), not the key — an edited
+    * fact replaces its predecessor inside whatever bucket it hashes to.
+    * It is persisted in the manifest; all upserts of one store must
+    * agree on it.
     */
   def upsertTimeline(batch: DataFrame, idCol: String, dest: String): Unit =
-    ingest(batch, dest, Some(idCol -> batch.select(col(idCol))))
+    ingest(dest, Some(batch), Some(idCol -> batch.select(col(idCol))))
 
-  /** The one write path of [[appendTimeline]]/[[upsertTimeline]]: rows
-    * at a fresh generation, preceded by `replace`'s (identity column,
-    * ids) tombstones at that generation.
+  /** The one write path of append/upsert/delete: `rows` and `replace`'s
+    * (identity column, ids) tombstones at the next generation, staged
+    * and committed together.
     */
-  private def ingest(rows: DataFrame, dest: String,
+  private def ingest(dest: String, rows: Option[DataFrame],
                      replace: Option[(String, DataFrame)]): Unit = {
     assertWritable(dest)
-    val buckets = readBuckets(dest)
-    val layout = readLayout(dest)
-    val gen = Tombstones.nextGen(dest)
-    replace.foreach { case (idCol, ids) =>
-      writeIdCol(dest, idCol)
-      Tombstones.write(ids, dest, gen, Tombstones.StringKey)
+    val m = latest(dest)
+    val gen = m.gen + 1
+    val idCol = replace.map(_._1)
+    idCol.foreach(c => require(m.idCol.forall(_ == c),
+      s"store at $dest tombstones on '${m.idCol.get}'; cannot upsert by '$c'"))
+    val (tombs, files) = stage(dest) { tmp =>
+      rows.foreach(r => writeRows(tagged(r, m.key, gen, m.buckets), m.order, tmp))
+      replace.foreach { case (_, ids) =>
+        Tombstones.write(ids, tmp, gen, Tombstones.StringKey) }
+    }.partition(_.startsWith(Tombstones.Dir))
+    commit(dest) { cur =>
+      if (cur.buckets != m.buckets) throw new IllegalStateException(
+        s"store at $dest was rebucketed (${m.buckets} -> ${cur.buckets} " +
+          "buckets) while this write was staged; it was not applied — " +
+          "re-apply it")
+      if (cur.gen >= gen) throw new IllegalStateException(
+        s"generation $gen of store at $dest was committed by a concurrent " +
+          "writer; this write was not applied — re-apply it")
+      cur.copy(gen = gen, idCol = idCol.orElse(cur.idCol),
+        files = cur.files ++ files, tombstones = cur.tombstones ++ tombs)
     }
-    writeRows(tagged(rows, layout.key, gen, buckets), layout.order, dest,
-      "append")
-    assertNoRebucketRace(dest)
   }
 
-  /** All fact rows for one FK value — a scan of the value's one bucket
-    * directory plus a row-group-prunable equality on the sorted fk column.
+  /** All fact rows for one FK value — a scan of the value's one bucket's
+    * listed files plus a row-group-prunable equality on the sorted fk
+    * column.
     */
   def timelineProbe(spark: SparkSession, dest: String, fkCol: String,
                     value: Any): DataFrame =
@@ -355,38 +435,28 @@ object ServingStores {
   /** [[timelineProbe]] for a SET of FK values (an entity resolving to
     * several keys — shards, aliases, merged accounts). Key-routed: each
     * key's bucket is computed on the driver ([[bucketsOf]]) and ONLY
-    * those existing `__bucket=b` directories are opened, through the
-    * persisted schema — building the frame lists no other directory,
-    * infers nothing and starts no Spark job, so request cost is the
-    * matching spans, independent of the store's bucket count. In the
-    * plan, a disjunction of per-key (bucket literal, fk literal)
+    * the files the latest manifest lists for those buckets are opened,
+    * through the persisted schema — building the frame lists no
+    * directory, infers nothing and starts no Spark job, so request cost
+    * is the matching spans, independent of the store's bucket count. In
+    * the plan, a disjunction of per-key (bucket literal, fk literal)
     * conjuncts keeps the partition filter and the row-group-prunable key
-    * equality. A key set that routes to no existing directory (EMPTY,
-    * or keys no row hashed to) returns a typed empty frame without
-    * touching the store — served and ad-hoc routes degrade identically.
-    * `fkCol` must be the store's persisted key.
+    * equality. A key set that routes to no listed file (EMPTY, or keys
+    * no row hashed to) returns a typed empty frame without touching the
+    * store — served and ad-hoc routes degrade identically. `fkCol` must
+    * be the store's persisted key.
     */
   def timelineProbeMany(spark: SparkSession, dest: String, fkCol: String,
                         values: Seq[Any]): DataFrame = {
-    val buckets = readBuckets(dest) // the serve sentinel: fails loudly mid-swap
-    val layout = readLayout(dest)
-    require(fkCol == layout.key,
-      s"store at $dest is keyed on '${layout.key}', not '$fkCol'")
-    val dirs = bucketsOf(spark, values, buckets).distinct
-      .map(b => Paths.get(dest, s"__bucket=$b")).filter(StoreFs.isDirectory)
+    val m = latest(dest)
+    require(fkCol == m.key, s"store at $dest is keyed on '${m.key}', not '$fkCol'")
+    val files = bucketsOf(spark, values, m.buckets).distinct.flatMap(m.inBucket)
     val rows =
-      if (dirs.isEmpty)
-        spark.createDataFrame(java.util.List.of[Row](), layout.schema)
-      else {
-        val pred = values
-          .map(v => col("__bucket") === bucketOf(lit(v), buckets) &&
-            col(fkCol) === lit(v))
-          .reduce(_ || _)
-        dropDead(spark, dest,
-          spark.read.schema(layout.schema).option("basePath", dest)
-            .parquet(dirs.map(_.toString): _*).filter(pred),
-          Tombstones.snapshot(dest))
-      }
+      if (files.isEmpty) scan(spark, dest, m, Nil)
+      else m.dropDead(spark, dest, scan(spark, dest, m, files).filter(values
+        .map(v => col("__bucket") === bucketOf(lit(v), m.buckets) &&
+          col(fkCol) === lit(v))
+        .reduce(_ || _)))
     rows.drop("__bucket", "__gen")
   }
 
@@ -403,7 +473,7 @@ object ServingStores {
       .collect().head.toSeq.map(_.asInstanceOf[Int])
 
   def defaultDir(sfDir: String): String = {
-    graft.util.StoreDirs.resolve("serving-store-v3", sfDir)
+    graft.util.StoreDirs.resolve("serving-store-v4", sfDir)
   }
 
   /** Build-if-stale: word-posting store over the documents table (the
@@ -445,13 +515,13 @@ object ServingStores {
     * batch, then the store compacts — and `q_hashtag_incr` probes it
     * with `q_hashtag_served`'s oracle VERBATIM, so append+compact ≡
     * one-shot is checked by the driver's hash compare, not just a spec.
-    * A rebuild wipes dest first so a stale generation can never linger.
+    * The build starts a fresh store, so a stale generation can never
+    * linger.
     */
   def ensureDocPostingsIncr(spark: SparkSession, sfDir: String): String = {
     val dest = defaultDir(sfDir) + "/doc_postings_incr"
     val stamp = graft.util.Stamp.sourceStamp(sfDir)
     if (!graft.util.Stamp.isFresh(dest, stamp)) {
-      StoreFs.deleteRecursively(Paths.get(dest))
       def docs = graft.util.Tables.documents(spark, sfDir)
         .select(col("doc_id"), col("source"), col("n_chars"),
           split(col("text"), " ").as("__words"))
@@ -480,7 +550,6 @@ object ServingStores {
     val dest = defaultDir(sfDir) + "/orders_by_cust_incr"
     val stamp = graft.util.Stamp.sourceStamp(sfDir, "orders.parquet")
     if (!graft.util.Stamp.isFresh(dest, stamp)) {
-      StoreFs.deleteRecursively(Paths.get(dest))
       def orders = graft.util.Tables.orders(spark, sfDir)
       buildTimeline(orders.filter(col("o_orderkey") % 5 =!= 0), "o_custkey",
         dest, sortDesc = Seq("o_orderdate"))
@@ -507,7 +576,6 @@ object ServingStores {
     val dest = defaultDir(sfDir) + "/doc_postings_upsert"
     val stamp = graft.util.Stamp.sourceStamp(sfDir)
     if (!graft.util.Stamp.isFresh(dest, stamp)) {
-      StoreFs.deleteRecursively(Paths.get(dest))
       val docs = graft.util.Tables.documents(spark, sfDir)
         .select(col("doc_id"), col("source"), col("n_chars"), col("text"))
       buildPostings(
@@ -548,7 +616,6 @@ object ServingStores {
     val dest = defaultDir(sfDir) + "/orders_by_cust_upsert"
     val stamp = graft.util.Stamp.sourceStamp(sfDir, "orders.parquet")
     if (!graft.util.Stamp.isFresh(dest, stamp)) {
-      StoreFs.deleteRecursively(Paths.get(dest))
       val orders = graft.util.Tables.orders(spark, sfDir)
       buildTimeline(orders, "o_custkey", dest, sortDesc = Seq("o_orderdate"))
       upsertTimeline(
@@ -562,177 +629,98 @@ object ServingStores {
     dest
   }
 
-  /** Parquet data files currently in the store (bucket dirs only — the
-    * tombstone side table is maintenance metadata, not servable data).
+  /** Parquet data files the latest manifest lists (tombstone files are
+    * maintenance metadata, not servable data).
     */
-  def dataFileCount(dest: String): Int =
-    StoreFs.list(Paths.get(dest))
-      .filter(p => p.getFileName.toString.startsWith("__bucket=") &&
-        StoreFs.isDirectory(p))
-      .map(p => StoreFs.parquetFiles(p).size)
-      .sum
+  def dataFileCount(dest: String): Int = latest(dest).files.size
 
-  /** True iff the store has tombstones a probe still needs to apply. */
-  def hasTombstones(dest: String): Boolean = Tombstones.has(dest)
+  /** Parquet data files the latest manifest lists for one bucket. */
+  def bucketFileCount(dest: String, bucket: Int): Int =
+    latest(dest).inBucket(bucket).size
 
-  /** The swap window of every rewrite: after [[testHookBeforeSwap]], the
-    * staleness stamp comes down FIRST and the `_buckets.txt` sentinel
-    * second; `body` swaps the content; then the sentinel goes back up
-    * and the stamp LAST — the [[graft.util.AtomicRewrite]] invariant. The
-    * inverted order (stamp restored before the sentinel, or the sentinel
-    * deleted while the stamp survives) would leave a fresh-stamped store
-    * with no bucket sentinel: ensure* skips it and every probe crashes,
-    * forever.
+  /** True iff the latest manifest lists tombstones a probe must apply. */
+  def hasTombstones(dest: String): Boolean = latest(dest).tombstones.nonEmpty
+
+  /** Every data file, tombstone file and manifest version under `dest`
+    * that the latest manifest does not name — what commits left behind
+    * (folded-away files, superseded versions) and what a failed or
+    * crashed write moved in without committing. Empty for a store with
+    * no committed version.
     */
-  private def swap(dest: String, buckets: Int)(body: => Unit): Unit = {
-    testHookBeforeSwap(dest)
-    val stampFile = Paths.get(dest, "source_stamp.txt")
-    val stamp = if (StoreFs.exists(stampFile))
-                  Some(StoreFs.readString(stampFile))
-                else None
-    StoreFs.deleteIfExists(stampFile)
-    StoreFs.deleteIfExists(Paths.get(dest, "_buckets.txt"))
-    body
-    StoreFs.writeString(Paths.get(dest, "_buckets.txt"), buckets.toString)
-    stamp.foreach(StoreFs.writeString(stampFile, _))
-  }
+  private[search] def unlisted(dest: String): Seq[Path] =
+    if (versions(dest).isEmpty) Nil
+    else {
+      val m = latest(dest)
+      val named = (m.files ++ m.tombstones).map(Paths.get(dest, _)).toSet +
+        manifestFile(dest, m.version)
+      (StoreFs.list(Paths.get(dest)).flatMap(StoreFs.parquetFiles) ++
+        StoreFs.list(Paths.get(dest, ManifestDir))).filterNot(named)
+    }
 
-  /** Segment-model selective fold shared by both compaction flavors.
-    * SNAPSHOT: the explicit parquet file list of every bucket plus the
-    * tombstone file list. FOLD: every bucket whose snapshot holds ≥
-    * `minFiles` files is read through the persisted row schema (minus the
-    * partition column, which the files do not carry), filtered against
-    * the tombstone SNAPSHOT, and folded to ONE file in the persisted
-    * (key, sort) order in a sibling tmp. SWAP (under the downed
-    * stamp+sentinel pair): per bucket, the folded file moves IN under its unique part name and
-    * exactly the snapshot's files are deleted — files a concurrent
-    * append landed after the snapshot are neither read nor deleted, so
-    * they survive; the appender's rows simply wait for the next fold.
-    * Tombstone files are cleared only when this pass folded EVERY bucket
-    * that had data at snapshot time (otherwise cold buckets still hold
-    * dead rows the probe filter must keep killing) — and only the
-    * SNAPSHOTTED tombstone files, so a tombstone written concurrently
-    * keeps applying. Work and I/O are proportional to the folded
-    * buckets only.
+  /** The one fold behind [[compact]], [[compactHotBuckets]] and
+    * [[rebucket]], under the store lock. SNAPSHOT: the latest manifest.
+    * FOLD: every bucket listing ≥ `minFiles` files (all buckets for
+    * `minFiles` 0) is read through the persisted schema as ONE frame,
+    * filtered against the snapshot's tombstones, re-tagged under the
+    * target bucket count (`newBuckets`, else the current one) and
+    * written in ONE partitioned job — one file per bucket in (key, sort)
+    * order — then staged into the store. COMMIT: the folded files are
+    * unlisted and the new ones listed; a file a concurrent write
+    * committed after the snapshot is neither read nor unlisted, so it
+    * survives. The snapshotted tombstones are unlisted only when every
+    * nonempty bucket was folded (otherwise cold buckets still hold dead
+    * rows the probe filter must keep killing), so a tombstone committed
+    * concurrently keeps applying. A compaction commits only if every
+    * file it folded is still listed; a rebucket only if nothing was
+    * committed after its snapshot. A purge then deletes what it
+    * unlisted (object scaladoc). Work and I/O are proportional to the
+    * folded buckets only. Returns the folded bucket ids.
     */
-  private def fold(spark: SparkSession, dest: String,
-                   minFiles: Int): Seq[Int] =
-    StoreLock.withLock(dest, "compact") {
-      val buckets = readBuckets(dest) // fails loudly on a mid-swap store
-      val snap: Map[Int, Seq[Path]] =
-        (0 until buckets).map(b =>
-          b -> StoreFs.parquetFiles(Paths.get(dest, s"__bucket=$b"))).toMap
-      val tombSnap = Tombstones.snapshot(dest)
-      val hot = (0 until buckets).filter(b => snap(b).size >= minFiles)
+  private def fold(spark: SparkSession, dest: String, minFiles: Int,
+                   newBuckets: Option[Int] = None): Seq[Int] = {
+    val op = if (newBuckets.isEmpty) "compact" else "rebucket"
+    StoreLock.withLock(dest, op) {
+      val snap = latest(dest)
+      val hot = (0 until snap.buckets).filter(snap.inBucket(_).size >= minFiles)
       if (hot.nonEmpty) {
-        val layout = readLayout(dest)
-        val fileSchema =
-          StructType(layout.schema.filterNot(_.name == "__bucket"))
-        val tmpRoot = dest.stripSuffix("/") + "-rewrite-tmp"
-        StoreFs.deleteRecursively(Paths.get(tmpRoot))
-        // 1. materialize every replacement before touching the store
-        hot.foreach { b =>
-          val raw = spark.read.schema(fileSchema)
-            .parquet(snap(b).map(_.toString): _*)
-          dropDead(spark, dest, raw, tombSnap)
-            .coalesce(1).sortWithinPartitions(layout.order: _*)
-            .write.mode("overwrite").parquet(s"$tmpRoot/__bucket=$b")
+        val buckets = newBuckets.getOrElse(snap.buckets)
+        val folded = hot.flatMap(snap.inBucket)
+        val rows = snap.dropDead(spark, dest, scan(spark, dest, snap, folded))
+          .withColumn("__bucket", bucketOf(col(snap.key), buckets))
+        val staged = stage(dest)(writeRows(rows, snap.order, _))
+        testHookBeforeSwap(dest)
+        val purged = snap.files.diff(folded).isEmpty
+        commit(dest) { m =>
+          val raced =
+            if (newBuckets.isDefined)
+              m.files != snap.files || m.tombstones != snap.tombstones
+            else folded.diff(m.files).nonEmpty
+          if (raced) throw new IllegalStateException(
+            s"store at $dest changed under its $op (a write or maintainer " +
+              s"committed after its snapshot); the $op was not applied — " +
+              "retry it")
+          m.copy(buckets = buckets, files = m.files.diff(folded) ++ staged,
+            tombstones =
+              if (purged) m.tombstones.diff(snap.tombstones) else m.tombstones)
         }
-        // 2. per-bucket swaps under the downed stamp + sentinel
-        swap(dest, buckets) {
-          hot.foreach { b =>
-            val dir = Paths.get(dest, s"__bucket=$b")
-            StoreFs.createDirectories(dir)
-            StoreFs.parquetFiles(Paths.get(tmpRoot, s"__bucket=$b"))
-              .foreach(f => StoreFs.move(f, dir.resolve(f.getFileName)))
-            snap(b).foreach(StoreFs.deleteIfExists(_))
-          }
-          val foldedEverything = (0 until buckets)
-            .forall(b => snap(b).isEmpty || hot.contains(b))
-          if (foldedEverything) tombSnap.foreach(StoreFs.deleteIfExists(_))
-          StoreFs.deleteRecursively(Paths.get(tmpRoot))
-        }
+        // a purge is where deleted rows leave the disk: what it unlisted
+        // goes right after its commit, not at the next gc
+        if (purged && snap.tombstones.nonEmpty)
+          (folded ++ snap.tombstones).foreach(f => StoreFs.deleteIfExists(Paths.get(dest, f)))
       }
       hot
     }
-
-  /** Parquet data files currently in one bucket dir. */
-  def bucketFileCount(dest: String, bucket: Int): Int =
-    StoreFs.parquetFiles(Paths.get(dest, s"__bucket=$bucket")).size
-
-  /** [[graft.util.Tombstones.kill]] keyed on the store's identity
-    * column; never-upserted stores (empty snapshot) skip the join and
-    * need no `_idcol.txt`.
-    */
-  private def dropDead(spark: SparkSession, dest: String, rows: DataFrame,
-                       snap: Seq[Path]): DataFrame =
-    if (snap.isEmpty) rows
-    else Tombstones.kill(spark, snap, rows, readIdCol(dest),
-      Tombstones.StringKey)
+  }
 
   /** Loud-failure entry check for writers: any live maintenance except
-    * a compaction (which the segment model makes safe to race) rejects
-    * the write before it lands a single file.
+    * a compaction (which is safe to race) rejects the write before it
+    * stages a single file.
     */
   private def assertWritable(dest: String): Unit =
     StoreLock.heldBy(dest) match {
       case Some(op) if op != "compact" => throw new IllegalStateException(
         s"store at $dest is under '$op' maintenance; a concurrent write " +
-          "could be destroyed by its directory swap — retry after it ends")
+          "would not be applied — retry after it ends")
       case _ => ()
     }
-
-  /** Loud-failure EXIT check for writers: a rebucket that began while
-    * this write was in flight may or may not have snapshotted its files
-    * — the caller must treat the write as not-applied and retry after
-    * the rebucket (compactions are safe to race and don't trip this).
-    */
-  private def assertNoRebucketRace(dest: String): Unit =
-    StoreLock.heldBy(dest) match {
-      case Some("rebucket") => throw new IllegalStateException(
-        s"write to $dest raced a rebucket: the rewrite may not include " +
-          "this batch — re-apply it after maintenance completes")
-      case _ => ()
-    }
-
-  // metadata files ride the StoreFs seam (read-after-write visibility
-  // is contract primitive 3) — an object-store binding inherits every
-  // _layout/_buckets/_idcol read-write without a call-site hunt
-  private def writeMeta(dest: String, buckets: Int, layout: Layout): Unit = {
-    StoreFs.createDirectories(Paths.get(dest))
-    StoreFs.writeString(Paths.get(dest, LayoutFile),
-      JsonMethods.compact(JObject(
-        "schema" -> JsonMethods.parse(layout.schema.json),
-        "key" -> JString(layout.key),
-        "sortDesc" -> JArray(layout.sortDesc.map(JString(_)).toList))))
-    // _buckets.txt LAST: it is the store's serve sentinel
-    StoreFs.writeString(Paths.get(dest, "_buckets.txt"), buckets.toString)
-  }
-
-  private def readBuckets(dest: String): Int =
-    StoreFs.readString(Paths.get(dest, "_buckets.txt")).trim.toInt
-
-  /** The store's `_layout.json`; a store without one fails loudly. */
-  private def readLayout(dest: String): Layout = {
-    implicit val formats: Formats = DefaultFormats
-    val j = JsonMethods.parse(StoreFs.readString(Paths.get(dest, LayoutFile)))
-    Layout(DataType.fromJson(JsonMethods.compact(j \ "schema"))
-        .asInstanceOf[StructType],
-      (j \ "key").extract[String], (j \ "sortDesc").extract[List[String]])
-  }
-
-  /** The row-identity column tombstones key on — persisted at first
-    * upsert/delete; later ones must agree (a store has ONE identity).
-    */
-  private def writeIdCol(dest: String, idCol: String): Unit = {
-    val f = Paths.get(dest, "_idcol.txt")
-    if (StoreFs.exists(f)) {
-      val prev = StoreFs.readString(f).trim
-      require(prev == idCol,
-        s"store at $dest tombstones on '$prev'; cannot upsert by '$idCol'")
-    } else StoreFs.writeString(f, idCol)
-  }
-
-  private def readIdCol(dest: String): String =
-    StoreFs.readString(Paths.get(dest, "_idcol.txt")).trim
 }

@@ -86,9 +86,8 @@ object StoreAdmin {
     *    vectors+byid): fold when the table holds ≥ `foldAtGenerations`
     *    WRITE GENERATIONS (distinct parquet job UUIDs — an absolute file
     *    count would misread a parallel base write as fragmentation).
-    *  - BM25 indexes: fold when ≥ `foldAtSegments` appended segments
-    *    exist (the per-query merge-read cost is per segment, so the
-    *    policy is segment count, not file count; compact ≡ merged-serve
+    *  - BM25 indexes: fold whenever an appended segment exists (the
+    *    per-query merge-read cost is per segment; compact ≡ merged-serve
     *    is spec-pinned, so folding never changes results).
     *  - Serving layouts (postings/timelines, incl. the incr/upsert
     *    twins): selective hot-bucket compaction at `minFiles`, upgraded
@@ -97,7 +96,7 @@ object StoreAdmin {
     *
     * The thresholds are PARAMETERS because a real merge policy is tuned
     * per deployment (Lucene's tiered-merge factors): a write-heavy tier
-    * raises `foldAtGenerations`/`foldAtSegments` to amortize rewrites, a
+    * raises `foldAtGenerations` to amortize rewrites, a
     * read-latency tier lowers them toward eager folding. The defaults are
     * the values every driver-gated chain has run under; results never
     * depend on them (compact ≡ rebuild is spec-pinned per family — the
@@ -114,12 +113,10 @@ object StoreAdmin {
     */
   def maintain(spark: org.apache.spark.sql.SparkSession, sfDir: String,
                minFiles: Int = 4, foldAtGenerations: Int = 2,
-               foldAtSegments: Int = 1,
                retrainAt: Option[Double] = None): Seq[String] = {
     require(foldAtGenerations >= 2,
       "maintain: foldAtGenerations < 2 would re-fold a store every sweep" +
         " (one generation is the compacted steady state) — idempotence gone")
-    require(foldAtSegments >= 1, "maintain: foldAtSegments must be >= 1")
     val log = scala.collection.mutable.Buffer[String]()
     def sweepFlat(root: String, sub: String, fold: String => Unit): Unit = {
       val d = Paths.get(root, sub)
@@ -172,7 +169,7 @@ object StoreAdmin {
       // nonempty LISTING, not directory existence: an empty segments dir
       // (crashed append) would otherwise make every sweep log a no-op
       // fold forever, breaking idempotence
-      if (StoreFs.list(segs).size >= foldAtSegments) {
+      if (StoreFs.list(segs).nonEmpty) {
         BM25Index.compact(spark, bm)
         log += s"fold $bm (segments)"
       }
@@ -240,72 +237,79 @@ object StoreAdmin {
     finally s.close()
   }
 
-  /** Reclaim rewrite leftovers: every atomic-swap rewrite
-    * ([[graft.util.AtomicRewrite]], [[ServingStores]]' compaction/
-    * rebucketing, [[BM25Index]]'s staged segments and compaction)
-    * materializes its new generation in a `…-rewrite-tmp` dir before
-    * touching the store, so a crash during the write leaves the store
-    * fully valid plus an orphan tmp holding a dead generation's bytes
-    * (a crash inside a swap leaves a store that rebuilds, plus the same
-    * orphan). This sweep deletes them — correctness never depends on
-    * it (rewrites wipe their own tmp before writing), it is the
-    * disk-reclaim half of crash recovery. Not safe to run CONCURRENTLY
-    * with an in-flight rewrite (it would delete the tmp being written;
-    * the rewrite's swap then fails loudly, store untouched) — run it
-    * like [[truncate]], between jobs. Returns the deleted roots so
-    * callers can log them.
+  /** Reclaim rewrite leftovers. Every staged write
+    * ([[graft.util.AtomicRewrite]], [[ServingStores]]' writes and folds,
+    * [[BM25Index]]'s staged segments and compaction) materializes its
+    * files in a `…-rewrite-tmp` dir before touching the store, so a crash
+    * during the write leaves the store fully valid plus an orphan tmp
+    * holding a dead generation's bytes; this sweep deletes those dirs.
+    * Under every store directory that has a `_manifest/` (the
+    * [[ServingStores]] commit log) it also deletes each data file,
+    * tombstone file and manifest version the latest manifest does not
+    * name: files a fold unlisted, superseded versions, and files a failed
+    * or crashed write moved in without committing. Correctness never
+    * depends on it — it is the disk-reclaim half of crash recovery. Not
+    * safe to run CONCURRENTLY with an in-flight write (it would delete
+    * files staged but not yet committed, which the commit would then
+    * name) — run it like [[truncate]], between jobs. Returns the deleted
+    * paths so callers can log them.
     */
   def gcOrphans(sfDir: String): Seq[String] = {
-    val tmps = storeDirs(sfDir).flatMap { root =>
+    val dirs = storeDirs(sfDir).flatMap { root =>
       val p = Paths.get(root)
       if (!StoreFs.isDirectory(p)) Nil
       else {
         val s = Files.walk(p)
-        val orphans =
-          try s.iterator().asScala
-            .filter(q => Files.isDirectory(q) &&
-              q.getFileName.toString.endsWith("-rewrite-tmp"))
-            .toList
-          finally s.close()
-        orphans.foreach(StoreFs.deleteRecursively)
-        orphans.map(_.toString)
+        try s.iterator().asScala.filter(Files.isDirectory(_)).toList
+        finally s.close()
       }
     }
+    val tmps = dirs.filter(_.getFileName.toString.endsWith("-rewrite-tmp"))
+    tmps.foreach(StoreFs.deleteRecursively)
+    val unlisted = dirs
+      .filter(d => StoreFs.isDirectory(d.resolve("_manifest")))
+      .flatMap(d => ServingStores.unlisted(d.toString))
+    unlisted.foreach(StoreFs.deleteIfExists)
     // legacy reclaim: whole store ROOTS orphaned by a defaultDir version
     // bump (v1's degenerate residual codebook; the pre-params.txt layouts
     // superseded when the ANN hyperparameters became persisted build
-    // metadata). Default-path layout only: GRAFT_INDEX_DIR is a
-    // user-chosen root (the family tag rides the path there too now —
-    // StoreDirs — but the old flat env layout mixed store artifacts with
-    // whatever else the user kept there, so a GC may not assume
-    // ownership of anything under it). Each root
-    // is swept ONLY if it actually looks like an orphaned ANN store —
-    // every child is a store dir carrying the family's markers (a stamp
-    // or one of the known sub-tables) — never on path name alone: a
-    // name-only delete in a general-purpose GC routine could reap a
-    // directory that was never ours.
+    // metadata; the serving layouts before the manifest). Default-path
+    // layout only: GRAFT_INDEX_DIR is a user-chosen root (the family tag
+    // rides the path there too now — StoreDirs — but the old flat env
+    // layout mixed store artifacts with whatever else the user kept
+    // there, so a GC may not assume ownership of anything under it).
+    // Each root is swept ONLY if it actually looks like an orphaned store
+    // of ours ([[isLegacyRoot]]) — never on path name alone: a name-only
+    // delete in a general-purpose GC routine could reap a directory that
+    // was never ours.
     val legacyRoots = Seq("ivfpq-store-v1", "ivfpq-store-v2",
       "ivfpq-store-v3", "pq-store-v2", "ivf-store-v1", "ivf-store-v2",
       "sq8-store-v1", "srp-label-v1", "bm25-index-v3", "bm25-index-v4",
-      "bm25-index-v5")
+      "bm25-index-v5", "serving-store-v2", "serving-store-v3")
       .map(v => Paths.get(s"${sys.props("user.dir")}/target/$v"))
     val legacySwept =
       if (sys.env.contains("GRAFT_INDEX_DIR")) Nil
-      else legacyRoots.filter(p => StoreFs.isDirectory(p) && isAnnStoreRoot(p))
+      else legacyRoots.filter(p => StoreFs.isDirectory(p) && isLegacyRoot(p))
         .map { p => StoreFs.deleteRecursively(p); p.toString }
-    tmps ++ legacySwept
+    (tmps ++ unlisted).map(_.toString) ++ legacySwept
   }
 
-  /** True iff every child of `root` is a directory carrying an ANN-store
-    * marker (source_stamp.txt, or a known sub-table dir) — the gate that
-    * keeps the legacy-version GC from deleting a directory it cannot
-    * verify it owns. An empty root passes (nothing but debris).
+  /** True iff every child of `root` is a directory that is either an
+    * ANN store (carrying a marker: source_stamp.txt or a known
+    * sub-table) or a corpus dir of v2/v3 serving stores (every child
+    * holding `_buckets.txt`, their serve sentinel) — the gate that keeps
+    * the legacy-version GC from deleting a directory it cannot verify it
+    * owns. An empty root passes (nothing but debris).
     */
-  private def isAnnStoreRoot(root: Path): Boolean = {
+  private def isLegacyRoot(root: Path): Boolean = {
     val markers = Set("source_stamp.txt", "codes.parquet", "codebook.parquet",
       "centroids.parquet", "byid.parquet", "vectors.parquet", "sig.parquet",
       "params.txt")
-    StoreFs.list(root).forall(c => StoreFs.isDirectory(c) &&
-      StoreFs.list(c).exists(e => markers.contains(e.getFileName.toString)))
+    StoreFs.list(root).forall { c =>
+      val kids = StoreFs.list(c)
+      StoreFs.isDirectory(c) &&
+        (kids.exists(e => markers.contains(e.getFileName.toString)) ||
+          kids.forall(s => StoreFs.exists(s.resolve("_buckets.txt"))))
+    }
   }
 }

@@ -1,18 +1,22 @@
 package graft.util
 
 import java.nio.file.{Files, Path, StandardCopyOption, StandardOpenOption}
+import java.util.UUID
 
 /** THE filesystem seam for every persisted-store metadata and swap
   * primitive — locks ([[StoreLock]]), stamps ([[Stamp]]), atomic
-  * rewrites ([[AtomicRewrite]]), the serving layouts' fold/rebucket
-  * swaps, and the BM25 compaction swap all flow through here, so the
+  * rewrites ([[AtomicRewrite]]), the serving layouts' manifest
+  * commits, and the BM25 compaction swap all flow through here, so the
   * engine's durability story is stated ONCE and auditable in one place.
   *
   * == The contract the backing store must guarantee ==
   *
   *  1. '''Exclusive create''' ([[createExclusive]]): creating a file
   *     that already exists FAILS, atomically — two concurrent creators
-  *     see exactly one winner. This is what makes [[StoreLock]] a lock.
+  *     see exactly one winner — and the file appears with its full
+  *     content, never empty or partial. This is what makes
+  *     [[StoreLock]] a lock and a [[graft.search.ServingStores]]
+  *     manifest a commit.
   *  2. '''Atomic rename''' ([[atomicMove]], [[move]]): a rename is
   *     all-or-nothing and never observable half-done; over an existing
   *     target it either replaces atomically or fails — it cannot merge.
@@ -40,7 +44,10 @@ import java.nio.file.{Files, Path, StandardCopyOption, StandardOpenOption}
   *    a MIXED directory the stamp logic cannot detect. On object
   *    stores, swap-by-rename must become swap-by-manifest-pointer
   *    (write new objects under a fresh prefix, then one atomic pointer
-  *    update — the Iceberg/Delta commit model).
+  *    update — the Iceberg/Delta commit model). [[graft.search
+  *    .ServingStores]] already commits that way: its moves only stage
+  *    unreferenced files, and its one commit is an exclusive manifest
+  *    create (a conditional PUT there).
   *
   * Deploying on such a store therefore means ONE new implementation of
   * these primitives behind this seam (conditional-PUT locks,
@@ -78,9 +85,14 @@ object StoreFs {
     * guarantees on POSIX and on an HDFS mount.
     */
   object LocalFs extends Fs {
-    def createExclusive(p: Path, content: String): Unit =
-      Files.writeString(p, content,
-        StandardOpenOption.CREATE_NEW, StandardOpenOption.WRITE)
+    // the content is written to a dot-prefixed sibling first and the
+    // target is hard-linked to it (createLink fails if the target
+    // exists), so the target never appears empty or half-written
+    def createExclusive(p: Path, content: String): Unit = {
+      val tmp = p.resolveSibling(s".${p.getFileName}.${UUID.randomUUID()}.tmp")
+      Files.writeString(tmp, content, StandardOpenOption.CREATE_NEW)
+      try { Files.createLink(p, tmp); () } finally Files.deleteIfExists(tmp)
+    }
     def atomicMove(src: Path, dst: Path): Unit =
       Files.move(src, dst, StandardCopyOption.ATOMIC_MOVE)
     def move(src: Path, dst: Path): Unit = { Files.move(src, dst); () }
@@ -120,7 +132,9 @@ object StoreFs {
     try body finally current = prev
   }
 
-  /** Contract primitive 1: atomic fail-if-exists create. */
+  /** Contract primitive 1: atomic fail-if-exists create, with its full
+    * content.
+    */
   def createExclusive(p: Path, content: String): Unit =
     current.createExclusive(p, content)
 

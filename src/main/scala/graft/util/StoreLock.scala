@@ -20,7 +20,8 @@ import java.nio.file.Paths
   * scale it with the deployment's longest compaction). Stealing is safe
   * because the crashed rewrite also followed the stamp-first/sentinel-
   * last swap ordering — its store is either untouched (crash during tmp
-  * write) or stamp-invalidated (crash mid-swap), never half-swapped.
+  * write) or stamp-invalidated (crash mid-swap), never half-swapped — or,
+  * for the manifest-committed serving layouts, committed nothing.
   *
   * Durability primitives (exclusive create, atomic rename) flow through
   * [[StoreFs]] — the ONE seam stating what the backing filesystem must

@@ -11,7 +11,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * signatures, the SRP / IVF / PQ / SQ8 ANN stores, the serving layouts
   * and the BM25 index): a `(__id, __gen)` side table under
   * `_tombstones/`, rows carrying the `__gen` that wrote them (`_gen.txt`
-  * counter, build = 0), a tombstone killing STRICTLY-older generations
+  * counter, build = 0 — the serving layouts keep their counter and
+  * their tombstone file list in their manifest instead, and [[kill]]
+  * against that list), a tombstone killing STRICTLY-older generations
   * of its id (so an upsert's own rows survive the tombstone written with
   * them, a crash between tombstone and re-add converges on retry, and a
   * later upsert's tombstone wins), probe-side broadcast anti-join only
@@ -25,13 +27,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Tombstones {
 
-  private val Dir = "_tombstones"
+  /** The tombstone table's directory name under a store. */
+  val Dir = "_tombstones"
 
-  /** The generation counter's file name — stores that wipe their
-    * directory around a swap keep it (surviving rows keep their `__gen`,
-    * so later tombstones must still outrank them).
-    */
-  val GenFile = "_gen.txt"
+  private val GenFile = "_gen.txt"
 
   private def schema(keyType: DataType) = StructType(Seq(
     StructField("__id", keyType), StructField("__gen", LongType)))

@@ -479,6 +479,40 @@ class BM25Spec extends SparkSpec {
     assert(served == adhoc && served.nonEmpty)
   }
 
+  test("served More-Like-This reads every part: ≡ ad-hoc MLT over base ∪ " +
+      "segment; a dead version never scores; compact ≡ a fresh build") {
+    def mlt(dest: String, seed: Long) =
+      BM25Index.moreLikeThis(spark, dest, seedId = seed, nTerms = 4, k = 5)
+        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toSeq
+    def adhoc(corpus: org.apache.spark.sql.DataFrame, seed: Long) =
+      BM25.moreLikeThis(corpus, "doc_id", "text", seedId = seed, nTerms = 4, k = 5)
+        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toSeq
+    val dest = java.nio.file.Files.createTempDirectory("bm25mltseg").toString
+    BM25Index.build(docs.filter("doc_id <= 3"), "doc_id", "text", dest)
+    BM25Index.appendSegment(docs.filter("doc_id > 3"), "doc_id", "text",
+      dest, "seg-00001")
+    // a base seed and a segment seed, each ranking docs of both parts
+    for (seed <- Seq(1L, 5L))
+      assert(mlt(dest, seed) == adhoc(docs, seed), s"seed $seed")
+    assert(mlt(dest, 1L).map(_._1).contains(5L))
+    assert(mlt(dest, 5L).map(_._1).toSet == Set(1L, 2L, 3L))
+    // doc 2 is edited away from every seed term, doc 3 deleted: neither
+    // dead version may score for seed 5 (spark, query)
+    val edited = Seq((2L, "filler only now")).toDF("doc_id", "text")
+    BM25Index.upsertSegment(edited, "doc_id", "text", dest, "seg-edit01")
+    BM25Index.deleteDocs(spark, dest, Seq(3L))
+    assert(mlt(dest, 5L).map(_._1) == Seq(1L),
+      "a tombstoned version scored in More-Like-This")
+    BM25Index.compact(spark, dest)
+    val live = docs.filter("doc_id NOT IN (2, 3)").unionAll(edited)
+    val fresh = java.nio.file.Files.createTempDirectory("bm25mltfresh").toString
+    BM25Index.build(live, "doc_id", "text", fresh)
+    for (seed <- Seq(1L, 2L, 5L)) {
+      assert(mlt(dest, seed) == mlt(fresh, seed), s"seed $seed after compact")
+      assert(mlt(dest, seed) == adhoc(live, seed), s"seed $seed vs ad hoc")
+    }
+  }
+
   test("didYouMean ranks distance first, then df; never echoes the input") {
     val vocab = Seq(
       ("sort", 50L), ("slow", 90L), ("row", 80L), ("sot", 10L), ("spark", 70L)

@@ -58,35 +58,74 @@ class HttpServingSpec extends SparkSpec {
       val before = get(port, "/api/search/hashtag?tag=jobs").body()
       assert(json(before, "$.count") == "3")
       var duringTmp: String = null
-      var duringSwap: String = null
-      var logged = ""
       ServingStores.testHookBeforeSwap = d => if (d.endsWith("/hashtags")) {
-        // tmp materialized, store untouched: a racing request serves the
-        // complete OLD generation
+        // fold staged, commit not yet published: a racing request serves
+        // the complete OLD generation
         duringTmp = get(port, "/api/search/hashtag?tag=jobs").body()
-        // mid-swap (sentinel down): the route answers with the reference
-        // error envelope — HTTP 200, status_code 500 — never a partial set
-        val sentinel = java.nio.file.Paths.get(d, "_buckets.txt")
-        val saved = java.nio.file.Files.readString(sentinel)
-        java.nio.file.Files.delete(sentinel)
-        val err = new java.io.ByteArrayOutputStream()
-        val stderr = System.err
-        System.setErr(new java.io.PrintStream(err, true, "UTF-8"))
-        try duringSwap = get(port, "/api/search/hashtag?tag=jobs").body()
-        finally System.setErr(stderr)
-        logged = err.toString("UTF-8")
-        java.nio.file.Files.writeString(sentinel, saved)
       }
       try ServingStores.compact(spark, s"$tidx/hashtags")
       finally ServingStores.testHookBeforeSwap = _ => ()
       assert(duringTmp == before, "mid-maintenance request diverged from the old generation")
-      assert(json(duringSwap, "$.status_code") == "500", duringSwap)
-      // the 500's cause is logged, naming the route and the exception
-      assert(logged.contains("[httpserving] /api/search/hashtag failed: ") &&
-        logged.contains("_buckets.txt"), s"cause not logged: '$logged'")
-      // first request after the swap: the new generation, same rows
+      // first request after the commit: the new generation, same rows
       assert(get(port, "/api/search/hashtag?tag=jobs").body() == before,
         "first request after the swap must serve the full new generation")
+      // a store that lost its commit log answers with the reference
+      // error envelope — HTTP 200, status_code 500 — and the 500's cause
+      // is logged, naming the route and the missing `_manifest`
+      graft.util.StoreFs.deleteRecursively(
+        java.nio.file.Paths.get(tidx, "hashtags", "_manifest"))
+      val err = new java.io.ByteArrayOutputStream()
+      val stderr = System.err
+      System.setErr(new java.io.PrintStream(err, true, "UTF-8"))
+      val broken =
+        try get(port, "/api/search/hashtag?tag=jobs").body()
+        finally System.setErr(stderr)
+      val logged = err.toString("UTF-8")
+      assert(json(broken, "$.status_code") == "500", broken)
+      assert(logged.contains("[httpserving] /api/search/hashtag failed: ") &&
+        logged.contains("_manifest"), s"cause not logged: '$logged'")
+    } finally server.stop(0)
+  }
+
+  test("hashtag requests before, inside and after a compact of the " +
+      "hashtag store all serve a complete generation; none fails") {
+    val tidx = java.nio.file.Files.createTempDirectory("graft-http-commit").toString
+    HttpServing.buildTweetIndex(tweets, users, tidx)
+    ServingStores.appendPostings(
+      Seq(("14", "7", "more jobs news", Seq("jobs"), "2021-03-04T10:00:00Z"))
+        .toDF("id", "userID", "tweetText", "tweetHashtags", "tweetDateTime"),
+      col("tweetHashtags"), s"$tidx/hashtags")
+    val server = HttpServing.start(0, HttpServing.referenceRoutes(
+      tweets, users, tweetIndexDir = Some(tidx)))
+    try {
+      val port = server.getAddress.getPort
+      def request() = get(port, "/api/search/hashtag?tag=jobs")
+      val before = request()
+      assert(before.statusCode() == 200 && json(before.body(), "$.count") == "3")
+      // a request inside every file move and every manifest create the
+      // compaction makes — each step a reader could race
+      val inside = scala.collection.mutable.Buffer[HttpResponse[String]]()
+      val requesting = new graft.util.DelegatingFs {
+        private def race(): Unit = inside.synchronized(inside += request())
+        override def createExclusive(p: java.nio.file.Path, c: String): Unit = {
+          race(); super.createExclusive(p, c); race()
+        }
+        override def move(src: java.nio.file.Path, dst: java.nio.file.Path): Unit = {
+          race(); super.move(src, dst); race()
+        }
+        override def deleteIfExists(p: java.nio.file.Path): Unit = {
+          race(); super.deleteIfExists(p); race()
+        }
+      }
+      graft.util.StoreFs.withFs(requesting)(
+        ServingStores.compact(spark, s"$tidx/hashtags"))
+      val after = request()
+      val all = before +: inside.toSeq :+ after
+      assert(inside.size >= 4, s"the compaction raced only ${inside.size} requests")
+      val failed = all.filterNot(r => r.statusCode() == 200 &&
+        json(r.body(), "$.status_code") == "200" && r.body() == before.body())
+      assert(failed.isEmpty, s"${failed.size} of ${all.size} requests " +
+        s"failed or served a partial generation: ${failed.map(_.body())}")
     } finally server.stop(0)
   }
 

@@ -70,7 +70,10 @@ class ServingSpec extends SparkSpec {
   }
 
   test("error envelope matches Handler.java:66-71") {
-    val out = Serving.errorResponse(spark)
+    // an empty query is answered with the error envelope
+    val body = HttpServing.referenceRoutes(tweets, users)("/api/search/query")(
+      Map("query" -> ""))
+    val out = Seq(body).toDF("response")
       .select(get_json_object(col("response"), "$.status_code"),
         get_json_object(col("response"), "$.message"))
       .head()

@@ -462,4 +462,36 @@ class ServingStoresPropertySpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getInt(2))).toSeq == Seq((1L, 11)))
     StoreAdmin.truncate(dest)
   }
+
+  test("a compact folds every hot bucket in one write: the same Spark " +
+      "jobs with 2 hot buckets as with 8") {
+    val base = (0 until 200).map(k => (k, k * 10)).toDF("k", "v")
+    def build(): String = {
+      val dest = java.nio.file.Files.createTempDirectory("graft-fold-jobs").toString
+      ServingStores.buildTimeline(base, "k", dest, buckets = 8)
+      dest
+    }
+    val probe = build()
+    val bucketOfKey = spark.read.parquet(probe)
+      .select(col("k"), col("__bucket")).collect()
+      .map(r => r.getInt(0) -> r.getInt(1)).toMap
+    // one key per bucket, for the first n buckets
+    def batch(n: Int) = bucketOfKey.toSeq.sortBy(_._1).groupBy(_._2).toSeq
+      .sortBy(_._1).take(n).map(_._2.head._1).map(k => (k, -k)).toDF("k", "v")
+    def foldJobs(n: Int): Int = {
+      val dest = build()
+      ServingStores.appendTimeline(batch(n), dest)
+      val work = SparkWork(spark.sparkContext)(
+        ServingStores.compactHotBuckets(spark, dest, minFiles = 2))
+      assert(work.result.size == n, s"expected $n hot buckets: ${work.result}")
+      assert((0 until 8).forall(ServingStores.bucketFileCount(dest, _) == 1))
+      assert(ServingStores.timelineProbe(spark, dest, "k", batch(n).head().getInt(0))
+        .count() == 2)
+      StoreAdmin.truncate(dest)
+      work.jobs
+    }
+    assert(bucketOfKey.values.toSet.size == 8, "a bucket received no key")
+    assert(foldJobs(2) == foldJobs(8))
+    StoreAdmin.truncate(probe)
+  }
 }

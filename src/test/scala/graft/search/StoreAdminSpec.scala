@@ -2,6 +2,8 @@ package graft.search
 
 import java.nio.file.{Files, Path, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import graft.{SparkEntry, SparkSpec}
 import graft.util.StoreFs
 
@@ -92,15 +94,111 @@ class StoreAdminSpec extends SparkSpec {
       "ensure did not rebuild the stamp")
     assert(probe() == before, "rebuild changed the probe result")
 
-    // window 2: crash after the sentinel delete — probes fail LOUDLY
-    // (never a silent wrong answer), and ensure* rebuilds because the
-    // stamp was already gone (stamp-first ordering; a surviving stamp
-    // here would wedge the store forever)
-    Files.delete(Paths.get(store, "source_stamp.txt"))
-    Files.delete(Paths.get(store, "_buckets.txt"))
-    intercept[Exception](probe())
+    // window 2: crash between staging and commit — the rewrite's files
+    // are staged into the store but the manifest create fails: the last
+    // commit keeps serving the old generation with its stamp fresh, and
+    // gcOrphans reclaims the staged files
+    val stamp = graft.util.Stamp.sourceStamp(dir)
+    val crashOnCommit = new graft.util.DelegatingFs {
+      override def createExclusive(p: Path, c: String): Unit =
+        if (p.getParent == Paths.get(store, "_manifest"))
+          throw new java.io.IOException(s"crash creating $p")
+        else super.createExclusive(p, c)
+    }
+    // a same-count rebucket folds every bucket: a full staged rewrite
+    intercept[java.io.IOException](StoreFs.withFs(crashOnCommit)(
+      ServingStores.rebucket(spark, store, ServingStores.DefaultBuckets)))
+    assert(probe() == before, "a crash before the commit changed what serves")
+    assert(graft.util.Stamp.isFresh(store, stamp),
+      "a crash before the commit invalidated the stamp")
+    val staged = ServingStores.unlisted(store)
+    assert(staged.nonEmpty, "the crashed rewrite staged no file into the store")
+    val reclaimed = StoreAdmin.gcOrphans(dir)
+    staged.foreach { p =>
+      assert(reclaimed.contains(p.toString), s"gc missed $p: $reclaimed")
+      assert(!Files.exists(p))
+    }
+    assert(probe() == before, "gc changed a live store's probe result")
     assert(ServingStores.ensureDocPostings(spark, dir) == store)
     assert(probe() == before, "recovered store differs from pre-crash")
+  }
+
+  test("gcOrphans after compact and rebucket leaves exactly the files the " +
+      "latest manifest lists; probes unchanged; a second gc deletes " +
+      "nothing") {
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    val fakeSf = Files.createTempDirectory("graft-gc-manifest").toString
+    val store = ServingStores.defaultDir(fakeSf) + "/tags"
+    def onDisk(): Set[Path] = {
+      val s = Files.walk(Paths.get(store))
+      try s.iterator().asScala.filter(Files.isRegularFile(_))
+        .filter(p => Seq("_manifest", "_tombstones").contains(
+          p.getParent.getFileName.toString) ||
+          p.getParent.getFileName.toString.startsWith("__bucket="))
+        .toSet
+      finally s.close()
+    }
+    def probe(tag: String) = ServingStores.postingProbe(spark, store, tag)
+      .select(col("id")).collect().map(_.getLong(0)).sorted.toSeq
+    ServingStores.buildPostings(
+      Seq((1L, List("jobs")), (2L, List("jobs", "perf"))).toDF("id", "tags"),
+      col("tags"), store, buckets = 3)
+    ServingStores.appendPostings(
+      Seq((3L, List("jobs"))).toDF("id", "tags"), col("tags"), store)
+    ServingStores.upsertPostings(
+      Seq((2L, List("perf"))).toDF("id", "tags"), "id", col("tags"), store)
+    ServingStores.compact(spark, store)
+    ServingStores.appendPostings(
+      Seq((4L, List("jobs"))).toDF("id", "tags"), col("tags"), store)
+    ServingStores.rebucket(spark, store, 5)
+    val served = Seq("jobs", "perf").map(t => t -> probe(t)).toMap
+    assert(served("jobs") == Seq(1L, 3L, 4L) && served("perf") == Seq(2L))
+    val files = ServingStores.dataFileCount(store)
+    val superseded = ServingStores.unlisted(store).toSet
+    assert(superseded.nonEmpty, "compact and rebucket left nothing to reclaim")
+    val removed = StoreAdmin.gcOrphans(fakeSf)
+    assert(superseded.forall(p => removed.contains(p.toString)),
+      s"gc missed ${superseded.map(_.toString) -- removed}")
+    // exactly the latest manifest's files remain: its data files, no
+    // tombstone (the purging folds unlisted them), one manifest version
+    val left = onDisk()
+    assert(left.count(_.getParent.getFileName.toString == "_manifest") == 1)
+    assert(left.count(_.getParent.getFileName.toString.startsWith("__bucket=")) ==
+      files)
+    assert(!ServingStores.hasTombstones(store) &&
+      !left.exists(_.getParent.getFileName.toString == "_tombstones"))
+    assert(ServingStores.dataFileCount(store) == files)
+    Seq("jobs", "perf").foreach(t => assert(probe(t) == served(t),
+      s"gc changed the '$t' probe"))
+    assert(StoreAdmin.gcOrphans(fakeSf).isEmpty, "a second gc deleted files")
+    StoreAdmin.truncate(ServingStores.defaultDir(fakeSf))
+  }
+
+  test("gcOrphans reclaims a superseded v2/v3 serving root only when " +
+      "every store in it carries the old serve sentinel") {
+    val target = Paths.get(sys.props("user.dir"), "target")
+    def store(root: String, sf: String, name: String, sentinel: Boolean): Path = {
+      val d = target.resolve(root).resolve(sf).resolve(name)
+      Files.createDirectories(d.resolve("__bucket=0"))
+      if (sentinel) Files.writeString(d.resolve("_buckets.txt"), "64")
+      d
+    }
+    store("serving-store-v2", "sf_a", "doc_postings", sentinel = true)
+    store("serving-store-v2", "sf_b", "orders_by_cust", sentinel = true)
+    store("serving-store-v3", "sf_a", "doc_postings", sentinel = true)
+    val stranger = store("serving-store-v3", "sf_a", "not_a_store",
+      sentinel = false)
+    try {
+      val removed = StoreAdmin.gcOrphans(dir)
+      assert(removed.contains(target.resolve("serving-store-v2").toString),
+        s"the recognised v2 root was not reclaimed: $removed")
+      assert(!Files.exists(target.resolve("serving-store-v2")))
+      assert(Files.isDirectory(stranger) &&
+        Files.exists(target.resolve("serving-store-v3/sf_a/doc_postings/_buckets.txt")),
+        "a root with an unrecognised child was touched")
+      assert(!removed.exists(_.contains("serving-store-v3")))
+    } finally StoreFs.deleteRecursively(target.resolve("serving-store-v3"))
   }
 
   test("gcOrphans reclaims rewrite-tmp leftovers without touching live " +

@@ -14,8 +14,9 @@ import org.scalatest.BeforeAndAfterEach
   * maintenance serializes against maintenance; a crashed holder's stale
   * lock is stolen. The interleavings are driven deterministically
   * through [[ServingStores.testHookBeforeSwap]], which fires after the
-  * fold's tmp generation is materialized and before the swap — the
-  * exact window the round-12 code destroyed appends in.
+  * fold's files are staged and before its commit — the exact window the
+  * round-12 code destroyed appends in — and through a [[graft.util
+  * .StoreFs]] double that runs a rebucket inside an append's commit.
   */
 class StoreConcurrencySpec extends SparkSpec with BeforeAndAfterEach {
   import spark.implicits._
@@ -109,6 +110,40 @@ class StoreConcurrencySpec extends SparkSpec with BeforeAndAfterEach {
     StoreAdmin.truncate(dest)
   }
 
+  test("a rebucket committed between an append's staging and its commit " +
+      "makes the append throw, naming the rebucket; none of its rows is " +
+      "served") {
+    val dest = Files.createTempDirectory("graft-conc-commit").toString
+    val base = Seq((1L, List("jobs")), (2L, List("perf"))).toDF("id", "tags")
+    ServingStores.buildPostings(base, col("tags"), dest, buckets = 2)
+    // the append's manifest create is intercepted: the rebucket runs and
+    // commits first, with the append's files already staged
+    var rebucketed = false
+    val rebucketFirst = new graft.util.DelegatingFs {
+      override def createExclusive(p: java.nio.file.Path, c: String): Unit = {
+        if (!rebucketed && p.getParent.getFileName.toString == "_manifest") {
+          rebucketed = true
+          ServingStores.rebucket(spark, dest, 5)
+        }
+        super.createExclusive(p, c)
+      }
+    }
+    val ex = intercept[IllegalStateException] {
+      graft.util.StoreFs.withFs(rebucketFirst)(ServingStores.appendPostings(
+        Seq((3L, List("jobs", "late"))).toDF("id", "tags"), col("tags"), dest))
+    }
+    assert(rebucketed, "the rebucket never ran inside the append's commit")
+    assert(ex.getMessage.contains("rebucket"), ex.getMessage)
+    assert(probeIds(dest, "jobs") == Seq(1L))
+    assert(probeIds(dest, "late").isEmpty, "a row of the failed append is served")
+    assert(probeIds(dest, "perf") == Seq(2L))
+    // re-applied after the rebucket, the batch lands under the new count
+    ServingStores.appendPostings(
+      Seq((3L, List("jobs", "late"))).toDF("id", "tags"), col("tags"), dest)
+    assert(probeIds(dest, "jobs") == Seq(1L, 3L))
+    StoreAdmin.truncate(dest)
+  }
+
   test("maintenance serializes against maintenance; a stale lock is stolen") {
     val dest = Files.createTempDirectory("graft-conc-lock").toString
     val base = Seq((1L, List("jobs")), (2L, List("jobs"))).toDF("id", "tags")
@@ -141,30 +176,31 @@ class StoreConcurrencySpec extends SparkSpec with BeforeAndAfterEach {
 
   test("probes racing a compact either serve a full generation or fail " +
       "loudly; the first probe after the swap succeeds") {
-    // round-12 verdict item 6: the swap window's behavior as a spec. The
-    // hook fires with the tmp materialized and the store still fully
-    // live — a probe HERE serves the old generation; during the downed-
-    // sentinel swap itself probes throw (readBuckets fails loudly); after
-    // the pass they serve the new generation. All three states observed.
+    // round-12 verdict item 6: the commit window's behavior as a spec.
+    // The hook fires with the fold staged and its commit not yet
+    // published — a probe HERE serves the old generation, and a probe
+    // frame built here (on the pre-commit manifest) still serves the
+    // complete old generation when collected after the commit, because
+    // a commit deletes no file; after the pass a fresh probe serves the
+    // new generation. All three states observed.
     val dest = Files.createTempDirectory("graft-conc-serve").toString
     val base = Seq((1L, List("jobs")), (2L, List("jobs"))).toDF("id", "tags")
     ServingStores.buildPostings(base, col("tags"), dest, buckets = 2)
     ServingStores.appendPostings(
       Seq((3L, List("jobs"))).toDF("id", "tags"), col("tags"), dest)
     var duringSwap: Seq[Long] = Nil
+    var preCommit: org.apache.spark.sql.DataFrame = null
     ServingStores.testHookBeforeSwap = d => {
       duringSwap = probeIds(d, "jobs")
-      // simulate the mid-swap state a concurrent request would see once
-      // the sentinel is down: loud failure, not a mixed generation
-      val sentinel = Paths.get(d, "_buckets.txt")
-      val saved = Files.readString(sentinel)
-      Files.delete(sentinel)
-      intercept[Exception] { probeIds(d, "jobs") }
-      Files.writeString(sentinel, saved)
+      preCommit = ServingStores.postingProbe(spark, d, "jobs")
     }
     ServingStores.compact(spark, dest)
     assert(duringSwap == Seq(1L, 2L, 3L),
       "a probe before the swap must serve the complete old generation")
+    assert(preCommit.select(col("id")).collect().map(_.getLong(0)).sorted
+      .toSeq == Seq(1L, 2L, 3L),
+      "a probe opened on the pre-commit manifest must still serve the " +
+        "complete old generation after the commit")
     assert(probeIds(dest, "jobs") == Seq(1L, 2L, 3L),
       "the first probe after the swap must serve the new generation")
     StoreAdmin.truncate(dest)

@@ -100,4 +100,39 @@ class StoreFsSpec extends AnyFunSuite {
     assert(e.getMessage.contains("writer-a"))
     StoreLock.release(store)
   }
+
+  test("createExclusive publishes its target only with the full content; " +
+      "an existing target fails and stays unchanged; no tmp sibling " +
+      "remains") {
+    val dir = Files.createTempDirectory("graft-storefs-atomic")
+    val content = "x" * (8 << 20)
+    // a reader polling the target while it is created must never see it
+    // empty or partial (a plain CREATE_NEW write exposes both)
+    for (i <- 0 until 5) {
+      val target = dir.resolve(s"commit-$i.json")
+      @volatile var done = false
+      val seen = scala.collection.mutable.Buffer[Int]()
+      val reader = new Thread(() =>
+        while (!done) {
+          try if (Files.exists(target)) seen += Files.readString(target).length
+          catch { case _: java.io.IOException => () }
+        })
+      reader.start()
+      StoreFs.LocalFs.createExclusive(target, content)
+      done = true
+      reader.join()
+      assert(seen.forall(_ == content.length),
+        s"a reader saw a partial target: ${seen.filter(_ != content.length).take(3)}")
+      assert(Files.readString(target) == content)
+    }
+    val target = dir.resolve("commit-0.json")
+    intercept[java.nio.file.FileAlreadyExistsException](
+      StoreFs.LocalFs.createExclusive(target, "other"))
+    assert(Files.readString(target) == content, "the existing target changed")
+    val s = Files.list(dir)
+    val names = try s.toArray.map(_.asInstanceOf[Path].getFileName.toString).toSet
+      finally s.close()
+    assert(names == (0 until 5).map(i => s"commit-$i.json").toSet,
+      s"a tmp sibling remained: $names")
+  }
 }
