@@ -240,7 +240,11 @@ object HttpServing {
   /** Fold accumulated appends in all three layouts back into one
     * read-optimized generation each — Solr's background segment merge for
     * the tweet index (probe results identical before/after; LiveIngestSpec
-    * asserts byte-identical HTTP envelopes across the compaction).
+    * asserts byte-identical HTTP envelopes across the compaction). The
+    * folded files and superseded manifests stay on disk until the caller
+    * runs [[StoreAdmin.reclaim]] on `dest`, between jobs — never inside a
+    * fold or beside an in-flight write, whose staged files it would
+    * delete.
     */
   def compactTweetIndex(spark: org.apache.spark.sql.SparkSession,
                         dest: String): Unit = {

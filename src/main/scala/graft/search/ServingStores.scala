@@ -1,9 +1,8 @@
 package graft.search
 
-import java.nio.file.{FileAlreadyExistsException, Path, Paths}
-import java.util.UUID
+import java.nio.file.{Path, Paths}
 
-import graft.util.{StoreFs, StoreLock, Tombstones}
+import graft.util.{ManifestLog, StoreFs, StoreLock, Tombstones}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
@@ -43,14 +42,13 @@ import org.json4s.jackson.JsonMethods
   * the data files per bucket and of the tombstone files. Readers list
   * `_manifest/`, read the highest N and open exactly the files it
   * names. Every write — build, append, upsert, delete, compact,
-  * rebucket — takes one path: Spark writes into a sibling
-  * `<dest>-<uuid>-rewrite-tmp`, the staged parquet files move into
-  * `__bucket=b/` (or `_tombstones/`) under their unique part names,
-  * and [[commit]] publishes version N+1 naming them with
-  * [[graft.util.StoreFs.createExclusive]] — one atomic, content-complete
-  * create. A commit never deletes a file: a reader holding version N
-  * keeps reading N's files, and [[StoreAdmin.gcOrphans]] (between jobs)
-  * deletes whatever the latest manifest does not name. The one deletion
+  * rebucket — takes the one commit path of [[graft.util.ManifestLog]]:
+  * stage (the parquet files land unlisted in `__bucket=b/` or
+  * `_tombstones/` under their unique part names), then commit version
+  * N+1 naming them with one atomic, content-complete exclusive create.
+  * A commit never deletes a file: a reader holding version N keeps
+  * reading N's files, and [[StoreAdmin.reclaim]] (between jobs) deletes
+  * whatever the latest manifest does not name. The one deletion
   * outside gc is a PURGE (a fold that unlists tombstones): deleted rows
   * must leave the disk there, so right after its commit it deletes the
   * files it folded and the tombstone files it applied — a reader still
@@ -119,26 +117,24 @@ object ServingStores {
 
   val DefaultBuckets = 64
 
-  private val ManifestDir = "_manifest"
-
   /** Test seam: runs after a fold's files are fully staged and before
     * its commit — the widest window in which a concurrent write can
     * land between a fold's snapshot and its commit.
     */
   private[search] var testHookBeforeSwap: String => Unit = _ => ()
 
-  /** One commit point of a store (`_manifest/<version>.json`): the row
-    * schema (including `__gen` and the `__bucket` partition column), the
-    * key column the buckets hash, the columns sorted descending after
-    * it, the bucket count, the last write generation, the identity
-    * column tombstones key on, and the store-relative paths of the data
-    * files (`__bucket=<b>/<part>`) and tombstone files
-    * (`_tombstones/<part>`).
+  /** One commit point of a store (`_manifest/<version>.json`, committed
+    * through [[graft.util.ManifestLog]]): the row schema (including
+    * `__gen` and the `__bucket` partition column), the key column the
+    * buckets hash, the columns sorted descending after it, the bucket
+    * count, the last write generation, the identity column tombstones key
+    * on, and the store-relative paths of the data files
+    * (`__bucket=<b>/<part>`) and tombstone files (`_tombstones/<part>`).
     */
-  private case class Manifest(version: Long, schema: JValue, key: String,
+  private case class Manifest(schema: JValue, key: String,
                               sortDesc: Seq[String], buckets: Int, gen: Long,
                               idCol: Option[String], files: Seq[String],
-                              tombstones: Seq[String]) {
+                              tombstones: Seq[String]) extends ManifestLog.Entry {
     lazy val rowSchema: StructType =
       DataType.fromJson(JsonMethods.compact(schema)).asInstanceOf[StructType]
 
@@ -146,17 +142,16 @@ object ServingStores {
 
     def inBucket(b: Int): Seq[String] = files.filter(_.startsWith(s"__bucket=$b/"))
 
-    /** [[graft.util.Tombstones.kill]] against the listed tombstones. */
-    def dropDead(spark: SparkSession, dest: String, rows: DataFrame): DataFrame =
-      Tombstones.kill(spark, tombstones.map(Paths.get(dest, _)), rows,
-        idCol.orNull, Tombstones.StringKey)
+    /** Listed files through the row schema (`__bucket` from their dirs). */
+    def scan(spark: SparkSession, dest: String, fs: Seq[String]): DataFrame =
+      ManifestLog.scan(spark, dest, rowSchema, "", fs)
 
     // written and read field by field, with no case-class reflection
     def json: String = {
-      def strings(xs: Seq[String]) = JArray(xs.map(JString(_)).toList)
-      JsonMethods.compact(JObject(List("version" -> JInt(version),
-        "schema" -> schema, "key" -> JString(key), "sortDesc" -> strings(sortDesc),
-        "buckets" -> JInt(buckets), "gen" -> JInt(gen), "files" -> strings(files),
+      import ManifestLog.strings
+      JsonMethods.compact(JObject(List("schema" -> schema, "key" -> JString(key),
+        "sortDesc" -> strings(sortDesc), "buckets" -> JInt(buckets),
+        "gen" -> JInt(gen), "files" -> strings(files),
         "tombstones" -> strings(tombstones)) ++ idCol.map("idCol" -> JString(_))))
     }
   }
@@ -165,68 +160,12 @@ object ServingStores {
     implicit val formats: Formats = DefaultFormats
     val j = JsonMethods.parse(text)
     def strings(f: String) = (j \ f).extract[List[String]]
-    Manifest((j \ "version").extract[Long], j \ "schema", (j \ "key").extract[String],
-      strings("sortDesc"), (j \ "buckets").extract[Int], (j \ "gen").extract[Long],
+    Manifest(j \ "schema", (j \ "key").extract[String], strings("sortDesc"),
+      (j \ "buckets").extract[Int], (j \ "gen").extract[Long],
       (j \ "idCol").extractOpt[String], strings("files"), strings("tombstones"))
   }
 
-  private val VersionName = """(\d+)\.json""".r
-
-  private def manifestFile(dest: String, version: Long): Path =
-    Paths.get(dest, ManifestDir, f"$version%020d.json")
-
-  private def versions(dest: String): Seq[Long] =
-    StoreFs.list(Paths.get(dest, ManifestDir)).map(_.getFileName.toString)
-      .collect { case VersionName(n) => n.toLong }
-
-  /** The store's latest manifest; a store without one fails loudly. */
-  private def latest(dest: String): Manifest = {
-    val vs = versions(dest)
-    if (vs.isEmpty) throw new IllegalStateException(
-      s"serving store at $dest has no manifest in " +
-        s"${Paths.get(dest, ManifestDir)} — never built or not a v4 store; " +
-        "rebuild it")
-    parseManifest(StoreFs.readString(manifestFile(dest, vs.max)))
-  }
-
-  /** Publish `m` as its version: exclusive, content-atomic create. */
-  private def publish(dest: String, m: Manifest): Unit = {
-    StoreFs.createDirectories(Paths.get(dest, ManifestDir))
-    StoreFs.createExclusive(manifestFile(dest, m.version), m.json)
-  }
-
-  /** Publish `edit` applied to the latest manifest as the next version.
-    * When a concurrent commit took that version first, re-read and
-    * re-apply — `edit` re-checks its precondition against what is now
-    * latest and throws when it no longer holds.
-    */
-  private def commit(dest: String)(edit: Manifest => Manifest): Unit = {
-    val cur = latest(dest)
-    try publish(dest, edit(cur).copy(version = cur.version + 1))
-    catch { case _: FileAlreadyExistsException => commit(dest)(edit) }
-  }
-
-  /** Run `write` against a fresh sibling staging dir, then move every
-    * staged parquet file into the same subdirectory of the store under
-    * its unique part name — unlisted until a commit names it. Returns
-    * the moved files' store-relative paths.
-    */
-  private def stage(dest: String)(write: String => Unit): Seq[String] = {
-    val tmp = Paths.get(s"${dest.stripSuffix("/")}-${UUID.randomUUID()}-rewrite-tmp")
-    try {
-      write(tmp.toString)
-      StoreFs.list(tmp).flatMap { dir =>
-        val files = StoreFs.parquetFiles(dir)
-        if (files.nonEmpty)
-          StoreFs.createDirectories(Paths.get(dest, dir.getFileName.toString))
-        files.map { f =>
-          val rel = s"${dir.getFileName}/${f.getFileName}"
-          StoreFs.move(f, Paths.get(dest, rel))
-          rel
-        }
-      }
-    } finally StoreFs.deleteRecursively(tmp)
-  }
+  private val log = new ManifestLog[Manifest]("serving store", parseManifest)
 
   private def bucketOf(key: Column, buckets: Int): Column =
     pmod(hash(key.cast("string")), lit(buckets))
@@ -252,15 +191,6 @@ object ServingStores {
     rows.repartition(col("__bucket"))
       .sortWithinPartitions(col("__bucket") +: order: _*)
       .write.mode("append").partitionBy("__bucket").parquet(dest)
-
-  /** The listed `files` through the persisted schema (`__bucket` comes
-    * from their directory names); no files is a typed empty frame.
-    */
-  private def scan(spark: SparkSession, dest: String, m: Manifest,
-                   files: Seq[String]): DataFrame =
-    if (files.isEmpty) spark.createDataFrame(java.util.List.of[Row](), m.rowSchema)
-    else spark.read.schema(m.rowSchema).option("basePath", dest)
-      .parquet(files.map(Paths.get(dest, _).toString): _*)
 
   // array_distinct: a key repeated within one row must post the row
   // ONCE — the probe replays `array_contains` semantics, not explode's
@@ -361,10 +291,11 @@ object ServingStores {
                     sortDesc: Seq[String] = Nil,
                     buckets: Int = DefaultBuckets): Unit = {
     val rows = tagged(df, fkCol, 0L, buckets)
-    val m = Manifest(0L, JsonMethods.parse(rows.schema.json), fkCol, sortDesc,
+    val m = Manifest(JsonMethods.parse(rows.schema.json), fkCol, sortDesc,
       buckets, 0L, None, Nil, Nil)
     StoreFs.deleteRecursively(Paths.get(dest))
-    publish(dest, m.copy(files = stage(dest)(writeRows(rows, m.order, _))))
+    ManifestLog.publish(dest, 0L,
+      m.copy(files = ManifestLog.stage(dest)(writeRows(rows, m.order, _))))
   }
 
   /** Append a NEW batch into an existing store — the
@@ -401,24 +332,21 @@ object ServingStores {
   private def ingest(dest: String, rows: Option[DataFrame],
                      replace: Option[(String, DataFrame)]): Unit = {
     assertWritable(dest)
-    val m = latest(dest)
+    val m = log.latest(dest)
     val gen = m.gen + 1
     val idCol = replace.map(_._1)
     idCol.foreach(c => require(m.idCol.forall(_ == c),
       s"store at $dest tombstones on '${m.idCol.get}'; cannot upsert by '$c'"))
-    val (tombs, files) = stage(dest) { tmp =>
+    val (tombs, files) = ManifestLog.stage(dest) { tmp =>
       rows.foreach(r => writeRows(tagged(r, m.key, gen, m.buckets), m.order, tmp))
       replace.foreach { case (_, ids) =>
         Tombstones.write(ids, tmp, gen, Tombstones.StringKey) }
     }.partition(_.startsWith(Tombstones.Dir))
-    commit(dest) { cur =>
+    log.commitAt(dest, gen) { cur =>
       if (cur.buckets != m.buckets) throw new IllegalStateException(
         s"store at $dest was rebucketed (${m.buckets} -> ${cur.buckets} " +
           "buckets) while this write was staged; it was not applied — " +
           "re-apply it")
-      if (cur.gen >= gen) throw new IllegalStateException(
-        s"generation $gen of store at $dest was committed by a concurrent " +
-          "writer; this write was not applied — re-apply it")
       cur.copy(gen = gen, idCol = idCol.orElse(cur.idCol),
         files = cur.files ++ files, tombstones = cur.tombstones ++ tombs)
     }
@@ -448,15 +376,15 @@ object ServingStores {
     */
   def timelineProbeMany(spark: SparkSession, dest: String, fkCol: String,
                         values: Seq[Any]): DataFrame = {
-    val m = latest(dest)
+    val m = log.latest(dest)
     require(fkCol == m.key, s"store at $dest is keyed on '${m.key}', not '$fkCol'")
     val files = bucketsOf(spark, values, m.buckets).distinct.flatMap(m.inBucket)
     val rows =
-      if (files.isEmpty) scan(spark, dest, m, Nil)
-      else m.dropDead(spark, dest, scan(spark, dest, m, files).filter(values
+      if (files.isEmpty) m.scan(spark, dest, Nil)
+      else m.dropDead(spark, dest, m.scan(spark, dest, files).filter(values
         .map(v => col("__bucket") === bucketOf(lit(v), m.buckets) &&
           col(fkCol) === lit(v))
-        .reduce(_ || _)))
+        .reduce(_ || _)), m.idCol.orNull)
     rows.drop("__bucket", "__gen")
   }
 
@@ -516,7 +444,7 @@ object ServingStores {
     * with `q_hashtag_served`'s oracle VERBATIM, so append+compact ≡
     * one-shot is checked by the driver's hash compare, not just a spec.
     * The build starts a fresh store, so a stale generation can never
-    * linger.
+    * linger, and the job ends by reclaiming what its folds unlisted.
     */
   def ensureDocPostingsIncr(spark: SparkSession, sfDir: String): String = {
     val dest = defaultDir(sfDir) + "/doc_postings_incr"
@@ -537,6 +465,9 @@ object ServingStores {
         dest, dropCols = Seq("__words"))
       compactHotBuckets(spark, dest, minFiles = 2)
       rebucket(spark, dest, DefaultBuckets)
+      // the folds ran outside StoreAdmin.maintain, so no sweep reclaims
+      // what they unlisted: this job does, now that no write is in flight
+      StoreAdmin.reclaim(dest)
       graft.util.Stamp.write(dest, stamp)
     }
     dest
@@ -632,30 +563,17 @@ object ServingStores {
   /** Parquet data files the latest manifest lists (tombstone files are
     * maintenance metadata, not servable data).
     */
-  def dataFileCount(dest: String): Int = latest(dest).files.size
+  def dataFileCount(dest: String): Int = log.latest(dest).files.size
 
   /** Parquet data files the latest manifest lists for one bucket. */
   def bucketFileCount(dest: String, bucket: Int): Int =
-    latest(dest).inBucket(bucket).size
+    log.latest(dest).inBucket(bucket).size
 
   /** True iff the latest manifest lists tombstones a probe must apply. */
-  def hasTombstones(dest: String): Boolean = latest(dest).tombstones.nonEmpty
+  def hasTombstones(dest: String): Boolean = log.latest(dest).tombstones.nonEmpty
 
-  /** Every data file, tombstone file and manifest version under `dest`
-    * that the latest manifest does not name — what commits left behind
-    * (folded-away files, superseded versions) and what a failed or
-    * crashed write moved in without committing. Empty for a store with
-    * no committed version.
-    */
-  private[search] def unlisted(dest: String): Seq[Path] =
-    if (versions(dest).isEmpty) Nil
-    else {
-      val m = latest(dest)
-      val named = (m.files ++ m.tombstones).map(Paths.get(dest, _)).toSet +
-        manifestFile(dest, m.version)
-      (StoreFs.list(Paths.get(dest)).flatMap(StoreFs.parquetFiles) ++
-        StoreFs.list(Paths.get(dest, ManifestDir))).filterNot(named)
-    }
+  /** [[graft.util.ManifestLog.unlisted]]: what a store's reclaim deletes. */
+  private[search] def unlisted(dest: String): Seq[Path] = ManifestLog.unlisted(dest)
 
   /** The one fold behind [[compact]], [[compactHotBuckets]] and
     * [[rebucket]], under the store lock. SNAPSHOT: the latest manifest.
@@ -680,17 +598,18 @@ object ServingStores {
                    newBuckets: Option[Int] = None): Seq[Int] = {
     val op = if (newBuckets.isEmpty) "compact" else "rebucket"
     StoreLock.withLock(dest, op) {
-      val snap = latest(dest)
+      val snap = log.latest(dest)
       val hot = (0 until snap.buckets).filter(snap.inBucket(_).size >= minFiles)
       if (hot.nonEmpty) {
         val buckets = newBuckets.getOrElse(snap.buckets)
         val folded = hot.flatMap(snap.inBucket)
-        val rows = snap.dropDead(spark, dest, scan(spark, dest, snap, folded))
+        val rows = snap.dropDead(spark, dest, snap.scan(spark, dest, folded),
+            snap.idCol.orNull)
           .withColumn("__bucket", bucketOf(col(snap.key), buckets))
-        val staged = stage(dest)(writeRows(rows, snap.order, _))
+        val staged = ManifestLog.stage(dest)(writeRows(rows, snap.order, _))
         testHookBeforeSwap(dest)
         val purged = snap.files.diff(folded).isEmpty
-        commit(dest) { m =>
+        log.commit(dest) { m =>
           val raced =
             if (newBuckets.isDefined)
               m.files != snap.files || m.tombstones != snap.tombstones

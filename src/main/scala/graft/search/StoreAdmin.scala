@@ -4,7 +4,7 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import graft.util.StoreFs
+import graft.util.{ManifestLog, StoreFs}
 
 /** Serving-store lifecycle admin — the engine's analogue of the
   * reference's collection cleanup (`Ranking Model/src/main/java/Main/
@@ -163,16 +163,10 @@ object StoreAdmin {
     // from scratch every time a sweep folded it — q_keyword_bm25_incr
     // tests merged serving, which compaction is spec-equal to but must
     // not replace under the gate)
-    locally {
-      val bm = BM25Index.defaultDir(sfDir)
-      val segs = Paths.get(bm, "segments")
-      // nonempty LISTING, not directory existence: an empty segments dir
-      // (crashed append) would otherwise make every sweep log a no-op
-      // fold forever, breaking idempotence
-      if (StoreFs.list(segs).nonEmpty) {
-        BM25Index.compact(spark, bm)
-        log += s"fold $bm (segments)"
-      }
+    val bm = BM25Index.defaultDir(sfDir)
+    if (BM25Index.isBuilt(bm) && BM25Index.segments(bm).nonEmpty) {
+      BM25Index.compact(spark, bm)
+      log += s"fold $bm (segments)"
     }
     for (name <- Seq("doc_postings", "doc_postings_incr", "doc_postings_upsert",
         "orders_by_cust", "orders_by_cust_incr", "orders_by_cust_upsert")) {
@@ -237,47 +231,46 @@ object StoreAdmin {
     finally s.close()
   }
 
-  /** Reclaim rewrite leftovers. Every staged write
-    * ([[graft.util.AtomicRewrite]], [[ServingStores]]' writes and folds,
-    * [[BM25Index]]'s staged segments and compaction) materializes its
-    * files in a `…-rewrite-tmp` dir before touching the store, so a crash
-    * during the write leaves the store fully valid plus an orphan tmp
-    * holding a dead generation's bytes; this sweep deletes those dirs.
-    * Under every store directory that has a `_manifest/` (the
-    * [[ServingStores]] commit log) it also deletes each data file,
-    * tombstone file and manifest version the latest manifest does not
-    * name: files a fold unlisted, superseded versions, and files a failed
-    * or crashed write moved in without committing. Correctness never
-    * depends on it — it is the disk-reclaim half of crash recovery. Not
-    * safe to run CONCURRENTLY with an in-flight write (it would delete
-    * files staged but not yet committed, which the commit would then
-    * name) — run it like [[truncate]], between jobs. Returns the deleted
-    * paths so callers can log them.
+  /** Reclaim one store root's rewrite leftovers — the disk-reclaim half
+    * of crash recovery; correctness never depends on it. Every staged
+    * write ([[graft.util.AtomicRewrite]], and the
+    * [[graft.util.ManifestLog]] stage of [[ServingStores]] and
+    * [[BM25Index]]) materializes its files in a `…-rewrite-tmp` dir
+    * before touching what readers open, so a crash during the write
+    * leaves an orphan tmp holding a dead generation's bytes; this deletes
+    * every such dir under `root`. Under every store dir that has a
+    * `_manifest/` it also deletes each file and manifest version the
+    * latest manifest does not name: files a fold unlisted, superseded
+    * versions, and files a failed or crashed write moved in without
+    * committing. Not safe to run CONCURRENTLY with an in-flight write or
+    * fold (it would delete files staged but not yet committed, which the
+    * commit would then name) — run it like [[truncate]], between jobs.
+    * Returns the deleted paths so callers can log them.
     */
-  def gcOrphans(sfDir: String): Seq[String] = {
-    val dirs = storeDirs(sfDir).flatMap { root =>
-      val p = Paths.get(root)
-      if (!StoreFs.isDirectory(p)) Nil
-      else {
-        val s = Files.walk(p)
-        try s.iterator().asScala.filter(Files.isDirectory(_)).toList
-        finally s.close()
-      }
-    }
+  def reclaim(root: String): Seq[String] = {
+    def under(d: Path): Seq[Path] =
+      if (StoreFs.isDirectory(d)) d +: StoreFs.list(d).flatMap(under) else Nil
+    val dirs = under(Paths.get(root))
     val tmps = dirs.filter(_.getFileName.toString.endsWith("-rewrite-tmp"))
     tmps.foreach(StoreFs.deleteRecursively)
-    val unlisted = dirs
-      .filter(d => StoreFs.isDirectory(d.resolve("_manifest")))
-      .flatMap(d => ServingStores.unlisted(d.toString))
+    val unlisted = dirs.flatMap(d => ManifestLog.unlisted(d.toString))
     unlisted.foreach(StoreFs.deleteIfExists)
+    (tmps ++ unlisted).map(_.toString)
+  }
+
+  /** [[reclaim]] over every store root of a corpus, plus the legacy
+    * roots a layout version bump orphaned (below).
+    */
+  def gcOrphans(sfDir: String): Seq[String] = {
     // legacy reclaim: whole store ROOTS orphaned by a defaultDir version
     // bump (v1's degenerate residual codebook; the pre-params.txt layouts
     // superseded when the ANN hyperparameters became persisted build
-    // metadata; the serving layouts before the manifest). Default-path
-    // layout only: GRAFT_INDEX_DIR is a user-chosen root (the family tag
-    // rides the path there too now — StoreDirs — but the old flat env
-    // layout mixed store artifacts with whatever else the user kept
-    // there, so a GC may not assume ownership of anything under it).
+    // metadata; the serving layouts and BM25 indexes before the
+    // manifest). Default-path layout only: GRAFT_INDEX_DIR is a
+    // user-chosen root (the family tag rides the path there too now —
+    // StoreDirs — but the old flat env layout mixed store artifacts with
+    // whatever else the user kept there, so a GC may not assume
+    // ownership of anything under it).
     // Each root is swept ONLY if it actually looks like an orphaned store
     // of ours ([[isLegacyRoot]]) — never on path name alone: a name-only
     // delete in a general-purpose GC routine could reap a directory that
@@ -285,21 +278,21 @@ object StoreAdmin {
     val legacyRoots = Seq("ivfpq-store-v1", "ivfpq-store-v2",
       "ivfpq-store-v3", "pq-store-v2", "ivf-store-v1", "ivf-store-v2",
       "sq8-store-v1", "srp-label-v1", "bm25-index-v3", "bm25-index-v4",
-      "bm25-index-v5", "serving-store-v2", "serving-store-v3")
+      "bm25-index-v5", "bm25-index-v6", "serving-store-v2", "serving-store-v3")
       .map(v => Paths.get(s"${sys.props("user.dir")}/target/$v"))
     val legacySwept =
       if (sys.env.contains("GRAFT_INDEX_DIR")) Nil
       else legacyRoots.filter(p => StoreFs.isDirectory(p) && isLegacyRoot(p))
         .map { p => StoreFs.deleteRecursively(p); p.toString }
-    (tmps ++ unlisted).map(_.toString) ++ legacySwept
+    storeDirs(sfDir).flatMap(reclaim) ++ legacySwept
   }
 
   /** True iff every child of `root` is a directory that is either an
-    * ANN store (carrying a marker: source_stamp.txt or a known
-    * sub-table) or a corpus dir of v2/v3 serving stores (every child
-    * holding `_buckets.txt`, their serve sentinel) — the gate that keeps
-    * the legacy-version GC from deleting a directory it cannot verify it
-    * owns. An empty root passes (nothing but debris).
+    * ANN store or BM25 index (carrying a marker: source_stamp.txt,
+    * params.txt or a known sub-table) or a corpus dir of v2/v3 serving
+    * stores (every child holding `_buckets.txt`, their serve sentinel) —
+    * the gate that keeps the legacy-version GC from deleting a directory
+    * it cannot verify it owns. An empty root passes (nothing but debris).
     */
   private def isLegacyRoot(root: Path): Boolean = {
     val markers = Set("source_stamp.txt", "codes.parquet", "codebook.parquet",

@@ -5,9 +5,10 @@ import java.util.UUID
 
 /** THE filesystem seam for every persisted-store metadata and swap
   * primitive — locks ([[StoreLock]]), stamps ([[Stamp]]), atomic
-  * rewrites ([[AtomicRewrite]]), the serving layouts' manifest
-  * commits, and the BM25 compaction swap all flow through here, so the
-  * engine's durability story is stated ONCE and auditable in one place.
+  * rewrites ([[AtomicRewrite]]) and the manifest commits of the serving
+  * layouts and the BM25 index ([[ManifestLog]]) all flow through here,
+  * so the engine's durability story is stated ONCE and auditable in one
+  * place.
   *
   * == The contract the backing store must guarantee ==
   *
@@ -15,15 +16,15 @@ import java.util.UUID
   *     that already exists FAILS, atomically — two concurrent creators
   *     see exactly one winner — and the file appears with its full
   *     content, never empty or partial. This is what makes
-  *     [[StoreLock]] a lock and a [[graft.search.ServingStores]]
-  *     manifest a commit.
+  *     [[StoreLock]] a lock and a [[ManifestLog]] manifest a commit.
   *  2. '''Atomic rename''' ([[atomicMove]], [[move]]): a rename is
   *     all-or-nothing and never observable half-done; over an existing
   *     target it either replaces atomically or fails — it cannot merge.
   *     The stale-lock steal and every artifact swap ride on this.
   *  3. '''Read-after-write visibility''' for metadata files (stamps,
-  *     generation counters, bucket counts): a reader that starts after
-  *     a writer finishes sees the new content.
+  *     the ANN stores' generation counters and parameters, manifest
+  *     versions and their listing): a reader that starts after a writer
+  *     finishes sees the new content.
   *
   * POSIX local filesystems and HDFS satisfy all three (HDFS `create`
   * without overwrite + atomic same-directory `rename`). '''S3-class
@@ -44,10 +45,10 @@ import java.util.UUID
   *    a MIXED directory the stamp logic cannot detect. On object
   *    stores, swap-by-rename must become swap-by-manifest-pointer
   *    (write new objects under a fresh prefix, then one atomic pointer
-  *    update — the Iceberg/Delta commit model). [[graft.search
-  *    .ServingStores]] already commits that way: its moves only stage
-  *    unreferenced files, and its one commit is an exclusive manifest
-  *    create (a conditional PUT there).
+  *    update — the Iceberg/Delta commit model). [[ManifestLog]]'s
+  *    stores (the serving layouts and the BM25 index) already commit
+  *    that way: their moves only stage unreferenced files, and their one
+  *    commit is an exclusive manifest create (a conditional PUT there).
   *
   * Deploying on such a store therefore means ONE new implementation of
   * these primitives behind this seam (conditional-PUT locks,

@@ -18,10 +18,11 @@ import java.nio.file.Paths
   * acquirer steals any lock older than `staleMs` (default 30 min — far
   * beyond any maintenance pass at the store sizes a single node holds;
   * scale it with the deployment's longest compaction). Stealing is safe
-  * because the crashed rewrite also followed the stamp-first/sentinel-
-  * last swap ordering — its store is either untouched (crash during tmp
-  * write) or stamp-invalidated (crash mid-swap), never half-swapped — or,
-  * for the manifest-committed serving layouts, committed nothing.
+  * because the crashed rewrite left its store valid: an
+  * [[AtomicRewrite]] store is either untouched (crash during the tmp
+  * write) or stamp-invalidated (crash mid-swap), never half-swapped, and
+  * a [[ManifestLog]] store (the serving layouts, the BM25 index)
+  * committed either everything or nothing.
   *
   * Durability primitives (exclusive create, atomic rename) flow through
   * [[StoreFs]] — the ONE seam stating what the backing filesystem must
@@ -35,13 +36,9 @@ object StoreLock {
   /** The op string of the current holder, or None when unlocked. A
     * vanished-while-reading lock (released concurrently) reads as None.
     */
-  def heldBy(dest: String): Option[String] = {
-    val f = Paths.get(dest, LockFile)
-    try {
-      if (!StoreFs.exists(f)) None
-      else Some(StoreFs.readString(f).trim.split(' ').head)
-    } catch { case _: java.io.IOException => None }
-  }
+  def heldBy(dest: String): Option[String] =
+    try Some(StoreFs.readString(Paths.get(dest, LockFile)).trim.split(' ').head)
+    catch { case _: java.io.IOException => None }
 
   /** Acquire the lock for `op`, stealing a stale one; throws
     * [[IllegalStateException]] (holder + age in the message) when a live
@@ -70,8 +67,8 @@ object StoreLock {
           s"store at $dest is locked by '${parts.head}' (${age} ms old); " +
             s"concurrent maintenance would lose data — retry after it ends")
         if (age <= staleMs) reject()
-        // stale holder: crashed mid-maintenance; its swap ordering left
-        // the store valid-or-rebuildable, so the lock is just debris —
+        // stale holder: crashed mid-maintenance; its swap ordering or
+        // single commit left the store valid, so the lock is just debris —
         // but only ONE stealer may reap it
         val grave = Paths.get(dest,
           s"$LockFile.stale.${System.nanoTime()}.${Thread.currentThread().getId}")
@@ -92,8 +89,8 @@ object StoreLock {
     StoreFs.deleteIfExists(Paths.get(dest, LockFile))
 
   /** Run `body` holding the lock; always released, even on failure (the
-    * swap ordering inside `body` is what makes a mid-body crash safe —
-    * the lock only serializes live writers).
+    * swap ordering or single commit inside `body` is what makes a
+    * mid-body crash safe — the lock only serializes live maintainers).
     */
   def withLock[A](dest: String, op: String,
                   staleMs: Long = DefaultStaleMs)(body: => A): A = {

@@ -10,11 +10,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * every store family that overwrites or deletes by id (SimHash
   * signatures, the SRP / IVF / PQ / SQ8 ANN stores, the serving layouts
   * and the BM25 index): a `(__id, __gen)` side table under
-  * `_tombstones/`, rows carrying the `__gen` that wrote them (`_gen.txt`
-  * counter, build = 0 — the serving layouts keep their counter and
-  * their tombstone file list in their manifest instead, and [[kill]]
-  * against that list), a tombstone killing STRICTLY-older generations
-  * of its id (so an upsert's own rows survive the tombstone written with
+  * `_tombstones/`, rows carrying the `__gen` that wrote them (a
+  * `_gen.txt` counter, build = 0; the manifest-committed stores — the
+  * serving layouts and the BM25 index — keep their counter and their
+  * tombstone file list in their manifest instead ([[ManifestLog]]) and
+  * [[kill]] against that list), a tombstone killing STRICTLY-older
+  * generations of its id (so an upsert's own rows survive the tombstone written with
   * them, a crash between tombstone and re-add converges on retry, and a
   * later upsert's tombstone wins), probe-side broadcast anti-join only
   * when the table holds data, physical purge + clear at each store's
@@ -34,8 +35,6 @@ object Tombstones {
 
   private def schema(keyType: DataType) = StructType(Seq(
     StructField("__id", keyType), StructField("__gen", LongType)))
-
-  def has(dest: String): Boolean = snapshot(dest).nonEmpty
 
   def clear(dest: String): Unit = {
     StoreFs.deleteRecursively(Paths.get(dest, Dir))
@@ -64,16 +63,8 @@ object Tombstones {
       .withColumn("__gen", lit(gen))
       .coalesce(1).write.mode("append").parquet(s"$dest/$Dir")
 
-  /** The tombstone table's data files right now. A segment-model
-    * compaction applies exactly this list ([[kill]]) and then deletes
-    * exactly these files, so a tombstone written after the snapshot
-    * keeps applying.
-    */
-  def snapshot(dest: String): Seq[Path] =
-    StoreFs.parquetFiles(Paths.get(dest, Dir))
-
-  /** Drop rows a tombstone in `snap` outranks; `rows` must carry `__gen`.
-    * No-op (no join) for an empty snapshot.
+  /** Drop rows a tombstone in the files `snap` outranks; `rows` must
+    * carry `__gen`. No-op (no join) for an empty list.
     */
   def kill(spark: SparkSession, snap: Seq[Path], rows: DataFrame,
            idCol: String, keyType: DataType): DataFrame =
@@ -86,12 +77,12 @@ object Tombstones {
           rows("__gen") < tb("__gen"), "left_anti")
     }
 
-  /** [[kill]] against the current tombstones. No-op (no join) when the
-    * store has never seen an upsert/delete.
+  /** [[kill]] against the tombstone table's data files right now. No-op
+    * (no join) when the store has never seen an upsert/delete.
     */
   def dropDead(spark: SparkSession, dest: String, rows: DataFrame,
                idCol: String, keyType: DataType = LongType): DataFrame =
-    kill(spark, snapshot(dest), rows, idCol, keyType)
+    kill(spark, StoreFs.parquetFiles(Paths.get(dest, Dir)), rows, idCol, keyType)
 
   /** Strings for stores whose ids are documents, not vectors. */
   val StringKey: DataType = StringType

@@ -172,42 +172,60 @@ class BM25Spec extends SparkSpec {
     val before = BM25Index.topKMerged(spark, dest, Seq("spark", "query"), 5)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toSeq
     BM25Index.compact(spark, dest)
-    // segments are gone; the plain base-only serving path now sees all docs
-    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dest, "segments")))
+    // the latest manifest lists one part: the base now holds every doc,
+    // and once the index is reclaimed no segment file is left on disk
+    assert(BM25Index.segments(dest).isEmpty)
+    StoreAdmin.reclaim(dest)
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dest, "segments"))
+    try assert(!walk.anyMatch(java.nio.file.Files.isRegularFile(_)),
+      "a folded segment's file survived the reclaim")
+    finally walk.close()
     val after = BM25Index.topKMerged(spark, dest, Seq("spark", "query"), 5)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toSeq
     assert(after == before)
   }
 
-  test("a segment is published by one rename: a read while it is staged " +
-      "serves the base without error, and an upsert's doc is absent only " +
-      "until the rename") {
+  test("a segment is published by one commit: a read while it is staged " +
+      "serves the base without error, and an upserted doc serves its old " +
+      "version until the commit") {
     val dest = java.nio.file.Files.createTempDirectory("bm25pub").toString
     BM25Index.build(docs.filter("doc_id <= 3"), "doc_id", "text", dest)
     def served(terms: Seq[String]) = BM25Index.topKMerged(spark, dest, terms, 5)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toSeq
+    // `read` runs inside the write's manifest create: the write is fully
+    // staged and not yet committed
+    def beforeCommit[A](read: => A)(write: => Unit): A = {
+      var seen: Option[A] = None
+      val reading = new graft.util.DelegatingFs {
+        override def createExclusive(p: java.nio.file.Path, c: String): Unit = {
+          if (seen.isEmpty &&
+              p.getParent == java.nio.file.Paths.get(dest, graft.util.ManifestLog.Dir))
+            seen = Some(read)
+          super.createExclusive(p, c)
+        }
+      }
+      graft.util.StoreFs.withFs(reading)(write)
+      seen.get
+    }
     val base = served(Seq("spark", "query"))
-    var staged: Seq[(Long, Double)] = Nil
-    BM25Index.testHookBeforePublish = _ => staged = served(Seq("spark", "query"))
-    try BM25Index.appendSegment(docs.filter("doc_id > 3"), "doc_id", "text",
-      dest, "seg-00001")
-    finally BM25Index.testHookBeforePublish = _ => ()
+    val staged = beforeCommit(served(Seq("spark", "query")))(
+      BM25Index.appendSegment(docs.filter("doc_id > 3"), "doc_id", "text",
+        dest, "seg-00001"))
     assert(staged == base, "a staged segment leaked into serving")
     assert(served(Seq("spark", "query")).map(_._1).contains(5L),
       "the published segment must serve")
     val edited = Seq((2L, "query rewrite query planner")).toDF("doc_id", "text")
-    var stagedUpsert: Seq[Long] = Nil
-    BM25Index.testHookBeforePublish = _ =>
-      stagedUpsert = served(Seq("spark", "rewrite")).map(_._1)
-    try BM25Index.upsertSegment(edited, "doc_id", "text", dest, "seg-edit01")
-    finally BM25Index.testHookBeforePublish = _ => ()
-    assert(!stagedUpsert.contains(2L),
-      "between tombstone and rename the doc is absent, never served twice")
+    val oldVersion = served(Seq("spark", "rewrite")).filter(_._1 == 2L)
+    assert(oldVersion.size == 1)
+    val stagedUpsert = beforeCommit(served(Seq("spark", "rewrite")))(
+      BM25Index.upsertSegment(edited, "doc_id", "text", dest, "seg-edit01"))
+    assert(stagedUpsert.filter(_._1 == 2L) == oldVersion,
+      "while the upsert is staged the doc is served exactly once, at its old version")
     assert(served(Seq("rewrite")).map(_._1) == Seq(2L))
     assert(!served(Seq("spark")).map(_._1).contains(2L))
     assert(!java.nio.file.Files.list(java.nio.file.Paths.get(dest))
       .anyMatch(_.getFileName.toString.endsWith("-rewrite-tmp")),
-      "the staging dir must be consumed by the publishing rename")
+      "the staging dir must be consumed by the commit")
   }
 
   test("property: any append/upsert/delete/compact sequence serves exactly " +
@@ -324,13 +342,14 @@ class BM25Spec extends SparkSpec {
     // by the persisted value, not any constant
     val alt = java.nio.file.Files.createTempDirectory("bm25idx-tb37").toString
     BM25Index.build(docs, "doc_id", "text", alt)
-    graft.similarity.AnnMeta.write(alt, "termBuckets" -> 37)
-    // rewrite the postings/termstats under modulus 37 by rebuilding the
-    // layout: simplest faithful route is a compact-shaped rewrite via
-    // build over the same docs after pinning the meta — here we instead
-    // verify the read path: a probe over the 16-bucket layout with the
-    // meta faked to 37 MUST miss (wrong directories), proving probes
+    // a manifest version that fakes the base's modulus to 37 over the
+    // 16-bucket layout: a probe MUST miss (wrong buckets), proving probes
     // route by the persisted value
+    val v0 = java.nio.file.Files.readString(graft.util.ManifestLog.file(alt, 0L))
+    val faked = v0.replace("\"termBuckets\":16", "\"termBuckets\":37")
+    assert(faked != v0, "the base's persisted modulus was not found in the manifest")
+    graft.util.StoreFs.createExclusive(graft.util.ManifestLog.file(alt, 1L), faked)
+    assert(BM25Index.termBuckets(alt) == 37)
     val misrouted = BM25Index.topKMerged(spark, alt, Seq("spark", "query"), 5)
       .collect()
     assert(misrouted.isEmpty || misrouted.map(_.toString).toSeq != expected,
@@ -610,18 +629,116 @@ class BM25Spec extends SparkSpec {
     assert(served == adhoc && served.map(_._1).contains(6L))
   }
 
-  test("an index part without its schema file fails loudly with its path") {
-    val dest = java.nio.file.Files.createTempDirectory("bm25noschema").toString
+  test("an index without its manifest fails loudly with its path") {
+    val dest = java.nio.file.Files.createTempDirectory("bm25nomanifest").toString
     BM25Index.build(docs, "doc_id", "text", dest)
-    java.nio.file.Files.delete(
-      java.nio.file.Paths.get(dest, BM25Index.SchemaFile))
+    val manifest = java.nio.file.Paths.get(dest, graft.util.ManifestLog.Dir)
+    graft.util.StoreFs.deleteRecursively(manifest)
+    assert(!BM25Index.isBuilt(dest))
     for (read <- Seq[() => Any](
         () => BM25Index.topKMerged(spark, dest, Seq("spark"), 5),
         () => BM25Index.suggest(spark, dest, "s", 5),
         () => BM25Index.moreLikeThis(spark, dest, 1L, 4, 5))) {
-      val e = intercept[IllegalArgumentException](read())
-      assert(e.getMessage.contains(dest) &&
-        e.getMessage.contains(BM25Index.SchemaFile), e.getMessage)
+      val e = intercept[IllegalStateException](read())
+      assert(e.getMessage.contains(manifest.toString), e.getMessage)
+    }
+  }
+
+  test("a rebuild serves exactly its corpus: the previous index's segments " +
+      "are gone") {
+    val dest = java.nio.file.Files.createTempDirectory("bm25rebuild").toString
+    BM25Index.build(docs, "doc_id", "text", dest)
+    BM25Index.appendSegment(Seq((6L, "spark query spark")).toDF("doc_id", "text"),
+      "doc_id", "text", dest, "seg-00001")
+    def served() = BM25Index.topKMerged(spark, dest, Seq("spark", "query"), 10)
+      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toSeq
+    assert(served().map(_._1).contains(6L))
+    BM25Index.build(docs, "doc_id", "text", dest)
+    val adhoc = BM25.scoreTopK(docs, "doc_id", "text", Seq("spark", "query"), 10)
+      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toSeq
+    assert(!served().map(_._1).contains(6L), "the rebuilt index served an old segment")
+    assert(served() == adhoc)
+  }
+
+  test("an append, an upsert and a delete committed between a compaction's " +
+      "snapshot and its commit all survive it, and the upsert's tombstone " +
+      "still kills the folded version") {
+    import java.nio.file.{Path, Paths}
+    val dest = java.nio.file.Files.createTempDirectory("bm25race").toString
+    BM25Index.build(docs.filter("doc_id <= 3"), "doc_id", "text", dest)
+    BM25Index.appendSegment(docs.filter("doc_id > 3"), "doc_id", "text",
+      dest, "seg-00001")
+    val late = Seq((6L, "spark planners")).toDF("doc_id", "text")
+    val edited = Seq((2L, "query rewrite query planner")).toDF("doc_id", "text")
+    // the writes run inside the compaction's manifest create: its
+    // snapshot is taken and its fold staged, and its commit then loses
+    // the version race and re-applies onto what the writes committed
+    var raced = false
+    val racing = new graft.util.DelegatingFs {
+      override def createExclusive(p: Path, c: String): Unit = {
+        if (!raced && p.getParent == Paths.get(dest, graft.util.ManifestLog.Dir)) {
+          raced = true
+          BM25Index.appendSegment(late, "doc_id", "text", dest, "seg-late")
+          BM25Index.upsertSegment(edited, "doc_id", "text", dest, "seg-edit")
+          BM25Index.deleteDocs(spark, dest, Seq(3L))
+        }
+        super.createExclusive(p, c)
+      }
+    }
+    graft.util.StoreFs.withFs(racing)(BM25Index.compact(spark, dest))
+    assert(raced, "the compaction committed no manifest")
+    assert(BM25Index.segments(dest) == Seq("seg-late", "seg-edit"))
+    val live = docs.filter("doc_id NOT IN (2, 3)").unionAll(edited).unionAll(late)
+    def ids(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.getLong(0)).sorted.toSeq
+    for (t <- Seq("spark", "query", "rewrite", "planners", "filler"))
+      assert(ids(BM25Index.topKMerged(spark, dest, Seq(t), 10)) ==
+        ids(BM25.scoreTopK(live, "doc_id", "text", Seq(t), 10)), s"'$t' diverged")
+    assert(!ids(BM25Index.topKMerged(spark, dest, Seq("filler"), 10)).contains(2L),
+      "the folded version of the upserted doc is served")
+    // the next compaction folds the racing writes too: ≡ a fresh build
+    BM25Index.compact(spark, dest)
+    val fresh = java.nio.file.Files.createTempDirectory("bm25racefresh").toString
+    BM25Index.build(live, "doc_id", "text", fresh)
+    def scored(d: String) = BM25Index.topKMerged(spark, d, Seq("spark", "query"), 10)
+      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toSeq
+    assert(scored(dest) == scored(fresh))
+  }
+
+  test("reads open only what the manifest lists: building the topKMerged " +
+      "frame lists nothing but _manifest/, and on a 3-part index with " +
+      "tombstones building every served frame starts no Spark job") {
+    import java.nio.file.{Path, Paths}
+    val dest = java.nio.file.Files.createTempDirectory("bm25listed").toString
+    BM25Index.build(docs.filter("doc_id <= 2"), "doc_id", "text", dest)
+    BM25Index.appendSegment(docs.filter("doc_id IN (3, 4)"), "doc_id", "text",
+      dest, "seg-1")
+    val edited = Seq((2L, "query rewrite query planner")).toDF("doc_id", "text")
+    BM25Index.upsertSegment(edited.unionAll(docs.filter("doc_id = 5")),
+      "doc_id", "text", dest, "seg-2")
+    BM25Index.deleteDocs(spark, dest, Seq(3L))
+    val probed = scala.collection.mutable.Buffer[Path]()
+    val counting = new graft.util.DelegatingFs {
+      override def list(p: Path): Seq[Path] = { probed.synchronized(probed += p); super.list(p) }
+      override def isDirectory(p: Path): Boolean = {
+        probed.synchronized(probed += p); super.isDirectory(p)
+      }
+    }
+    val top = graft.util.StoreFs.withFs(counting)(
+      BM25Index.topKMerged(spark, dest, Seq("spark", "query"), 5))
+    assert(probed.toSeq == Seq(Paths.get(dest, graft.util.ManifestLog.Dir)), probed)
+    // membership only: df/N/avglen count the dead versions until compaction
+    val live = docs.filter("doc_id IN (1, 4, 5)").unionAll(edited)
+    assert(top.collect().map(_.getLong(0)).toSet ==
+      BM25.scoreTopK(live, "doc_id", "text", Seq("spark", "query"), 5)
+        .collect().map(_.getLong(0)).toSet)
+    val frames = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "topKMerged" -> (() => BM25Index.topKMerged(spark, dest, Seq("spark", "query"), 5)),
+      "topKPhrase" -> (() => BM25Index.topKPhrase(spark, dest, Seq("spark", "query"), 5)),
+      "suggest" -> (() => BM25Index.suggest(spark, dest, "s", 5)),
+      "moreLikeThis" -> (() => BM25Index.moreLikeThis(spark, dest, 1L, 4, 5)))
+    frames.foreach { case (name, build) =>
+      val w = graft.SparkWork(spark.sparkContext)(build())
+      assert(w.jobs == 0, s"building the $name frame started ${w.jobs} jobs")
     }
   }
 }

@@ -129,6 +129,46 @@ class HttpServingSpec extends SparkSpec {
     } finally server.stop(0)
   }
 
+  test("keyword requests before, inside and after a compact of the BM25 " +
+      "index all serve the pre-compaction envelope; none fails") {
+    val bm25 = java.nio.file.Files.createTempDirectory("graft-http-bm25commit").toString
+    BM25Index.build(tweets.filter(col("id") =!= "12"), "id", "tweetText", bm25)
+    BM25Index.appendSegment(tweets.filter(col("id") === "12"), "id", "tweetText",
+      bm25, "seg-00001")
+    val server = HttpServing.start(0, HttpServing.referenceRoutes(
+      tweets, users, bm25IndexDir = Some(bm25)))
+    try {
+      val port = server.getAddress.getPort
+      def request() = get(port, "/api/search/query?query=spark%20engines")
+      val before = request()
+      assert(before.statusCode() == 200 && json(before.body(), "$.count") == "2")
+      // a request inside every file move, manifest create and delete the
+      // compaction makes — each step a reader could race
+      val inside = scala.collection.mutable.Buffer[HttpResponse[String]]()
+      val requesting = new graft.util.DelegatingFs {
+        private def race(): Unit = inside.synchronized(inside += request())
+        override def createExclusive(p: java.nio.file.Path, c: String): Unit = {
+          race(); super.createExclusive(p, c); race()
+        }
+        override def move(src: java.nio.file.Path, dst: java.nio.file.Path): Unit = {
+          race(); super.move(src, dst); race()
+        }
+        override def deleteIfExists(p: java.nio.file.Path): Unit = {
+          race(); super.deleteIfExists(p); race()
+        }
+      }
+      graft.util.StoreFs.withFs(requesting)(BM25Index.compact(spark, bm25))
+      assert(BM25Index.segments(bm25).isEmpty, "the compaction committed nothing")
+      val after = request()
+      val all = before +: inside.toSeq :+ after
+      assert(inside.size >= 4, s"the compaction raced only ${inside.size} requests")
+      val failed = all.filterNot(r => r.statusCode() == 200 &&
+        json(r.body(), "$.status_code") == "200" && r.body() == before.body())
+      assert(failed.isEmpty, s"${failed.size} of ${all.size} requests " +
+        s"failed or served a different generation: ${failed.map(_.body())}")
+    } finally server.stop(0)
+  }
+
   test("GET /api/search/query serves the keyword envelope over HTTP") {
     withServer { port =>
       val resp = get(port, "/api/search/query?query=spark%20engines")

@@ -189,6 +189,16 @@ class StoreAdminSpec extends SparkSpec {
     store("serving-store-v3", "sf_a", "doc_postings", sentinel = true)
     val stranger = store("serving-store-v3", "sf_a", "not_a_store",
       sentinel = false)
+    // a v6 BM25 root: each index's parts carry params.txt, a gate marker
+    def bm25(sf: String, marker: Boolean): Path = {
+      val d = target.resolve("bm25-index-v6").resolve(sf)
+      Files.createDirectories(d.resolve("postings/tb=0"))
+      if (marker) Files.writeString(d.resolve("params.txt"), "termBuckets=16")
+      d
+    }
+    bm25("sf_a", marker = true)
+    bm25("sf_a__incr", marker = true)
+    val bm25Stranger = bm25("not_an_index", marker = false)
     try {
       val removed = StoreAdmin.gcOrphans(dir)
       assert(removed.contains(target.resolve("serving-store-v2").toString),
@@ -198,7 +208,15 @@ class StoreAdminSpec extends SparkSpec {
         Files.exists(target.resolve("serving-store-v3/sf_a/doc_postings/_buckets.txt")),
         "a root with an unrecognised child was touched")
       assert(!removed.exists(_.contains("serving-store-v3")))
-    } finally StoreFs.deleteRecursively(target.resolve("serving-store-v3"))
+      assert(Files.isDirectory(bm25Stranger) &&
+        !removed.exists(_.contains("bm25-index-v6")),
+        "a v6 root with an unrecognised child was touched")
+      StoreFs.deleteRecursively(bm25Stranger)
+      assert(StoreAdmin.gcOrphans(dir).contains(target.resolve("bm25-index-v6").toString))
+      assert(!Files.exists(target.resolve("bm25-index-v6")),
+        "the recognised v6 root was not reclaimed")
+    } finally Seq("serving-store-v3", "bm25-index-v6")
+      .foreach(r => StoreFs.deleteRecursively(target.resolve(r)))
   }
 
   test("gcOrphans reclaims rewrite-tmp leftovers without touching live " +
@@ -218,46 +236,54 @@ class StoreAdminSpec extends SparkSpec {
       "gc changed a live store's probe result")
     assert(StoreAdmin.gcOrphans(dir).isEmpty, "gc is not idempotent")
 
-    // a BM25 compaction that crashes mid-swap leaves its staging dir
-    // behind — gc must reclaim that too (isolated corpus key, so the
-    // broken index is no other suite's)
+    // a BM25 compaction that crashes at its manifest create has moved its
+    // staged files into the index unlisted: the probe still serves the
+    // old generation, and gc reclaims every moved-in file (isolated
+    // corpus key, so the broken index is no other suite's)
     import spark.implicits._
     val fakeSf = Files.createTempDirectory("graft-gc-bm25").toString
     val bm = BM25Index.defaultDir(fakeSf)
     BM25Index.build(Seq((1L, "spark jobs")).toDF("id", "text"), "id", "text", bm)
     BM25Index.appendSegment(Seq((2L, "more jobs")).toDF("id", "text"),
       "id", "text", bm, "s1")
-    val crashOnSwap = new StoreFs.Fs {
-      private val fs = StoreFs.LocalFs
-      def createExclusive(p: Path, c: String): Unit = fs.createExclusive(p, c)
-      def atomicMove(src: Path, dst: Path): Unit = fs.atomicMove(src, dst)
-      def move(src: Path, dst: Path): Unit =
-        if (dst.getParent == Paths.get(bm))
-          throw new java.io.IOException(s"crash moving $src")
-        else fs.move(src, dst)
-      def readString(p: Path): String = fs.readString(p)
-      def writeString(p: Path, s: String): Unit = fs.writeString(p, s)
-      def exists(p: Path): Boolean = fs.exists(p)
-      def isDirectory(p: Path): Boolean = fs.isDirectory(p)
-      def createDirectories(p: Path): Unit = fs.createDirectories(p)
-      def deleteIfExists(p: Path): Unit = fs.deleteIfExists(p)
-      def list(p: Path): Seq[Path] = fs.list(p)
-      def deleteRecursively(p: Path): Unit = fs.deleteRecursively(p)
-      def size(p: Path): Long = fs.size(p)
-      def mtimeMillis(p: Path): Long = fs.mtimeMillis(p)
+    def served() = BM25Index.topKMerged(spark, bm, Seq("jobs"), 5)
+      .collect().map(_.toString).toSeq
+    val old = served()
+    val crashOnCommit = new graft.util.DelegatingFs {
+      override def createExclusive(p: Path, c: String): Unit =
+        if (p.getParent == Paths.get(bm, "_manifest"))
+          throw new java.io.IOException(s"crash creating $p")
+        else super.createExclusive(p, c)
     }
     intercept[java.io.IOException](
-      StoreFs.withFs(crashOnSwap)(BM25Index.compact(spark, bm)))
-    val staged = StoreFs.list(Paths.get(bm))
-      .filter(_.getFileName.toString.contains("tmp"))
-    assert(staged.nonEmpty, "the crashed compaction left no staging dir")
+      StoreFs.withFs(crashOnCommit)(BM25Index.compact(spark, bm)))
+    assert(served() == old, "a crash before the commit changed what serves")
+    val staged = graft.util.ManifestLog.unlisted(bm)
+    assert(staged.nonEmpty, "the crashed compaction moved no file into the index")
     val reclaimed = StoreAdmin.gcOrphans(fakeSf)
     staged.foreach { p =>
       assert(reclaimed.contains(p.toString), s"gc missed $p: $reclaimed")
       assert(!Files.exists(p))
     }
+    assert(served() == old, "gc changed the index's probe result")
     assert(StoreAdmin.gcOrphans(fakeSf).isEmpty, "gc is not idempotent")
     StoreAdmin.truncate(bm)
+  }
+
+  test("ensureDocPostingsIncr reclaims what its folds unlisted: its store " +
+      "holds one manifest version and no unlisted file") {
+    // an isolated corpus key over the same documents table
+    val fakeSf = Files.createTempDirectory("graft-incr-reclaim")
+    Files.createSymbolicLink(fakeSf.resolve("documents.parquet"),
+      Paths.get(dir, "documents.parquet"))
+    val store = ServingStores.ensureDocPostingsIncr(spark, fakeSf.toString)
+    assert(graft.util.ManifestLog.versions(store).size == 1)
+    assert(graft.util.ManifestLog.unlisted(store).isEmpty,
+      graft.util.ManifestLog.unlisted(store))
+    def probe(d: String) = ServingStores.postingProbe(spark, d, "the")
+      .collect().map(_.toString).sorted.toSeq
+    assert(probe(store) == probe(ServingStores.ensureDocPostings(spark, dir)))
+    StoreAdmin.truncate(ServingStores.defaultDir(fakeSf.toString))
   }
 
   test("maintain: the one-call sweep folds fragmented stores, purges " +
