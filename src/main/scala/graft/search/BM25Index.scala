@@ -3,7 +3,7 @@ package graft.search
 import java.nio.file.Paths
 
 import graft.util.CacheLedger.CacheOps
-import graft.util.{ManifestLog, Stamp, StoreFs, StoreLock, Tables, Tombstones}
+import graft.util.{ManifestLog, Stamp, StoreFs, Tables, Tombstones}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -62,31 +62,12 @@ import org.json4s.jackson.JsonMethods
   * need through the persisted schemas — building a query's frame lists
   * no directory, infers nothing and starts no Spark job. Every write —
   * build, append, upsert, delete, compact — stages its parquet files
-  * (unlisted) and commits version N+1 naming them; a commit never
-  * deletes a file. [[build]] commits version 0 of a fresh store. A
-  * compaction that applied tombstones is a PURGE: deleted documents must
-  * leave the disk there, so right after its commit it deletes the files
-  * it folded and the tombstones it applied — a reader still on the
-  * previous version at that instant fails loudly (its retry serves the
-  * purged commit), never serves a dead version. Everything else a commit
-  * unlisted waits for [[StoreAdmin.reclaim]], between jobs. An index
-  * without a manifest fails loudly, naming its `_manifest` path.
-  *
-  * == Concurrency contract (which side throws in each race) ==
-  *
-  *  - write vs compact: both succeed. The compaction commits only if
-  *    every part it folded is still listed; a part or tombstone committed
-  *    meanwhile is kept, only the tombstones of its snapshot are
-  *    unlisted, and the generation counter is never reset — the folded
-  *    base is generation 0, so a tombstone committed during the
-  *    compaction still outranks the version it folded.
-  *  - write vs write: the generation is read-inc-committed; the writer
-  *    that commits a generation already committed throws, and its staged
-  *    files are never served.
-  *  - compact vs compact: compaction holds the index's
-  *    [[graft.util.StoreLock]]; the second maintainer throws, a crashed
-  *    holder's stale lock is stolen.
-  *  - build vs anything: a build starts a fresh store; it races nothing.
+  * (unlisted) and commits version N+1 naming them. [[build]] commits
+  * version 0 of a fresh store. Races follow [[graft.util.ManifestLog]]'s
+  * rules; this index adds one: a compaction never resets the generation
+  * counter — its folded base is generation 0 — so a tombstone committed
+  * during it still outranks the version it folded. An index without a
+  * manifest fails loudly, naming its `_manifest` path.
   *
   * == Crash contract ==
   *
@@ -362,8 +343,9 @@ object BM25Index {
   }
 
   /** Tombstone-only delete (Solr's deleteById): the ids stop being
-    * served on the next query and their postings are physically purged
-    * (and stats refreshed) at the next [[compact]].
+    * served on the next query, their postings are dropped (and stats
+    * refreshed) by the next [[compact]] and leave the disk at the
+    * reclaim after it.
     */
   def deleteDocs(spark: SparkSession, dest: String, ids: Seq[Any]): Unit = {
     import spark.implicits._
@@ -397,11 +379,13 @@ object BM25Index {
     * [[topKMerged]] — compact-then-serve ≡ merged-serve, spec-asserted).
     * This is Lucene's background segment merge: amortize many small
     * appends into one read-optimized base. Cost: one read+shuffle+write of
-    * index METADATA (postings), never a corpus scan. Runs under the
-    * index's lock; a write committed during it survives (object
-    * scaladoc).
+    * index METADATA (postings), never a corpus scan. It commits through
+    * [[graft.util.ManifestLog.commitFold]] over every file it read: a
+    * write committed during it survives, and of two compactions the
+    * second to commit throws. The folded files and applied tombstones
+    * leave the disk at the next [[StoreAdmin.reclaim]].
     */
-  def compact(spark: SparkSession, dest: String): Unit = StoreLock.withLock(dest, "compact") {
+  def compact(spark: SparkSession, dest: String): Unit = {
     val snap = new Snapshot(spark, dest)
     val m = snap.m
     if (m.parts.size > 1 || m.tombstones.nonEmpty) {
@@ -414,21 +398,9 @@ object BM25Index {
       // as segments fold in
       val post = snap.live(snap.table(_, "postings")).drop("tb").persistBounded()
       val (base, files) = try stagePart(dest, "", 0L, post) finally post.unpersist()
-      val committed = log.commit(dest) { cur =>
-        if (m.parts.diff(cur.parts).nonEmpty) throw new IllegalStateException(
-          s"BM25 index at $dest changed under its compaction (a part it " +
-            "folded is no longer listed); the compaction was not applied — retry it")
+      log.commitFold(dest, "compaction", m.files) { cur =>
         Manifest(base +: cur.parts.diff(m.parts), cur.gen,
-          files ++ cur.files.filterNot(f => m.parts.exists(_.owns(f))),
-          cur.tombstones.diff(m.tombstones))
-      }
-      // a purge is where deleted docs leave the disk: what it unlisted
-      // goes right after its commit, not at the next reclaim
-      if (m.tombstones.nonEmpty) {
-        (m.files ++ m.tombstones).foreach(f => StoreFs.deleteIfExists(Paths.get(dest, f)))
-        val tombDir = Paths.get(dest, Tombstones.Dir)
-        if (committed.tombstones.isEmpty && StoreFs.list(tombDir).isEmpty)
-          StoreFs.deleteIfExists(tombDir)
+          files ++ cur.files.diff(m.files), cur.tombstones.diff(m.tombstones))
       }
     }
   }

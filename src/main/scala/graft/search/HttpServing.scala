@@ -240,9 +240,12 @@ object HttpServing {
   /** Fold accumulated appends in all three layouts back into one
     * read-optimized generation each — Solr's background segment merge for
     * the tweet index (probe results identical before/after; LiveIngestSpec
-    * asserts byte-identical HTTP envelopes across the compaction). The
-    * folded files and superseded manifests stay on disk until the caller
-    * runs [[StoreAdmin.reclaim]] on `dest`, between jobs — never inside a
+    * asserts byte-identical HTTP envelopes across the compaction). No
+    * lock: a write racing a compaction survives it, and a second
+    * compaction of the same files throws at its commit. The folded files
+    * — dead row versions and applied tombstones among them — and
+    * superseded manifests stay on disk until the caller runs
+    * [[StoreAdmin.reclaim]] on `dest`, between jobs — never inside a
     * fold or beside an in-flight write, whose staged files it would
     * delete.
     */

@@ -2,7 +2,7 @@ package graft.search
 
 import java.nio.file.{Path, Paths}
 
-import graft.util.{ManifestLog, StoreFs, StoreLock, Tombstones}
+import graft.util.{ManifestLog, StoreFs, Tombstones}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
@@ -46,15 +46,10 @@ import org.json4s.jackson.JsonMethods
   * stage (the parquet files land unlisted in `__bucket=b/` or
   * `_tombstones/` under their unique part names), then commit version
   * N+1 naming them with one atomic, content-complete exclusive create.
-  * A commit never deletes a file: a reader holding version N keeps
-  * reading N's files, and [[StoreAdmin.reclaim]] (between jobs) deletes
-  * whatever the latest manifest does not name. The one deletion
-  * outside gc is a PURGE (a fold that unlists tombstones): deleted rows
-  * must leave the disk there, so right after its commit it deletes the
-  * files it folded and the tombstone files it applied — a reader still
-  * on the previous version at that instant fails loudly (its retry
-  * serves the purged commit), never serves a dead row. A store without
-  * a manifest fails loudly, naming its `_manifest` path.
+  * Races follow [[graft.util.ManifestLog]]'s rules; this store adds one:
+  * a write staged under b buckets commits only onto b buckets, so
+  * against a rebucket the side that commits second throws. A store
+  * without a manifest fails loudly, naming its `_manifest` path.
   *
   * Maintenance lifecycle (the reference's indexer is a CONTINUOUS
   * keyed-upsert loop — SolrIndexer's addBean+commit per batch — with
@@ -65,33 +60,12 @@ import org.json4s.jackson.JsonMethods
   * `SolrIndexer.java:47-59`) via generation-numbered tombstones (below);
   * [[compact]] and [[compactHotBuckets]] fold the accumulated small
   * files back into one read-optimized file per bucket (dead rows
-  * physically purged); [[rebucket]] changes the bucket count when
-  * growth makes buckets hot — the one remedy short of a full rebuild.
+  * unlisted, deleted by the next reclaim); [[rebucket]] changes the
+  * bucket count when growth makes buckets hot — the one remedy short of
+  * a full rebuild.
   * All three are one fold: read the chosen buckets' listed files, kill
   * what the manifest's tombstones outrank, re-tag `__bucket` under the
   * target count, write in ONE partitioned job, commit.
-  *
-  * == Concurrency contract (which side throws in each race) ==
-  *
-  * Each commit re-reads the latest manifest, re-checks its own
-  * precondition there, and retries on a lost version race; a failed
-  * precondition is an [[IllegalStateException]] on the side that
-  * committed SECOND, and its staged files are never served.
-  *  - write vs compact: both succeed. The fold commits only if every
-  *    file it folded is still listed; a write's files and tombstones
-  *    committed meanwhile are kept, and only the tombstones the fold
-  *    snapshotted are cleared.
-  *  - write vs rebucket: a writer checks the store's
-  *    [[graft.util.StoreLock]] at entry and rejects a live rebucket
-  *    there. A write staged under b buckets commits only onto a manifest
-  *    with b buckets, so a rebucket that committed first makes the write
-  *    throw; a write that committed first makes the rebucket throw (it
-  *    commits only if nothing was committed after its snapshot).
-  *  - write vs write: the generation is read-inc-committed; the writer
-  *    that commits a generation already committed throws.
-  *  - maintenance vs maintenance: compact and rebucket hold the store
-  *    lock; the second maintainer throws, a crashed holder's stale lock
-  *    is stolen.
   *
   * == Crash contract ==
   *
@@ -109,8 +83,8 @@ import org.json4s.jackson.JsonMethods
   * tombstones kill every strictly older version of its ids, and probes
   * drop what a listed tombstone outranks. An upsert's tombstones and
   * rows land in ONE commit. A fold that covered every nonempty bucket
-  * purges the dead rows physically and unlists the tombstones it
-  * applied — Lucene's delete+add with tombstones folded at merge.
+  * drops the dead rows and unlists the tombstones it applied — Lucene's
+  * delete+add with tombstones folded at merge.
   * [[deleteIds]] is the tombstone-only half (Solr's deleteById).
   */
 object ServingStores {
@@ -224,7 +198,8 @@ object ServingStores {
 
   /** Tombstone-only delete (Solr's deleteById): every stored row of the
     * given ids — at any generation so far — stops being served on the
-    * next probe and is physically purged at the next full compaction.
+    * next probe, is dropped by the next full compaction and leaves the
+    * disk at the reclaim after it.
     */
   def deleteIds(spark: SparkSession, dest: String, idCol: String,
                 ids: Seq[Any]): Unit = {
@@ -233,8 +208,8 @@ object ServingStores {
   }
 
   /** Fold accumulated small files back into one read-optimized file per
-    * bucket and physically purge tombstoned rows: every nonempty bucket
-    * is folded when tombstones exist (the purge must visit every file),
+    * bucket and drop tombstoned rows: every nonempty bucket is folded
+    * when tombstones exist (the drop must visit every file),
     * otherwise only buckets fragmented by appends (≥2 files). File count
     * drops back to O(buckets), within-bucket (key, sort) order (and its
     * min/max row-group pruning) is restored, and the tombstones this
@@ -250,7 +225,7 @@ object ServingStores {
     * appends only fragment the buckets they touched, and buckets are
     * independent, so compaction can pay O(hot buckets) instead. Buckets
     * with ≥ `minFiles` listed files are folded to one sorted file each
-    * (tombstoned rows purged from those buckets); cold buckets' files are
+    * (tombstoned rows dropped from those buckets); cold buckets' files are
     * left byte-untouched, so tombstones are NOT unlisted unless this pass
     * happened to fold every nonempty bucket. Returns the compacted
     * bucket ids.
@@ -262,12 +237,12 @@ object ServingStores {
   /** Change the bucket count of an existing store — the growth remedy
     * when a fixed build-time bucket count leaves hot buckets at 100 TB:
     * every live row's `__bucket` is recomputed from its key under the
-    * new count (tombstoned rows purged — this IS a full rewrite) and the
+    * new count (tombstoned rows dropped — this IS a full rewrite) and the
     * new files and count land in one commit, so probes can never pair
-    * the new layout with the old count. Runs under the store lock;
-    * writers racing it fail loudly (object scaladoc) and read the new
-    * count on their next batch. Surviving rows keep their `__gen`, so
-    * future tombstones still outrank them; the staleness stamp is never
+    * the new layout with the old count. It commits only if nothing was
+    * committed after its snapshot; against a write, the side that
+    * commits second throws. Surviving rows keep their `__gen`, so future
+    * tombstones still outrank them; the staleness stamp is never
     * touched. Probe ≡ `array_contains` across any rebucket
     * (property-spec-asserted for 3 → 7 → 1).
     */
@@ -306,7 +281,7 @@ object ServingStores {
     * the key's bucket, base and appended alike. Per-batch cost is one
     * write; the store is never rewritten. When small appended files
     * accumulate, [[compact]] folds them back. Safe to race a compaction;
-    * fails loudly against a rebucket (object scaladoc).
+    * against a rebucket the side that commits second throws.
     */
   def appendTimeline(batch: DataFrame, dest: String): Unit =
     ingest(dest, Some(batch), None)
@@ -331,7 +306,6 @@ object ServingStores {
     */
   private def ingest(dest: String, rows: Option[DataFrame],
                      replace: Option[(String, DataFrame)]): Unit = {
-    assertWritable(dest)
     val m = log.latest(dest)
     val gen = m.gen + 1
     val idCol = replace.map(_._1)
@@ -499,9 +473,10 @@ object ServingStores {
     * then every doc_id % 7 == 0 doc arrives EDITED under its SAME id —
     * half lose the probed token, half gain it, and all change a served
     * column (n_chars + 1000000, so one stale row version anywhere is a
-    * hash mismatch) — then the store fully compacts (tombstones folded
-    * physically). The oracle queries the edited corpus directly: upsert
-    * + compact ≡ rebuild-from-updated-source, checked by the driver.
+    * hash mismatch) — then the store fully compacts (tombstones folded)
+    * and the job reclaims what the fold unlisted. The oracle queries the
+    * edited corpus directly: upsert + compact ≡ rebuild-from-updated-
+    * source, checked by the driver.
     */
   def ensureDocPostingsUpsert(spark: SparkSession, sfDir: String): String = {
     val dest = defaultDir(sfDir) + "/doc_postings_upsert"
@@ -517,6 +492,7 @@ object ServingStores {
         edited.withColumn("__words", split(col("text"), " ")).drop("text"),
         "doc_id", col("__words"), dest, dropCols = Seq("__words"))
       compact(spark, dest)
+      StoreAdmin.reclaim(dest)
       graft.util.Stamp.write(dest, stamp)
     }
     dest
@@ -576,70 +552,46 @@ object ServingStores {
   private[search] def unlisted(dest: String): Seq[Path] = ManifestLog.unlisted(dest)
 
   /** The one fold behind [[compact]], [[compactHotBuckets]] and
-    * [[rebucket]], under the store lock. SNAPSHOT: the latest manifest.
-    * FOLD: every bucket listing ≥ `minFiles` files (all buckets for
-    * `minFiles` 0) is read through the persisted schema as ONE frame,
-    * filtered against the snapshot's tombstones, re-tagged under the
-    * target bucket count (`newBuckets`, else the current one) and
-    * written in ONE partitioned job — one file per bucket in (key, sort)
-    * order — then staged into the store. COMMIT: the folded files are
-    * unlisted and the new ones listed; a file a concurrent write
-    * committed after the snapshot is neither read nor unlisted, so it
-    * survives. The snapshotted tombstones are unlisted only when every
-    * nonempty bucket was folded (otherwise cold buckets still hold dead
-    * rows the probe filter must keep killing), so a tombstone committed
-    * concurrently keeps applying. A compaction commits only if every
-    * file it folded is still listed; a rebucket only if nothing was
-    * committed after its snapshot. A purge then deletes what it
-    * unlisted (object scaladoc). Work and I/O are proportional to the
-    * folded buckets only. Returns the folded bucket ids.
+    * [[rebucket]]. SNAPSHOT: the latest manifest. FOLD: every bucket
+    * listing ≥ `minFiles` files (all buckets for `minFiles` 0) is read
+    * through the persisted schema as ONE frame, filtered against the
+    * snapshot's tombstones, re-tagged under the target bucket count
+    * (`newBuckets`, else the current one) and written in ONE partitioned
+    * job — one file per bucket in (key, sort) order — then staged into
+    * the store. COMMIT ([[graft.util.ManifestLog.commitFold]]): the
+    * folded files are unlisted and the new ones listed; a file a
+    * concurrent write committed after the snapshot is neither read nor
+    * unlisted, so it survives. The snapshotted tombstones are unlisted
+    * only when every nonempty bucket was folded (otherwise cold buckets
+    * still hold dead rows the probe filter must keep killing), so a
+    * tombstone committed concurrently keeps applying. A rebucket also
+    * throws when anything was committed after its snapshot. Work and
+    * I/O are proportional to the folded buckets only. Returns the folded
+    * bucket ids.
     */
   private def fold(spark: SparkSession, dest: String, minFiles: Int,
                    newBuckets: Option[Int] = None): Seq[Int] = {
-    val op = if (newBuckets.isEmpty) "compact" else "rebucket"
-    StoreLock.withLock(dest, op) {
-      val snap = log.latest(dest)
-      val hot = (0 until snap.buckets).filter(snap.inBucket(_).size >= minFiles)
-      if (hot.nonEmpty) {
-        val buckets = newBuckets.getOrElse(snap.buckets)
-        val folded = hot.flatMap(snap.inBucket)
-        val rows = snap.dropDead(spark, dest, snap.scan(spark, dest, folded),
-            snap.idCol.orNull)
-          .withColumn("__bucket", bucketOf(col(snap.key), buckets))
-        val staged = ManifestLog.stage(dest)(writeRows(rows, snap.order, _))
-        testHookBeforeSwap(dest)
-        val purged = snap.files.diff(folded).isEmpty
-        log.commit(dest) { m =>
-          val raced =
-            if (newBuckets.isDefined)
-              m.files != snap.files || m.tombstones != snap.tombstones
-            else folded.diff(m.files).nonEmpty
-          if (raced) throw new IllegalStateException(
-            s"store at $dest changed under its $op (a write or maintainer " +
-              s"committed after its snapshot); the $op was not applied — " +
-              "retry it")
-          m.copy(buckets = buckets, files = m.files.diff(folded) ++ staged,
-            tombstones =
-              if (purged) m.tombstones.diff(snap.tombstones) else m.tombstones)
-        }
-        // a purge is where deleted rows leave the disk: what it unlisted
-        // goes right after its commit, not at the next gc
-        if (purged && snap.tombstones.nonEmpty)
-          (folded ++ snap.tombstones).foreach(f => StoreFs.deleteIfExists(Paths.get(dest, f)))
+    val snap = log.latest(dest)
+    val hot = (0 until snap.buckets).filter(snap.inBucket(_).size >= minFiles)
+    if (hot.nonEmpty) {
+      val buckets = newBuckets.getOrElse(snap.buckets)
+      val folded = hot.flatMap(snap.inBucket)
+      val rows = snap.dropDead(spark, dest, snap.scan(spark, dest, folded),
+          snap.idCol.orNull)
+        .withColumn("__bucket", bucketOf(col(snap.key), buckets))
+      val staged = ManifestLog.stage(dest)(writeRows(rows, snap.order, _))
+      testHookBeforeSwap(dest)
+      val whole = snap.files.diff(folded).isEmpty
+      val op = if (newBuckets.isEmpty) "compact" else "rebucket"
+      log.commitFold(dest, op, folded) { m =>
+        if (newBuckets.isDefined && m.gen != snap.gen) throw new IllegalStateException(
+          s"store at $dest was written after its rebucket's snapshot; the " +
+            "rebucket was not applied — retry it")
+        m.copy(buckets = buckets, files = m.files.diff(folded) ++ staged,
+          tombstones =
+            if (whole) m.tombstones.diff(snap.tombstones) else m.tombstones)
       }
-      hot
     }
+    hot
   }
-
-  /** Loud-failure entry check for writers: any live maintenance except
-    * a compaction (which is safe to race) rejects the write before it
-    * stages a single file.
-    */
-  private def assertWritable(dest: String): Unit =
-    StoreLock.heldBy(dest) match {
-      case Some(op) if op != "compact" => throw new IllegalStateException(
-        s"store at $dest is under '$op' maintenance; a concurrent write " +
-          "would not be applied — retry after it ends")
-      case _ => ()
-    }
 }

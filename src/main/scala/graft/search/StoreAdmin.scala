@@ -104,8 +104,9 @@ object StoreAdmin {
     *
     * Idempotent: a second sweep finds one generation everywhere and no
     * hot buckets, and does nothing. Runs between jobs like [[gcOrphans]]
-    * (which it ends with) — individual ops still take their store locks,
-    * so a forgotten concurrent maintainer fails loudly, not silently.
+    * (which it ends with). A forgotten concurrent maintainer fails
+    * loudly, not silently: the lock-guarded stores reject it at entry,
+    * the manifest stores at its commit.
     * Wired into the driver-gated incr/upsert chains
     * ([[ServingStores.ensureOrdersTimelineIncr]] /
     * [[ServingStores.ensureOrdersTimelineUpsert]]), so the hash gate
@@ -240,12 +241,17 @@ object StoreAdmin {
     * leaves an orphan tmp holding a dead generation's bytes; this deletes
     * every such dir under `root`. Under every store dir that has a
     * `_manifest/` it also deletes each file and manifest version the
-    * latest manifest does not name: files a fold unlisted, superseded
-    * versions, and files a failed or crashed write moved in without
-    * committing. Not safe to run CONCURRENTLY with an in-flight write or
-    * fold (it would delete files staged but not yet committed, which the
-    * commit would then name) — run it like [[truncate]], between jobs.
-    * Returns the deleted paths so callers can log them.
+    * latest manifest does not name — files a fold unlisted (dead rows and
+    * applied tombstones among them), superseded versions, and files a
+    * failed or crashed write moved in without committing — and then,
+    * bottom-up, every directory those deletions left empty (a folded
+    * segment's tree, a rebucket's dropped buckets, an emptied
+    * `_tombstones/`), never the store dir or its `_manifest/`. The only
+    * code that deletes a manifest store's files (Delta's VACUUM). Not
+    * safe to run CONCURRENTLY with an in-flight write or fold (it would
+    * delete files staged but not yet committed, which the commit would
+    * then name) — run it like [[truncate]], between jobs. Returns the
+    * deleted paths so callers can log them.
     */
   def reclaim(root: String): Seq[String] = {
     def under(d: Path): Seq[Path] =
@@ -253,9 +259,20 @@ object StoreAdmin {
     val dirs = under(Paths.get(root))
     val tmps = dirs.filter(_.getFileName.toString.endsWith("-rewrite-tmp"))
     tmps.foreach(StoreFs.deleteRecursively)
-    val unlisted = dirs.flatMap(d => ManifestLog.unlisted(d.toString))
-    unlisted.foreach(StoreFs.deleteIfExists)
-    (tmps ++ unlisted).map(_.toString)
+    val deleted = dirs.flatMap { store =>
+      val files = ManifestLog.unlisted(store.toString)
+      files.foreach(StoreFs.deleteIfExists)
+      // deepest first, so a parent is checked after its children went
+      val emptied = files.flatMap(f => Iterator.iterate(f.getParent)(_.getParent)
+          .takeWhile(d => d != store && d != store.resolve(ManifestLog.Dir)))
+        .distinct.sortBy(-_.getNameCount).filter { d =>
+          val empty = StoreFs.list(d).isEmpty
+          if (empty) StoreFs.deleteIfExists(d)
+          empty
+        }
+      files ++ emptied
+    }
+    (tmps ++ deleted).map(_.toString)
   }
 
   /** [[reclaim]] over every store root of a corpus, plus the legacy

@@ -20,10 +20,27 @@ import org.json4s.jackson.JsonMethods
   * dir inside the store, then each staged parquet file moves, unlisted,
   * to the same relative path in the store under its unique part name),
   * then [[ManifestLog.commit]] (version N+1, published with one
-  * exclusive, content-complete [[StoreFs.createExclusive]]). A commit
-  * never deletes a file: a reader holding version N keeps reading N's
-  * files, and [[unlisted]] is what the between-jobs reclaim
-  * ([[graft.search.StoreAdmin.reclaim]]) deletes.
+  * exclusive, content-complete [[StoreFs.createExclusive]]).
+  *
+  * == The race rules (the commit is the only concurrency mechanism) ==
+  *
+  * No lock and no entry check: concurrent writers, folds and readers
+  * are ordered by the commit alone, as in Delta's optimistic
+  * concurrency. A commit re-reads the latest manifest, re-checks its
+  * precondition there and retries a lost version race; when the
+  * precondition fails, the side that commits SECOND throws an
+  * [[IllegalStateException]] and its staged files are never served.
+  *  - A write (append, upsert, delete) commits through
+  *    [[ManifestLog.commitAt]]: the writer that commits a generation
+  *    already committed throws.
+  *  - A fold (compaction, rebucket) commits through
+  *    [[ManifestLog.commitFold]]: it throws when a file it read is no
+  *    longer listed — a concurrent fold committed first — and keeps
+  *    everything committed after its snapshot.
+  *  - A commit never deletes a file, so a reader always serves the whole
+  *    version it opened. [[graft.search.StoreAdmin.reclaim]], run between
+  *    jobs like Delta's VACUUM, is the only code that deletes a store's
+  *    files: the [[unlisted]] ones and the directories they leave empty.
   *
   * Every manifest names its files in two top-level lists of
   * store-relative paths, `files` (data) and `tombstones`, so
@@ -155,4 +172,16 @@ final class ManifestLog[M <: ManifestLog.Entry](family: String, parse: String =>
         "writer; this write was not applied — re-apply it")
     edit(cur)
   }
+
+  /** [[commit]] of a fold that read the listed files `folded` from its
+    * snapshot: it commits only if every one of them is still listed, so
+    * of two folds over the same files the second to commit throws.
+    */
+  def commitFold(dest: String, op: String, folded: Seq[String])(edit: M => M): M =
+    commit(dest) { cur =>
+      if (folded.diff(cur.files).nonEmpty) throw new IllegalStateException(
+        s"$family at $dest changed under its $op (a file it folded is no " +
+          s"longer listed); the $op was not applied — retry it")
+      edit(cur)
+    }
 }

@@ -6,11 +6,11 @@ import java.nio.file.Paths
   * IndexWriter `write.lock` (the reference's serving tier inherits that
   * model from Solr: `SolrIndexer.java:152-158` posts batches against a
   * locked, background-merging index and a second writer fails loudly).
-  * Here the lock serializes the operations that rewrite a persisted
-  * store's layout against each other, and lets WRITERS detect the one
-  * rewrite they can never safely race (a rebucket changes the bucket
-  * function mid-flight): a collision is an immediate
-  * [[IllegalStateException]] naming the holder, never silent data loss.
+  * Here the lock serializes the writers and whole-table rewrites of the
+  * signature and ANN stores against each other: a collision is
+  * an immediate [[IllegalStateException]] naming the holder, never
+  * silent data loss. (The [[ManifestLog]] stores take no lock: their
+  * commit decides every race.)
   *
   * The lock is a `_maintenance.lock` file inside the store directory,
   * created atomically (`CREATE_NEW`) and carrying `<op> <epochMillis>`.
@@ -20,9 +20,7 @@ import java.nio.file.Paths
   * scale it with the deployment's longest compaction). Stealing is safe
   * because the crashed rewrite left its store valid: an
   * [[AtomicRewrite]] store is either untouched (crash during the tmp
-  * write) or stamp-invalidated (crash mid-swap), never half-swapped, and
-  * a [[ManifestLog]] store (the serving layouts, the BM25 index)
-  * committed either everything or nothing.
+  * write) or stamp-invalidated (crash mid-swap), never half-swapped.
   *
   * Durability primitives (exclusive create, atomic rename) flow through
   * [[StoreFs]] — the ONE seam stating what the backing filesystem must
@@ -67,8 +65,8 @@ object StoreLock {
           s"store at $dest is locked by '${parts.head}' (${age} ms old); " +
             s"concurrent maintenance would lose data — retry after it ends")
         if (age <= staleMs) reject()
-        // stale holder: crashed mid-maintenance; its swap ordering or
-        // single commit left the store valid, so the lock is just debris —
+        // stale holder: crashed mid-maintenance; its swap ordering left
+        // the store valid, so the lock is just debris —
         // but only ONE stealer may reap it
         val grave = Paths.get(dest,
           s"$LockFile.stale.${System.nanoTime()}.${Thread.currentThread().getId}")
@@ -89,8 +87,8 @@ object StoreLock {
     StoreFs.deleteIfExists(Paths.get(dest, LockFile))
 
   /** Run `body` holding the lock; always released, even on failure (the
-    * swap ordering or single commit inside `body` is what makes a
-    * mid-body crash safe — the lock only serializes live maintainers).
+    * swap ordering inside `body` is what makes a mid-body crash safe —
+    * the lock only serializes live maintainers).
     */
   def withLock[A](dest: String, op: String,
                   staleMs: Long = DefaultStaleMs)(body: => A): A = {

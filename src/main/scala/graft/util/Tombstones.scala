@@ -19,7 +19,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * them, a crash between tombstone and re-add converges on retry, and a
   * later upsert's tombstone wins), probe-side broadcast anti-join only
   * when the table holds data, physical purge + clear at each store's
-  * compact. Writers hold the store's [[StoreLock]] where the store's
+  * compact (for the manifest stores: unlisted at compact, deleted by
+  * the reclaim after it). Writers hold the store's [[StoreLock]] where the store's
   * compaction is a whole-table rewrite (no segment model — collisions
   * must fail loudly). `keyType` is the id column's type (vector ids are
   * longs, document ids are strings) — both sides of the kill join cast

@@ -145,6 +145,7 @@ class BM25Spec extends SparkSpec {
     // post-compact: the index IS a rebuild over the edited corpus —
     // stats refreshed, scores bit-equal
     BM25Index.compact(spark, dest)
+    StoreAdmin.reclaim(dest)
     assert(!java.nio.file.Files.exists(
       java.nio.file.Paths.get(dest, "_tombstones")))
     BM25Index.build(docs.filter("doc_id <> 2").unionAll(edited),
@@ -173,13 +174,11 @@ class BM25Spec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toSeq
     BM25Index.compact(spark, dest)
     // the latest manifest lists one part: the base now holds every doc,
-    // and once the index is reclaimed no segment file is left on disk
+    // and once the index is reclaimed no segment is left on disk
     assert(BM25Index.segments(dest).isEmpty)
     StoreAdmin.reclaim(dest)
-    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dest, "segments"))
-    try assert(!walk.anyMatch(java.nio.file.Files.isRegularFile(_)),
-      "a folded segment's file survived the reclaim")
-    finally walk.close()
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dest, "segments")),
+      "a folded segment's directory survived the reclaim")
     val after = BM25Index.topKMerged(spark, dest, Seq("spark", "query"), 5)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toSeq
     assert(after == before)
@@ -740,5 +739,70 @@ class BM25Spec extends SparkSpec {
       val w = graft.SparkWork(spark.sparkContext)(build())
       assert(w.jobs == 0, s"building the $name frame started ${w.jobs} jobs")
     }
+  }
+
+  /** Runs `inside` once, inside the first manifest create of the index
+    * at `dest` that `op` makes: its compaction or write is fully staged
+    * and not yet committed.
+    */
+  private def beforeFirstCommit[A](dest: String)(inside: => A)(op: => Unit): Option[A] = {
+    var seen: Option[A] = None
+    var fired = false
+    val fs = new graft.util.DelegatingFs {
+      override def createExclusive(p: java.nio.file.Path, c: String): Unit = {
+        if (!fired &&
+            p.getParent == java.nio.file.Paths.get(dest, graft.util.ManifestLog.Dir)) {
+          fired = true
+          seen = Some(inside)
+        }
+        super.createExclusive(p, c)
+      }
+    }
+    graft.util.StoreFs.withFs(fs)(op)
+    seen
+  }
+
+  test("a topKMerged frame opened before a purging compaction's commit " +
+      "still serves the pre-compaction ranking after it: the commit " +
+      "deletes no file") {
+    val dest = java.nio.file.Files.createTempDirectory("bm25purge").toString
+    BM25Index.build(docs.filter("doc_id <= 3"), "doc_id", "text", dest)
+    BM25Index.appendSegment(docs.filter("doc_id > 3"), "doc_id", "text",
+      dest, "seg-00001")
+    BM25Index.deleteDocs(spark, dest, Seq(3L))
+    def ranked(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getDouble(1)).toSeq
+    val before = ranked(BM25Index.topKMerged(spark, dest, Seq("spark", "query"), 5))
+    val frame = beforeFirstCommit(dest)(
+      BM25Index.topKMerged(spark, dest, Seq("spark", "query"), 5))(
+      BM25Index.compact(spark, dest))
+    assert(BM25Index.segments(dest).isEmpty, "the compaction did not commit")
+    assert(ranked(frame.get) == before,
+      "a frame opened on the pre-compaction manifest lost its files")
+  }
+
+  test("two compactions of a one-part index with a delete: the second to " +
+      "commit throws, the first's result serves ≡ a fresh build") {
+    val dest = java.nio.file.Files.createTempDirectory("bm25twice").toString
+    BM25Index.build(docs, "doc_id", "text", dest)
+    BM25Index.deleteDocs(spark, dest, Seq(3L))
+    // the inner compaction runs inside the outer one's manifest create
+    // and commits first; it re-derives a base equal to the outer one's
+    // (same docs, same generation 0), so only the folded files tell
+    val ex = intercept[IllegalStateException] {
+      beforeFirstCommit(dest)(BM25Index.compact(spark, dest))(
+        BM25Index.compact(spark, dest))
+    }
+    assert(ex.getMessage.contains("compaction"), ex.getMessage)
+    // build, delete, the inner compaction — and no outer commit
+    assert(graft.util.ManifestLog.versions(dest).sorted == Seq(0L, 1L, 2L))
+    val fresh = java.nio.file.Files.createTempDirectory("bm25twicefresh").toString
+    BM25Index.build(docs.filter("doc_id <> 3"), "doc_id", "text", fresh)
+    for (terms <- Seq(Seq("spark", "query"), Seq("query")))
+      assert(BM25Index.topKMerged(spark, dest, terms, 5)
+          .collect().map(r => r.getLong(0) -> r.getDouble(1)).toSeq ==
+        BM25Index.topKMerged(spark, fresh, terms, 5)
+          .collect().map(r => r.getLong(0) -> r.getDouble(1)).toSeq,
+        s"terms $terms diverge from a fresh build over the live docs")
   }
 }

@@ -59,7 +59,9 @@ class ServingStoresUpsertSpec extends SparkSpec {
     ServingStores.compact(spark, dest)
     assert(!ServingStores.hasTombstones(dest),
       "a full compact must clear the tombstones it folded")
-    // physically purged: the raw store (no probe filter) holds no ghost
+    // physically purged once reclaimed: the raw store (no probe filter)
+    // holds no ghost
+    StoreAdmin.reclaim(dest)
     val raw = spark.read.parquet(dest)
     assert(raw.filter(col("ver") === "v1").count() == 0,
       "dead row versions must be gone from disk after compact")
@@ -91,6 +93,7 @@ class ServingStoresUpsertSpec extends SparkSpec {
     assert(!ServingStores.hasTombstones(dest),
       "a rebucket is a full rewrite — tombstones folded and cleared")
     assert(probe(dest, "jobs") == Seq("[1,v2]"))
+    StoreAdmin.reclaim(dest)
     assert(spark.read.parquet(dest).filter(col("ver") === "v1").count() == 0)
     // the generation counter SURVIVES the rebucket in place (it is never
     // deleted with the store content): a fresh upsert's tombstone must

@@ -6,6 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import graft.{SparkEntry, SparkSpec}
 import graft.util.StoreFs
+import org.apache.spark.sql.functions.{col, split}
 
 /** The serving-store lifecycle contract (SolrCleanup analogue): every
   * persisted store can be emptied and rebuilt cleanly, and the rebuilt
@@ -276,14 +277,62 @@ class StoreAdminSpec extends SparkSpec {
     val fakeSf = Files.createTempDirectory("graft-incr-reclaim")
     Files.createSymbolicLink(fakeSf.resolve("documents.parquet"),
       Paths.get(dir, "documents.parquet"))
-    val store = ServingStores.ensureDocPostingsIncr(spark, fakeSf.toString)
-    assert(graft.util.ManifestLog.versions(store).size == 1)
-    assert(graft.util.ManifestLog.unlisted(store).isEmpty,
-      graft.util.ManifestLog.unlisted(store))
     def probe(d: String) = ServingStores.postingProbe(spark, d, "the")
       .collect().map(_.toString).sorted.toSeq
-    assert(probe(store) == probe(ServingStores.ensureDocPostings(spark, dir)))
+    // the upsert twin compacts directly too, and must reclaim the same way
+    val upsertFresh = Files.createTempDirectory("graft-upsert-fresh").toString
+    ServingStores.buildPostings(
+      ServingStores.editedDocs(graft.util.Tables.documents(spark, dir))
+        .select(col("doc_id"), col("source"), col("n_chars"),
+          split(col("text"), " ").as("__words")),
+      col("__words"), upsertFresh, dropCols = Seq("__words"))
+    for ((ensure, expected) <- Seq[(String => String, String)](
+        (ServingStores.ensureDocPostingsIncr(spark, _),
+          ServingStores.ensureDocPostings(spark, dir)),
+        (ServingStores.ensureDocPostingsUpsert(spark, _), upsertFresh))) {
+      val store = ensure(fakeSf.toString)
+      assert(graft.util.ManifestLog.versions(store).size == 1, store)
+      assert(graft.util.ManifestLog.unlisted(store).isEmpty,
+        graft.util.ManifestLog.unlisted(store))
+      assert(probe(store) == probe(expected), store)
+    }
     StoreAdmin.truncate(ServingStores.defaultDir(fakeSf.toString))
+    StoreAdmin.truncate(upsertFresh)
+  }
+
+  test("reclaim deletes the directories its deletions left empty: after a " +
+      "5 -> 2 rebucket and a BM25 compaction none is left, and a second " +
+      "reclaim deletes nothing") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft-reclaim-dirs")
+    val store = root.resolve("tags").toString
+    ServingStores.buildPostings(
+      (1L to 20L).map(i => (i, List(s"t$i", "jobs"))).toDF("id", "tags"),
+      col("tags"), store, buckets = 5)
+    ServingStores.rebucket(spark, store, 2)
+    val bm = root.resolve("bm25").toString
+    BM25Index.build(Seq((1L, "spark jobs"), (2L, "scala jobs")).toDF("id", "text"),
+      "id", "text", bm)
+    BM25Index.appendSegment(Seq((3L, "more jobs")).toDF("id", "text"),
+      "id", "text", bm, "s1")
+    BM25Index.deleteDocs(spark, bm, Seq(2L))
+    BM25Index.compact(spark, bm)
+    val removed = StoreAdmin.reclaim(root.toString)
+    def emptyDirs(d: String): Seq[Path] = {
+      val s = Files.walk(Paths.get(d))
+      try s.iterator().asScala.filter(p => Files.isDirectory(p) &&
+        StoreFs.list(p).isEmpty).toSeq
+      finally s.close()
+    }
+    Seq(store, bm).foreach(d => assert(emptyDirs(d).isEmpty, emptyDirs(d)))
+    assert(!Files.exists(Paths.get(bm, "segments")))
+    assert(Seq("segments", "_tombstones").forall(t =>
+      removed.contains(Paths.get(bm, t).toString)), removed)
+    assert(StoreAdmin.reclaim(root.toString).isEmpty, "a second reclaim deleted paths")
+    assert(ServingStores.postingProbe(spark, store, "jobs").count() == 20)
+    assert(BM25Index.topKMerged(spark, bm, Seq("jobs"), 5)
+      .collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 3L))
+    StoreAdmin.truncate(root.toString)
   }
 
   test("maintain: the one-call sweep folds fragmented stores, purges " +

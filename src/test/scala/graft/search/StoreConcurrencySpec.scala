@@ -1,20 +1,20 @@
 package graft.search
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
 import graft.SparkSpec
-import graft.util.StoreLock
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterEach
 
 /** The serving-store concurrency contract (round-12 verdict item 1 —
-  * the lost-append window): compaction is segment-model, so a write
-  * landing DURING a compact survives with zero lost rows; rebucketing
-  * excludes writers via the store lock, so that collision fails LOUDLY;
-  * maintenance serializes against maintenance; a crashed holder's stale
-  * lock is stolen. The interleavings are driven deterministically
-  * through [[ServingStores.testHookBeforeSwap]], which fires after the
-  * fold's files are staged and before its commit — the exact window the
+  * the lost-append window): the manifest commit decides every race, with
+  * no lock and no entry check. A write landing DURING a compact survives
+  * with zero lost rows; against a rebucket, and between two maintainers,
+  * the side that commits second throws, never a silent loss; a commit
+  * deletes no file, so a probe serves the whole generation it opened.
+  * The interleavings are driven deterministically through
+  * [[ServingStores.testHookBeforeSwap]], which fires after the fold's
+  * files are staged and before its commit — the exact window the
   * round-12 code destroyed appends in — and through a [[graft.util
   * .StoreFs]] double that runs a rebucket inside an append's commit.
   */
@@ -86,26 +86,29 @@ class StoreConcurrencySpec extends SparkSpec with BeforeAndAfterEach {
     StoreAdmin.truncate(dest)
   }
 
-  test("a write racing a REBUCKET fails loudly at entry — never silent loss") {
+  test("a write racing a REBUCKET: the side that commits second throws " +
+      "— never silent loss") {
     val dest = Files.createTempDirectory("graft-conc-rebucket").toString
     val base = Seq((1L, List("jobs"))).toDF("id", "tags")
     ServingStores.buildPostings(base, col("tags"), dest, buckets = 2)
-    var sawReject = false
-    ServingStores.testHookBeforeSwap = d => if (!sawReject) {
-      sawReject = true
-      val ex = intercept[IllegalStateException] {
-        ServingStores.appendPostings(
-          Seq((9L, List("jobs"))).toDF("id", "tags"), col("tags"), d)
-      }
-      assert(ex.getMessage.contains("rebucket"))
+    // the append runs inside the rebucket's pre-commit window and commits
+    // first: it is served, and the rebucket's commit is the one that throws
+    var appended = false
+    ServingStores.testHookBeforeSwap = d => if (!appended) {
+      appended = true
+      ServingStores.appendPostings(
+        Seq((9L, List("jobs"))).toDF("id", "tags"), col("tags"), d)
     }
+    val ex = intercept[IllegalStateException] {
+      ServingStores.rebucket(spark, dest, 5)
+    }
+    assert(appended, "the racing append never ran")
+    assert(ex.getMessage.contains("rebucket"), ex.getMessage)
+    assert(probeIds(dest, "jobs") == Seq(1L, 9L),
+      "the append that committed first is not served")
+    // the rebucket was not applied; re-run, it folds the append in
+    ServingStores.testHookBeforeSwap = _ => ()
     ServingStores.rebucket(spark, dest, 5)
-    assert(sawReject, "the racing append was not rejected")
-    // the rebucket completed and the rejected batch is absent (the caller
-    // re-applies it), not half-applied
-    assert(probeIds(dest, "jobs") == Seq(1L))
-    ServingStores.appendPostings(
-      Seq((9L, List("jobs"))).toDF("id", "tags"), col("tags"), dest)
     assert(probeIds(dest, "jobs") == Seq(1L, 9L))
     StoreAdmin.truncate(dest)
   }
@@ -144,33 +147,49 @@ class StoreConcurrencySpec extends SparkSpec with BeforeAndAfterEach {
     StoreAdmin.truncate(dest)
   }
 
-  test("maintenance serializes against maintenance; a stale lock is stolen") {
+  test("a second maintainer throws at its commit; the first's result " +
+      "serves") {
     val dest = Files.createTempDirectory("graft-conc-lock").toString
     val base = Seq((1L, List("jobs")), (2L, List("jobs"))).toDF("id", "tags")
     ServingStores.buildPostings(base, col("tags"), dest, buckets = 2)
     ServingStores.appendPostings(
       Seq((3L, List("jobs"))).toDF("id", "tags"), col("tags"), dest)
-    // a live holder rejects a second maintainer
-    StoreLock.acquire(dest, "compact")
+    // the inner compact folds the same files and commits first
+    var inner = false
+    var innerCommitted = false
+    ServingStores.testHookBeforeSwap = d => if (!inner) {
+      inner = true
+      ServingStores.compact(spark, d)
+      innerCommitted = true
+    }
     val ex = intercept[IllegalStateException] {
       ServingStores.compact(spark, dest)
     }
-    assert(ex.getMessage.contains("compact"))
-    StoreLock.release(dest)
-    // a CRASHED holder (stale timestamp) is stolen, maintenance proceeds
-    Files.writeString(Paths.get(dest, StoreLock.LockFile),
-      s"compact ${System.currentTimeMillis() - StoreLock.DefaultStaleMs - 1}")
-    ServingStores.compact(spark, dest)
-    assert(!Files.exists(Paths.get(dest, StoreLock.LockFile)),
-      "lock must be released after a completed pass")
+    assert(innerCommitted, "the inner compact did not commit")
+    assert(ex.getMessage.contains("compact"), ex.getMessage)
+    assert(ServingStores.dataFileCount(dest) == 1, "the inner compact's fold is not served")
     assert(probeIds(dest, "jobs") == Seq(1L, 2L, 3L))
-    // and writers reject a live non-compact holder at entry
-    StoreLock.acquire(dest, "rebucket")
-    intercept[IllegalStateException] {
-      ServingStores.appendPostings(
-        Seq((4L, List("jobs"))).toDF("id", "tags"), col("tags"), dest)
-    }
-    StoreLock.release(dest)
+    StoreAdmin.truncate(dest)
+  }
+
+  test("a probe frame opened before a purging compact's commit still " +
+      "serves the complete old generation after it: the commit deletes no " +
+      "file") {
+    val dest = Files.createTempDirectory("graft-conc-purge").toString
+    val base = Seq((1L, List("jobs")), (2L, List("jobs"))).toDF("id", "tags")
+    ServingStores.buildPostings(base, col("tags"), dest, buckets = 2)
+    // the tombstone makes the compact a purging fold of every bucket
+    ServingStores.upsertPostings(
+      Seq((2L, List("jobs", "v2"))).toDF("id", "tags"), "id", col("tags"), dest)
+    var preCommit: org.apache.spark.sql.DataFrame = null
+    ServingStores.testHookBeforeSwap = d =>
+      preCommit = ServingStores.postingProbe(spark, d, "jobs")
+    ServingStores.compact(spark, dest)
+    assert(!ServingStores.hasTombstones(dest), "the compact did not purge")
+    assert(preCommit.select(col("id")).collect().map(_.getLong(0)).sorted
+      .toSeq == Seq(1L, 2L),
+      "a probe opened on the pre-commit manifest lost its files")
+    assert(probeIds(dest, "jobs") == Seq(1L, 2L))
     StoreAdmin.truncate(dest)
   }
 
