@@ -154,14 +154,14 @@ object HttpServing {
           val results = tweetIndexDir match {
             case Some(dir) =>
               // two store reads, like the reference's two Solr queries:
-              // resolve the screen name (users lookup), then ONE userID
-              // bucket of the timeline layout — no corpus join at all
+              // resolve the screen name (users lookup), then the userID
+              // buckets of every user holding it — no corpus join at all
               val spark = tweets.sparkSession
               val u = ServingStores.postingProbe(spark, dir + "/users", id)
                 .select(col("id"), col("userScreenName")).collect()
               if (u.isEmpty) null
-              else ServingStores.timelineProbe(spark, dir + "/by_user",
-                  "userID", u.head.getString(0))
+              else ServingStores.timelineProbeMany(spark, dir + "/by_user",
+                  "userID", u.map(_.getString(0)).toSeq)
                 .orderBy(col("tweetDateTime").desc,
                   col("id").cast("long").desc)
                 .limit(1000)

@@ -95,7 +95,7 @@ object ServingStores {
     * its commit — the widest window in which a concurrent write can
     * land between a fold's snapshot and its commit.
     */
-  private[search] var testHookBeforeSwap: String => Unit = _ => ()
+  private[search] var testHookBeforeCommit: String => Unit = _ => ()
 
   /** One commit point of a store (`_manifest/<version>.json`, committed
     * through [[graft.util.ManifestLog]]): the row schema (including
@@ -580,7 +580,7 @@ object ServingStores {
           snap.idCol.orNull)
         .withColumn("__bucket", bucketOf(col(snap.key), buckets))
       val staged = ManifestLog.stage(dest)(writeRows(rows, snap.order, _))
-      testHookBeforeSwap(dest)
+      testHookBeforeCommit(dest)
       val whole = snap.files.diff(folded).isEmpty
       val op = if (newBuckets.isEmpty) "compact" else "rebucket"
       log.commitFold(dest, op, folded) { m =>

@@ -20,25 +20,82 @@ import org.apache.spark.sql.{Column, DataFrame}
   *  - deterministic dedup: windowed row_number instead of the reference's
   *    order-dependent `sort().drop_duplicates()`
   *    (`Tweets_preprocessing.py:156-157,464-466`);
-  *  - six flatten branches are one parametric select builder; the union
-  *    stays positional with a locked column order, as the reference's CSV
-  *    contract requires (`SolrIndexer.java:90-113`).
+  *  - one projection instead of six flattened variants and their union:
+  *    each row's class and inner `truncated` flag are computed once, and
+  *    the 24 columns read from the inner tweet they select, so the raw
+  *    tweets are scanned and parsed once, not six times.
   *
   * Scale: the whole normalize is shuffle-free until the final dedup (one
-  * shuffle on org_id); hiring filter and flatten are pure projections that
-  * stay in WholeStageCodegen.
+  * shuffle on org_id); normalize and the hiring filter are one filter and
+  * one projection each, which stay in WholeStageCodegen.
   */
 object TweetNormalize {
 
-  /** The canonical 24-column order (SURVEY.md §1.5). */
-  val ProcessedColumns: Seq[String] = Seq(
-    "org_id", "samp_id", "samp_datetime", "org_url", "org_media_url",
-    "org_media_type", "org_attached_links", "org_text", "org_hashtags",
-    "org_user_metions", "user_id", "user_name", "user_screen_name",
-    "user_verified", "user_profile_image_url", "user_profile_banner_url",
-    "user_profile_background_image_url", "user_followers_count",
-    "user_friends_count", "org_favorite_count", "org_quote_count",
-    "org_reply_count", "org_retweet_count", "org_datetime")
+  // The three tweet classes (`Tweets_preprocessing.py:347-359`): quoted
+  // takes precedence over retweet. Under SQL's three-valued logic a row is
+  // in a class only where its predicate is TRUE, so a null
+  // `is_quote_status` beside a set `quoted_status` is in none and drops.
+  private val quotes = col("is_quote_status") === true && col("quoted_status").isNotNull
+  private val quoted = quotes && notSensitive(col("quoted_status.possibly_sensitive"))
+  private val retweet = !quotes && col("retweeted_status").isNotNull &&
+    notSensitive(col("retweeted_status.possibly_sensitive"))
+  private val original = !quotes && col("retweeted_status").isNull
+
+  /** The row's inner tweet: the quoted or retweeted status, or the
+    * top-level tweet itself for an original; null when the row is in no
+    * class. The predicates are mutually exclusive, so branch order does
+    * not matter. All three share [[TweetSchema.innerTweet]]'s layout.
+    */
+  private val inner = when(quoted, col("quoted_status"))
+    .when(retweet, col("retweeted_status"))
+    .when(original, struct(TweetSchema.innerTweet.fieldNames.toSeq.map(col): _*))
+
+  private def at(path: String): Column = col(s"__inner.$path")
+  private val truncated = at("truncated")
+  /** A truncated tweet keeps its full text, entities and media under
+    * `extended_tweet`.
+    */
+  private def pick(plain: String): Column =
+    when(truncated, at(s"extended_tweet.$plain")).otherwise(at(plain))
+  private val entities = pick("entities")
+  private val media = pick("extended_entities.media")
+
+  /** The canonical 24-column relation (SURVEY.md §1.5), in its locked
+    * order — the reference's CSV contract (`SolrIndexer.java:90-113`).
+    */
+  private val Projection: Seq[(String, Column)] = Seq(
+    "org_id" -> at("id"),
+    "samp_id" -> col("id"),
+    "samp_datetime" -> parseCreatedAt(col("created_at")),
+    // quoted: the permalink; otherwise the first media expanded_url — the
+    // reference's `convert_org_url_tostring` UDF (`Tweets_preprocessing.py:85-89`)
+    "org_url" -> when(quoted, col("quoted_status_permalink.expanded"))
+      .otherwise(get(media("expanded_url"), lit(0))), // null-safe under ANSI
+    "org_media_url" -> media("media_url"),
+    "org_media_type" -> media("type"),
+    "org_attached_links" -> entities("urls")("expanded_url"),
+    "org_text" -> when(truncated, at("extended_tweet.full_text")).otherwise(at("text")),
+    "org_hashtags" -> entities("hashtags")("text"),
+    // [sic] — the misspelling is the reference's column contract
+    // (`Tweets_preprocessing.py:182`, consumed positionally by SolrIndexer).
+    "org_user_metions" -> entities("user_mentions")("screen_name"),
+    "user_id" -> at("user.id"),
+    "user_name" -> at("user.name"),
+    "user_screen_name" -> at("user.screen_name"),
+    "user_verified" -> at("user.verified"),
+    "user_profile_image_url" -> at("user.profile_image_url"),
+    "user_profile_banner_url" -> at("user.profile_banner_url"),
+    "user_profile_background_image_url" -> at("user.profile_background_image_url"),
+    "user_followers_count" -> at("user.followers_count"),
+    "user_friends_count" -> at("user.friends_count"),
+    "org_favorite_count" -> at("favorite_count"),
+    "org_quote_count" -> at("quote_count"),
+    "org_reply_count" -> at("reply_count"),
+    "org_retweet_count" -> at("retweet_count"),
+    "org_datetime" -> parseCreatedAt(at("created_at")))
+
+  /** The canonical 24-column order. */
+  val ProcessedColumns: Seq[String] = Projection.map(_._1)
 
   /** Hiring-tweet regex alternation — semantics of the reference's term list
     * (`Tweets_preprocessing.py:584-589`).
@@ -65,102 +122,23 @@ object TweetNormalize {
       regexp_replace(ltrim(regexp_extract(c, "(\\ \\w+.+)", 1)), "(\\+\\d+\\ )", ""),
       lit("MMM dd HH:mm:ss yyyy"))
 
-  /** One flatten branch: project the 24 columns out of a tweet rooted at
-    * `p` ("" = top level, or "quoted_status"/"retweeted_status"), reading
-    * the extended_tweet paths when the inner tweet is truncated.
-    * `orgUrl` is the per-class permalink expression.
+  /** Drop only TRUTHY possibly_sensitive — the reference's filter_func
+    * (`Tweets_preprocessing.py:81-83`) collects ids where the flag is
+    * truthy; `false` (the common real-world value) must be KEPT.
     */
-  private def flatten(df: DataFrame, prefix: String, truncated: Boolean,
-                      orgUrl: Column): DataFrame = {
-    def p(f: String): String = if (prefix.isEmpty) f else s"$prefix.$f"
-    val ent   = if (truncated) p("extended_tweet.entities") else p("entities")
-    val media = if (truncated) p("extended_tweet.extended_entities.media")
-                else p("extended_entities.media")
-    val text  = if (truncated) col(p("extended_tweet.full_text")) else col(p("text"))
-    df.select(
-      col(p("id")).as("org_id"),
-      col("samp_id"),
-      col("samp_datetime"),
-      orgUrl.as("org_url"),
-      col(s"$media.media_url").as("org_media_url"),
-      col(s"$media.type").as("org_media_type"),
-      col(s"$ent.urls.expanded_url").as("org_attached_links"),
-      text.as("org_text"),
-      col(s"$ent.hashtags.text").as("org_hashtags"),
-      // [sic] — the misspelling is the reference's column contract
-      // (`Tweets_preprocessing.py:182`, consumed positionally by SolrIndexer).
-      col(s"$ent.user_mentions.screen_name").as("org_user_metions"),
-      col(p("user.id")).as("user_id"),
-      col(p("user.name")).as("user_name"),
-      col(p("user.screen_name")).as("user_screen_name"),
-      col(p("user.verified")).as("user_verified"),
-      col(p("user.profile_image_url")).as("user_profile_image_url"),
-      col(p("user.profile_banner_url")).as("user_profile_banner_url"),
-      col(p("user.profile_background_image_url")).as("user_profile_background_image_url"),
-      col(p("user.followers_count")).as("user_followers_count"),
-      col(p("user.friends_count")).as("user_friends_count"),
-      col(p("favorite_count")).as("org_favorite_count"),
-      col(p("quote_count")).as("org_quote_count"),
-      col(p("reply_count")).as("org_reply_count"),
-      col(p("retweet_count")).as("org_retweet_count"),
-      parseCreatedAt(col(p("created_at"))).as("org_datetime"))
-  }
+  private def notSensitive(c: Column): Column = coalesce(c, lit(false)) === false
 
-  /** First media expanded_url, else null — the reference's
-    * `convert_org_url_tostring` UDF (`Tweets_preprocessing.py:85-89`) as the
-    * `element_at` built-in.
+  /** Normalize raw tweets (read with [[TweetSchema.raw]]) into the
+    * 24-column relation in one pass: each row's class and its inner
+    * tweet's `truncated` flag are computed once, and every output column
+    * reads its field from that inner tweet. A row is kept only if its
+    * top-level tweet is not sensitive, it is in exactly one class, and
+    * its inner `truncated` is non-null.
     */
-  private def firstMediaUrl(mediaPath: String): Column =
-    get(col(s"$mediaPath.expanded_url"), lit(0)) // null-safe under ANSI mode
-
-  /** Normalize raw (nested, schema-inferred) tweets into the 24-column
-    * relation. Routes each row to exactly one class — quoted takes
-    * precedence over retweet (the reference's exclusion id-lists,
-    * `Tweets_preprocessing.py:347-359`) — and unions the truncated /
-    * untruncated flatten of each class.
-    */
-  def normalize(raw: DataFrame): DataFrame = {
-    // Drop only TRUTHY possibly_sensitive — the reference's filter_func
-    // (`Tweets_preprocessing.py:81-83`) collects ids where the flag is
-    // truthy; `false` (the common real-world value) must be KEPT.
-    def notSensitive(path: String) =
-      coalesce(col(path), lit(false)) === false
-    val base = raw
-      .filter(notSensitive("possibly_sensitive"))
-      .withColumn("samp_id", col("id"))
-      .withColumn("samp_datetime", parseCreatedAt(col("created_at")))
-
-    val quoted = base.filter(
-      col("is_quote_status") === true && col("quoted_status").isNotNull &&
-        notSensitive("quoted_status.possibly_sensitive"))
-    val retweet = base.filter(
-      !(col("is_quote_status") === true && col("quoted_status").isNotNull) &&
-        col("retweeted_status").isNotNull &&
-        notSensitive("retweeted_status.possibly_sensitive"))
-    val original = base.filter(
-      !(col("is_quote_status") === true && col("quoted_status").isNotNull) &&
-        col("retweeted_status").isNull)
-
-    val branches = Seq(
-      flatten(quoted.filter(col("quoted_status.truncated") === true),
-        "quoted_status", truncated = true, col("quoted_status_permalink.expanded")),
-      flatten(quoted.filter(col("quoted_status.truncated") === false),
-        "quoted_status", truncated = false, col("quoted_status_permalink.expanded")),
-      flatten(retweet.filter(col("retweeted_status.truncated") === true),
-        "retweeted_status", truncated = true,
-        firstMediaUrl("retweeted_status.extended_tweet.extended_entities.media")),
-      flatten(retweet.filter(col("retweeted_status.truncated") === false),
-        "retweeted_status", truncated = false,
-        firstMediaUrl("retweeted_status.extended_entities.media")),
-      flatten(original.filter(col("truncated") === true),
-        "", truncated = true,
-        firstMediaUrl("extended_tweet.extended_entities.media")),
-      flatten(original.filter(col("truncated") === false),
-        "", truncated = false,
-        firstMediaUrl("extended_entities.media")))
-
-    branches.reduce(_ union _)
-  }
+  def normalize(raw: DataFrame): DataFrame =
+    raw.withColumn("__inner", inner)
+      .filter(notSensitive(col("possibly_sensitive")) && truncated.isNotNull)
+      .select(Projection.map { case (name, c) => c.as(name) }: _*)
 
   /** Keep the latest observation of each original tweet — deterministic
     * replacement for `sort + drop_duplicates` (`Tweets_preprocessing.py:464-466`).

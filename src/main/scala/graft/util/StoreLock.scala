@@ -31,13 +31,6 @@ object StoreLock {
   val LockFile = "_maintenance.lock"
   val DefaultStaleMs: Long = 30L * 60 * 1000
 
-  /** The op string of the current holder, or None when unlocked. A
-    * vanished-while-reading lock (released concurrently) reads as None.
-    */
-  def heldBy(dest: String): Option[String] =
-    try Some(StoreFs.readString(Paths.get(dest, LockFile)).trim.split(' ').head)
-    catch { case _: java.io.IOException => None }
-
   /** Acquire the lock for `op`, stealing a stale one; throws
     * [[IllegalStateException]] (holder + age in the message) when a live
     * holder exists — the loud-failure contract. The steal is an ATOMIC

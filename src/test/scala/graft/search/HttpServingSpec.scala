@@ -58,13 +58,13 @@ class HttpServingSpec extends SparkSpec {
       val before = get(port, "/api/search/hashtag?tag=jobs").body()
       assert(json(before, "$.count") == "3")
       var duringTmp: String = null
-      ServingStores.testHookBeforeSwap = d => if (d.endsWith("/hashtags")) {
+      ServingStores.testHookBeforeCommit = d => if (d.endsWith("/hashtags")) {
         // fold staged, commit not yet published: a racing request serves
         // the complete OLD generation
         duringTmp = get(port, "/api/search/hashtag?tag=jobs").body()
       }
       try ServingStores.compact(spark, s"$tidx/hashtags")
-      finally ServingStores.testHookBeforeSwap = _ => ()
+      finally ServingStores.testHookBeforeCommit = _ => ()
       assert(duringTmp == before, "mid-maintenance request diverged from the old generation")
       // first request after the commit: the new generation, same rows
       assert(get(port, "/api/search/hashtag?tag=jobs").body() == before,
@@ -259,6 +259,26 @@ class HttpServingSpec extends SparkSpec {
         assert(a == b, s"$q: served envelope differs from ad hoc")
       }
     } finally { adhoc.stop(0); served.stop(0) }
+  }
+
+  test("stored user route serves every user holding the screen name, " +
+      "byte-equal to the ad-hoc route") {
+    val shared = Seq(
+      ("21", "7", "first ada's post", Seq("jobs"), "2021-03-01T10:00:00Z"),
+      ("22", "9", "second ada's post", Seq("jobs"), "2021-03-02T10:00:00Z"),
+      ("23", "8", "bob's post", Seq("perf"), "2021-03-03T10:00:00Z")
+    ).toDF("id", "userID", "tweetText", "tweetHashtags", "tweetDateTime")
+    val sharedUsers = Seq(
+      ("7", "ada", "Ada L"), ("9", "ada", "Ada K"), ("8", "bob", "Bob D")
+    ).toDF("id", "userScreenName", "userName")
+    val dir = java.nio.file.Files.createTempDirectory("graft-http-shared").toString
+    HttpServing.buildTweetIndex(shared, sharedUsers, dir)
+    val stored = HttpServing.referenceRoutes(shared, sharedUsers,
+      tweetIndexDir = Some(dir))("/api/search/user")(Map("id" -> "ada"))
+    val adhoc = HttpServing.referenceRoutes(shared, sharedUsers)(
+      "/api/search/user")(Map("id" -> "ada"))
+    assert(json(adhoc, "$.count") == "2", adhoc)
+    assert(stored == adhoc)
   }
 
   test("stored routes are key-routed: building a response frame starts no " +

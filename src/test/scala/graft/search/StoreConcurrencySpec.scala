@@ -13,7 +13,7 @@ import org.scalatest.BeforeAndAfterEach
   * the side that commits second throws, never a silent loss; a commit
   * deletes no file, so a probe serves the whole generation it opened.
   * The interleavings are driven deterministically through
-  * [[ServingStores.testHookBeforeSwap]], which fires after the fold's
+  * [[ServingStores.testHookBeforeCommit]], which fires after the fold's
   * files are staged and before its commit — the exact window the
   * round-12 code destroyed appends in — and through a [[graft.util
   * .StoreFs]] double that runs a rebucket inside an append's commit.
@@ -26,7 +26,7 @@ class StoreConcurrencySpec extends SparkSpec with BeforeAndAfterEach {
       .select(col("id")).collect().map(_.getLong(0)).sorted.toSeq
 
   override def afterEach(): Unit = {
-    ServingStores.testHookBeforeSwap = _ => ()
+    ServingStores.testHookBeforeCommit = _ => ()
     super.afterEach()
   }
 
@@ -42,7 +42,7 @@ class StoreConcurrencySpec extends SparkSpec with BeforeAndAfterEach {
     // with round-12's whole-directory swap these rows were silently
     // destroyed; the segment model must leave them untouched
     var fired = false
-    ServingStores.testHookBeforeSwap = d => if (!fired) {
+    ServingStores.testHookBeforeCommit = d => if (!fired) {
       fired = true
       ServingStores.appendPostings(
         Seq((4L, List("jobs", "late"))).toDF("id", "tags"), col("tags"), d)
@@ -53,7 +53,7 @@ class StoreConcurrencySpec extends SparkSpec with BeforeAndAfterEach {
       "a row appended during the compact was lost")
     assert(probeIds(dest, "late") == Seq(4L))
     // and the next compact folds the straggler in, file count bounded
-    ServingStores.testHookBeforeSwap = _ => ()
+    ServingStores.testHookBeforeCommit = _ => ()
     ServingStores.compact(spark, dest)
     assert(ServingStores.dataFileCount(dest) <= 2)
     assert(probeIds(dest, "jobs") == Seq(1L, 2L, 3L, 4L))
@@ -69,7 +69,7 @@ class StoreConcurrencySpec extends SparkSpec with BeforeAndAfterEach {
     ServingStores.upsertPostings(
       Seq((2L, List("jobs", "v2"))).toDF("id", "tags"), "id", col("tags"), dest)
     var fired = false
-    ServingStores.testHookBeforeSwap = d => if (!fired) {
+    ServingStores.testHookBeforeCommit = d => if (!fired) {
       fired = true
       // re-edit id 1 mid-compact: its tombstone must keep applying after
       // the pass clears the tombstones the fold DID apply
@@ -94,7 +94,7 @@ class StoreConcurrencySpec extends SparkSpec with BeforeAndAfterEach {
     // the append runs inside the rebucket's pre-commit window and commits
     // first: it is served, and the rebucket's commit is the one that throws
     var appended = false
-    ServingStores.testHookBeforeSwap = d => if (!appended) {
+    ServingStores.testHookBeforeCommit = d => if (!appended) {
       appended = true
       ServingStores.appendPostings(
         Seq((9L, List("jobs"))).toDF("id", "tags"), col("tags"), d)
@@ -107,7 +107,7 @@ class StoreConcurrencySpec extends SparkSpec with BeforeAndAfterEach {
     assert(probeIds(dest, "jobs") == Seq(1L, 9L),
       "the append that committed first is not served")
     // the rebucket was not applied; re-run, it folds the append in
-    ServingStores.testHookBeforeSwap = _ => ()
+    ServingStores.testHookBeforeCommit = _ => ()
     ServingStores.rebucket(spark, dest, 5)
     assert(probeIds(dest, "jobs") == Seq(1L, 9L))
     StoreAdmin.truncate(dest)
@@ -157,7 +157,7 @@ class StoreConcurrencySpec extends SparkSpec with BeforeAndAfterEach {
     // the inner compact folds the same files and commits first
     var inner = false
     var innerCommitted = false
-    ServingStores.testHookBeforeSwap = d => if (!inner) {
+    ServingStores.testHookBeforeCommit = d => if (!inner) {
       inner = true
       ServingStores.compact(spark, d)
       innerCommitted = true
@@ -182,7 +182,7 @@ class StoreConcurrencySpec extends SparkSpec with BeforeAndAfterEach {
     ServingStores.upsertPostings(
       Seq((2L, List("jobs", "v2"))).toDF("id", "tags"), "id", col("tags"), dest)
     var preCommit: org.apache.spark.sql.DataFrame = null
-    ServingStores.testHookBeforeSwap = d =>
+    ServingStores.testHookBeforeCommit = d =>
       preCommit = ServingStores.postingProbe(spark, d, "jobs")
     ServingStores.compact(spark, dest)
     assert(!ServingStores.hasTombstones(dest), "the compact did not purge")
@@ -209,7 +209,7 @@ class StoreConcurrencySpec extends SparkSpec with BeforeAndAfterEach {
       Seq((3L, List("jobs"))).toDF("id", "tags"), col("tags"), dest)
     var duringSwap: Seq[Long] = Nil
     var preCommit: org.apache.spark.sql.DataFrame = null
-    ServingStores.testHookBeforeSwap = d => {
+    ServingStores.testHookBeforeCommit = d => {
       duringSwap = probeIds(d, "jobs")
       preCommit = ServingStores.postingProbe(spark, d, "jobs")
     }

@@ -1,7 +1,10 @@
 package graft.tweets
 
+import java.nio.file.{Files, Paths}
+
 import graft.SparkSpec
 import graft.sources.Readers
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 
 class TweetNormalizeSpec extends SparkSpec {
 
@@ -54,5 +57,56 @@ class TweetNormalizeSpec extends SparkSpec {
     val dt = normalized.filter("org_id = 100").select("org_datetime")
       .head().getTimestamp(0).toInstant.toString
     assert(dt == "2021-10-22T20:00:00Z")
+  }
+
+  test("classification edge cases: null is_quote_status, sensitive inner " +
+      "tweets and a null inner truncated drop; quoted wins over retweet; a " +
+      "truncated retweet reads its extended media") {
+    import spark.implicits._
+    def inner(id: Long, truncated: String, sensitive: Boolean = false): String =
+      s"""{"id": $id, "text": "t$id", "truncated": $truncated,
+         |"possibly_sensitive": $sensitive,
+         |"extended_entities": {"media": [{"expanded_url": "https://t.co/plain$id"}]},
+         |"extended_tweet": {"full_text": "full$id",
+         |"extended_entities": {"media": [{"expanded_url": "https://t.co/ext$id"}]}}}"""
+        .stripMargin
+    def tweet(id: Long, isQuote: String, quoted: String = "null",
+              retweeted: String = "null"): String =
+      s"""{"id": $id, "text": "t$id", "truncated": false,
+         |"created_at": "Thu Oct 21 18:57:29 +0000 2021",
+         |"is_quote_status": $isQuote,
+         |"quoted_status_permalink": {"expanded": "https://twitter.com/x/status/$id"},
+         |"quoted_status": $quoted, "retweeted_status": $retweeted,
+         |"extended_entities": {"media": [{"expanded_url": "https://t.co/top$id"}]}}"""
+        .stripMargin.replace("\n", " ")
+    val rows = Seq(
+      tweet(1, "null", quoted = inner(11, "false")),                    // no class
+      tweet(2, "true", quoted = inner(12, "false", sensitive = true)),  // sensitive quote
+      tweet(3, "false", retweeted = inner(13, "false", sensitive = true)),
+      tweet(4, "false", retweeted = inner(14, "null")),                 // null truncated
+      tweet(5, "true", quoted = inner(15, "false"), retweeted = inner(25, "false")),
+      tweet(6, "true", retweeted = inner(16, "false")),
+      tweet(7, "false", retweeted = inner(17, "true")),
+      tweet(8, "false"))
+    val edge = spark.read.schema(TweetSchema.raw).json(rows.toDS())
+    val kept = TweetNormalize.normalize(edge)
+      .select("samp_id", "org_id", "org_text", "org_url").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getString(3)))
+      .toSet
+    assert(kept == Set(
+      (5L, 15L, "t15", "https://twitter.com/x/status/5"),
+      (6L, 16L, "t16", "https://t.co/plain16"),
+      (7L, 17L, "full17", "https://t.co/ext17"),
+      (8L, 8L, "t8", "https://t.co/top8")))
+  }
+
+  test("normalize reads the raw tweets once: one relation in the optimized plan") {
+    // a copy of the fixture, so the plan is not the cached `normalized`
+    val copy = Files.createTempDirectory("graft-normalize-plan").resolve("tweets.json")
+    Files.copy(Paths.get(resourcePath("tweets_fixture.json")), copy)
+    val fresh = Readers.multilineJson(spark, copy.toString, TweetSchema.raw)
+    val plan = TweetNormalize.normalize(fresh).queryExecution.optimizedPlan
+    val scans = plan.collect { case r: LogicalRelation => r }
+    assert(scans.size == 1, s"${scans.size} scans of the raw tweets:\n$plan")
   }
 }
