@@ -97,13 +97,15 @@ object TweetBench {
     val nTweets = targetMB.toLong * 1024 * 1024 / 1500 // ~1.5 KB/tweet
     def run(nFiles: Int): (Double, Double, Long) = {
       val dir = Files.createTempDirectory(s"tweetbench_$nFiles").toFile
-      val bytes = writeCorpus(dir, nFiles, nTweets / nFiles)
-      val t0 = System.nanoTime()
-      val out = TweetNormalize.process(
-        graft.sources.Readers.multilineJson(spark, dir.getAbsolutePath, TweetSchema.raw))
-        .count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      (bytes / 1e6, sec, out)
+      try {
+        val bytes = writeCorpus(dir, nFiles, nTweets / nFiles)
+        val t0 = System.nanoTime()
+        val out = TweetNormalize.process(
+          graft.sources.Readers.multilineJson(spark, dir.getAbsolutePath, TweetSchema.raw))
+          .count()
+        val sec = (System.nanoTime() - t0) / 1e9
+        (bytes / 1e6, sec, out)
+      } finally graft.util.StoreFs.deleteRecursively(dir.toPath)
     }
 
     val (mb1, sec1, rows1) = run(1)

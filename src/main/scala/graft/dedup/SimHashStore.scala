@@ -1,8 +1,7 @@
 package graft.dedup
 
-import java.nio.file.{Files, Paths}
-
-import graft.util.{Stamp, StoreLock, Tables, Tombstones}
+import graft.search.ServingStores
+import graft.util.{Stamp, Tables}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -10,26 +9,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * serving index ([[graft.search.BM25Index]]'s build-once split): the
   * (doc, simhash) table is computed from the corpus ONCE and every
   * consumer (pair mining, cluster resolution, degree audits, near-dup
-  * curation) reads the 8-byte-per-doc signatures instead of re-tokenizing
-  * and re-hashing the text. At 100 TB that is the only sane shape — the
-  * signature pass is a full corpus scan, the consumers' band joins touch
-  * kilobytes per doc; write the store bucketed by the band byte and the
-  * probe joins prune to single buckets
-  * ([[Dedup.simHashIncremental]] reads the same layout).
+  * curation, the live near-dup gate) reads the 8-byte-per-doc signatures
+  * instead of re-tokenizing and re-hashing the text.
   *
-  * Lifecycle: [[appendBatch]] adds NEW ids at batch cost (exact by
-  * construction — a doc's 64-bit SimHash depends only on its own
-  * tokens); [[upsertBatch]] REPLACES existing ids (the reference
-  * indexer's overwrite semantics — an EDITED doc must carry its new
-  * signature, or the near-dup gate would compare live traffic against a
-  * stale sketch): rows carry a store generation, the batch's ids are
-  * tombstoned first at a fresh generation, and [[read]] drops rows any
-  * newer tombstone outranks — the [[graft.search.ServingStores]]
-  * tombstone contract. [[compact]] folds the table into one doc-sorted
-  * generation with the deletes applied physically and the tombstones
-  * cleared; upsert and compact exclude each other via the store lock
-  * (a whole-table rewrite has no segment model — the collision fails
-  * loudly instead of losing the racing batch).
+  * The store is a [[ServingStores]] timeline store keyed on `doc` in one
+  * bucket, read whole ([[ServingStores.read]]), so it shares that store's
+  * manifest commit, tombstones and race rules. Lifecycle: [[appendBatch]]
+  * adds NEW ids at batch cost (exact by construction — a doc's 64-bit
+  * SimHash depends only on its own tokens); [[upsertBatch]] REPLACES
+  * existing ids (the reference indexer's overwrite semantics — an EDITED
+  * doc must carry its new signature, or the near-dup gate would compare
+  * live traffic against a stale sketch) with its tombstones and rows in
+  * one commit; [[compact]] folds the table into one doc-sorted file with
+  * the deletes applied. A write that lands during a compaction survives it.
   *
   * Freshness follows the index pattern: a (name, size, mtime) stamp of the
   * source parquet — a regenerated corpus forces a rebuild, repeated runs
@@ -38,7 +30,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object SimHashStore {
 
   def defaultDir(sfDir: String): String = {
-    graft.util.StoreDirs.resolve("simhash-sig-v2", sfDir)
+    graft.util.StoreDirs.resolve("simhash-sig-v3", sfDir)
   }
 
   /** Build-if-absent-or-stale; returns the signature DataFrame read from
@@ -55,25 +47,15 @@ object SimHashStore {
     read(spark, dest)
   }
 
-  /** Materialize the signature table at `dest` (generation 0; stale
-    * tombstones from any previous generation cleared).
-    */
+  /** Materialize the signature table as a fresh store at `dest`. */
   def buildAt(dest: String, docs: DataFrame, idCol: String,
-              textCol: String): Unit = {
-    Tombstones.clear(dest)
-    Dedup.simHash(docs, idCol, textCol)
-      .withColumn("__gen", lit(0L))
-      .write.mode("overwrite").parquet(dest + "/sig.parquet")
-  }
+              textCol: String): Unit =
+    ServingStores.buildTimeline(Dedup.simHash(docs, idCol, textCol), "doc",
+      dest, buckets = 1)
 
-  /** The store's (doc, simhash) rows with live deletes applied — what
-    * every consumer reads. Never-upserted stores skip the anti-join.
-    */
+  /** The store's live (doc, simhash) rows — what every consumer reads. */
   def read(spark: SparkSession, dest: String): DataFrame =
-    Tombstones.dropDead(spark, dest,
-        spark.read.parquet(dest + "/sig.parquet"), "doc",
-        Tombstones.StringKey)
-      .drop("__gen")
+    ServingStores.read(spark, dest)
 
   /** Append a NEW doc batch's signatures at batch cost — exact by
     * construction, so the appended store is value-equal to a rebuild
@@ -82,45 +64,20 @@ object SimHashStore {
     */
   def appendBatch(dest: String, batch: DataFrame, idCol: String,
                   textCol: String): Unit =
-    StoreLock.withLock(dest, "append") {
-      Dedup.simHash(batch, idCol, textCol)
-        .withColumn("__gen", lit(Tombstones.nextGen(dest)))
-        .write.mode("append").parquet(dest + "/sig.parquet")
-    }
+    ServingStores.appendTimeline(Dedup.simHash(batch, idCol, textCol), dest)
 
   /** Replace the stored signatures of the batch's (existing or new) ids
-    * with signatures of the batch's text — tombstone-first, so a crash
-    * between the writes deletes rather than double-serves, and a retry
-    * converges at a higher generation.
+    * with signatures of the batch's text: every batch id is tombstoned
+    * and the new signatures added in one commit.
     */
   def upsertBatch(spark: SparkSession, dest: String, batch: DataFrame,
                   idCol: String, textCol: String): Unit =
-    StoreLock.withLock(dest, "append") {
-      val gen = Tombstones.nextGen(dest)
-      Tombstones.write(batch.select(col(idCol)), dest, gen,
-        Tombstones.StringKey)
-      Dedup.simHash(batch, idCol, textCol)
-        .withColumn("__gen", lit(gen))
-        .write.mode("append").parquet(dest + "/sig.parquet")
-    }
+    ServingStores.ingest(dest, Some(Dedup.simHash(batch, idCol, textCol)),
+      Some("doc" -> batch.select(col(idCol))))
 
-  /** Fold accumulated appended files into one doc-sorted generation with
-    * tombstoned versions physically purged and the tombstones cleared —
-    * bounded file count, doc min/max row-group stats restored. Atomic
-    * under the staleness stamp ([[graft.util.AtomicRewrite]]); excludes
-    * concurrent upserts via the store lock.
+  /** Fold appended files into one doc-sorted file, tombstoned versions
+    * dropped ([[ServingStores.compact]]).
     */
   def compact(spark: SparkSession, dest: String): Unit =
-    StoreLock.withLock(dest, "compact") {
-      val sigs = read(spark, dest).withColumn("__gen", lit(0L))
-      // tombstone clear inside the stamp-guarded transaction (folded rows
-      // are at generation 0 — a crash between swap and clear would leave
-      // gen >= 1 tombstones anti-joining live rows away)
-      graft.util.AtomicRewrite.rewrite(dest, dest + "/sig.parquet",
-        inTxn = () => Tombstones.clear(dest)) { tmp =>
-        sigs.repartitionByRange(col("doc"))
-          .sortWithinPartitions(col("doc"))
-          .write.mode("overwrite").parquet(tmp)
-      }
-    }
+    ServingStores.compact(spark, dest)
 }

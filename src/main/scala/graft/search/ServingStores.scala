@@ -9,18 +9,17 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.json4s.{DefaultFormats, Formats, JArray, JInt, JObject, JString, JValue}
 import org.json4s.jackson.JsonMethods
 
-/** Persisted request-time layouts for the two non-keyword REST routes —
-  * the serving-store treatment [[BM25Index]] gives the keyword route
-  * (round-10 verdict item 7), applied to exact-match and FK-expansion
-  * queries. There is ONE layout: rows partitioned by
+/** The engine's keyed store: a table keyed on one column, bucketed by
   * `pmod(hash(CAST(key AS STRING)), buckets)` and sorted within each
-  * bucket by (key ascending, sort columns descending). A probe computes
-  * its keys' buckets on the driver and opens ONLY the files those
-  * buckets list in the store's manifest, through the persisted schema —
-  * no directory listing, no schema inference, no Spark job before the
-  * first row is read — and min/max row-group stats cut inside them.
-  * Hashing the key's string form on BOTH build and probe sides makes
-  * the bucket function insensitive to the key column's physical type.
+  * bucket by (key ascending, sort columns descending), written with
+  * generations and tombstones, folded and committed by manifest. A
+  * probe computes its keys' buckets on the driver and opens ONLY the
+  * files those buckets list in the store's manifest, through the
+  * persisted schema — no directory listing, no schema inference, no
+  * Spark job before the first row is read — and min/max row-group stats
+  * cut inside them. Hashing the key's string form on BOTH build and
+  * probe sides makes the bucket function insensitive to the key column's
+  * physical type.
   *
   *  - TIMELINE store ([[buildTimeline]]/[[timelineProbe]]): the fact
   *    table keyed on a foreign key — the user-timeline route's FK
@@ -31,6 +30,12 @@ import org.json4s.jackson.JsonMethods
   *    the hashtag route's `tweetHashtags:'<tag>'` shape. Request cost is
   *    the matching postings, never an `array_contains` scan of the
   *    corpus.
+  *  - Signature and ANN stores — [[graft.dedup.SimHashStore]] (key
+  *    `doc`), [[graft.similarity.SrpStore]] (`vec_id`),
+  *    [[graft.similarity.Sq8Store]] (`vid`) in ONE bucket, read whole
+  *    through [[read]]; [[graft.similarity.SrpLabelStore]] keyed on
+  *    `label` in 16, its filtered search a [[timelineProbe]] — are thin
+  *    clients of the timeline store.
   *
   * == The commit model (Lucene's `segments_N`, the Delta Lake log) ==
   *
@@ -302,9 +307,10 @@ object ServingStores {
 
   /** The one write path of append/upsert/delete: `rows` and `replace`'s
     * (identity column, ids) tombstones at the next generation, staged
-    * and committed together.
+    * and committed together. A family whose rows are derived from a batch
+    * (one signature per doc) passes the batch's ids as `replace`.
     */
-  private def ingest(dest: String, rows: Option[DataFrame],
+  private[graft] def ingest(dest: String, rows: Option[DataFrame],
                      replace: Option[(String, DataFrame)]): Unit = {
     val m = log.latest(dest)
     val gen = m.gen + 1
@@ -324,6 +330,16 @@ object ServingStores {
       cur.copy(gen = gen, idCol = idCol.orElse(cur.idCol),
         files = cur.files ++ files, tombstones = cur.tombstones ++ tombs)
     }
+  }
+
+  /** Every live row of the store — the whole-table read of the stores
+    * whose consumers scan all of it: every listed file, tombstones
+    * applied, `__bucket` and `__gen` dropped.
+    */
+  def read(spark: SparkSession, dest: String): DataFrame = {
+    val m = log.latest(dest)
+    m.dropDead(spark, dest, m.scan(spark, dest, m.files), m.idCol.orNull)
+      .drop("__bucket", "__gen")
   }
 
   /** All fact rows for one FK value — a scan of the value's one bucket's

@@ -82,17 +82,21 @@ object StoreAdmin {
     * merges), where round 12 left only per-store verbs and nothing
     * deciding WHEN. Policy per family:
     *
-    *  - FLAT artifact tables (SimHash/SRP signatures, PQ codes, IVF
-    *    vectors+byid): fold when the table holds ≥ `foldAtGenerations`
+    *  - FLAT artifact tables (PQ codes, IVF / IVF-PQ / IVF-SQ8 vectors,
+    *    codes and byid): fold when the table holds ≥ `foldAtGenerations`
     *    WRITE GENERATIONS (distinct parquet job UUIDs — an absolute file
     *    count would misread a parallel base write as fragmentation).
     *  - BM25 indexes: fold whenever an appended segment exists (the
     *    per-query merge-read cost is per segment; compact ≡ merged-serve
     *    is spec-pinned, so folding never changes results).
-    *  - Serving layouts (postings/timelines, incl. the incr/upsert
-    *    twins): selective hot-bucket compaction at `minFiles`, upgraded
-    *    to a FULL fold whenever tombstones exist (a full pass is what
-    *    clears them).
+    *  - Keyed stores ([[ServingStores]]): selective hot-bucket
+    *    compaction, upgraded to a FULL fold whenever tombstones exist (a
+    *    full pass is what clears them). Serving layouts
+    *    (postings/timelines, incl. the incr/upsert twins) fold buckets
+    *    holding ≥ `minFiles` files; the signature and ANN stores
+    *    (SimHash, SRP and its twins, SRP-label, SQ8) at
+    *    `foldAtGenerations`, since every write adds one file per bucket —
+    *    a bucket's file count is its write generations.
     *
     * The thresholds are PARAMETERS because a real merge policy is tuned
     * per deployment (Lucene's tiered-merge factors): a write-heavy tier
@@ -126,16 +130,6 @@ object StoreAdmin {
         log += s"fold $root/$sub"
       }
     }
-    val simhash = graft.dedup.SimHashStore.defaultDir(sfDir)
-    sweepFlat(simhash, "sig.parquet",
-      d => graft.dedup.SimHashStore.compact(spark, d))
-    for (suffix <- Seq("", "__incr", "__stream")) {
-      val srp = graft.similarity.SrpStore.defaultDir(sfDir) + suffix
-      sweepFlat(srp, "sig.parquet",
-        d => graft.similarity.SrpStore.compact(spark, d))
-    }
-    sweepFlat(graft.similarity.SrpLabelStore.defaultDir(sfDir), "sig.parquet",
-      d => graft.similarity.SrpLabelStore.compact(spark, d))
     for (suffix <- Seq("", "__incr", "__auto")) {
       val ivf = graft.similarity.IvfStore.defaultDir(sfDir) + suffix
       sweepFlat(ivf, "byid.parquet",
@@ -152,8 +146,6 @@ object StoreAdmin {
       sweepFlat(pq, "codes.parquet",
         d => graft.similarity.PqStore.compact(spark, d))
     }
-    sweepFlat(graft.similarity.Sq8Store.defaultDir(sfDir), "codes.parquet",
-      d => graft.similarity.Sq8Store.compact(spark, d))
     for (suffix <- Seq("", "__auto")) {
       val ivfsq8 = graft.similarity.IvfSq8Store.defaultDir(sfDir) + suffix
       sweepFlat(ivfsq8, "codes.parquet",
@@ -169,19 +161,24 @@ object StoreAdmin {
       BM25Index.compact(spark, bm)
       log += s"fold $bm (segments)"
     }
-    for (name <- Seq("doc_postings", "doc_postings_incr", "doc_postings_upsert",
-        "orders_by_cust", "orders_by_cust_incr", "orders_by_cust_upsert")) {
-      val d = s"${ServingStores.defaultDir(sfDir)}/$name"
+    def sweepKeyed(d: String, foldAt: Int): Unit =
       if (StoreFs.isDirectory(Paths.get(d))) {
         if (ServingStores.hasTombstones(d)) {
           ServingStores.compact(spark, d)
           log += s"purge $d"
         } else {
-          val h = ServingStores.compactHotBuckets(spark, d, minFiles)
+          val h = ServingStores.compactHotBuckets(spark, d, foldAt)
           if (h.nonEmpty) log += s"fold $d buckets=${h.mkString(",")}"
         }
       }
-    }
+    for (name <- Seq("doc_postings", "doc_postings_incr", "doc_postings_upsert",
+        "orders_by_cust", "orders_by_cust_incr", "orders_by_cust_upsert"))
+      sweepKeyed(s"${ServingStores.defaultDir(sfDir)}/$name", minFiles)
+    val srp = graft.similarity.SrpStore.defaultDir(sfDir)
+    for (d <- Seq(graft.dedup.SimHashStore.defaultDir(sfDir), srp, srp + "__incr",
+        srp + "__stream", graft.similarity.SrpLabelStore.defaultDir(sfDir),
+        graft.similarity.Sq8Store.defaultDir(sfDir)))
+      sweepKeyed(d, foldAtGenerations)
     // ROUTER RETRAIN (opt-in): the drift audits measured WHAT retraining
     // buys (`q_ann_drift_lloyd_big`: +0.095 recall@10 at production cell
     // counts — loss a rerank cannot recover); this is the hook that
@@ -282,19 +279,20 @@ object StoreAdmin {
     // legacy reclaim: whole store ROOTS orphaned by a defaultDir version
     // bump (v1's degenerate residual codebook; the pre-params.txt layouts
     // superseded when the ANN hyperparameters became persisted build
-    // metadata; the serving layouts and BM25 indexes before the
-    // manifest). Default-path layout only: GRAFT_INDEX_DIR is a
-    // user-chosen root (the family tag rides the path there too now —
-    // StoreDirs — but the old flat env layout mixed store artifacts with
-    // whatever else the user kept there, so a GC may not assume
-    // ownership of anything under it).
+    // metadata; the serving layouts, BM25 indexes and signature/SQ8
+    // stores before the manifest). Default-path layout only:
+    // GRAFT_INDEX_DIR is a user-chosen root (the family tag rides the
+    // path there too now — StoreDirs — but the old flat env layout mixed
+    // store artifacts with whatever else the user kept there, so a GC
+    // may not assume ownership of anything under it).
     // Each root is swept ONLY if it actually looks like an orphaned store
     // of ours ([[isLegacyRoot]]) — never on path name alone: a name-only
     // delete in a general-purpose GC routine could reap a directory that
     // was never ours.
     val legacyRoots = Seq("ivfpq-store-v1", "ivfpq-store-v2",
       "ivfpq-store-v3", "pq-store-v2", "ivf-store-v1", "ivf-store-v2",
-      "sq8-store-v1", "srp-label-v1", "bm25-index-v3", "bm25-index-v4",
+      "sq8-store-v1", "sq8-store-v2", "srp-label-v1", "srp-label-v2",
+      "srp-sig-v1", "simhash-sig-v2", "bm25-index-v3", "bm25-index-v4",
       "bm25-index-v5", "bm25-index-v6", "serving-store-v2", "serving-store-v3")
       .map(v => Paths.get(s"${sys.props("user.dir")}/target/$v"))
     val legacySwept =

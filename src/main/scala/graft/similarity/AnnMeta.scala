@@ -5,8 +5,11 @@ import java.nio.file.Paths
 import graft.util.StoreFs
 
 /** Persisted ANN-store build hyperparameters — `params.txt` (one
-  * `key=value` integer per line) written by every store's `buildAt`
-  * BEFORE any artifact, read back by every probe/append/compact path.
+  * `key=value` integer per line) written by the IVF, PQ, IVF-PQ and
+  * IVF-SQ8 stores' `buildAt` BEFORE any artifact, read back by every
+  * probe/append/compact path. The SRP, SRP-label and SQ8 stores have no
+  * `params.txt`: they are [[graft.search.ServingStores]] timeline stores,
+  * whose manifest persists their one build parameter, the bucket count.
   *
   * Why a file and not object constants: the hyperparameters are part of
   * the INDEX IDENTITY, exactly like the codebook's persisted `ord` map
@@ -32,7 +35,7 @@ object AnnMeta {
   val File = "params.txt"
 
   // metadata IO rides the [[StoreFs]] seam, like every other store
-  // metadata file (_gen/_buckets/_schema)
+  // metadata file
   def write(dest: String, kv: (String, Int)*): Unit = {
     StoreFs.createDirectories(Paths.get(dest))
     StoreFs.writeString(Paths.get(dest, File),

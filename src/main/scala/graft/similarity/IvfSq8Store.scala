@@ -83,7 +83,7 @@ object IvfSq8Store {
       .withColumn("__gen", lit(0L))
     Similarity.centroidFrame(embeddings, "vec_id", "embedding", nCentroids)
       .coalesce(1).write.mode("overwrite").parquet(s"$dest/centroids.parquet")
-    writeCodes(Sq8Store.encoded(embeddings, gen = 0L).drop("__gen")
+    writeCodes(Sq8Store.encoded(embeddings)
       .join(assigned, "vid"), s"$dest/codes.parquet", "overwrite")
     writeById(assigned, s"$dest/byid.parquet", "overwrite", width)
   }
@@ -125,7 +125,7 @@ object IvfSq8Store {
         cents)
       .select(col("vec_id").cast("long").as("vid"), col("cluster"))
       .withColumn("__gen", lit(gen))
-    writeCodes(Sq8Store.encoded(batch, gen).drop("__gen")
+    writeCodes(Sq8Store.encoded(batch)
       .join(assigned, "vid"), s"$dest/codes.parquet", "append")
     writeById(assigned, s"$dest/byid.parquet", "append", width)
   }

@@ -1,7 +1,8 @@
 package graft.similarity
 
 import graft.expressions.GraftFunctions
-import graft.util.{AtomicRewrite, Stamp, StoreLock, Tables}
+import graft.search.ServingStores
+import graft.util.{Stamp, Tables}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
@@ -28,12 +29,12 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * all-zero vector has s = 0 and decodes to itself with no special
   * case: (128−128)·0 = 0 per coordinate).
   *
-  * Maintenance lifecycle (the flat-table family contract, [[SrpStore]]'s
-  * shape): codes are PER-ROW — no trained state — so [[appendBatch]] ≡
-  * full rebuild exactly (spec-asserted), [[upsertBatch]]/[[deleteIds]]
-  * ride the shared [[graft.util.Tombstones]] contract, and [[compact]]
-  * folds to one vid-sorted generation atomically under the staleness
-  * stamp; writers exclude each other via [[graft.util.StoreLock]].
+  * Maintenance lifecycle: the store is a [[graft.search.ServingStores]]
+  * timeline store keyed on `vid` in one bucket, read whole — codes are
+  * PER-ROW, no trained state, so [[appendBatch]] ≡ full rebuild exactly
+  * (spec-asserted), [[upsertBatch]]/[[deleteIds]] are that store's
+  * id-keyed overwrite and delete, and [[compact]] folds to one
+  * vid-sorted file; every write commits through its manifest.
   *
   * Scale shape: the candidate pass is ONE projection over the codes
   * scan (decode + dot ride whole-stage codegen; no shuffle before the
@@ -46,9 +47,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 object Sq8Store {
 
   def defaultDir(sfDir: String): String = {
-    // v2: range-sorted codes layout (v1 hash-scattered rows; the bump
-    // orphans it so stamped stores can't keep the unsorted layout)
-    graft.util.StoreDirs.resolve("sq8-store-v2", sfDir)
+    // v3: a timeline store committed by manifest (v2 range-sorted codes
+    // under its own lock, v1 hash-scattered rows; the bumps orphan them)
+    graft.util.StoreDirs.resolve("sq8-store-v3", sfDir)
   }
 
   /** (vid, code binary[d], scale double) encode projection — the exact
@@ -56,7 +57,8 @@ object Sq8Store {
     * double-cast coordinates, u8 = round(x/s) + 128 (zero vector ⇒ all
     * 128 at s = 0).
     */
-  private[similarity] def encoded(embeddings: DataFrame, gen: Long): DataFrame = {
+  private[similarity] def encoded(embeddings: DataFrame): DataFrame = {
+    GraftFunctions.register(embeddings.sparkSession)
     val v = transform(col("embedding"), x => x.cast("double"))
     val scale = array_max(transform(v, x => abs(x))) / lit(127.0)
     val u8 = when(scale === 0.0, transform(v, _ => lit(128)))
@@ -64,7 +66,6 @@ object Sq8Store {
     embeddings.select(col("vec_id").cast("long").as("vid"),
       call_function("graft_u8_bytes", u8).as("code"),
       scale.as("scale"))
-      .withColumn("__gen", lit(gen))
   }
 
   /** Dequantized coordinates from the packed codes: (u−128)·s, the
@@ -75,74 +76,31 @@ object Sq8Store {
     transform(call_function("graft_bytes_u8", col("code")),
       u => (u.cast("double") - lit(128.0)) * col("scale"))
 
-  /** Materialize the packed codes at `dest`; generation 0, stale
-    * tombstones cleared, dim persisted as index identity ([[AnnMeta]]).
-    */
-  def buildAt(dest: String, embeddings: DataFrame): Unit = {
-    GraftFunctions.register(embeddings.sparkSession)
-    val dim = embeddings.select(size(col("embedding"))).head().getInt(0)
-    AnnMeta.write(dest, "dim" -> dim)
-    graft.util.Tombstones.clear(dest)
-    // range-sorted by vid (the SrpStore/SimHashStore family layout):
-    // min/max row-group stats stay usable and files stay bounded —
-    // repartition-by-hash on a unique key would scatter rows unsorted
-    encoded(embeddings, gen = 0L)
-      .repartitionByRange(col("vid"))
-      .sortWithinPartitions(col("vid"))
-      .write.mode("overwrite").parquet(s"$dest/codes.parquet")
-  }
+  /** Materialize the packed codes as a fresh store at `dest`. */
+  def buildAt(dest: String, embeddings: DataFrame): Unit =
+    ServingStores.buildTimeline(encoded(embeddings), "vid", dest, buckets = 1)
 
   /** Append a NEW batch's codes at batch cost — exact by construction
     * (per-row encode: no trained state, so append ≡ rebuild exactly).
     */
   def appendBatch(spark: SparkSession, dest: String, batch: DataFrame): Unit =
-    StoreLock.withLock(dest, "append") {
-      GraftFunctions.register(spark)
-      encoded(batch, graft.util.Tombstones.nextGen(dest))
-        .repartitionByRange(col("vid"))
-        .sortWithinPartitions(col("vid"))
-        .write.mode("append").parquet(s"$dest/codes.parquet")
-    }
+    ServingStores.appendTimeline(encoded(batch), dest)
 
-  /** Id-keyed overwrite (shared [[graft.util.Tombstones]] contract):
-    * tombstone-first, re-encode at the same generation.
+  /** Id-keyed overwrite: the batch's ids are tombstoned and re-encoded in
+    * one commit.
     */
   def upsertBatch(spark: SparkSession, dest: String, batch: DataFrame): Unit =
-    StoreLock.withLock(dest, "append") {
-      GraftFunctions.register(spark)
-      val gen = graft.util.Tombstones.nextGen(dest)
-      graft.util.Tombstones.write(batch.select(col("vec_id")), dest, gen)
-      encoded(batch, gen)
-        .repartitionByRange(col("vid"))
-        .sortWithinPartitions(col("vid"))
-        .write.mode("append").parquet(s"$dest/codes.parquet")
-    }
+    ServingStores.upsertTimeline(encoded(batch), "vid", dest)
 
-  /** Tombstone-only delete; purged physically at the next [[compact]]. */
+  /** Tombstone-only delete; purged at the next [[compact]]. */
   def deleteIds(spark: SparkSession, dest: String, ids: Seq[Long]): Unit =
-    StoreLock.withLock(dest, "append") {
-      import spark.implicits._
-      graft.util.Tombstones.write(ids.toDF("vec_id"), dest,
-        graft.util.Tombstones.nextGen(dest))
-    }
+    ServingStores.deleteIds(spark, dest, "vid", ids)
 
-  private def liveCodes(spark: SparkSession, dest: String): DataFrame =
-    graft.util.Tombstones.dropDead(spark, dest,
-      spark.read.parquet(s"$dest/codes.parquet"), "vid").drop("__gen")
-
-  /** Fold to one generation, tombstoned rows purged, tombstones cleared
-    * inside the stamp-guarded transaction (the family invariant).
+  /** Fold to one vid-sorted file, tombstoned rows dropped
+    * ([[ServingStores.compact]]).
     */
   def compact(spark: SparkSession, dest: String): Unit =
-    StoreLock.withLock(dest, "compact") {
-      val codes = liveCodes(spark, dest).withColumn("__gen", lit(0L))
-      AtomicRewrite.rewrite(dest, s"$dest/codes.parquet",
-        inTxn = () => graft.util.Tombstones.clear(dest)) { tmp =>
-        codes.repartitionByRange(col("vid"))
-          .sortWithinPartitions(col("vid"))
-          .write.mode("overwrite").parquet(tmp)
-      }
-    }
+    ServingStores.compact(spark, dest)
 
   /** Build-if-absent-or-stale; returns the store directory. */
   def ensureBuilt(spark: SparkSession, sfDir: String): String = {
@@ -170,7 +128,7 @@ object Sq8Store {
       expr("CAST(embedding AS ARRAY<DOUBLE>)").as("v"))
     val qv = withV.filter(col("vid") === queryId)
       .select(col("v").as("qv"))
-    val cands = liveCodes(spark, dest)
+    val cands = ServingStores.read(spark, dest)
       .filter(col("vid") =!= queryId)
       .withColumn("__dq", decodeCol)
       .crossJoin(broadcast(qv))
@@ -202,7 +160,7 @@ object Sq8Store {
       expr("CAST(embedding AS ARRAY<DOUBLE>)").as("v"))
     val qs = withV.filter(col("vid") < maxQid)
       .select(col("vid").as("qid"), col("v").as("qv"))
-    val cands = liveCodes(spark, dest)
+    val cands = ServingStores.read(spark, dest)
       .withColumn("__dq", decodeCol)
       .crossJoin(broadcast(qs))
       .filter(col("vid") =!= col("qid"))

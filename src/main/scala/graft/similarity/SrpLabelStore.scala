@@ -1,8 +1,9 @@
 package graft.similarity
 
-import graft.util.{AtomicRewrite, Stamp, StoreLock, Tables}
+import graft.search.ServingStores
+import graft.util.{Stamp, Tables}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** SRP sketch store PARTITIONED BY A HASH BUCKET OF THE FILTER COLUMN —
   * the physical escalation for filtered vector search that
@@ -24,141 +25,80 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * FAISS IDSelector over per-shard indexes), measured per stratum by
   * `q_ann_filtered_recall_part`.
   *
-  * v2 layout — the HIGH-CARDINALITY story (round-15 verdict item 3):
-  * v1 partitioned by the RAW label, which is correct for tens to
-  * thousands of labels and a metadata bomb at tenant-id cardinality
-  * (10^6 labels ⇒ 10^6 partition directories the filesystem and the
-  * planner both choke on). v2 partitions by `label_bucket =
-  * pmod(crc32(label), labelBuckets)` — a BOUNDED directory count at ANY
-  * label cardinality — and keeps the label as a DATA column leading the
-  * within-bucket sort, so the exact predicate rides the pruned scan and
-  * row-group min/max stats skip the bucket's other labels (the
-  * [[graft.search.BM25Index]] termBucket precedent, which bounds 10^6+
-  * distinct terms the same way). A filtered query reads ~1/labelBuckets
-  * of the corpus from disk regardless of how many labels exist; the
-  * bucket count is a BUILD parameter persisted in [[AnnMeta]] (index
-  * identity: a prober or appender with a different count would prune to
-  * the wrong directory), sized ∝ corpus like every bucket count in the
-  * family.
+  * Layout — the HIGH-CARDINALITY story (round-15 verdict item 3): v1
+  * partitioned by the RAW label, a metadata bomb at tenant-id
+  * cardinality (10^6 labels ⇒ 10^6 partition directories). The store is
+  * a [[graft.search.ServingStores]] timeline store keyed on `label`:
+  * rows are bucketed by the hash of the label's string form — a BOUNDED
+  * directory count at ANY label cardinality — and sorted by label within
+  * each bucket, so the filtered search is one
+  * [[graft.search.ServingStores.timelineProbe]]: it opens only the
+  * label's bucket's listed files and the exact label equality rides the
+  * scan, row-group min/max stats skipping the bucket's other labels. A
+  * filtered query reads ~1/buckets of the corpus from disk regardless
+  * of how many labels exist. The bucket count is a BUILD parameter the
+  * manifest persists (index identity: a prober or appender reads it
+  * back, so it can never route to the wrong bucket), sized ∝ corpus like
+  * every bucket count in the family.
   *
-  * Maintenance lifecycle: [[SrpStore]]'s flat-family contract with the
-  * bucket riding as the partition column — per-row signatures mean
-  * append ≡ rebuild exactly; upsert/delete via the shared
-  * [[graft.util.Tombstones]]; [[compact]] folds each bucket to one
-  * sorted generation atomically under the staleness stamp, re-deriving
-  * the bucket from the label every write (never persisting a stale
-  * mapping — the byid bucket-column argument). A label edit is an
-  * upsert (the new row lands in the new label's bucket; the tombstone
-  * kills the old row wherever it lives — tombstones are id-keyed, not
-  * partition-keyed).
+  * Maintenance lifecycle: [[SrpStore]]'s contract with the label as the
+  * key — per-row signatures mean append ≡ rebuild exactly;
+  * upsert/delete through the store's id-keyed tombstones (on `vec_id`);
+  * [[compact]] folds each fragmented bucket to one sorted file. A label
+  * edit is an upsert (the new row lands in the new label's bucket; the
+  * tombstone kills the old row wherever it lives — tombstones are
+  * id-keyed, not bucket-keyed).
   */
 object SrpLabelStore {
 
-  /** Build-time default — the REAL count lives in the store's
-    * [[AnnMeta]] (a 100-TB tenant store passes buckets ∝ corpus so a
-    * bucket's slice stays scannable; the default keeps small-SF builds
-    * wide enough to exercise the pruned read).
+  /** Build-time default — the REAL count lives in the store's manifest
+    * (a 100-TB tenant store passes buckets ∝ corpus so a bucket's slice
+    * stays scannable; the default keeps small-SF builds wide enough to
+    * exercise the pruned read).
     */
   val DefaultLabelBuckets = 16
 
   def defaultDir(sfDir: String): String = {
-    // v2: hash-bucketed composite layout (v1 partitioned by the raw
-    // label — unbounded directory count at tenant-id cardinality; the
-    // bump orphans it and gcOrphans reclaims the root)
-    graft.util.StoreDirs.resolve("srp-label-v2", sfDir)
+    // v3: a timeline store keyed on label (v2 partitioned by
+    // pmod(crc32(label)) under its own lock; v1 by the raw label — the
+    // bumps orphan them and gcOrphans reclaims the roots)
+    graft.util.StoreDirs.resolve("srp-label-v3", sfDir)
   }
 
-  /** The bucket of a label, as a Column at build time and on the driver
-    * at query time (java.util.zip.CRC32 and Spark's `crc32` share the
-    * polynomial — the BM25 termBucket contract).
-    */
-  def labelBucketCol(label: Column, buckets: Int): Column =
-    pmod(crc32(label.cast("string")), lit(buckets)).cast("int")
-
-  def labelBucket(label: Int, buckets: Int): Int = {
-    val c = new java.util.zip.CRC32()
-    c.update(label.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    (c.getValue % buckets).toInt
-  }
-
-  // bucket leads the sort so the dynamic-partition writer's required
-  // ordering is pre-satisfied; label then vid inside, so a bucket's
-  // row groups cluster by label (min/max stats skip foreign labels)
-  // and point reads prune further by vid. The bucket column is DERIVED
-  // from the label every write, never read back.
-  private def writeSigs(embWithLabel: DataFrame, path: String, mode: String,
-                        gen: Long, buckets: Int): Unit =
+  private def signatures(embWithLabel: DataFrame): DataFrame =
     Similarity.srpSignature(embWithLabel, "embedding")
       .select(col("vec_id"), col("__w0"), col("__w1"), col("__w2"),
         col("__w3"), col("label"))
-      .withColumn("__gen", lit(gen))
-      .withColumn("label_bucket", labelBucketCol(col("label"), buckets))
-      .repartition(col("label_bucket"))
-      .sortWithinPartitions(col("label_bucket"), col("label"), col("vec_id"))
-      .write.mode(mode).partitionBy("label_bucket").parquet(path)
 
   def buildAt(dest: String, embeddings: DataFrame,
-              labelBuckets: Int = DefaultLabelBuckets): Unit = {
-    AnnMeta.write(dest, "labelBuckets" -> labelBuckets)
-    graft.util.Tombstones.clear(dest)
-    writeSigs(embeddings, s"$dest/sig.parquet", "overwrite", gen = 0L,
+              labelBuckets: Int = DefaultLabelBuckets): Unit =
+    ServingStores.buildTimeline(signatures(embeddings), "label", dest,
       buckets = labelBuckets)
-  }
 
   /** Append a NEW batch — exact by construction (per-row signatures). */
   def appendBatch(dest: String, batch: DataFrame): Unit =
-    StoreLock.withLock(dest, "append") {
-      writeSigs(batch, s"$dest/sig.parquet", "append",
-        graft.util.Tombstones.nextGen(dest),
-        AnnMeta.readKey(dest, "labelBuckets"))
-    }
+    ServingStores.appendTimeline(signatures(batch), dest)
 
   /** Id-keyed overwrite; handles label EDITS (the tombstone is id-keyed,
     * so the old row dies in its old label's bucket and the new one lands
     * in the new label's).
     */
   def upsertBatch(spark: SparkSession, dest: String, batch: DataFrame): Unit =
-    StoreLock.withLock(dest, "append") {
-      val gen = graft.util.Tombstones.nextGen(dest)
-      graft.util.Tombstones.write(batch.select(col("vec_id")), dest, gen)
-      writeSigs(batch, s"$dest/sig.parquet", "append", gen,
-        AnnMeta.readKey(dest, "labelBuckets"))
-    }
+    ServingStores.upsertTimeline(signatures(batch), "vec_id", dest)
 
   /** Tombstone-only delete; purged at the next [[compact]]. */
   def deleteIds(spark: SparkSession, dest: String, ids: Seq[Long]): Unit =
-    StoreLock.withLock(dest, "append") {
-      import spark.implicits._
-      graft.util.Tombstones.write(ids.toDF("vec_id"), dest,
-        graft.util.Tombstones.nextGen(dest))
-    }
+    ServingStores.deleteIds(spark, dest, "vec_id", ids)
 
-  /** Live signatures (vec_id, __w0..3, label) — dead generations
-    * dropped, `__gen` and the layout's bucket column stripped.
-    */
+  /** Live signatures (vec_id, __w0..3, label). */
   def read(spark: SparkSession, dest: String): DataFrame =
-    graft.util.Tombstones.dropDead(spark, dest,
-      spark.read.parquet(s"$dest/sig.parquet"), "vec_id")
-      .drop("__gen", "label_bucket")
+    ServingStores.read(spark, dest)
 
-  /** Fold each bucket to one (label, vid)-sorted generation with
-    * tombstoned rows purged; atomic under the staleness stamp. The
-    * bucket is re-derived from the label, so a compact can never
-    * persist a stale mapping.
+  /** Fold each fragmented bucket to one (label)-sorted file, tombstoned
+    * rows dropped ([[ServingStores.compact]]).
     */
   def compact(spark: SparkSession, dest: String): Unit =
-    StoreLock.withLock(dest, "compact") {
-      val buckets = AnnMeta.readKey(dest, "labelBuckets")
-      val sigs = read(spark, dest).withColumn("__gen", lit(0L))
-        .withColumn("label_bucket", labelBucketCol(col("label"), buckets))
-      AtomicRewrite.rewrite(dest, s"$dest/sig.parquet",
-        inTxn = () => graft.util.Tombstones.clear(dest)) { tmp =>
-        sigs.repartition(col("label_bucket"))
-          .sortWithinPartitions(col("label_bucket"), col("label"),
-            col("vec_id"))
-          .write.mode("overwrite").partitionBy("label_bucket").parquet(tmp)
-      }
-    }
+    ServingStores.compact(spark, dest)
 
   /** Build-if-absent-or-stale; returns the store directory. */
   def ensureBuilt(spark: SparkSession, sfDir: String): String = {
@@ -172,11 +112,11 @@ object SrpLabelStore {
   }
 
   /** [[Similarity.srpTopKFiltered]] (pred = same label as the query)
-    * served from the bucketed store: identical results, but the sketch
-    * scan reads ONE bucket directory — the query's label is a
-    * serving-boundary point read whose bucket becomes the
-    * partition-pruning literal, and the exact label equality rides the
-    * within-bucket scan over the label-led sort (plan-asserted in the
+    * served from the keyed store: identical results, but the sketch
+    * scan is the query label's [[ServingStores.timelineProbe]] — the
+    * label is a serving-boundary point read whose bucket picks the ONE
+    * bucket's files to open, and the exact label equality rides the
+    * within-bucket scan over the label-led sort (asserted in the
     * lifecycle spec).
     */
   def topKFilteredAt(spark: SparkSession, dest: String, emb: DataFrame,
@@ -184,13 +124,9 @@ object SrpLabelStore {
                      radius: Int = Similarity.SrpRadius): DataFrame = {
     val qLabel = emb.filter(col("vec_id") === queryId)
       .select(col("label")).head().getInt(0)
-    val buckets = AnnMeta.readKey(dest, "labelBuckets")
-    val sigs = graft.util.Tombstones.dropDead(spark, dest,
-        spark.read.parquet(s"$dest/sig.parquet"), "vec_id")
-      .filter(col("label_bucket") === lit(labelBucket(qLabel, buckets)))
-      .filter(col("label") === lit(qLabel))
-      .drop("__gen", "label_bucket", "label")
-    SrpStore.topKOver(sigs, emb, queryId, k, radius)
+    SrpStore.topKOver(
+      ServingStores.timelineProbe(spark, dest, "label", qLabel).drop("label"),
+      emb, queryId, k, radius)
   }
 
   def topKFiltered(spark: SparkSession, sfDir: String, queryId: Long, k: Int,

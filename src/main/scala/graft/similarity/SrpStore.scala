@@ -1,6 +1,7 @@
 package graft.similarity
 
-import graft.util.{AtomicRewrite, Stamp, StoreLock, Tables}
+import graft.search.ServingStores
+import graft.util.{Stamp, Tables}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -13,15 +14,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * vectors for exact rerank of the Hamming-ball survivors — the raw
   * 256-byte embedding column is never scanned for filtering.
   *
-  * Maintenance lifecycle (the [[graft.search.ServingStores]] contract
-  * applied to the ANN family): [[appendBatch]] adds a new batch's
-  * signatures at batch cost — EXACT by construction, since a row's
-  * sketch depends only on that row (the hyperplanes are plan-time
-  * md5-derived constants), so append ≡ full rebuild byte-for-byte
-  * (spec-asserted); [[compact]] folds accumulated small files into one
-  * range-sorted generation (vec_id min/max row-group pruning restored
-  * for the query-point lookup), atomically with the staleness stamp as
-  * the swap sentinel ([[AtomicRewrite]]).
+  * The store is a [[ServingStores]] timeline store keyed on `vec_id` in
+  * one bucket, read whole, so its writes commit through that store's
+  * manifest: [[appendBatch]] adds a new batch's signatures at batch
+  * cost — EXACT by construction, since a row's sketch depends only on
+  * that row (the hyperplanes are plan-time md5-derived constants), so
+  * append ≡ full rebuild byte-for-byte (spec-asserted);
+  * [[upsertBatch]]/[[deleteIds]] are its id-keyed overwrite and delete;
+  * [[compact]] folds accumulated small files into one vec_id-sorted file
+  * (min/max row-group pruning restored for the query-point lookup).
   *
   * Freshness follows the family pattern: a (name, size, mtime) stamp of
   * the source parquet; repeated suite runs reuse the artifact, a
@@ -30,20 +31,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object SrpStore {
 
   def defaultDir(sfDir: String): String = {
-    graft.util.StoreDirs.resolve("srp-sig-v1", sfDir)
+    graft.util.StoreDirs.resolve("srp-sig-v2", sfDir)
   }
 
-  /** Materialize the signature table for `embeddings` at `dest` — the
-    * dest-level build [[ensureBuilt]] wraps with the staleness stamp.
-    * Rows at generation 0; stale tombstones cleared.
-    */
-  def buildAt(dest: String, embeddings: DataFrame): Unit = {
-    graft.util.Tombstones.clear(dest)
+  private def signatures(embeddings: DataFrame): DataFrame =
     Similarity.srpSignature(embeddings, "embedding")
       .select(col("vec_id"), col("__w0"), col("__w1"), col("__w2"), col("__w3"))
-      .withColumn("__gen", lit(0L))
-      .write.mode("overwrite").parquet(dest + "/sig.parquet")
-  }
+
+  /** Materialize the signature table for `embeddings` as a fresh store at
+    * `dest` — the dest-level build [[ensureBuilt]] wraps with the
+    * staleness stamp.
+    */
+  def buildAt(dest: String, embeddings: DataFrame): Unit =
+    ServingStores.buildTimeline(signatures(embeddings), "vec_id", dest,
+      buckets = 1)
 
   /** Append a NEW batch's signatures into an existing store at batch
     * cost. Exact by construction: signatures are per-row, so the
@@ -52,61 +53,29 @@ object SrpStore {
     * overwrite.
     */
   def appendBatch(dest: String, batch: DataFrame): Unit =
-    StoreLock.withLock(dest, "append") {
-      Similarity.srpSignature(batch, "embedding")
-        .select(col("vec_id"), col("__w0"), col("__w1"), col("__w2"), col("__w3"))
-        .withColumn("__gen", lit(graft.util.Tombstones.nextGen(dest)))
-        .write.mode("append").parquet(dest + "/sig.parquet")
-    }
+    ServingStores.appendTimeline(signatures(batch), dest)
 
-  /** Id-keyed overwrite ([[graft.util.Tombstones]] contract): the batch's ids
-    * are tombstoned then re-signed at the same generation — an EDITED
-    * vector's sketch replaces its predecessor on the next read.
+  /** Id-keyed overwrite: the batch's ids are tombstoned and re-signed in
+    * one commit — an EDITED vector's sketch replaces its predecessor.
     */
   def upsertBatch(spark: SparkSession, dest: String, batch: DataFrame): Unit =
-    StoreLock.withLock(dest, "append") {
-      val gen = graft.util.Tombstones.nextGen(dest)
-      graft.util.Tombstones.write(batch.select(col("vec_id")), dest, gen)
-      Similarity.srpSignature(batch, "embedding")
-        .select(col("vec_id"), col("__w0"), col("__w1"), col("__w2"), col("__w3"))
-        .withColumn("__gen", lit(gen))
-        .write.mode("append").parquet(dest + "/sig.parquet")
-    }
+    ServingStores.upsertTimeline(signatures(batch), "vec_id", dest)
 
   /** Tombstone-only delete; purged at the next [[compact]]. */
   def deleteIds(spark: SparkSession, dest: String, ids: Seq[Long]): Unit =
-    StoreLock.withLock(dest, "append") {
-      import spark.implicits._
-      graft.util.Tombstones.write(ids.toDF("vec_id"), dest,
-        graft.util.Tombstones.nextGen(dest))
-    }
+    ServingStores.deleteIds(spark, dest, "vec_id", ids)
 
-  /** The store's live signatures — dead generations dropped, `__gen`
-    * stripped (what [[topK]]/[[ensureBuilt]] hand to consumers).
+  /** The store's live (vec_id, __w0..__w3) signatures (what
+    * [[topK]]/[[ensureBuilt]] hand to consumers).
     */
   def read(spark: SparkSession, dest: String): DataFrame =
-    graft.util.Tombstones.dropDead(spark, dest,
-      spark.read.parquet(dest + "/sig.parquet"), "vec_id").drop("__gen")
+    ServingStores.read(spark, dest)
 
-  /** Fold accumulated appended files into one range-sorted generation
-    * with tombstoned rows physically purged and the tombstones cleared:
-    * bounded file count, vec_id min/max stats restored. Atomic via the
-    * stamp-sentinel swap; excludes concurrent writers via the store
-    * lock.
+  /** Fold accumulated appended files into one vec_id-sorted file with
+    * tombstoned rows dropped ([[ServingStores.compact]]).
     */
   def compact(spark: SparkSession, dest: String): Unit =
-    StoreLock.withLock(dest, "compact") {
-      val sigs = read(spark, dest).withColumn("__gen", lit(0L))
-      // tombstone clear inside the stamp-guarded transaction (folded rows
-      // are at generation 0 — a crash between swap and clear would leave
-      // gen >= 1 tombstones anti-joining live rows away)
-      AtomicRewrite.rewrite(dest, dest + "/sig.parquet",
-        inTxn = () => graft.util.Tombstones.clear(dest)) { tmp =>
-        sigs.repartitionByRange(col("vec_id"))
-          .sortWithinPartitions(col("vec_id"))
-          .write.mode("overwrite").parquet(tmp)
-      }
-    }
+    ServingStores.compact(spark, dest)
 
   /** Build-if-absent-or-stale; returns the (vec_id, __w0..__w3) signature
     * table read from the store.
@@ -125,17 +94,18 @@ object SrpStore {
     * compaction (the [[graft.search.BM25Index.ensureBuiltIncremental]]
     * pattern) — `q_ann_lsh_incr` serves from it with `q_ann_lsh`'s
     * oracle verbatim, putting append ≡ rebuild under the driver hash
-    * gate. A rebuild wipes dest first.
+    * gate. A rebuild starts a fresh store, and the job ends by
+    * reclaiming what its fold unlisted.
     */
   def ensureBuiltIncremental(spark: SparkSession, sfDir: String): DataFrame = {
     val dest = defaultDir(sfDir) + "__incr"
     val stamp = Stamp.sourceStamp(sfDir, "embeddings.parquet")
     if (!Stamp.isFresh(dest, stamp)) {
-      graft.search.StoreAdmin.truncate(dest)
       val emb = Tables.embeddings(spark, sfDir)
       buildAt(dest, emb.filter(col("vec_id") % 5 =!= 0))
       appendBatch(dest, emb.filter(col("vec_id") % 5 === 0))
       compact(spark, dest)
+      graft.search.StoreAdmin.reclaim(dest)
       Stamp.write(dest, stamp)
     }
     read(spark, dest)
@@ -150,15 +120,14 @@ object SrpStore {
     * apply is this store's own [[upsertBatch]]. Serves with
     * `q_ann_lsh`'s oracle VERBATIM — streamed ingest ≡ batch build
     * exactly, because signatures are per-row and the sink's upserts
-    * only add new ids. Compacted at the end like the __incr twin, so
-    * the served scan is one sorted generation. Batch-boundary order is
-    * irrelevant by construction (disjoint-id upserts commute).
+    * only add new ids. Compacted and reclaimed at the end like the
+    * __incr twin, so the served scan is one sorted file. Batch-boundary
+    * order is irrelevant by construction (disjoint-id upserts commute).
     */
   def ensureBuiltStreamed(spark: SparkSession, sfDir: String): DataFrame = {
     val dest = defaultDir(sfDir) + "__stream"
     val stamp = Stamp.sourceStamp(sfDir, "embeddings.parquet")
     if (!Stamp.isFresh(dest, stamp)) {
-      graft.search.StoreAdmin.truncate(dest)
       val emb = Tables.embeddings(spark, sfDir)
       buildAt(dest, emb.filter(col("vec_id") % 5 =!= 0))
       // the streamed 20%, staged as two source files → two micro-batches
@@ -176,7 +145,9 @@ object SrpStore {
       val q = graft.streaming.StreamSinks.annIngestSink(stream, dest,
         s"$dest/_stream_ckpt", upsertBatch)
       try q.processAllAvailable() finally q.stop()
+      graft.util.StoreFs.deleteRecursively(java.nio.file.Paths.get(staging))
       compact(spark, dest)
+      graft.search.StoreAdmin.reclaim(dest)
       Stamp.write(dest, stamp)
     }
     read(spark, dest)

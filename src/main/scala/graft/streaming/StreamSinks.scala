@@ -144,8 +144,8 @@ object StreamSinks {
     *
     * Replay semantics: foreachBatch may re-execute a batch after a
     * crash. The versioned sinks above anchor replays by reading `v<k>`
-    * (k < N); an ANN store is append-IN-PLACE (store lock, tombstone
-    * generations), so the anchor here is the family's own crash
+    * (k < N); an ANN store is append-IN-PLACE (tombstone generations),
+    * so the anchor here is the family's own crash
     * contract: every batch applies through UPSERT — tombstone-first,
     * strict-older-generation kill — which is exactly the documented
     * recovery for a half-applied append, so a re-executed batch
@@ -153,8 +153,10 @@ object StreamSinks {
     * attempt died (tombstoning the batch ids kills any partial
     * generation before re-adding). An applied-batch marker, written
     * AFTER the upsert, short-circuits clean replays; correctness never
-    * depends on it. The upsert itself takes the store lock, so a
-    * concurrent compactor/retrainer collides loudly, never silently.
+    * depends on it. A concurrent compactor never loses the upsert: a
+    * manifest-committed store (SRP, SQ8) keeps a write committed during
+    * a fold, and a lock-guarded one (IVF-SQ8) rejects the collision
+    * loudly.
     */
   def annIngestSink(stream: DataFrame, dest: String, checkpoint: String,
                     upsert: (org.apache.spark.sql.SparkSession, String,

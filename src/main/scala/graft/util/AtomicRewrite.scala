@@ -3,8 +3,10 @@ package graft.util
 import java.nio.file.Paths
 
 /** Crash-safe full-rewrite swap for the stamp-guarded artifact stores
-  * (ANN stores, signature stores — the [[graft.search.BM25Index]]
-  * compaction ordering argument generalized): each step's new generation
+  * that are not yet manifest-committed — IVF, PQ, IVF-PQ and IVF-SQ8
+  * (the SimHash, SRP, SRP-label and SQ8 stores commit through
+  * [[ManifestLog]] as [[graft.search.ServingStores]] timeline stores
+  * instead). Each step's new generation
   * is materialized into a sibling `<path>-rewrite-tmp` FIRST, then the
   * store's `source_stamp.txt` is removed (invalidating it for every
   * build-if-stale caller), all steps are swapped, and the stamp is

@@ -4,7 +4,7 @@ package graft.util
   * (BM25 inverted index, SimHash/SRP signature stores, the ANN store
   * family, serving layouts, bucket/partition layout demos).
   *
-  * The family tag (e.g. `sq8-store-v2`) rides the path under BOTH
+  * The family tag (e.g. `sq8-store-v3`) rides the path under BOTH
   * roots — the default `target/` root AND a `GRAFT_INDEX_DIR` override.
   * Before this seam, the env override collapsed every family to the
   * identical `$GRAFT_INDEX_DIR/<sf>` directory, and families whose

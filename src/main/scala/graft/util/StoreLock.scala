@@ -7,10 +7,11 @@ import java.nio.file.Paths
   * model from Solr: `SolrIndexer.java:152-158` posts batches against a
   * locked, background-merging index and a second writer fails loudly).
   * Here the lock serializes the writers and whole-table rewrites of the
-  * signature and ANN stores against each other: a collision is
+  * IVF, PQ, IVF-PQ and IVF-SQ8 stores against each other: a collision is
   * an immediate [[IllegalStateException]] naming the holder, never
-  * silent data loss. (The [[ManifestLog]] stores take no lock: their
-  * commit decides every race.)
+  * silent data loss. (The [[ManifestLog]] stores — the serving layouts,
+  * the BM25 index and the SimHash, SRP, SRP-label and SQ8 stores — take
+  * no lock: their commit decides every race.)
   *
   * The lock is a `_maintenance.lock` file inside the store directory,
   * created atomically (`CREATE_NEW`) and carrying `<op> <epochMillis>`.

@@ -7,25 +7,27 @@ import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The ONE implementation of the engine's tombstone contract, shared by
-  * every store family that overwrites or deletes by id (SimHash
-  * signatures, the SRP / IVF / PQ / SQ8 ANN stores, the serving layouts
-  * and the BM25 index): a `(__id, __gen)` side table under
-  * `_tombstones/`, rows carrying the `__gen` that wrote them (a
-  * `_gen.txt` counter, build = 0; the manifest-committed stores — the
-  * serving layouts and the BM25 index — keep their counter and their
-  * tombstone file list in their manifest instead ([[ManifestLog]]) and
-  * [[kill]] against that list), a tombstone killing STRICTLY-older
-  * generations of its id (so an upsert's own rows survive the tombstone written with
+  * every store family that overwrites or deletes by id: a `(__id, __gen)`
+  * side table under `_tombstones/`, rows carrying the `__gen` that wrote
+  * them (build = 0), a tombstone killing STRICTLY-older generations of
+  * its id (so an upsert's own rows survive the tombstone written with
   * them, a crash between tombstone and re-add converges on retry, and a
   * later upsert's tombstone wins), probe-side broadcast anti-join only
-  * when the table holds data, physical purge + clear at each store's
-  * compact (for the manifest stores: unlisted at compact, deleted by
-  * the reclaim after it). Writers hold the store's [[StoreLock]] where the store's
-  * compaction is a whole-table rewrite (no segment model — collisions
-  * must fail loudly). `keyType` is the id column's type (vector ids are
-  * longs, document ids are strings) — both sides of the kill join cast
-  * to it, so key comparison can never be stringly-vs-numerically
-  * inconsistent.
+  * when the table holds data.
+  *
+  * The manifest-committed stores — [[graft.search.ServingStores]] (and
+  * the SimHash, SRP, SRP-label and SQ8 stores built on it) and the BM25
+  * index — keep their generation counter and tombstone file list in
+  * their manifest ([[ManifestLog]]) and [[kill]] against that list; a
+  * fold unlists the tombstones it applied and the reclaim after it
+  * deletes them. The IVF, PQ, IVF-PQ and IVF-SQ8 stores still keep a
+  * `_gen.txt` counter ([[nextGen]]), hold the store's [[StoreLock]]
+  * around writes (their compaction is a whole-table rewrite — collisions
+  * must fail loudly), read the table as listed right now ([[dropDead]])
+  * and purge + [[clear]] it at compact. `keyType` is the id column's type
+  * (vector ids are longs, document ids are strings) — both sides of the
+  * kill join cast to it, so key comparison can never be
+  * stringly-vs-numerically inconsistent.
   */
 object Tombstones {
 

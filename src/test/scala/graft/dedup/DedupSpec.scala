@@ -281,8 +281,7 @@ class DedupSpec extends SparkSpec {
     assert(SimHashStore.read(spark, dest)
       .collect().map(_.toString).sorted.toSeq == editedRebuild)
     SimHashStore.compact(spark, dest)
-    assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(dest, "_tombstones")))
+    assert(!graft.search.ServingStores.hasTombstones(dest))
     assert(SimHashStore.read(spark, dest)
       .collect().map(_.toString).sorted.toSeq == editedRebuild)
   }

@@ -6,7 +6,7 @@ import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.file.Files
 
 import graft.SparkSpec
-import graft.dedup.Dedup
+import graft.dedup.{Dedup, SimHashStore}
 import graft.tweets.{TweetIngest, TweetNormalize, TweetSchema}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -118,7 +118,7 @@ class LiveIngestSpec extends SparkSpec {
     val u0 = Collections.users(processed)
     BM25Index.build(t0, "id", "tweetText", bmDir)
     HttpServing.buildTweetIndex(t0, u0, tidx)
-    Dedup.simHash(t0, "id", "tweetText").write.parquet(s"$sigDir/v0")
+    SimHashStore.buildAt(sigDir, t0, "id", "tweetText")
     t0.write.parquet(s"$collT/v0")
     u0.write.parquet(s"$collU/v0")
 
@@ -155,22 +155,18 @@ class LiveIngestSpec extends SparkSpec {
           val known = s.read.parquet(s"$collT/v$v").select(col("id"))
           val tUpd = tB.join(known, Seq("id"), "left_semi").persist()
           val tNew = tB.join(known, Seq("id"), "left_anti")
-          val baseSig = s.read.parquet(s"$sigDir/v$v")
-          // gate only batches that HAVE new ids (an empty parquet dump
-          // cannot be re-read); an edit-only batch skips it entirely
-          val (tKeep, sigWithNew) =
-            if (tNew.isEmpty) (tB.limit(0).persist(), baseSig)
-            else {
-              val kept = Dedup.simHashIncremental(baseSig, tNew, "id", "tweetText")
-              kept.write.mode("overwrite").parquet(s"$sigDir/kept_$batchId")
-              val keptSig = s.read.parquet(s"$sigDir/kept_$batchId")
-              (tB.join(keptSig.select(col("doc").cast("string").as("id")),
-                Seq("id"), "left_semi").persist(),
-                baseSig.unionByName(keptSig))
-            }
+          // the gate's store is the signature store as of this batch:
+          // the frame names the files listed now, so the appends below
+          // never feed back into it; an edit-only batch skips the gate
+          val tKeep =
+            if (tNew.isEmpty) tB.limit(0).persist()
+            else tB.join(Dedup.simHashIncremental(SimHashStore.read(s, sigDir),
+                  tNew, "id", "tweetText").select(col("doc").cast("string").as("id")),
+                Seq("id"), "left_semi").persist()
           if (!tKeep.isEmpty || !tUpd.isEmpty) {
             val next = v + 1
             if (!tKeep.isEmpty) {
+              SimHashStore.appendBatch(sigDir, tKeep, "id", "tweetText")
               BM25Index.appendSegment(tKeep, "id", "tweetText", bmDir,
                 f"live$batchId%04d")
               HttpServing.appendTweetIndex(tKeep,
@@ -178,6 +174,7 @@ class LiveIngestSpec extends SparkSpec {
                   Seq("id"), "left_semi"), tidx)
             }
             if (!tUpd.isEmpty) {
+              SimHashStore.upsertBatch(s, sigDir, tUpd, "id", "tweetText")
               BM25Index.upsertSegment(tUpd, "id", "tweetText", bmDir,
                 f"edit$batchId%04d")
               HttpServing.upsertTweetIndex(tUpd,
@@ -185,9 +182,6 @@ class LiveIngestSpec extends SparkSpec {
                   Seq("id"), "left_semi"), tidx)
             }
             // versioned side tables: updates replace same-id rows
-            Collections.upsert(sigWithNew,
-                Dedup.simHash(tUpd, "id", "tweetText"), "doc")
-              .write.mode("overwrite").parquet(s"$sigDir/v$next")
             Collections.upsert(s.read.parquet(s"$collT/v$v"),
                 tKeep.unionByName(tUpd), "id")
               .write.mode("overwrite").parquet(s"$collT/v$next")
@@ -219,7 +213,7 @@ class LiveIngestSpec extends SparkSpec {
       val tweetsNow = spark.read.parquet(s"$collT/v$latest")
       val usersNow = spark.read.parquet(s"$collU/v$latest")
       assert(tweetsNow.filter(col("id") === "9001").count() == 1)
-      val sigNow = spark.read.parquet(s"$sigDir/v$latest")
+      val sigNow = SimHashStore.read(spark, sigDir)
       assert(sigNow.filter(col("doc") === "9001").count() == 1)
       // …and the near-dup re-post reached NONE of them
       assert(sigNow.filter(col("doc") === "9002").count() == 0)
@@ -265,7 +259,7 @@ class LiveIngestSpec extends SparkSpec {
         assert(tweetsUpd.filter(col("id") === "9001").count() == 1)
         assert(tweetsUpd.filter(col("id") === "9001")
           .head().getAs[String]("tweetText").contains("wizards"))
-        val sigUpd = spark.read.parquet(s"$sigDir/v$latest")
+        val sigUpd = SimHashStore.read(spark, sigDir)
         assert(sigUpd.filter(col("doc") === "9001").count() == 1)
         assert(sigUpd.filter(col("doc") === "9001").head().getLong(1) ==
           Dedup.simHash(tweetsUpd.filter(col("id") === "9001"),

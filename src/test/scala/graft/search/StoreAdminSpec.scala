@@ -358,7 +358,7 @@ class StoreAdminSpec extends SparkSpec {
       Seq((900001L, "maintain sweep fragmentation probe")).toDF("id", "text"),
       "id", "text")
     val actions = StoreAdmin.maintain(spark, dir)
-    assert(actions.exists(_.contains("sig.parquet")),
+    assert(actions.exists(a => a.startsWith("fold") && a.contains(simhash)),
       s"sweep did not fold the fragmented signature store: $actions")
     // the bm25 __incr fixture keeps its open segment across a sweep (its
     // identity IS base+segment; folding would force a rebuild loop)
@@ -392,7 +392,8 @@ class StoreAdminSpec extends SparkSpec {
     graft.similarity.SrpStore.appendBatch(srp,
       emb.filter(col("vec_id") >= 16)) // 2 write generations now
     val deferred = StoreAdmin.maintain(spark, fakeSf, foldAtGenerations = 3)
-    assert(!deferred.exists(_.contains("srp")),
+    assert(!deferred.exists(a => a.startsWith("fold") && a.contains(srp)) &&
+      ServingStores.dataFileCount(srp) == 2,
       s"foldAtGenerations=3 must defer a 2-generation fold: $deferred")
     val taken = StoreAdmin.maintain(spark, fakeSf)
     assert(taken.exists(a => a.startsWith("fold") && a.contains(srp)),

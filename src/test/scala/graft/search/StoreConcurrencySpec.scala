@@ -17,6 +17,9 @@ import org.scalatest.BeforeAndAfterEach
   * files are staged and before its commit — the exact window the
   * round-12 code destroyed appends in — and through a [[graft.util
   * .StoreFs]] double that runs a rebucket inside an append's commit.
+  * The signature and ANN stores built on the timeline store inherit the
+  * contract; [[graft.dedup.SimHashStore]], the live near-dup gate's
+  * store, is driven through the same hook and a failing manifest create.
   */
 class StoreConcurrencySpec extends SparkSpec with BeforeAndAfterEach {
   import spark.implicits._
@@ -222,6 +225,77 @@ class StoreConcurrencySpec extends SparkSpec with BeforeAndAfterEach {
         "complete old generation after the commit")
     assert(probeIds(dest, "jobs") == Seq(1L, 2L, 3L),
       "the first probe after the swap must serve the new generation")
+    StoreAdmin.truncate(dest)
+  }
+
+  test("a SimHashStore upsert landing DURING its compact survives it — no " +
+      "row lost, the edit's signature wins") {
+    import graft.dedup.{Dedup, SimHashStore}
+    val dest = Files.createTempDirectory("graft-conc-simhash").toString
+    val base = Seq((1L, "alpha beta gamma delta"), (2L, "one two three four"))
+      .toDF("doc_id", "text")
+    val late = Seq((3L, "five six seven eight")).toDF("doc_id", "text")
+    val edit = Seq((2L, "completely different replacement text"))
+      .toDF("doc_id", "text")
+    SimHashStore.buildAt(dest, base, "doc_id", "text")
+    SimHashStore.appendBatch(dest, late, "doc_id", "text")
+    var fired = false
+    ServingStores.testHookBeforeCommit = d => if (!fired) {
+      fired = true
+      SimHashStore.upsertBatch(spark, d, edit, "doc_id", "text")
+    }
+    SimHashStore.compact(spark, dest)
+    assert(fired, "the interleaved upsert never ran")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toString).sorted.toSeq
+    val expected = rows(Dedup.simHash(
+      base.filter(col("doc_id") =!= 2L).unionAll(edit).unionAll(late),
+      "doc_id", "text"))
+    assert(rows(SimHashStore.read(spark, dest)) == expected,
+      "a row was lost or the stale signature of doc 2 still serves")
+    // the next compact folds the upsert in and applies its tombstone
+    ServingStores.testHookBeforeCommit = _ => ()
+    SimHashStore.compact(spark, dest)
+    assert(!ServingStores.hasTombstones(dest))
+    assert(ServingStores.dataFileCount(dest) == 1)
+    assert(rows(SimHashStore.read(spark, dest)) == expected)
+    StoreAdmin.truncate(dest)
+  }
+
+  test("a SimHashStore write or compact whose manifest create fails leaves " +
+      "the previous commit serving and no maintenance lock behind") {
+    import java.nio.file.{Path, Paths}
+    import graft.dedup.SimHashStore
+    import graft.util.StoreFs
+    val dest = Files.createTempDirectory("graft-conc-simhash-crash").toString
+    SimHashStore.buildAt(dest,
+      Seq((1L, "alpha beta gamma delta"), (2L, "one two three four"))
+        .toDF("doc_id", "text"), "doc_id", "text")
+    SimHashStore.appendBatch(dest,
+      Seq((3L, "five six seven eight")).toDF("doc_id", "text"), "doc_id", "text")
+    def rows() = SimHashStore.read(spark, dest).collect().map(_.toString).sorted.toSeq
+    val before = rows()
+    val crashOnCommit = new graft.util.DelegatingFs {
+      override def createExclusive(p: Path, c: String): Unit =
+        if (p.getParent == Paths.get(dest, "_manifest"))
+          throw new java.io.IOException(s"crash creating $p")
+        else super.createExclusive(p, c)
+    }
+    intercept[java.io.IOException](StoreFs.withFs(crashOnCommit)(
+      SimHashStore.compact(spark, dest)))
+    intercept[java.io.IOException](StoreFs.withFs(crashOnCommit)(
+      SimHashStore.upsertBatch(spark, dest,
+        Seq((1L, "an edit that never commits")).toDF("doc_id", "text"),
+        "doc_id", "text")))
+    assert(rows() == before, "a failed commit changed what serves")
+    assert(!Files.exists(Paths.get(dest, "_maintenance.lock")),
+      "a failed commit left a maintenance lock behind")
+    assert(ServingStores.unlisted(dest).nonEmpty,
+      "the failed writes staged no file into the store")
+    // the store stays writable: the next compact commits and serves the same rows
+    SimHashStore.compact(spark, dest)
+    assert(ServingStores.dataFileCount(dest) == 1)
+    assert(rows() == before)
     StoreAdmin.truncate(dest)
   }
 }

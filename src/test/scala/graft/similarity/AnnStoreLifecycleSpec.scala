@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 import graft.SparkSpec
+import graft.search.ServingStores
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -84,9 +85,9 @@ class AnnStoreLifecycleSpec extends SparkSpec {
       s"planted near-dup 35 missing from $served")
     // compact: fewer files, same rows, stamp survives
     graft.util.Stamp.write(dest, "stamp-s")
-    val before = parquetFiles(s"$dest/sig.parquet")
+    val before = ServingStores.dataFileCount(dest)
     SrpStore.compact(spark, dest)
-    assert(parquetFiles(s"$dest/sig.parquet") < before)
+    assert(ServingStores.dataFileCount(dest) < before)
     assert(graft.util.Stamp.isFresh(dest, "stamp-s"))
     assert(rows(SrpStore.topKOver(SrpStore.read(spark, dest), all, 2L, 5))
       == served)
@@ -103,7 +104,7 @@ class AnnStoreLifecycleSpec extends SparkSpec {
     SrpStore.deleteIds(spark, dest, Seq(34L))
     assert(!rows(SrpStore.read(spark, dest)).exists(_.startsWith("[34,")))
     SrpStore.compact(spark, dest)
-    assert(!Files.exists(Paths.get(dest, "_tombstones")))
+    assert(!ServingStores.hasTombstones(dest))
     assert(!rows(SrpStore.read(spark, dest)).exists(_.startsWith("[34,")))
   }
 
@@ -271,7 +272,7 @@ class AnnStoreLifecycleSpec extends SparkSpec {
     SrpLabelStore.buildAt(dest, lab(base))
     SrpLabelStore.appendBatch(dest, lab(batch))
     SrpLabelStore.buildAt(full, lab(all))
-    def sigs(d: String) = rows(spark.read.parquet(s"$d/sig.parquet")
+    def sigs(d: String) = rows(SrpLabelStore.read(spark, d)
       .select(col("vec_id"), col("label"), col("__w0"), col("__w1"),
         col("__w2"), col("__w3"))).sorted
     assert(sigs(dest) == sigs(full),
@@ -285,13 +286,16 @@ class AnnStoreLifecycleSpec extends SparkSpec {
       "served filtered ranking must equal srpTopKFiltered")
     assert(served.exists(_.startsWith("[35,")),
       s"planted same-label near-dup 35 missing from $served")
-    // the point of the layout: the sketch scan prunes to ONE bucket
-    // directory at planning time, and the exact label predicate rides
-    // the pruned within-bucket scan
-    val plan = SrpLabelStore.topKFilteredAt(spark, dest, lab(all), 2L, 5)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("label_bucket"),
+    // the point of the layout: the sketch scan opens the files of ONE
+    // bucket directory only, and the exact label predicate rides the
+    // pruned within-bucket scan
+    val filtered = SrpLabelStore.topKFilteredAt(spark, dest, lab(all), 2L, 5)
+    val plan = filtered.queryExecution.executedPlan.toString
+    assert(plan.contains("PartitionFilters") && plan.contains("__bucket"),
       s"filtered serve must prune the sketch scan to the label's bucket:\n$plan")
+    val scannedDirs = filtered.inputFiles.map(_.split("/").init.last).distinct
+    assert(scannedDirs.length == 1 && scannedDirs.head.startsWith("__bucket="),
+      s"filtered serve read files outside one bucket: ${filtered.inputFiles.toSeq}")
     // label EDIT via upsert: vector 35 moves to label 0 — it must leave
     // label 2's partition (the tombstone is id-keyed, not partition-keyed)
     SrpLabelStore.upsertBatch(spark, dest,
@@ -306,11 +310,13 @@ class AnnStoreLifecycleSpec extends SparkSpec {
       "re-labeled vector must leave its old label's filtered results")
     SrpLabelStore.deleteIds(spark, dest, Seq(34L))
     SrpLabelStore.compact(spark, dest)
-    assert(!Files.exists(Paths.get(dest, "_tombstones")))
-    assert(spark.read.parquet(s"$dest/sig.parquet")
+    // no tombstone left, so the read applies none: what it serves is
+    // what the listed files physically hold
+    assert(!ServingStores.hasTombstones(dest))
+    assert(SrpLabelStore.read(spark, dest)
       .filter(col("vec_id") === 34L).count() == 0,
       "deleted id must be physically purged at compact")
-    assert(spark.read.parquet(s"$dest/sig.parquet")
+    assert(SrpLabelStore.read(spark, dest)
       .filter(col("vec_id") === 35L && col("label") === 2).count() == 0,
       "compact must not resurrect the old-label row")
   }
@@ -330,10 +336,10 @@ class AnnStoreLifecycleSpec extends SparkSpec {
       .toDF("vec_id", "embedding", "label")
     SrpLabelStore.buildAt(dest, many)
     val dirs = {
-      val s = Files.list(Paths.get(dest, "sig.parquet"))
+      val s = Files.list(Paths.get(dest))
       try s.iterator().asScala
         .filter(p => Files.isDirectory(p) &&
-          p.getFileName.toString.startsWith("label_bucket="))
+          p.getFileName.toString.startsWith("__bucket="))
         .map(_.getFileName.toString).toSeq
       finally s.close()
     }
@@ -346,17 +352,13 @@ class AnnStoreLifecycleSpec extends SparkSpec {
     assert(SrpLabelStore.topKFilteredAt(spark, dest, many, 7L, 5).isEmpty,
       "singleton label must have an empty same-label top-k — bucket " +
         "neighbors with other labels may not leak through")
-    // the driver- and executor-side bucket functions agree (CRC32
-    // polynomial contract) — every label's rows are IN the directory
-    // its point read will prune to
-    val mismatched = spark.read.parquet(s"$dest/sig.parquet")
-      .select(col("label"), col("label_bucket"))
-      .collect().count { r =>
-        SrpLabelStore.labelBucket(r.getInt(0),
-          SrpLabelStore.DefaultLabelBuckets) != r.getInt(1)
-      }
-    assert(mismatched == 0,
-      s"$mismatched rows bucketed differently than the driver would probe")
+    // the driver-side routing and the executor-side bucketing agree —
+    // every label's rows are IN the bucket its point read opens, so a
+    // probe routed per label finds all 500 rows
+    val routed = ServingStores.timelineProbeMany(spark, dest, "label",
+      0 until 500).count()
+    assert(routed == 500,
+      s"${500 - routed} rows bucketed differently than the driver would probe")
   }
 
   test("Sq8Store: per-row int8 codes — append ≡ full rebuild exactly, " +
@@ -368,13 +370,13 @@ class AnnStoreLifecycleSpec extends SparkSpec {
     Sq8Store.appendBatch(spark, dest, batch)
     Sq8Store.buildAt(full, all)
     // per-row encode: the appended store equals a rebuild value-for-value
-    def codes(d: String) = rows(spark.read.parquet(s"$d/codes.parquet")
+    def codes(d: String) = rows(ServingStores.read(spark, d)
       .select(col("vid"), hex(col("code")), col("scale"))).sorted
     assert(codes(dest) == codes(full),
       "appended SQ8 codes must equal a full rebuild (no trained state)")
     // the byte contract the store exists for: d int8 codes + one fp64
     // scale per vector (vs 4d raw float bytes on the scan)
-    val lens = spark.read.parquet(s"$dest/codes.parquet")
+    val lens = ServingStores.read(spark, dest)
       .select(length(col("code"))).distinct()
       .collect().map(_.getInt(0)).toSeq
     assert(lens == Seq(16), s"code byte-lengths (d=16 fixture): $lens")
@@ -387,9 +389,9 @@ class AnnStoreLifecycleSpec extends SparkSpec {
     assert(served.exists(_.startsWith("[35,")),
       s"planted near-dup 35 missing from $served")
     graft.util.Stamp.write(dest, "stamp-sq")
-    val before = parquetFiles(s"$dest/codes.parquet")
+    val before = ServingStores.dataFileCount(dest)
     Sq8Store.compact(spark, dest)
-    assert(parquetFiles(s"$dest/codes.parquet") < before)
+    assert(ServingStores.dataFileCount(dest) < before)
     assert(graft.util.Stamp.isFresh(dest, "stamp-sq"))
     assert(rows(Sq8Store.topKAt(spark, dest, all, 2L, 5)) == served)
     // id-keyed overwrite: 35 re-encodes far from 2 and leaves the
@@ -401,8 +403,10 @@ class AnnStoreLifecycleSpec extends SparkSpec {
       .exists(_.startsWith("[35,")))
     Sq8Store.deleteIds(spark, dest, Seq(34L))
     Sq8Store.compact(spark, dest)
-    assert(!Files.exists(Paths.get(dest, "_tombstones")))
-    assert(spark.read.parquet(s"$dest/codes.parquet")
+    // no tombstone left, so the read applies none: what it serves is
+    // what the listed files physically hold
+    assert(!ServingStores.hasTombstones(dest))
+    assert(ServingStores.read(spark, dest)
       .filter(col("vid") === 34L).count() == 0,
       "deleted id's codes must be physically purged at compact")
   }

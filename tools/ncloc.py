@@ -1,13 +1,15 @@
 #!/usr/bin/env python3
-"""Non-comment line count of source files — the "less code" evidence.
+"""Non-comment line count of Scala sources — the "less code" evidence.
 
 Counts every line that is not blank, not a `//` line and not inside a
 `/* ... */` block (scaladoc included). A line that starts with code and
 ends in a comment counts as code.
 
-Usage: python3 tools/ncloc.py <file>...
+Usage: python3 tools/ncloc.py <file or directory>...
+A directory stands for every `*.scala` file under it, at any depth.
 Prints one `<count>  <file>` line per file, then `<total>  total`.
 """
+import os
 import sys
 
 
@@ -25,9 +27,22 @@ def ncloc(path):
     return n
 
 
-def main(paths):
-    if not paths:
+def files(path):
+    if os.path.isfile(path):
+        return [path]
+    if os.path.isdir(path):
+        return sorted(os.path.join(d, f) for d, _, fs in os.walk(path)
+                      for f in fs if f.endswith(".scala"))
+    sys.exit(f"ncloc.py: no such file or directory: {path}")
+
+
+def main(args):
+    if args[:1] in (["-h"], ["--help"]):
+        print(__doc__)
+        return
+    if not args:
         sys.exit(__doc__)
+    paths = [f for a in args for f in files(a)]
     total = 0
     for p in paths:
         n = ncloc(p)
