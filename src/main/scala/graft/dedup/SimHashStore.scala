@@ -12,16 +12,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * curation, the live near-dup gate) reads the 8-byte-per-doc signatures
   * instead of re-tokenizing and re-hashing the text.
   *
-  * The store is a [[ServingStores]] timeline store keyed on `doc` in one
-  * bucket, read whole ([[ServingStores.read]]), so it shares that store's
+  * The store is a [[ServingStores]] timeline store keyed on `doc` in
+  * buckets sized to the build's input and the task slots
+  * ([[ServingStores.bucketsFor]]), read whole ([[ServingStores.read]]),
+  * so it shares that store's
   * manifest commit, tombstones and race rules. Lifecycle: [[appendBatch]]
   * adds NEW ids at batch cost (exact by construction — a doc's 64-bit
   * SimHash depends only on its own tokens); [[upsertBatch]] REPLACES
   * existing ids (the reference indexer's overwrite semantics — an EDITED
   * doc must carry its new signature, or the near-dup gate would compare
   * live traffic against a stale sketch) with its tombstones and rows in
-  * one commit; [[compact]] folds the table into one doc-sorted file with
-  * the deletes applied. A write that lands during a compaction survives it.
+  * one commit; [[compact]] folds each bucket into one doc-sorted file
+  * with the deletes applied. A write that lands during a compaction survives it.
   *
   * Freshness follows the index pattern: a (name, size, mtime) stamp of the
   * source parquet — a regenerated corpus forces a rebuild, repeated runs
@@ -49,9 +51,11 @@ object SimHashStore {
 
   /** Materialize the signature table as a fresh store at `dest`. */
   def buildAt(dest: String, docs: DataFrame, idCol: String,
-              textCol: String): Unit =
-    ServingStores.buildTimeline(Dedup.simHash(docs, idCol, textCol), "doc",
-      dest, buckets = 1)
+              textCol: String): Unit = {
+    val sigs = Dedup.simHash(docs, idCol, textCol)
+    ServingStores.buildTimeline(sigs, "doc", dest,
+      buckets = ServingStores.bucketsFor(sigs))
+  }
 
   /** The store's live (doc, simhash) rows — what every consumer reads. */
   def read(spark: SparkSession, dest: String): DataFrame =
@@ -75,8 +79,8 @@ object SimHashStore {
     ServingStores.ingest(dest, Some(Dedup.simHash(batch, idCol, textCol)),
       Some("doc" -> batch.select(col(idCol))))
 
-  /** Fold appended files into one doc-sorted file, tombstoned versions
-    * dropped ([[ServingStores.compact]]).
+  /** Fold appended files into one doc-sorted file per bucket, tombstoned
+    * versions dropped ([[ServingStores.compact]]).
     */
   def compact(spark: SparkSession, dest: String): Unit =
     ServingStores.compact(spark, dest)

@@ -32,10 +32,11 @@ import org.json4s.jackson.JsonMethods
   *    corpus.
   *  - Signature and ANN stores — [[graft.dedup.SimHashStore]] (key
   *    `doc`), [[graft.similarity.SrpStore]] (`vec_id`),
-  *    [[graft.similarity.Sq8Store]] (`vid`) in ONE bucket, read whole
-  *    through [[read]]; [[graft.similarity.SrpLabelStore]] keyed on
-  *    `label` in 16, its filtered search a [[timelineProbe]] — are thin
-  *    clients of the timeline store.
+  *    [[graft.similarity.Sq8Store]] (`vid`) in buckets sized to their
+  *    input ([[bucketsFor]]), read whole through [[read]];
+  *    [[graft.similarity.SrpLabelStore]] keyed on `label` in 16, its
+  *    filtered search a [[timelineProbe]] — are thin clients of the
+  *    timeline store.
   *
   * == The commit model (Lucene's `segments_N`, the Delta Lake log) ==
   *
@@ -78,7 +79,10 @@ import org.json4s.jackson.JsonMethods
   * staleness stamp intact: before the manifest create nothing a reader
   * opens has changed, and the create is all-or-nothing. What a crash
   * leaves behind — a staging dir, moved-in but uncommitted files — is
-  * unreferenced, and [[StoreAdmin.gcOrphans]] reclaims it.
+  * unreferenced, and [[StoreAdmin.gcOrphans]] reclaims it. A build
+  * deletes the old store first, so one that crashes before its commit
+  * leaves a dir with no manifest: [[StoreAdmin.maintain]] skips it and
+  * the next build replaces it.
   *
   * == Update/delete semantics (tombstones) ==
   *
@@ -95,6 +99,24 @@ import org.json4s.jackson.JsonMethods
 object ServingStores {
 
   val DefaultBuckets = 64
+
+  /** The bucket count of a store built from `rows`: one bucket per
+    * `spark.sql.files.maxPartitionBytes` (Spark's scan split, 128 MB by
+    * default) of the rows' estimated size, and at least one per task slot
+    * (`defaultParallelism`). A bucket's file is one scan partition, so a
+    * whole-store read of even a small store runs on every slot, and a
+    * build or full fold writes in as many tasks; a rebuild sizes the
+    * store to its grown input again. Rows Spark cannot size get one
+    * bucket per slot.
+    */
+  def bucketsFor(rows: DataFrame): Int = {
+    val conf = rows.sparkSession.sessionState.conf
+    val slots = rows.sparkSession.sparkContext.defaultParallelism
+    val bytes = rows.queryExecution.optimizedPlan.stats.sizeInBytes
+    val split = conf.filesMaxPartitionBytes
+    if (bytes >= conf.defaultSizeInBytes) slots
+    else ((bytes + split - 1) / split).max(slots).min(Int.MaxValue).toInt
+  }
 
   /** Test seam: runs after a fold's files are fully staged and before
     * its commit — the widest window in which a concurrent write can

@@ -161,8 +161,10 @@ object StoreAdmin {
       BM25Index.compact(spark, bm)
       log += s"fold $bm (segments)"
     }
+    // a dir with no committed version (a build that crashed before its
+    // first commit) has nothing to fold: its next build starts over
     def sweepKeyed(d: String, foldAt: Int): Unit =
-      if (StoreFs.isDirectory(Paths.get(d))) {
+      if (ManifestLog.versions(d).nonEmpty) {
         if (ServingStores.hasTombstones(d)) {
           ServingStores.compact(spark, d)
           log += s"purge $d"

@@ -30,11 +30,12 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * case: (128−128)·0 = 0 per coordinate).
   *
   * Maintenance lifecycle: the store is a [[graft.search.ServingStores]]
-  * timeline store keyed on `vid` in one bucket, read whole — codes are
+  * timeline store keyed on `vid` in buckets sized to the build's input
+  * ([[graft.search.ServingStores.bucketsFor]]), read whole — codes are
   * PER-ROW, no trained state, so [[appendBatch]] ≡ full rebuild exactly
   * (spec-asserted), [[upsertBatch]]/[[deleteIds]] are that store's
-  * id-keyed overwrite and delete, and [[compact]] folds to one
-  * vid-sorted file; every write commits through its manifest.
+  * id-keyed overwrite and delete, and [[compact]] folds each bucket to
+  * one vid-sorted file; every write commits through its manifest.
   *
   * Scale shape: the candidate pass is ONE projection over the codes
   * scan (decode + dot ride whole-stage codegen; no shuffle before the
@@ -77,8 +78,11 @@ object Sq8Store {
       u => (u.cast("double") - lit(128.0)) * col("scale"))
 
   /** Materialize the packed codes as a fresh store at `dest`. */
-  def buildAt(dest: String, embeddings: DataFrame): Unit =
-    ServingStores.buildTimeline(encoded(embeddings), "vid", dest, buckets = 1)
+  def buildAt(dest: String, embeddings: DataFrame): Unit = {
+    val codes = encoded(embeddings)
+    ServingStores.buildTimeline(codes, "vid", dest,
+      buckets = ServingStores.bucketsFor(codes))
+  }
 
   /** Append a NEW batch's codes at batch cost — exact by construction
     * (per-row encode: no trained state, so append ≡ rebuild exactly).
@@ -96,7 +100,7 @@ object Sq8Store {
   def deleteIds(spark: SparkSession, dest: String, ids: Seq[Long]): Unit =
     ServingStores.deleteIds(spark, dest, "vid", ids)
 
-  /** Fold to one vid-sorted file, tombstoned rows dropped
+  /** Fold to one vid-sorted file per bucket, tombstoned rows dropped
     * ([[ServingStores.compact]]).
     */
   def compact(spark: SparkSession, dest: String): Unit =

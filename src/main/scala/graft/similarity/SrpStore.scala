@@ -15,14 +15,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * 256-byte embedding column is never scanned for filtering.
   *
   * The store is a [[ServingStores]] timeline store keyed on `vec_id` in
-  * one bucket, read whole, so its writes commit through that store's
+  * buckets sized to the build's input ([[ServingStores.bucketsFor]]),
+  * read whole, so its writes commit through that store's
   * manifest: [[appendBatch]] adds a new batch's signatures at batch
   * cost — EXACT by construction, since a row's sketch depends only on
   * that row (the hyperplanes are plan-time md5-derived constants), so
   * append ≡ full rebuild byte-for-byte (spec-asserted);
   * [[upsertBatch]]/[[deleteIds]] are its id-keyed overwrite and delete;
   * [[compact]] folds accumulated small files into one vec_id-sorted file
-  * (min/max row-group pruning restored for the query-point lookup).
+  * per bucket (min/max row-group pruning restored for the query-point
+  * lookup).
   *
   * Freshness follows the family pattern: a (name, size, mtime) stamp of
   * the source parquet; repeated suite runs reuse the artifact, a
@@ -42,9 +44,11 @@ object SrpStore {
     * `dest` — the dest-level build [[ensureBuilt]] wraps with the
     * staleness stamp.
     */
-  def buildAt(dest: String, embeddings: DataFrame): Unit =
-    ServingStores.buildTimeline(signatures(embeddings), "vec_id", dest,
-      buckets = 1)
+  def buildAt(dest: String, embeddings: DataFrame): Unit = {
+    val sigs = signatures(embeddings)
+    ServingStores.buildTimeline(sigs, "vec_id", dest,
+      buckets = ServingStores.bucketsFor(sigs))
+  }
 
   /** Append a NEW batch's signatures into an existing store at batch
     * cost. Exact by construction: signatures are per-row, so the
@@ -71,8 +75,8 @@ object SrpStore {
   def read(spark: SparkSession, dest: String): DataFrame =
     ServingStores.read(spark, dest)
 
-  /** Fold accumulated appended files into one vec_id-sorted file with
-    * tombstoned rows dropped ([[ServingStores.compact]]).
+  /** Fold accumulated appended files into one vec_id-sorted file per
+    * bucket with tombstoned rows dropped ([[ServingStores.compact]]).
     */
   def compact(spark: SparkSession, dest: String): Unit =
     ServingStores.compact(spark, dest)

@@ -391,9 +391,10 @@ class StoreAdminSpec extends SparkSpec {
     graft.similarity.SrpStore.buildAt(srp, emb.filter(col("vec_id") < 16))
     graft.similarity.SrpStore.appendBatch(srp,
       emb.filter(col("vec_id") >= 16)) // 2 write generations now
+    val files = ServingStores.dataFileCount(srp)
     val deferred = StoreAdmin.maintain(spark, fakeSf, foldAtGenerations = 3)
     assert(!deferred.exists(a => a.startsWith("fold") && a.contains(srp)) &&
-      ServingStores.dataFileCount(srp) == 2,
+      ServingStores.dataFileCount(srp) == files,
       s"foldAtGenerations=3 must defer a 2-generation fold: $deferred")
     val taken = StoreAdmin.maintain(spark, fakeSf)
     assert(taken.exists(a => a.startsWith("fold") && a.contains(srp)),
@@ -402,6 +403,45 @@ class StoreAdminSpec extends SparkSpec {
     intercept[IllegalArgumentException](
       StoreAdmin.maintain(spark, fakeSf, foldAtGenerations = 1))
     StoreAdmin.truncate(srp)
+  }
+
+  test("maintain skips a store dir a crashed build left without a manifest " +
+      "and still sweeps the other stores") {
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    val fakeSf = Files.createTempDirectory("graft-maintain-nomanifest").toString
+    val simhash = graft.dedup.SimHashStore.defaultDir(fakeSf)
+    val crashOnCommit = new graft.util.DelegatingFs {
+      override def createExclusive(p: Path, c: String): Unit =
+        if (p.getParent == Paths.get(simhash, "_manifest"))
+          throw new java.io.IOException(s"crash creating $p")
+        else super.createExclusive(p, c)
+    }
+    // the build deletes the old store, moves its files in, then fails to
+    // publish: a dir of data files and no manifest
+    intercept[java.io.IOException](StoreFs.withFs(crashOnCommit)(
+      graft.dedup.SimHashStore.buildAt(simhash,
+        Seq((1L, "alpha beta gamma delta")).toDF("doc_id", "text"),
+        "doc_id", "text")))
+    assert(StoreFs.isDirectory(Paths.get(simhash)) &&
+      graft.util.ManifestLog.versions(simhash).isEmpty)
+    val srp = graft.similarity.SrpStore.defaultDir(fakeSf)
+    val emb = (0 until 20).map(i =>
+        (i.toLong, Array.tabulate(16)(j => (i * 7 + j).toFloat / 100f)))
+      .toDF("vec_id", "embedding")
+    graft.similarity.SrpStore.buildAt(srp, emb.filter(col("vec_id") < 16))
+    graft.similarity.SrpStore.appendBatch(srp, emb.filter(col("vec_id") >= 16))
+    val actions = StoreAdmin.maintain(spark, fakeSf)
+    assert(!actions.exists(a => !a.startsWith("gc") && a.contains(simhash)),
+      s"the sweep acted on a store with no committed version: $actions")
+    assert(actions.exists(a => a.startsWith("fold") && a.contains(srp)),
+      s"the sweep stopped before the fragmented SRP store: $actions")
+    // the next build starts the store over and serves
+    graft.dedup.SimHashStore.buildAt(simhash,
+      Seq((1L, "alpha beta gamma delta")).toDF("doc_id", "text"),
+      "doc_id", "text")
+    assert(graft.dedup.SimHashStore.read(spark, simhash).count() == 1)
+    StoreAdmin.truncateAll(fakeSf)
   }
 
   test("truncate is idempotent and scoped: absent store is a no-op, other " +

@@ -28,6 +28,20 @@ class StoreConcurrencySpec extends SparkSpec with BeforeAndAfterEach {
     ServingStores.postingProbe(spark, dest, tag)
       .select(col("id")).collect().map(_.getLong(0)).sorted.toSeq
 
+  // enough docs per write that every bucket of a SimHashStore sized to
+  // the task slots gets a file from each write, so a compact has a fold
+  private def docs(ids: Range) =
+    ids.map(i => (i.toLong, s"doc $i alpha beta ${i * 7} gamma")).toDF("doc_id", "text")
+
+  /** True iff every bucket of the store lists exactly one file — what a
+    * full fold leaves.
+    */
+  private def oneFilePerBucket(dest: String): Boolean = {
+    val files = ServingStores.read(spark, dest).inputFiles.toSeq
+    files.nonEmpty &&
+      files.map(f => f.substring(0, f.lastIndexOf('/'))).distinct.size == files.size
+  }
+
   override def afterEach(): Unit = {
     ServingStores.testHookBeforeCommit = _ => ()
     super.afterEach()
@@ -232,9 +246,8 @@ class StoreConcurrencySpec extends SparkSpec with BeforeAndAfterEach {
       "row lost, the edit's signature wins") {
     import graft.dedup.{Dedup, SimHashStore}
     val dest = Files.createTempDirectory("graft-conc-simhash").toString
-    val base = Seq((1L, "alpha beta gamma delta"), (2L, "one two three four"))
-      .toDF("doc_id", "text")
-    val late = Seq((3L, "five six seven eight")).toDF("doc_id", "text")
+    val base = docs(1 to 40)
+    val late = docs(41 to 80)
     val edit = Seq((2L, "completely different replacement text"))
       .toDF("doc_id", "text")
     SimHashStore.buildAt(dest, base, "doc_id", "text")
@@ -257,7 +270,7 @@ class StoreConcurrencySpec extends SparkSpec with BeforeAndAfterEach {
     ServingStores.testHookBeforeCommit = _ => ()
     SimHashStore.compact(spark, dest)
     assert(!ServingStores.hasTombstones(dest))
-    assert(ServingStores.dataFileCount(dest) == 1)
+    assert(oneFilePerBucket(dest))
     assert(rows(SimHashStore.read(spark, dest)) == expected)
     StoreAdmin.truncate(dest)
   }
@@ -268,11 +281,8 @@ class StoreConcurrencySpec extends SparkSpec with BeforeAndAfterEach {
     import graft.dedup.SimHashStore
     import graft.util.StoreFs
     val dest = Files.createTempDirectory("graft-conc-simhash-crash").toString
-    SimHashStore.buildAt(dest,
-      Seq((1L, "alpha beta gamma delta"), (2L, "one two three four"))
-        .toDF("doc_id", "text"), "doc_id", "text")
-    SimHashStore.appendBatch(dest,
-      Seq((3L, "five six seven eight")).toDF("doc_id", "text"), "doc_id", "text")
+    SimHashStore.buildAt(dest, docs(1 to 40), "doc_id", "text")
+    SimHashStore.appendBatch(dest, docs(41 to 80), "doc_id", "text")
     def rows() = SimHashStore.read(spark, dest).collect().map(_.toString).sorted.toSeq
     val before = rows()
     val crashOnCommit = new graft.util.DelegatingFs {
@@ -294,7 +304,7 @@ class StoreConcurrencySpec extends SparkSpec with BeforeAndAfterEach {
       "the failed writes staged no file into the store")
     // the store stays writable: the next compact commits and serves the same rows
     SimHashStore.compact(spark, dest)
-    assert(ServingStores.dataFileCount(dest) == 1)
+    assert(oneFilePerBucket(dest))
     assert(rows() == before)
     StoreAdmin.truncate(dest)
   }

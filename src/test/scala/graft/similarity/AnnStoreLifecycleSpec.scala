@@ -108,6 +108,56 @@ class AnnStoreLifecycleSpec extends SparkSpec {
     assert(!rows(SrpStore.read(spark, dest)).exists(_.startsWith("[34,")))
   }
 
+  test("SrpStore and Sq8Store size their buckets to their input: a " +
+      "source larger than the task slots' scan splits spreads over more " +
+      "buckets, and append, compact and read serve what a small store serves") {
+    val src = Files.createTempDirectory("graft-sized-src").toString + "/emb"
+    all.write.parquet(src)
+    def emb = spark.read.parquet(src)
+    val oneSrp = Files.createTempDirectory("graft-sized-srp1").toString
+    val oneSq8 = Files.createTempDirectory("graft-sized-sq81").toString
+    SrpStore.buildAt(oneSrp, emb)
+    Sq8Store.buildAt(oneSq8, emb)
+    val slots = spark.sparkContext.defaultParallelism
+    assert(ServingStores.dataFileCount(oneSrp) <= slots &&
+      ServingStores.dataFileCount(oneSq8) <= slots,
+      "a source under one scan split must build one bucket per task slot")
+    def srpRows(d: String) = rows(SrpStore.read(spark, d)).sorted
+    def sq8Rows(d: String) = rows(ServingStores.read(spark, d)
+      .select(col("vid"), hex(col("code")), col("scale"))).sorted
+    val split = "spark.sql.files.maxPartitionBytes"
+    spark.conf.set(split, "512")
+    try {
+      val srp = Files.createTempDirectory("graft-sized-srp").toString
+      val sq8 = Files.createTempDirectory("graft-sized-sq8").toString
+      SrpStore.buildAt(srp, emb.filter(col("vec_id") < 32))
+      Sq8Store.buildAt(sq8, emb.filter(col("vec_id") < 32))
+      val (srpFiles, sq8Files) =
+        (ServingStores.dataFileCount(srp), ServingStores.dataFileCount(sq8))
+      assert(srpFiles > slots && sq8Files > slots,
+        s"a source over $slots scan splits built $srpFiles / $sq8Files buckets")
+      SrpStore.appendBatch(srp, emb.filter(col("vec_id") >= 32))
+      Sq8Store.appendBatch(spark, sq8, emb.filter(col("vec_id") >= 32))
+      assert(srpRows(srp) == srpRows(oneSrp) && sq8Rows(sq8) == sq8Rows(oneSq8))
+      SrpStore.compact(spark, srp)
+      Sq8Store.compact(spark, sq8)
+      // after the fold and its reclaim, each bucket dir holds one file
+      def filesPerBucket(d: String): Seq[Int] = {
+        graft.search.StoreAdmin.reclaim(d)
+        val s = Files.list(Paths.get(d))
+        try s.iterator().asScala.filter(_.getFileName.toString
+            .startsWith("__bucket=")).map(b => parquetFiles(b.toString)).toSeq
+        finally s.close()
+      }
+      for (d <- Seq(srp, sq8)) {
+        val per = filesPerBucket(d)
+        assert(per.size > 1 && per.forall(_ == 1),
+          s"compact must fold each bucket of $d to one file: $per")
+      }
+      assert(srpRows(srp) == srpRows(oneSrp) && sq8Rows(sq8) == sq8Rows(oneSq8))
+    } finally spark.conf.unset(split)
+  }
+
   test("IvfStore: frozen-centroid append ≡ full rebuild exactly; single " +
       "stamp transaction for the two sub-tables on compact") {
     val dest = Files.createTempDirectory("graft-ivf-life").toString
