@@ -64,10 +64,16 @@ object TweetBench {
        |"user": $user}""".stripMargin.replace("\n", " ")
   }
 
-  private def writeCorpus(dir: java.io.File, nFiles: Int, perFile: Long): Long = {
+  /** Writes `nTweets` tweets as `nFiles` multiline JSON arrays under
+    * `dir`, the remainder of `nTweets / nFiles` spread one per file over
+    * the first files, so every layout holds the same tweets. Returns the
+    * bytes written.
+    */
+  private[graft] def writeCorpus(dir: java.io.File, nFiles: Int, nTweets: Long): Long = {
     var bytes = 0L
     var id = 0L
     (0 until nFiles).foreach { f =>
+      val perFile = nTweets / nFiles + (if (f < nTweets % nFiles) 1 else 0)
       val file = new java.io.File(dir, s"tweets_${1634810000L + f}.json")
       val w = new BufferedWriter(new FileWriter(file), 1 << 20)
       w.write("[")
@@ -98,7 +104,7 @@ object TweetBench {
     def run(nFiles: Int): (Double, Double, Long) = {
       val dir = Files.createTempDirectory(s"tweetbench_$nFiles").toFile
       try {
-        val bytes = writeCorpus(dir, nFiles, nTweets / nFiles)
+        val bytes = writeCorpus(dir, nFiles, nTweets)
         val t0 = System.nanoTime()
         val out = TweetNormalize.process(
           graft.sources.Readers.multilineJson(spark, dir.getAbsolutePath, TweetSchema.raw))

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.search.{BM25, BM25Index, Collections, ServingStores}
-import graft.util.{Num, QueryPack, Tables}
+import graft.util.{LocalScan, Num, QueryPack, Tables}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -430,9 +430,8 @@ object SearchQueries extends QueryPack {
     // (round-10 verdict item 7; same oracle as the ad-hoc query).
     "q_hashtag_served" -> ((s, dir) => {
       val store = ServingStores.ensureDocPostings(s, dir)
-      ServingStores.postingProbe(s, store, "spark")
-        .orderBy(col("doc_id").asc)
-        .limit(1000)
+      LocalScan.top(ServingStores.postingProbe(s, store, "spark"), 1000,
+          col("doc_id").asc)
         .select(col("doc_id"), col("source"), col("n_chars"))
     }),
 
@@ -442,9 +441,8 @@ object SearchQueries extends QueryPack {
     // gate, not just a spec
     "q_hashtag_incr" -> ((s, dir) => {
       val store = ServingStores.ensureDocPostingsIncr(s, dir)
-      ServingStores.postingProbe(s, store, "spark")
-        .orderBy(col("doc_id").asc)
-        .limit(1000)
+      LocalScan.top(ServingStores.postingProbe(s, store, "spark"), 1000,
+          col("doc_id").asc)
         .select(col("doc_id"), col("source"), col("n_chars"))
     }),
 
@@ -481,9 +479,8 @@ object SearchQueries extends QueryPack {
     // served column (one stale version anywhere = hash mismatch).
     "q_hashtag_upsert" -> ((s, dir) => {
       val store = ServingStores.ensureDocPostingsUpsert(s, dir)
-      ServingStores.postingProbe(s, store, "spark")
-        .orderBy(col("doc_id").asc)
-        .limit(1000)
+      LocalScan.top(ServingStores.postingProbe(s, store, "spark"), 1000,
+          col("doc_id").asc)
         .select(col("doc_id"), col("source"), col("n_chars"))
     }),
 

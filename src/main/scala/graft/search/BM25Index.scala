@@ -3,7 +3,7 @@ package graft.search
 import java.nio.file.Paths
 
 import graft.util.CacheLedger.CacheOps
-import graft.util.{ManifestLog, Stamp, StoreFs, Tables, Tombstones}
+import graft.util.{LocalScan, ManifestLog, Stamp, StoreFs, Tables, Tombstones}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -33,12 +33,13 @@ import org.json4s.jackson.JsonMethods
   *
   * `len` (doc length) is denormalized onto postings — Lucene stores per-doc
   * field norms alongside postings the same way — so serving needs NO
-  * docstats join. Query-time reads prune twice: the term bucket
-  * `tb = crc32(term) % termBuckets` picks the only files a query opens
-  * (computed on the driver; the same predicate stays in the plan as
-  * PartitionFilters) and the within-file term sort prunes row groups
-  * via parquet min/max stats (PushedFilters) — the two-level pruning a
-  * sharded inverted index gives. The bucket count is NOT a compile-time
+  * docstats join. A query's term slices are key-routed: the term bucket
+  * `tb = crc32(term) % termBuckets` picks the only files a query opens,
+  * and [[topKMerged]] reads them on the calling thread
+  * ([[graft.util.LocalScan]]) and scores them there, with no Spark job —
+  * the pruning a sharded inverted index gives. Whole-table reads
+  * ([[suggest]], [[moreLikeThis]], [[compact]]) stay Spark scans. The
+  * bucket count is NOT a compile-time
   * constant: it is derived ∝ VOCABULARY at build time
   * ([[autoTermBuckets]] — at a 100-TB corpus a fixed 16 means 16 giant
   * postings partitions) and persisted per part in the manifest, because
@@ -59,8 +60,8 @@ import org.json4s.jackson.JsonMethods
   * of its three tables (including the `tb` partition column); the listed
   * files of every part's tables; the tombstone files; and the last write
   * generation. Readers open exactly the listed files of the buckets they
-  * need through the persisted schemas — building a query's frame lists
-  * no directory, infers nothing and starts no Spark job. Every write —
+  * need through the persisted schemas — a query lists no directory and
+  * infers nothing. Every write —
   * build, append, upsert, delete, compact — stages its parquet files
   * (unlisted) and commits version N+1 naming them. [[build]] commits
   * version 0 of a fresh store. Races follow [[graft.util.ManifestLog]]'s
@@ -261,24 +262,47 @@ object BM25Index {
   private class Snapshot(spark: SparkSession, dest: String) {
     val m: Manifest = log.latest(dest)
 
-    /** One of a part's tables. With `tbs`, only those term buckets'
-      * listed files are opened, and a part with none of them is a typed
-      * empty frame — so the read lists no directory and infers nothing.
+    /** The listed files of one of a part's tables. */
+    private def files(p: Part, t: String): Seq[String] =
+      m.files.filter(_.startsWith(s"${p.root(t)}/"))
+
+    /** One of a part's tables as a Spark scan of its listed files — the
+      * read lists no directory and infers nothing.
       */
-    def table(p: Part, t: String, tbs: Option[Seq[Int]] = None): DataFrame = {
-      val prefixes = tbs.fold(Seq(s"${p.root(t)}/"))(_.map(b => s"${p.root(t)}/tb=$b/"))
-      ManifestLog.scan(spark, dest, p.schema(t), p.root(t),
-        m.files.filter(f => prefixes.exists(f.startsWith)))
+    def table(p: Part, t: String): DataFrame =
+      ManifestLog.scan(spark, dest, p.schema(t), p.root(t), files(p, t))
+
+    private lazy val dead = m.outranked(spark, dest)
+
+    /** One table's rows of the analyzed `terms` over every part, read on
+      * the calling thread into one local frame: per part only the terms'
+      * bucket files (routed by the part's own persisted modulus) are
+      * opened, and a postings row that a listed tombstone outranks at its
+      * part's generation is dropped.
+      */
+    def slice(t: String, terms: Seq[String]): DataFrame = {
+      val wanted = terms.toSet
+      val layouts = m.parts.map(p => LocalScan.layout(p.schema(t), Seq("tb")))
+      require(layouts.map(_.catalogString).distinct.size == 1,
+        s"the parts of the BM25 index at $dest disagree on the $t layout")
+      val term = layouts.head.fieldIndex("term")
+      val doc = if (t == "postings") Some(LocalScan.stringOf(spark, layouts.head, "doc")) else None
+      LocalScan.frame(spark, layouts.head, m.parts.flatMap { p =>
+        val dirs = terms.map(termBucket(_, p.termBuckets)).distinct.map(b => s"${p.root(t)}/tb=$b/")
+        LocalScan.rows(spark, dest, p.schema(t), p.root(t), Seq("tb"),
+            m.files.filter(f => dirs.exists(f.startsWith)))(
+          r => wanted(r.getUTF8String(term).toString) && !doc.exists(d => dead(d(r), p.gen)))
+      })
     }
 
-    /** A part's postings or termstats slice for the analyzed `terms`: only
-      * the terms' buckets (routed by the part's own persisted modulus),
-      * with the bucket and term predicates kept in the plan for
-      * partition and row-group pruning.
-      */
-    def termSlice(p: Part, t: String, terms: Seq[String]): DataFrame = {
-      val tbs = terms.map(termBucket(_, p.termBuckets)).distinct
-      table(p, t, Some(tbs)).filter(col("tb").isin(tbs: _*) && col("term").isin(terms: _*))
+    /** (N, total length) over every part, read on the calling thread. */
+    def totals: (Double, Long) = {
+      val rows = m.parts.flatMap { p =>
+        val c = p.schema("corpus")
+        LocalScan.rows(spark, dest, c, p.root("corpus"), Nil, files(p, "corpus"))()
+          .map(r => r.getDouble(c.fieldIndex("n")) -> r.getLong(c.fieldIndex("total_len")))
+      }
+      rows.map(_._1).sum -> rows.map(_._2).sum
     }
 
     /** Union of the parts' postings with the listed tombstones' kill
@@ -405,11 +429,14 @@ object BM25Index {
     }
   }
 
-  /** Serving-path top-k over every part: per part, only the query terms'
-    * bucket files of postings and termstats are opened, unioned with the
-    * tombstone kill applied, df summed per term across parts, corpus
-    * stats recombined from exact counts. Building the frame reads the
-    * manifest and starts no Spark job. Score is bit-identical to
+  /** Serving-path top-k over every part, run on the calling thread: per
+    * part only the query terms' bucket files of postings and termstats
+    * are read, on the driver ([[Snapshot.slice]]), with the tombstone
+    * kill applied; df is summed per term across parts and N/avglen
+    * recombined from exact counts. Each doc's score is ONE projection of
+    * BM25's own expressions over its postings, and the top-k cut is
+    * Spark's ordering on plain values — a local relation of (doc, score),
+    * built with no Spark job. Score is bit-identical to
     * [[BM25.scoreTopK]] (same idf/tfNorm/rounding over the same
     * tf/len/df/N values).
     */
@@ -418,14 +445,18 @@ object BM25Index {
     val terms = BM25.analyze(queryTerms)
     require(terms.nonEmpty, "no query terms survive analysis")
     val s = new Snapshot(spark, dest)
-    val post = s.live(s.termSlice(_, "postings", terms))
-    post.join(broadcast(s.df(s.termSlice(_, "termstats", terms))), "term")
-      .crossJoin(broadcast(s.corpus))
-      .groupBy(col("doc"))
-      .agg(round(sum(BM25.idfExpr(col("n"), col("df")) *
-        BM25.tfNormExpr(col("tf"), col("len"), col("avglen"))), 6).as("score"))
-      .orderBy(col("score").desc, col("doc").asc)
-      .limit(k)
+    val ts = s.slice("termstats", terms)
+    val df = LocalScan.values(ts, "term").zip(LocalScan.values(ts, "df"))
+      .groupMapReduce(_._1.toString)(_._2.asInstanceOf[Double])(_ + _)
+    val stats = spark.createDataFrame(df.toSeq).toDF("__term", "__df")
+    val (n, totalLen) = s.totals
+    val avglen = lit(totalLen).cast("double") / lit(n)
+    val scored = LocalScan.gather(LocalScan.join(s.slice("postings", terms), stats, "term", "__term"),
+        Seq(col("doc")), struct(col("tf"), col("len"), col("__df").as("df")), "__hits")
+      .select(col("doc"), round(aggregate(col("__hits"), lit(0.0), (acc, h) =>
+        acc + BM25.idfExpr(lit(n), h("df")) * BM25.tfNormExpr(h("tf"), h("len"), avglen)), 6)
+        .as("score"))
+    LocalScan.top(scored, k, col("score").desc, col("doc").asc)
   }
 
   /** True iff the index has a committed manifest. */
@@ -497,6 +528,9 @@ object BM25Index {
     * len/avglen from the denormalized doc lengths) — so the same DuckDB
     * oracle gates both paths.
     *
+    * The phrase terms' postings are [[topKMerged]]'s driver-read slice;
+    * the joins and the scoring over them run as Spark operators.
+    *
     * Works over base + segments unmodified: a doc lives in exactly one
     * part (the append contract), so its tf/positions/len rows are
     * self-consistent, and the match-set stats are computed from the joined
@@ -509,7 +543,7 @@ object BM25Index {
     require(ordered.nonEmpty, "no phrase terms survive analysis")
     val terms = ordered.distinct
     val s = new Snapshot(spark, dest)
-    val post = s.live(s.termSlice(_, "postings", terms))
+    val post = s.slice("postings", terms)
     val slot = terms.zipWithIndex.toMap
     val joined = terms.zipWithIndex.map { case (t, i) =>
         val keep = Seq(col("doc")) ++ (if (i == 0) Seq(col("len")) else Nil) ++

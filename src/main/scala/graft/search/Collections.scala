@@ -148,13 +148,15 @@ object Collections {
   }
 
   /** [[keywordSearch]] served from a prebuilt [[BM25Index]] postings store
-    * instead of tokenizing the corpus per request — the production-QPS
-    * form of the query route (`q_keyword_bm25_served`'s path): the scoring
-    * subtree reads ONLY the term-bucket-pruned postings/termstats parquet
-    * (no Generate/explode anywhere — spec-asserted), and the corpus join
-    * happens AFTER the k-row cut, so per-request cost is the k lookups,
-    * never a corpus scan. Envelopes are byte-identical to the ad-hoc path
-    * (the index scoring is value-equal by the served-query oracle).
+    * instead of tokenizing the corpus per request — the query route when
+    * only the BM25 index is given (`q_keyword_bm25_served`'s scoring): the
+    * top-k is [[BM25Index.topKMerged]]'s driver read of the
+    * term-bucket-pruned postings/termstats (no Generate/explode anywhere —
+    * spec-asserted), and the join to the frames happens AFTER the k-row
+    * cut, as a Spark job. With the tweet index given too, the route reads
+    * the `tweets` and `users_by_id` stores instead ([[HttpServing]]).
+    * Envelopes are byte-identical to the ad-hoc path (the index scoring is
+    * value-equal by the served-query oracle).
     *
     * Scores through [[BM25Index.topKMerged]], so documents indexed as
     * appended segments by the live-ingest loop are visible immediately —

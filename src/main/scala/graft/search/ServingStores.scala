@@ -2,10 +2,14 @@ package graft.search
 
 import java.nio.file.{Path, Paths}
 
-import graft.util.{ManifestLog, StoreFs, Tombstones}
+import scala.collection.concurrent.TrieMap
+
+import graft.util.{LocalScan, ManifestLog, StoreFs, Tombstones}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructField, StructType}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.json4s.{DefaultFormats, Formats, JArray, JInt, JObject, JString, JValue}
 import org.json4s.jackson.JsonMethods
 
@@ -13,13 +17,16 @@ import org.json4s.jackson.JsonMethods
   * `pmod(hash(CAST(key AS STRING)), buckets)` and sorted within each
   * bucket by (key ascending, sort columns descending), written with
   * generations and tombstones, folded and committed by manifest. A
-  * probe computes its keys' buckets on the driver and opens ONLY the
-  * files those buckets list in the store's manifest, through the
-  * persisted schema — no directory listing, no schema inference, no
-  * Spark job before the first row is read — and min/max row-group stats
-  * cut inside them. Hashing the key's string form on BOTH build and
-  * probe sides makes the bucket function insensitive to the key column's
-  * physical type.
+  * probe runs on the calling thread: it routes its whole key set to
+  * buckets with one evaluation of the bucket function, reads ONLY the
+  * files those buckets list in the store's manifest on the driver
+  * ([[graft.util.LocalScan]], through the persisted schema), drops what
+  * the listed tombstones outrank and returns a local relation — no
+  * directory listing, no schema inference and no Spark job. Hashing the
+  * key's string form on BOTH build and probe sides makes the bucket
+  * function insensitive to the key column's physical type, and a probe
+  * matches rows on that same string form. Whole-table reads ([[read]])
+  * and folds stay Spark scans.
   *
   *  - TIMELINE store ([[buildTimeline]]/[[timelineProbe]]): the fact
   *    table keyed on a foreign key — the user-timeline route's FK
@@ -276,9 +283,8 @@ object ServingStores {
   def rebucket(spark: SparkSession, dest: String, newBuckets: Int): Unit =
     fold(spark, dest, minFiles = 0, newBuckets = Some(newBuckets))
 
-  /** All source rows posted under `key` — a scan of the key's one
-    * bucket's listed files (plus a broadcast tombstone anti-join when the
-    * store has live deletes).
+  /** All source rows posted under `key`: the [[timelineProbeMany]] of
+    * the one key on `__key`, read on the driver.
     */
   def postingProbe(spark: SparkSession, dest: String, key: String): DataFrame =
     timelineProbe(spark, dest, "__key", key).drop("__key")
@@ -364,53 +370,69 @@ object ServingStores {
       .drop("__bucket", "__gen")
   }
 
-  /** All fact rows for one FK value — a scan of the value's one bucket's
-    * listed files plus a row-group-prunable equality on the sorted fk
-    * column.
-    */
+  /** All fact rows for one FK value: [[timelineProbeMany]] of one key. */
   def timelineProbe(spark: SparkSession, dest: String, fkCol: String,
                     value: Any): DataFrame =
     timelineProbeMany(spark, dest, fkCol, Seq(value))
 
   /** [[timelineProbe]] for a SET of FK values (an entity resolving to
-    * several keys — shards, aliases, merged accounts). Key-routed: each
-    * key's bucket is computed on the driver ([[bucketsOf]]) and ONLY
-    * the files the latest manifest lists for those buckets are opened,
-    * through the persisted schema — building the frame lists no
-    * directory, infers nothing and starts no Spark job, so request cost
-    * is the matching spans, independent of the store's bucket count. In
-    * the plan, a disjunction of per-key (bucket literal, fk literal)
-    * conjuncts keeps the partition filter and the row-group-prunable key
-    * equality. A key set that routes to no listed file (EMPTY, or keys
-    * no row hashed to) returns a typed empty frame without touching the
-    * store — served and ad-hoc routes degrade identically. `fkCol` must
-    * be the store's persisted key.
+    * several keys — shards, aliases, merged accounts), run on the calling
+    * thread. The whole key set is routed by ONE evaluation of the bucket
+    * function itself ([[route]]); ONLY the files the latest manifest lists
+    * for those buckets are read, on the driver and through the persisted
+    * schema; a row is kept when its key's string form is one of the
+    * values' and no listed tombstone outranks it. The result is a local
+    * relation: building it lists no directory, infers nothing and starts
+    * no Spark job, and a filter or projection over it folds on the driver,
+    * so request cost is the matching buckets' files, independent of the
+    * store's bucket count. A key set that routes to no listed file (EMPTY,
+    * or keys no row hashed to) is a typed empty frame — served and ad-hoc
+    * routes degrade identically. `fkCol` must be the store's persisted
+    * key.
     */
   def timelineProbeMany(spark: SparkSession, dest: String, fkCol: String,
                         values: Seq[Any]): DataFrame = {
     val m = log.latest(dest)
     require(fkCol == m.key, s"store at $dest is keyed on '${m.key}', not '$fkCol'")
-    val files = bucketsOf(spark, values, m.buckets).distinct.flatMap(m.inBucket)
-    val rows =
-      if (files.isEmpty) m.scan(spark, dest, Nil)
-      else m.dropDead(spark, dest, m.scan(spark, dest, files).filter(values
-        .map(v => col("__bucket") === bucketOf(lit(v), m.buckets) &&
-          col(fkCol) === lit(v))
-        .reduce(_ || _)), m.idCol.orNull)
-    rows.drop("__bucket", "__gen")
+    val routed = route(spark, values, m.buckets)
+    val keys = routed.map(_._2).toSet
+    val layout = LocalScan.layout(m.rowSchema, Seq("__bucket"))
+    val key = LocalScan.stringOf(spark, layout, fkCol)
+    val dead = m.outranked(spark, dest)
+    val id = m.idCol.map(LocalScan.stringOf(spark, layout, _))
+    val gen = layout.fieldIndex("__gen")
+    val served = layout.fieldNames.indices.filterNot(i => Seq("__bucket", "__gen").contains(layout(i).name))
+    val rows = LocalScan.rows(spark, dest, m.rowSchema, "", Seq("__bucket"),
+        routed.map(_._1).distinct.flatMap(m.inBucket))(
+        r => keys(key(r)) && !id.exists(i => dead(i(r), r.getLong(gen))))
+      .map(r => InternalRow.fromSeq(served.map(i => r.get(i, layout(i).dataType))))
+    LocalScan.frame(spark, StructType(served.map(layout(_))), rows)
   }
 
-  /** Each literal key's bucket under [[bucketOf]] itself — the one bucket
-    * definition, so the driver routes exactly where [[tagged]] wrote.
-    * Evaluated as a projection over a one-row local relation, which the
-    * optimizer folds and collects on the driver without a Spark job.
+  /** Each key's bucket under [[bucketOf]] itself and its string form —
+    * the one bucket definition, so the driver routes exactly where
+    * [[tagged]] wrote. The two expressions are resolved once per session,
+    * key type and bucket count, then evaluated over the whole key set on
+    * plain values, with no query per probe. A null key matches no row.
     */
-  private def bucketsOf(spark: SparkSession, values: Seq[Any],
-                        buckets: Int): Seq[Int] =
-    if (values.isEmpty) Nil
-    else spark.createDataFrame(java.util.List.of(Row()), new StructType())
-      .select(values.map(v => bucketOf(lit(v), buckets)): _*)
-      .collect().head.toSeq.map(_.asInstanceOf[Int])
+  private def route(spark: SparkSession, values: Seq[Any],
+                    buckets: Int): Seq[(Int, String)] =
+    if (values.forall(_ == null)) Nil
+    else {
+      val keys = values.filter(_ != null).map(Literal(_))
+      val t = keys.head.dataType
+      require(keys.forall(_.dataType == t),
+        s"probe keys must share one type: ${keys.map(_.dataType).distinct}")
+      val Seq(bucket, string) = routers.getOrElseUpdate((spark, t, buckets),
+        LocalScan.resolve(spark, StructType(Seq(StructField("k", t))),
+          Seq(bucketOf(col("k"), buckets), col("k").cast("string"))))
+      keys.map { k =>
+        val row = InternalRow(k.value)
+        bucket.eval(row).asInstanceOf[Int] -> Option(string.eval(row)).map(_.toString).orNull
+      }
+    }
+
+  private val routers = TrieMap.empty[(SparkSession, DataType, Int), Seq[Expression]]
 
   def defaultDir(sfDir: String): String = {
     graft.util.StoreDirs.resolve("serving-store-v4", sfDir)

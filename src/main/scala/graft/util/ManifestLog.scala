@@ -65,6 +65,14 @@ object ManifestLog {
                  idCol: String): DataFrame =
       Tombstones.kill(spark, tombstones.map(Paths.get(dest, _)), rows, idCol,
         Tombstones.StringKey)
+
+    /** [[dropDead]]'s rule for rows read on the driver: the listed
+      * tombstones, read on the calling thread, as a test of a row's id
+      * (string form) and generation.
+      */
+    def outranked(spark: SparkSession, dest: String): (String, Long) => Boolean =
+      Tombstones.outranked(LocalScan.rows(spark, dest,
+        Tombstones.schema(Tombstones.StringKey), "", Nil, tombstones)())
   }
 
   /** A JSON array of strings, the form of `files` and `tombstones`. */

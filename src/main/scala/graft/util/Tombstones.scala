@@ -2,6 +2,7 @@ package graft.util
 
 import java.nio.file.{Path, Paths}
 
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -18,7 +19,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * The manifest-committed stores — [[graft.search.ServingStores]] (and
   * the SimHash, SRP, SRP-label and SQ8 stores built on it) and the BM25
   * index — keep their generation counter and tombstone file list in
-  * their manifest ([[ManifestLog]]) and [[kill]] against that list; a
+  * their manifest ([[ManifestLog]]) and [[kill]] against that list (a
+  * key-routed read on the driver applies the same rule, [[outranked]]); a
   * fold unlists the tombstones it applied and the reclaim after it
   * deletes them. The IVF, PQ, IVF-PQ and IVF-SQ8 stores still keep a
   * `_gen.txt` counter ([[nextGen]]), hold the store's [[StoreLock]]
@@ -36,7 +38,7 @@ object Tombstones {
 
   private val GenFile = "_gen.txt"
 
-  private def schema(keyType: DataType) = StructType(Seq(
+  private[graft] def schema(keyType: DataType) = StructType(Seq(
     StructField("__id", keyType), StructField("__gen", LongType)))
 
   def clear(dest: String): Unit = {
@@ -79,6 +81,16 @@ object Tombstones {
         rows(idCol).cast(keyType) === tb("__id") &&
           rows("__gen") < tb("__gen"), "left_anti")
     }
+
+  /** [[kill]]'s rule on plain values, for tombstone rows `(__id, __gen)`
+    * read on the driver with string ids: a row of id `i` at generation `g`
+    * is dead iff some tombstone of `i` has a generation above `g`.
+    */
+  def outranked(tombs: Seq[InternalRow]): (String, Long) => Boolean = {
+    val newest = tombs.filterNot(_.isNullAt(0))
+      .groupMapReduce(_.getUTF8String(0).toString)(_.getLong(1))(math.max)
+    (id, gen) => id != null && newest.get(id).exists(_ > gen)
+  }
 
   /** [[kill]] against the tombstone table's data files right now. No-op
     * (no join) when the store has never seen an upsert/delete.

@@ -63,11 +63,17 @@ class PlanHealthSpec extends SparkSpec {
 
   test("q_hashtag_upsert: the compacted upserted store probes as a pure " +
       "one-bucket pruned scan — tombstones folded, no join, no shuffle") {
-    val p = plan("q_hashtag_upsert")
-    assert(p.contains("PartitionFilters: [isnotnull(__bucket"),
-      "bucket partition prune missing")
+    // the probe is a driver read: it opens the files of one bucket of
+    // the store and no tombstone file, and the plan left is a local scan
+    val (q, opened) = graft.util.LocalScan.opened(
+      SparkEntry.queries("q_hashtag_upsert")(spark, sf))
+    val p = q.queryExecution.executedPlan.toString
+    val dirs = opened.map(f => java.nio.file.Paths.get(f).getParent.getFileName.toString)
+    assert(opened.nonEmpty && dirs.distinct.size == 1 && dirs.head.startsWith("__bucket="),
+      s"bucket prune missing: $opened")
     assert(!p.contains("Join"), s"post-compact probe should be join-free: $p")
-    assert(p.contains("TakeOrderedAndProject"))
+    // the cap, too, runs on the driver: nothing but the local scan is left
+    assert(!p.contains("Exchange") && p.contains("LocalTableScan"), p)
   }
 
   test("q_ann_ivf: centroid assignment has no Window operator") {

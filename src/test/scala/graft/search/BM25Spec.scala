@@ -304,12 +304,16 @@ class BM25Spec extends SparkSpec {
   test("serving scan is pruned to the query terms' buckets") {
     val dest = java.nio.file.Files.createTempDirectory("bm25idx").toString
     BM25Index.build(docs, "doc_id", "text", dest)
-    val plan = BM25Index.topKMerged(spark, dest, Seq("spark"), 5)
-      .queryExecution.executedPlan.toString
-    // partition pruning on tb must reach the postings scan
-    assert(plan.contains("PartitionFilters") && plan.contains("tb"))
-    // and the term filter must be pushed to parquet
-    assert(plan.contains("PushedFilters") && plan.contains("term"))
+    val tb = BM25Index.termBucket("spark", BM25Index.termBuckets(dest))
+    val opened = graft.util.LocalScan.opened(
+      BM25Index.topKMerged(spark, dest, Seq("spark"), 5))._2
+    // the postings and termstats reads open only the term's bucket, and
+    // every file of it; the corpus row is the only other read
+    def files(t: String) = graft.util.StoreFs.parquetFiles(
+      java.nio.file.Paths.get(dest, t, s"tb=$tb")).map(_.toString)
+    assert(opened.sorted == (files("postings") ++ files("termstats") ++
+      graft.util.StoreFs.parquetFiles(java.nio.file.Paths.get(dest, "corpus"))
+        .map(_.toString)).sorted, s"opened $opened")
   }
 
   test("JVM and Column term buckets agree, at more than one modulus") {

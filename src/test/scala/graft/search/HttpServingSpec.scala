@@ -209,12 +209,17 @@ class HttpServingSpec extends SparkSpec {
   test("indexed keyword route: postings-store plan, byte-identical envelope") {
     val dir = java.nio.file.Files.createTempDirectory("graft-http-bm25").toString
     BM25Index.build(tweets, "id", "tweetText", dir)
-    // the scoring plan reads the pruned postings store — no tokenize
-    // (Generate/explode) anywhere in the request plan
-    val indexed = Collections.keywordSearchIndexed(tweets, users, dir,
-      Seq("spark", "engines"), k = 10)
+    // the scoring reads the pruned postings store on the driver — it
+    // opens index files only, and no tokenize (Generate/explode) is left
+    // anywhere in the request plan
+    val (indexed, opened) = graft.util.LocalScan.opened(
+      Collections.keywordSearchIndexed(tweets, users, dir,
+        Seq("spark", "engines"), k = 10))
+    assert(opened.exists(_.startsWith(s"$dir/postings/tb=")),
+      s"the top-k must read the postings store: $opened")
+    assert(opened.forall(f => Seq("postings/tb=", "termstats/tb=", "corpus/")
+      .exists(t => f.startsWith(s"$dir/$t"))), s"read beyond the index: $opened")
     val plan = indexed.queryExecution.executedPlan.toString
-    assert(plan.contains("postings"), "plan must scan the postings store")
     assert(!plan.contains("Generate"), "served plan must not tokenize the corpus")
     // byte-identical envelopes: ad-hoc server vs indexed server
     val adhoc = HttpServing.start(0, HttpServing.referenceRoutes(tweets, users))
@@ -234,14 +239,19 @@ class HttpServingSpec extends SparkSpec {
       "byte-identical envelopes (round-10 verdict item 7)") {
     val dir = java.nio.file.Files.createTempDirectory("graft-http-tidx").toString
     HttpServing.buildTweetIndex(tweets, users, dir)
-    // plan shape: the probe reads ONE bucket of the posting store — no
-    // array_contains over the corpus anywhere in the request plan
-    val probe = ServingStores.postingProbe(spark, dir + "/hashtags", "jobs")
-    val plan = probe.queryExecution.executedPlan.toString
-    assert(!plan.contains("array_contains"),
-      s"stored hashtag plan still scans the corpus:\n$plan")
-    assert(plan.contains("PartitionFilters") && plan.contains("__bucket"),
-      s"stored hashtag plan lost its bucket pruning:\n$plan")
+    // the probe opens exactly the files of the tag's ONE bucket of the
+    // posting store — nothing of the corpus
+    val bucket = spark.read.parquet(dir + "/hashtags")
+      .filter(col("__key") === "jobs").select(col("__bucket")).distinct()
+      .collect().map(_.getInt(0)).toSeq
+    assert(bucket.size == 1, s"'jobs' was written to buckets $bucket")
+    val (probe, opened) = graft.util.LocalScan.opened(
+      ServingStores.postingProbe(spark, dir + "/hashtags", "jobs"))
+    assert(probe.count() == 2)
+    assert(opened.nonEmpty &&
+      opened.forall(_.startsWith(s"$dir/hashtags/__bucket=${bucket.head}/")) &&
+      opened.size == ServingStores.bucketFileCount(dir + "/hashtags", bucket.head),
+      s"the hashtag probe did not open exactly bucket ${bucket.head}: $opened")
     // byte-identical envelopes across both non-keyword routes, incl.
     // empty-match and unknown-user error shapes
     val adhoc = HttpServing.start(0, HttpServing.referenceRoutes(tweets, users))
@@ -281,58 +291,43 @@ class HttpServingSpec extends SparkSpec {
     assert(stored == adhoc)
   }
 
-  test("stored routes are key-routed: building a response frame starts no " +
-      "Spark job, a hashtag read over a 64-bucket store runs fewer than 64 " +
-      "tasks, and a user read runs at most 2 jobs") {
-    // enough distinct keys that every one of the 64 buckets holds a
-    // directory in each store — the shape in which listing the store is
-    // itself a parallel Spark job
+  test("every stored route runs on the driver: 0 Spark jobs and 0 tasks " +
+      "per read, byte-equal to the ad-hoc route — hits, no match and " +
+      "unknown users") {
     val n = 600
     val manyTweets = (1 to n).map(i => (i.toString, (i % 500 + 1).toString,
         s"spark job post $i", Seq(s"t$i", s"t${i + n}", "jobs"),
         f"2021-03-${i % 28 + 1}%02dT10:00:00Z"))
       .toDF("id", "userID", "tweetText", "tweetHashtags", "tweetDateTime")
-    val manyUsers = (1 to 500).map(i => (i.toString, s"user$i", s"User $i"))
+    // user 501 holds no tweet: a known user with an empty timeline
+    val manyUsers = (1 to 501).map(i => (i.toString, s"user$i", s"User $i"))
       .toDF("id", "userScreenName", "userName")
-    val root = java.nio.file.Files.createTempDirectory("graft-http-routed")
+    val root = java.nio.file.Files.createTempDirectory("graft-http-driver")
     val tidx = root.resolve("tidx").toString
     val bm25 = root.resolve("bm25").toString
     HttpServing.buildTweetIndex(manyTweets, manyUsers, tidx)
     BM25Index.build(manyTweets, "id", "tweetText", bm25)
-    for (store <- Seq("hashtags", "by_user", "users"))
-      assert(java.nio.file.Files.list(java.nio.file.Paths.get(tidx, store))
-        .filter(_.getFileName.toString.startsWith("__bucket=")).count() == 64,
-        s"$store must fill all 64 buckets for this check")
-    val sc = spark.sparkContext
-    // 1. building each stored read's frame: no listing, no inference
-    val frames = Seq[(String, () => org.apache.spark.sql.DataFrame)](
-      "keyword" -> (() => Collections.keywordSearchIndexed(manyTweets,
-        manyUsers, bm25, Seq("spark", "job"), k = 10)),
-      "hashtag" -> (() =>
-        ServingStores.postingProbe(spark, s"$tidx/hashtags", "t7")),
-      "user lookup" -> (() =>
-        ServingStores.postingProbe(spark, s"$tidx/users", "user7")),
-      "timeline" -> (() =>
-        ServingStores.timelineProbe(spark, s"$tidx/by_user", "userID", "7")))
-    frames.foreach { case (name, build) =>
-      val w = SparkWork(sc)(build())
-      assert(w.jobs == 0, s"building the $name frame started ${w.jobs} jobs")
-    }
-    // 2. whole requests through the served routes
-    val routes = HttpServing.referenceRoutes(manyTweets, manyUsers,
+    val stored = HttpServing.referenceRoutes(manyTweets, manyUsers,
       bm25IndexDir = Some(bm25), tweetIndexDir = Some(tidx))
-    val hashtag = SparkWork(sc)(routes("/api/search/hashtag")(Map("tag" -> "t7")))
-    assert(json(hashtag.result, "$.count") == "1", hashtag.result)
-    assert(hashtag.tasks < 64,
-      s"hashtag read ran ${hashtag.tasks} tasks over a 64-bucket store")
-    val user = SparkWork(sc)(routes("/api/search/user")(Map("id" -> "user7")))
-    assert(json(user.result, "$.count") == "2", user.result)
-    assert(user.jobs <= 2, s"user read ran ${user.jobs} jobs")
-    // and the answers are still the ad-hoc routes' bytes
     val adhoc = HttpServing.referenceRoutes(manyTweets, manyUsers)
-    assert(hashtag.result ==
-      adhoc("/api/search/hashtag")(Map("tag" -> "t7")))
-    assert(user.result == adhoc("/api/search/user")(Map("id" -> "user7")))
+    val reads = Seq(
+      "/api/search/query" -> ("query" -> "spark job", "10"),
+      "/api/search/query" -> ("query" -> "post 77", "10"),
+      "/api/search/query" -> ("query" -> "nosuchterm", "0"),
+      "/api/search/hashtag" -> ("tag" -> "t7", "1"),
+      "/api/search/hashtag" -> ("tag" -> "jobs", "600"),
+      "/api/search/hashtag" -> ("tag" -> "nosuch", "0"),
+      "/api/search/user" -> ("id" -> "user7", "2"),
+      "/api/search/user" -> ("id" -> "user501", null),
+      "/api/search/user" -> ("id" -> "nobody", null))
+    reads.foreach { case (path, ((k, v), count)) =>
+      val read = SparkWork(spark.sparkContext)(stored(path)(Map(k -> v)))
+      assert(read.jobs == 0 && read.tasks == 0,
+        s"$path?$k=$v ran ${read.jobs} jobs and ${read.tasks} tasks")
+      assert(json(read.result, "$.count") == count, read.result)
+      assert(read.result == adhoc(path)(Map(k -> v)),
+        s"$path?$k=$v: stored envelope differs from ad hoc")
+    }
   }
 
   test("missing params and unknown users return the error envelope, HTTP 200") {

@@ -5,7 +5,7 @@ import java.nio.file.Paths
 import scala.jdk.CollectionConverters._
 
 import graft.{SparkSpec, SparkWork}
-import graft.util.StoreFs
+import graft.util.{LocalScan, StoreFs}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.scalacheck.Gen
@@ -71,10 +71,14 @@ class ServingStoresPropertySpec extends SparkSpec {
       assert(probed == expected, s"tag '$tag': $probed != $expected")
     }
     // append uses the STORE's bucket count, not a caller guess: a probe
-    // for an appended-only key still prunes to one bucket directory
-    val plan = ServingStores.postingProbe(spark, dest, "new")
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("__bucket"))
+    // for an appended-only key opens only the one bucket directory the
+    // append wrote it to
+    val written = spark.read.parquet(dest).filter(col("__key") === "new")
+      .select(col("__bucket")).distinct().collect().map(_.getInt(0)).toSeq
+    val opened = LocalScan.opened(ServingStores.postingProbe(spark, dest, "new"))._2
+    assert(written.size == 1 && opened.nonEmpty &&
+      opened.forall(_.startsWith(s"$dest/__bucket=${written.head}/")),
+      s"'new' written to $written, probe opened $opened")
     // lifecycle: truncate forgets base AND appended
     StoreAdmin.truncate(dest)
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dest)))
@@ -410,9 +414,9 @@ class ServingStoresPropertySpec extends SparkSpec {
         .select(col("fk").cast("long"), col("__bucket")).distinct()
         .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
       written.foreach { case (k, b) =>
-        val opened = ServingStores.timelineProbe(spark, dest, "fk", key(k))
-          .inputFiles.map(f => Paths.get(new java.net.URI(f)).getParent
-            .getFileName.toString).distinct.toSeq
+        val opened = LocalScan.opened(
+            ServingStores.timelineProbe(spark, dest, "fk", key(k)))._2
+          .map(f => Paths.get(f).getParent.getFileName.toString).distinct
         assert(opened == Seq(s"__bucket=$b"),
           s"$keyType fk $k written to bucket $b, probe opened $opened")
       }
@@ -493,5 +497,47 @@ class ServingStoresPropertySpec extends SparkSpec {
     assert(bucketOfKey.values.toSet.size == 8, "a bucket received no key")
     assert(foldJobs(2) == foldJobs(8))
     StoreAdmin.truncate(probe)
+  }
+
+  test("probes ≡ the source filter after every write and fold: append, " +
+      "upsert, delete, compact, rebucket") {
+    // the store's source, kept as plain rows: (id, fk, v)
+    var source = (1L to 30L).map(i => (i, s"u${i % 4}", i.toInt)).toVector
+    val dest = java.nio.file.Files.createTempDirectory("graft-tl-ops").toString
+    ServingStores.buildTimeline(source.toDF("id", "fk", "v"), "fk", dest,
+      sortDesc = Seq("v"), buckets = 3)
+    def check(step: String): Unit = {
+      val keys = (0 to 5).map(k => s"u$k")
+      keys.foreach { k =>
+        val probed = ServingStores.timelineProbe(spark, dest, "fk", k).collect()
+          .map(r => (r.getLong(0), r.getString(1), r.getInt(2))).sorted.toSeq
+        assert(probed == source.filter(_._2 == k).sorted, s"$step: fk $k")
+      }
+      val many = ServingStores.timelineProbeMany(spark, dest, "fk", keys).collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getInt(2))).sorted.toSeq
+      assert(many == source.sorted, s"$step: every key at once")
+    }
+    check("build")
+    val fresh = (31L to 36L).map(i => (i, s"u${i % 6}", i.toInt))
+    ServingStores.appendTimeline(fresh.toDF("id", "fk", "v"), dest)
+    source ++= fresh
+    check("append")
+    // edits move rows between keys and change values
+    val edits = Seq((2L, "u5", 200), (7L, "u3", 700), (33L, "u0", 330))
+    ServingStores.upsertTimeline(edits.toDF("id", "fk", "v"), "id", dest)
+    source = source.filterNot(r => edits.exists(_._1 == r._1)) ++ edits
+    check("upsert")
+    ServingStores.deleteIds(spark, dest, "id", Seq(3L, 31L, 7L))
+    source = source.filterNot(r => Set(3L, 31L, 7L)(r._1))
+    check("delete")
+    ServingStores.compact(spark, dest)
+    assert(!ServingStores.hasTombstones(dest))
+    check("compact")
+    ServingStores.rebucket(spark, dest, 5)
+    check("rebucket")
+    ServingStores.upsertTimeline(Seq((4L, "u1", 40)).toDF("id", "fk", "v"), "id", dest)
+    source = source.filterNot(_._1 == 4L) :+ ((4L, "u1", 40))
+    check("upsert after rebucket")
+    StoreAdmin.truncate(dest)
   }
 }

@@ -242,6 +242,57 @@ class StoreConcurrencySpec extends SparkSpec with BeforeAndAfterEach {
     StoreAdmin.truncate(dest)
   }
 
+  test("four threads probing stores of four row layouts at once each " +
+      "serve exactly their own rows") {
+    // column names no other spec uses, so the driver's reader for each
+    // layout is built while the four threads race
+    val root = Files.createTempDirectory("graft-conc-layouts")
+    val a = Seq(("k1", 1, "x"), ("k2", 2, "y"), ("k1", 3, "z"))
+      .toDF("ca_key", "ca_n", "ca_s")
+    val b = Seq((1L, 0.5, Seq("p", "q")), (2L, 1.5, Seq.empty[String]), (1L, 2.5, Seq("r")))
+      .toDF("cb_key", "cb_d", "cb_arr")
+    val c = Seq((10L, Seq("jobs", "perf"), true), (11L, Seq("jobs"), false))
+      .toDF("cc_id", "cc_tags", "cc_flag")
+    val d = Seq(("m1", "v1", java.sql.Timestamp.valueOf("2021-03-01 10:00:00")),
+        ("m2", "v2", java.sql.Timestamp.valueOf("2021-03-02 10:00:00")))
+      .toDF("cd_id", "cd_key", "cd_ts")
+    def dir(n: String) = root.resolve(n).toString
+    ServingStores.buildTimeline(a, "ca_key", dir("a"), buckets = 3)
+    ServingStores.buildTimeline(b, "cb_key", dir("b"), buckets = 2)
+    ServingStores.buildPostings(c, col("cc_tags"), dir("c"), buckets = 2)
+    ServingStores.buildTimeline(d, "cd_key", dir("d"), buckets = 2)
+    ServingStores.upsertTimeline(
+      Seq(("m1", "v1", java.sql.Timestamp.valueOf("2021-03-05 10:00:00")))
+        .toDF("cd_id", "cd_key", "cd_ts"), "cd_id", dir("d"))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    val probes = Seq[(() => org.apache.spark.sql.DataFrame, Seq[String])](
+      (() => ServingStores.timelineProbe(spark, dir("a"), "ca_key", "k1"),
+        rows(a.filter(col("ca_key") === "k1"))),
+      (() => ServingStores.timelineProbeMany(spark, dir("b"), "cb_key", Seq(1L, 2L)),
+        rows(b)),
+      (() => ServingStores.postingProbe(spark, dir("c"), "jobs"), rows(c)),
+      (() => ServingStores.timelineProbe(spark, dir("d"), "cd_key", "v1"),
+        Seq("[m1,v1,2021-03-05 10:00:00.0]")))
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val threads = probes.map { case (probe, expected) =>
+      val t = new Thread(() => {
+        start.await()
+        (1 to 25).foreach { i =>
+          try {
+            val got = rows(probe())
+            if (got != expected) failures.add(s"read $i: $got != $expected")
+          } catch { case e: Exception => failures.add(s"read $i: $e") }
+        }
+      })
+      t.start(); t
+    }
+    start.countDown()
+    threads.foreach(_.join())
+    assert(failures.isEmpty, failures.toArray.take(5).mkString("\n"))
+    StoreAdmin.truncate(root.toString)
+  }
+
   test("a SimHashStore upsert landing DURING its compact survives it — no " +
       "row lost, the edit's signature wins") {
     import graft.dedup.{Dedup, SimHashStore}

@@ -339,13 +339,12 @@ class AnnStoreLifecycleSpec extends SparkSpec {
     // the point of the layout: the sketch scan opens the files of ONE
     // bucket directory only, and the exact label predicate rides the
     // pruned within-bucket scan
-    val filtered = SrpLabelStore.topKFilteredAt(spark, dest, lab(all), 2L, 5)
-    val plan = filtered.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("__bucket"),
-      s"filtered serve must prune the sketch scan to the label's bucket:\n$plan")
-    val scannedDirs = filtered.inputFiles.map(_.split("/").init.last).distinct
+    val opened = graft.util.LocalScan.opened(
+      SrpLabelStore.topKFilteredAt(spark, dest, lab(all), 2L, 5))._2
+      .filter(_.startsWith(dest))
+    val scannedDirs = opened.map(_.split("/").init.last).distinct
     assert(scannedDirs.length == 1 && scannedDirs.head.startsWith("__bucket="),
-      s"filtered serve read files outside one bucket: ${filtered.inputFiles.toSeq}")
+      s"filtered serve read files outside one bucket: $opened")
     // label EDIT via upsert: vector 35 moves to label 0 — it must leave
     // label 2's partition (the tombstone is id-keyed, not partition-keyed)
     SrpLabelStore.upsertBatch(spark, dest,

@@ -109,4 +109,17 @@ class TweetNormalizeSpec extends SparkSpec {
     val scans = plan.collect { case r: LogicalRelation => r }
     assert(scans.size == 1, s"${scans.size} scans of the raw tweets:\n$plan")
   }
+
+  test("TweetBench writes the same tweets in one file as in 16 when 16 " +
+      "does not divide the count") {
+    def tweets(nFiles: Int): Long = {
+      val dir = Files.createTempDirectory(s"tweetbench-spec-$nFiles")
+      try {
+        graft.TweetBench.writeCorpus(dir.toFile, nFiles, 35L)
+        Readers.multilineJson(spark, dir.toString, TweetSchema.raw).count()
+      } finally graft.util.StoreFs.deleteRecursively(dir)
+    }
+    assert(tweets(1) == 35L)
+    assert(tweets(16) == 35L)
+  }
 }
