@@ -430,8 +430,7 @@ object SearchQueries extends QueryPack {
     // (round-10 verdict item 7; same oracle as the ad-hoc query).
     "q_hashtag_served" -> ((s, dir) => {
       val store = ServingStores.ensureDocPostings(s, dir)
-      LocalScan.top(ServingStores.postingProbe(s, store, "spark"), 1000,
-          col("doc_id").asc)
+      ServingStores.postingProbe(s, store, "spark", Some(LocalScan.Top(1000, col("doc_id").asc)))
         .select(col("doc_id"), col("source"), col("n_chars"))
     }),
 
@@ -441,8 +440,7 @@ object SearchQueries extends QueryPack {
     // gate, not just a spec
     "q_hashtag_incr" -> ((s, dir) => {
       val store = ServingStores.ensureDocPostingsIncr(s, dir)
-      LocalScan.top(ServingStores.postingProbe(s, store, "spark"), 1000,
-          col("doc_id").asc)
+      ServingStores.postingProbe(s, store, "spark", Some(LocalScan.Top(1000, col("doc_id").asc)))
         .select(col("doc_id"), col("source"), col("n_chars"))
     }),
 
@@ -479,8 +477,7 @@ object SearchQueries extends QueryPack {
     // served column (one stale version anywhere = hash mismatch).
     "q_hashtag_upsert" -> ((s, dir) => {
       val store = ServingStores.ensureDocPostingsUpsert(s, dir)
-      LocalScan.top(ServingStores.postingProbe(s, store, "spark"), 1000,
-          col("doc_id").asc)
+      ServingStores.postingProbe(s, store, "spark", Some(LocalScan.Top(1000, col("doc_id").asc)))
         .select(col("doc_id"), col("source"), col("n_chars"))
     }),
 

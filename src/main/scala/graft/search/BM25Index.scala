@@ -5,6 +5,7 @@ import java.nio.file.Paths
 import graft.util.CacheLedger.CacheOps
 import graft.util.{LocalScan, ManifestLog, Stamp, StoreFs, Tables, Tombstones}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources
 import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.json4s.{DefaultFormats, Formats, JArray, JInt, JObject, JString, JValue}
@@ -243,12 +244,15 @@ object BM25Index {
       val part = Part(dir, gen, buckets, JObject(List("postings" -> post,
         "termstats" -> terms, "corpus" -> corpus).map { case (t, df) =>
           t -> JsonMethods.parse(df.schema.json) }))
+      // the sorts lead with `tb`, the writer's own required ordering:
+      // without it the writer inserts a sort by `tb` alone, which drops the
+      // within-bucket term order the term slices' row-group pruning needs
       part -> ManifestLog.stage(dest) { tmp =>
         post.repartition(col("tb"))
-          .sortWithinPartitions(col("term"), col("doc"))
+          .sortWithinPartitions(col("tb"), col("term"), col("doc"))
           .write.partitionBy("tb").parquet(s"$tmp/${part.root("postings")}")
         terms.repartition(col("tb"))
-          .sortWithinPartitions(col("term"))
+          .sortWithinPartitions(col("tb"), col("term"))
           .write.partitionBy("tb").parquet(s"$tmp/${part.root("termstats")}")
         corpus.coalesce(1).write.parquet(s"$tmp/${part.root("corpus")}")
       }
@@ -277,8 +281,10 @@ object BM25Index {
     /** One table's rows of the analyzed `terms` over every part, read on
       * the calling thread into one local frame: per part only the terms'
       * bucket files (routed by the part's own persisted modulus) are
-      * opened, and a postings row that a listed tombstone outranks at its
-      * part's generation is dropped.
+      * opened, inside them only the row groups whose term statistics admit
+      * one of the terms are decoded (the within-bucket term sort keeps a
+      * term's rows together), and a postings row that a listed tombstone
+      * outranks at its part's generation is dropped.
       */
     def slice(t: String, terms: Seq[String]): DataFrame = {
       val wanted = terms.toSet
@@ -290,7 +296,7 @@ object BM25Index {
       LocalScan.frame(spark, layouts.head, m.parts.flatMap { p =>
         val dirs = terms.map(termBucket(_, p.termBuckets)).distinct.map(b => s"${p.root(t)}/tb=$b/")
         LocalScan.rows(spark, dest, p.schema(t), p.root(t), Seq("tb"),
-            m.files.filter(f => dirs.exists(f.startsWith)))(
+            m.files.filter(f => dirs.exists(f.startsWith)), Seq(sources.In("term", terms.toArray)))(
           r => wanted(r.getUTF8String(term).toString) && !doc.exists(d => dead(d(r), p.gen)))
       })
     }
@@ -431,8 +437,9 @@ object BM25Index {
 
   /** Serving-path top-k over every part, run on the calling thread: per
     * part only the query terms' bucket files of postings and termstats
-    * are read, on the driver ([[Snapshot.slice]]), with the tombstone
-    * kill applied; df is summed per term across parts and N/avglen
+    * are read, on the driver ([[Snapshot.slice]]), and inside them only
+    * the row groups whose term statistics admit a query term, with the
+    * tombstone kill applied; df is summed per term across parts and N/avglen
     * recombined from exact counts. Each doc's score is ONE projection of
     * BM25's own expressions over its postings, and the top-k cut is
     * Spark's ordering on plain values — a local relation of (doc, score),

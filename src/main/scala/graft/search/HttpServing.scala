@@ -33,10 +33,12 @@ import org.apache.spark.sql.functions._
   * layouts — no tokenize, no `array_contains` scan and no collection
   * frame — with byte-identical envelopes (spec-asserted). Every stored
   * read is key-routed and runs on the calling thread: it opens only the
-  * files its terms or keys hash to, on the driver, and a whole stored
-  * request runs no Spark job and no task (spec-asserted with a
-  * listener), so its cost follows its keys' files, not the store's bucket
-  * count or Spark's per-job overhead.
+  * files its terms or keys hash to, on the driver, decodes only the row
+  * groups whose statistics admit them, and holds at most the route's cap
+  * of a hashtag's or a user's rows; a whole stored request runs no Spark
+  * job and no task (spec-asserted with a listener), so its cost follows
+  * its keys' row groups, not the store's bucket count or Spark's per-job
+  * overhead.
   *
   * A request that fails still answers with the reference's error
   * envelope, and its cause goes to stderr as
@@ -152,9 +154,8 @@ object HttpServing {
         case Some(tag) =>
           val results = tweetIndexDir match {
             case Some(dir) =>
-              withAuthors(LocalScan.top(
-                ServingStores.postingProbe(spark, dir + "/hashtags", tag),
-                1000, col("id").cast("long").asc))
+              withAuthors(ServingStores.postingProbe(spark, dir + "/hashtags", tag,
+                Some(LocalScan.Top(1000, col("id").cast("long").asc))))
             case None =>
               Collections.hashtagSearch(tweets, tag)
                 .join(users.withColumnRenamed("id", "uid"),
@@ -180,9 +181,9 @@ object HttpServing {
               val u = ServingStores.postingProbe(spark, dir + "/users", id)
                 .select(col("id"), col("userScreenName")).collect()
               if (u.isEmpty) null
-              else LocalScan.top(ServingStores.timelineProbeMany(spark, dir + "/by_user",
-                  "userID", u.map(_.getString(0)).toSeq.distinct),
-                  1000, col("tweetDateTime").desc, col("id").cast("long").desc)
+              else ServingStores.timelineProbeMany(spark, dir + "/by_user",
+                  "userID", u.map(_.getString(0)).toSeq.distinct,
+                  Some(LocalScan.Top(1000, col("tweetDateTime").desc, col("id").cast("long").desc)))
                 .select(lit(u.head.getString(1)).as("userScreenName"),
                   col("id").as("tweet_id"), col("tweetDateTime"),
                   col("tweetText"))

@@ -8,7 +8,8 @@ import graft.util.{LocalScan, ManifestLog, StoreFs, Tombstones}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructField, StructType}
+import org.apache.spark.sql.sources
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.json4s.{DefaultFormats, Formats, JArray, JInt, JObject, JString, JValue}
 import org.json4s.jackson.JsonMethods
@@ -284,10 +285,12 @@ object ServingStores {
     fold(spark, dest, minFiles = 0, newBuckets = Some(newBuckets))
 
   /** All source rows posted under `key`: the [[timelineProbeMany]] of
-    * the one key on `__key`, read on the driver.
+    * the one key on `__key`, read on the driver; with `top`, only its
+    * first rows.
     */
-  def postingProbe(spark: SparkSession, dest: String, key: String): DataFrame =
-    timelineProbe(spark, dest, "__key", key).drop("__key")
+  def postingProbe(spark: SparkSession, dest: String, key: String,
+                   top: Option[LocalScan.Top] = None): DataFrame =
+    timelineProbe(spark, dest, "__key", key, top).drop("__key")
 
   /** Fact rows partitioned by `pmod(hash(fk), buckets)`, sorted by
     * (fk, `sortDesc` descending) within each bucket file, committed as
@@ -372,26 +375,30 @@ object ServingStores {
 
   /** All fact rows for one FK value: [[timelineProbeMany]] of one key. */
   def timelineProbe(spark: SparkSession, dest: String, fkCol: String,
-                    value: Any): DataFrame =
-    timelineProbeMany(spark, dest, fkCol, Seq(value))
+                    value: Any, top: Option[LocalScan.Top] = None): DataFrame =
+    timelineProbeMany(spark, dest, fkCol, Seq(value), top)
 
   /** [[timelineProbe]] for a SET of FK values (an entity resolving to
     * several keys — shards, aliases, merged accounts), run on the calling
     * thread. The whole key set is routed by ONE evaluation of the bucket
     * function itself ([[route]]); ONLY the files the latest manifest lists
     * for those buckets are read, on the driver and through the persisted
-    * schema; a row is kept when its key's string form is one of the
-    * values' and no listed tombstone outranks it. The result is a local
-    * relation: building it lists no directory, infers nothing and starts
-    * no Spark job, and a filter or projection over it folds on the driver,
-    * so request cost is the matching buckets' files, independent of the
-    * store's bucket count. A key set that routes to no listed file (EMPTY,
-    * or keys no row hashed to) is a typed empty frame — served and ad-hoc
-    * routes degrade identically. `fkCol` must be the store's persisted
-    * key.
+    * schema, and inside them only the row groups whose min/max statistics
+    * admit one of the keys ([[keyFilter]]) — the within-bucket key sort
+    * keeps each key's rows in few row groups. A row is kept when its key's
+    * string form is one of the values' and no listed tombstone outranks
+    * it; with `top`, only its first rows are held while they stream, so a
+    * key with many rows costs no more memory than the bound. The result is
+    * a local relation: building it lists no directory, infers nothing and
+    * starts no Spark job, and a filter or projection over it folds on the
+    * driver, so request cost is the matching row groups, independent of
+    * the store's bucket count. A key set that routes to no listed file
+    * (EMPTY, or keys no row hashed to) is a typed empty frame — served and
+    * ad-hoc routes degrade identically. `fkCol` must be the store's
+    * persisted key.
     */
   def timelineProbeMany(spark: SparkSession, dest: String, fkCol: String,
-                        values: Seq[Any]): DataFrame = {
+                        values: Seq[Any], top: Option[LocalScan.Top] = None): DataFrame = {
     val m = log.latest(dest)
     require(fkCol == m.key, s"store at $dest is keyed on '${m.key}', not '$fkCol'")
     val routed = route(spark, values, m.buckets)
@@ -403,17 +410,33 @@ object ServingStores {
     val gen = layout.fieldIndex("__gen")
     val served = layout.fieldNames.indices.filterNot(i => Seq("__bucket", "__gen").contains(layout(i).name))
     val rows = LocalScan.rows(spark, dest, m.rowSchema, "", Seq("__bucket"),
-        routed.map(_._1).distinct.flatMap(m.inBucket))(
+        routed.map(_._1).distinct.flatMap(m.inBucket), keyFilter(layout(fkCol), keys).toSeq, top)(
         r => keys(key(r)) && !id.exists(i => dead(i(r), r.getLong(gen))))
       .map(r => InternalRow.fromSeq(served.map(i => r.get(i, layout(i).dataType))))
     LocalScan.frame(spark, StructType(served.map(layout(_))), rows)
   }
 
+  /** The row-group filter of a probe of `keys` (string forms) on `field`:
+    * the keys as values of the column's own type. A row whose string form
+    * is a key holds the value the key parses to, so the filter admits
+    * every row the probe keeps. None for a type without a parse here.
+    */
+  private def keyFilter(field: StructField, keys: Set[String]): Option[sources.Filter] = {
+    val typed: Option[Seq[Any]] = field.dataType match {
+      case StringType => Some(keys.toSeq)
+      case LongType => Some(keys.toSeq.flatMap(_.toLongOption))
+      case IntegerType => Some(keys.toSeq.flatMap(_.toIntOption))
+      case _ => None
+    }
+    typed.filter(_.nonEmpty).map(vs => sources.In(field.name, vs.toArray))
+  }
+
   /** Each key's bucket under [[bucketOf]] itself and its string form —
     * the one bucket definition, so the driver routes exactly where
-    * [[tagged]] wrote. The two expressions are resolved once per session,
-    * key type and bucket count, then evaluated over the whole key set on
-    * plain values, with no query per probe. A null key matches no row.
+    * [[tagged]] wrote. The two expressions are resolved once per session
+    * state ([[LocalScan.confs]]), key type and bucket count, then
+    * evaluated over the whole key set on plain values, with no query per
+    * probe. A null key matches no row.
     */
   private def route(spark: SparkSession, values: Seq[Any],
                     buckets: Int): Seq[(Int, String)] =
@@ -423,7 +446,7 @@ object ServingStores {
       val t = keys.head.dataType
       require(keys.forall(_.dataType == t),
         s"probe keys must share one type: ${keys.map(_.dataType).distinct}")
-      val Seq(bucket, string) = routers.getOrElseUpdate((spark, t, buckets),
+      val Seq(bucket, string) = routers.getOrElseUpdate((LocalScan.confs(spark), t, buckets),
         LocalScan.resolve(spark, StructType(Seq(StructField("k", t))),
           Seq(bucketOf(col("k"), buckets), col("k").cast("string"))))
       keys.map { k =>
@@ -432,7 +455,7 @@ object ServingStores {
       }
     }
 
-  private val routers = TrieMap.empty[(SparkSession, DataType, Int), Seq[Expression]]
+  private val routers = TrieMap.empty[(Map[String, String], DataType, Int), Seq[Expression]]
 
   def defaultDir(sfDir: String): String = {
     graft.util.StoreDirs.resolve("serving-store-v4", sfDir)

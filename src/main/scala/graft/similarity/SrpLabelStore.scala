@@ -32,9 +32,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * rows are bucketed by the hash of the label's string form — a BOUNDED
   * directory count at ANY label cardinality — and sorted by label within
   * each bucket, so the filtered search is one
-  * [[graft.search.ServingStores.timelineProbe]]: it opens only the
-  * label's bucket's listed files and the exact label equality rides the
-  * scan, row-group min/max stats skipping the bucket's other labels. A
+  * [[graft.search.ServingStores.timelineProbe]]: on the driver, it opens
+  * only the label's bucket's listed files, decodes only the row groups
+  * whose min/max label statistics admit the label (skipping the bucket's
+  * other labels) and keeps the rows of exactly that label. A
   * filtered query reads ~1/buckets of the corpus from disk regardless
   * of how many labels exist. The bucket count is a BUILD parameter the
   * manifest persists (index identity: a prober or appender reads it

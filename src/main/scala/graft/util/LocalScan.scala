@@ -1,12 +1,22 @@
 package graft.util
 
-import java.nio.file.Paths
+import java.io.ByteArrayInputStream
+import java.nio.{ByteBuffer, ByteOrder}
+import java.nio.channels.FileChannel
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Path, Paths}
 
 import scala.collection.concurrent.TrieMap
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.filter2.compat.{FilterCompat, RowGroupFilter}
+import org.apache.parquet.filter2.predicate.FilterApi
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.spark.SparkContext
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
@@ -14,8 +24,10 @@ import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, Bin
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, Project, Sort, SubqueryAlias}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.datasources.{DataSourceUtils, FileFormat, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFilters}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.sources
 import org.apache.spark.sql.types.{ArrayType, StringType, StructType}
 import org.apache.spark.sql.{Column, DataFrame, GraftPlanBridge, SparkSession}
 
@@ -33,20 +45,32 @@ import org.apache.spark.sql.{Column, DataFrame, GraftPlanBridge, SparkSession}
   * stored route can never turn back into a Spark job unnoticed.
   *
   * Files are read through `ParquetFileFormat.buildReaderWithPartitionValues`,
-  * the function a scan task runs. One reader is built per session and
-  * row layout, on a fresh Hadoop conf: building one broadcasts its conf,
-  * and a conf shared between layouts races on the requested schema the
-  * reader stores in it.
+  * the function a scan task runs. One reader is built per row layout and
+  * session state — the context and the SQL confs set in the session, so a
+  * session that changes a parquet conf gets a reader built under it — on
+  * a fresh Hadoop conf: building one broadcasts its conf, and a conf
+  * shared between layouts races on the requested schema the reader stores
+  * in it. A reader's filters are fixed when it is built, so a read's own
+  * predicate prunes before the reader runs ([[rows]]): the reader is
+  * handed only the byte ranges of the row groups whose min/max statistics
+  * admit the predicate, as Spark's own `ParquetFilters` converts it.
   */
 object LocalScan {
 
   private type Reader = PartitionedFile => Iterator[InternalRow]
 
-  private val readers = TrieMap.empty[(SparkSession, StructType, StructType), Reader]
+  private val readers =
+    TrieMap.empty[(SparkContext, Map[String, String], StructType, StructType), Reader]
+
+  /** The SQL confs set in `spark`'s session: with its context, what a
+    * reader or an expression resolved for the session depends on.
+    */
+  private[graft] def confs(spark: SparkSession): Map[String, String] =
+    spark.sessionState.conf.getAllConfs
 
   private def reader(spark: SparkSession, data: StructType, parts: StructType): Reader =
-    readers.getOrElseUpdate((spark, data, parts), {
-      readers.keys.filter(_._1.sparkContext.isStopped).foreach(readers.remove)
+    readers.getOrElseUpdate((spark.sparkContext, confs(spark), data, parts), {
+      readers.keys.filter(_._1.isStopped).foreach(readers.remove)
       new ParquetFileFormat().buildReaderWithPartitionValues(spark, data, parts, data,
         Nil, Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), hadoopConf(spark))
     })
@@ -66,18 +90,46 @@ object LocalScan {
     conf
   }
 
-  private val opening = new ThreadLocal[mutable.Buffer[String]]
+  /** What the driver reads on one thread did: the store files they
+    * opened, as absolute paths, and the rows the parquet reader decoded
+    * from them before any plain-value test.
+    */
+  final case class Reads(files: Seq[String], rows: Long)
+
+  private final class Recorder {
+    val files = mutable.Buffer.empty[String]
+    var rows = 0L
+  }
+
+  private val recording = new ThreadLocal[Recorder]
+
+  /** `body`'s result and what the driver reads on this thread did while
+    * it ran.
+    */
+  def reads[A](body: => A): (A, Reads) = {
+    val outer = recording.get()
+    val mine = new Recorder
+    recording.set(mine)
+    try { val a = body; (a, Reads(mine.files.toSeq, mine.rows)) }
+    finally {
+      recording.set(outer)
+      if (outer != null) { outer.files ++= mine.files; outer.rows += mine.rows }
+    }
+  }
 
   /** `body`'s result and the store files the driver reads on this thread
     * opened while it ran, as absolute paths.
     */
   def opened[A](body: => A): (A, Seq[String]) = {
-    val outer = opening.get()
-    val mine = mutable.Buffer.empty[String]
-    opening.set(mine)
-    try { val a = body; (a, mine.toSeq) }
-    finally { opening.set(outer); if (outer != null) outer ++= mine }
+    val (a, r) = reads(body)
+    (a, r.files)
   }
+
+  /** The first `n` rows under `order`, as `orderBy(order: _*).limit(n)`
+    * gives them: the bound of a read ([[rows]]), which then holds at
+    * most `2n` rows while they stream.
+    */
+  final case class Top(n: Int, order: Column*)
 
   /** The row layout [[rows]] reads `schema` in: its columns other than
     * `partitions` first, then those.
@@ -88,19 +140,26 @@ object LocalScan {
   /** The rows of the store-relative `files` under `dest` that `keep`
     * accepts, read on the calling thread in [[layout]] order. The
     * `partitions` columns come from the files' `name=value` directories
-    * below `base`.
+    * below `base`. `prune` holds data source filters that every kept row
+    * satisfies: a row group whose statistics rule them out is not
+    * decoded, and a file with no row group left is not opened by the
+    * reader. With `top`, only its first rows are held and returned, in
+    * its order.
     */
   def rows(spark: SparkSession, dest: String, schema: StructType, base: String,
-           partitions: Seq[String], files: Seq[String])(
+           partitions: Seq[String], files: Seq[String],
+           prune: Seq[sources.Filter] = Nil, top: Option[Top] = None)(
       keep: InternalRow => Boolean = _ => true): Seq[InternalRow] =
     if (files.isEmpty) Nil
     else {
       val data = StructType(schema.filterNot(f => partitions.contains(f.name)))
       val parts = StructType(partitions.map(schema(_)))
       val open = reader(spark, data, parts)
-      files.flatMap { f =>
+      val out = new Held(top.map(t => t.n -> ordering(spark, layout(schema, partitions), t.order)))
+      val rec = Option(recording.get())
+      files.foreach { f =>
         val path = Paths.get(dest, f)
-        Option(opening.get()).foreach(_ += path.toString)
+        rec.foreach(_.files += path.toString)
         val dirs = Option(Paths.get(dest, base).relativize(path).getParent)
         val named = dirs.toSeq.flatMap(d => (0 until d.getNameCount).map(d.getName(_).toString))
           .map(_.split("=", 2))
@@ -108,12 +167,97 @@ object LocalScan {
         val values = InternalRow.fromSeq(parts.map(p =>
           Cast(Literal(named(p.name)), p.dataType, Some(timeZone(spark))).eval()))
         val size = StoreFs.size(path)
-        val it = open(PartitionedFile(values, SparkPath.fromPath(new HPath(path.toUri)),
-          0L, size, Array.empty, 0L, size, Map.empty))
-        try it.filter(keep).map(_.copy()).toVector
-        finally it match { case c: AutoCloseable => c.close(); case _ => () }
+        val file = SparkPath.fromPath(new HPath(path.toUri))
+        ranges(spark, path, size, prune).foreach { case (start, end) =>
+          val it = open(PartitionedFile(values, file, start, end - start, Array.empty, 0L, size,
+            Map.empty))
+          try it.foreach { r =>
+            rec.foreach(_.rows += 1)
+            if (keep(r)) out.offer(r)
+          }
+          finally it match { case c: AutoCloseable => c.close(); case _ => () }
+        }
+      }
+      out.result
+    }
+
+  /** Copies of the rows offered: all of them in offer order, or with a
+    * bound `(n, ordering)` the first `n` under the ordering, ties in offer
+    * order — a stable sort's first `n`. Cutting back to those `n` whenever
+    * twice as many are held keeps the ties' order and holds at most `2n`.
+    */
+  private final class Held(bound: Option[(Int, Ordering[InternalRow])]) {
+    private val held = mutable.ArrayBuffer.empty[InternalRow]
+
+    private def first(n: Int, o: Ordering[InternalRow]) = held.sorted(o).take(n)
+
+    def offer(r: InternalRow): Unit = {
+      held += r.copy()
+      bound.foreach { case (n, o) =>
+        if (held.size - n > n) { val kept = first(n, o); held.clear(); held ++= kept }
       }
     }
+
+    def result: Seq[InternalRow] = bound.fold(held.toSeq) { case (n, o) => first(n, o).toSeq }
+  }
+
+  /** The byte ranges of the parquet file at `path` that hold the row
+    * groups whose min/max statistics admit every one of `prune`, each
+    * run of such groups up to the next group's start — the reader decodes
+    * the row groups whose midpoints lie in the range it is given. The
+    * whole file when no filter converts; none when every group is ruled
+    * out.
+    */
+  private def ranges(spark: SparkSession, path: Path, size: Long,
+                     prune: Seq[sources.Filter]): Seq[(Long, Long)] = {
+    val sql = spark.sessionState.conf
+    val whole = Seq(0L -> size)
+    if (prune.isEmpty || !sql.parquetFilterPushDown) whole
+    else footer(path, size).fold(whole) { meta =>
+      val file = meta.getFileMetaData
+      val filters = new ParquetFilters(file.getSchema, sql.parquetFilterPushDownDate,
+        sql.parquetFilterPushDownTimestamp, sql.parquetFilterPushDownDecimal,
+        sql.parquetFilterPushDownStringPredicate, sql.parquetFilterPushDownInFilterThreshold,
+        sql.caseSensitiveAnalysis, DataSourceUtils.datetimeRebaseSpec(
+          file.getKeyValueMetaData.get(_), sql.getConf(SQLConf.PARQUET_REBASE_MODE_IN_READ).toString))
+      prune.flatMap(filters.createFilter).reduceOption(FilterApi.and).fold(whole) { p =>
+        val groups = meta.getBlocks.asScala.toIndexedSeq
+        val admitted = RowGroupFilter.filterRowGroups(FilterCompat.get(p), meta.getBlocks,
+          file.getSchema).asScala.toSeq
+        val kept = groups.indices.filter(i => admitted.exists(_ eq groups(i))).toSet
+        def end(i: Int) = if (i + 1 < groups.size) groups(i + 1).getStartingPos else size
+        if (kept.size == groups.size) whole
+        else groups.indices.filter(kept).foldLeft(List.empty[(Long, Long)]) {
+          case ((start, _) :: rest, i) if kept(i - 1) => (start, end(i)) :: rest
+          case (acc, i) => (groups(i).getStartingPos, end(i)) :: acc
+        }.reverse
+      }
+    }
+  }
+
+  private val Magic = "PAR1".getBytes(StandardCharsets.US_ASCII)
+
+  /** The footer of the plain (unencrypted) parquet file at `path`, read
+    * with two positional reads and parsed by parquet's own converter;
+    * `None` for any other file, which is then read whole.
+    */
+  private def footer(path: Path, size: Long): Option[ParquetMetadata] = {
+    val ch = FileChannel.open(path)
+    def at(pos: Long, n: Int): ByteBuffer = {
+      val b = ByteBuffer.allocate(n).order(ByteOrder.LITTLE_ENDIAN)
+      while (b.hasRemaining && ch.read(b, pos + b.position()) >= 0) ()
+      b.flip()
+    }
+    try {
+      val tail = if (size < 12) None else Some(at(size - 8, 8))
+      tail.filter(t => java.util.Arrays.equals(t.array.drop(4), Magic)).map { t =>
+        val len = t.getInt(0)
+        new ParquetMetadataConverter().readParquetMetadata(
+          new ByteArrayInputStream(at(size - 8 - len, len).array),
+          ParquetMetadataConverter.NO_FILTER)
+      }
+    } finally ch.close()
+  }
 
   /** A local frame of catalyst rows laid out as `schema`. */
   def frame(spark: SparkSession, schema: StructType, rows: Seq[InternalRow]): DataFrame =
@@ -172,18 +316,23 @@ object LocalScan {
     r.data.map(row => toScala(row.get(i, t)))
   }
 
+  /** `order` resolved over rows of `schema`: the ordering of
+    * `orderBy(order: _*)`, on plain rows.
+    */
+  private def ordering(spark: SparkSession, schema: StructType,
+                       order: Seq[Column]): Ordering[InternalRow] =
+    frame(spark, schema, Nil).orderBy(order: _*).queryExecution.analyzed match {
+      case Sort(o, _, child, _) => new InterpretedOrdering(o, child.output)
+      case p => throw new IllegalStateException(s"unexpected sort plan:\n${p.treeString}")
+    }
+
   /** The first `n` rows of a local frame under `order` — `orderBy` then
     * `limit`, with Spark's ordering, on the driver.
     */
   def top(df: DataFrame, n: Int, order: Column*): DataFrame = {
     val r = relation(df)
-    val spark = df.sparkSession
-    val sorted = GraftPlanBridge.ofRows(spark, r).orderBy(order: _*).queryExecution.analyzed
-    val ordering = sorted match {
-      case Sort(o, _, child, _) => new InterpretedOrdering(o, child.output)
-      case p => throw new IllegalStateException(s"unexpected sort plan:\n${p.treeString}")
-    }
-    GraftPlanBridge.ofRows(spark, r.copy(data = r.data.sorted(ordering).take(n)))
+    val sorted = r.data.sorted(ordering(df.sparkSession, r.schema, order))
+    GraftPlanBridge.ofRows(df.sparkSession, r.copy(data = sorted.take(n)))
   }
 
   /** Every `left` row with each `right` row whose `rightKey` equals its

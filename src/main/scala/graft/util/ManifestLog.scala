@@ -3,6 +3,8 @@ package graft.util
 import java.nio.file.{FileAlreadyExistsException, Path, Paths}
 import java.util.UUID
 
+import scala.collection.concurrent.TrieMap
+
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.json4s.{DefaultFormats, Formats, JArray, JString}
@@ -68,12 +70,24 @@ object ManifestLog {
 
     /** [[dropDead]]'s rule for rows read on the driver: the listed
       * tombstones, read on the calling thread, as a test of a row's id
-      * (string form) and generation.
+      * (string form) and generation. A listed tombstone file never
+      * changes, so the test is read once per store and tombstone list
+      * ([[outrankedBy]]) and every later probe of that version reuses it.
       */
-    def outranked(spark: SparkSession, dest: String): (String, Long) => Boolean =
-      Tombstones.outranked(LocalScan.rows(spark, dest,
-        Tombstones.schema(Tombstones.StringKey), "", Nil, tombstones)())
+    def outranked(spark: SparkSession, dest: String): (String, Long) => Boolean = {
+      val store = Paths.get(dest).toAbsolutePath.normalize.toString
+      outrankedBy.get(store).collect { case (listed, test) if listed == tombstones => test }
+        .getOrElse {
+          val test = Tombstones.outranked(LocalScan.rows(spark, dest,
+            Tombstones.schema(Tombstones.StringKey), "", Nil, tombstones)())
+          outrankedBy.put(store, tombstones -> test)
+          test
+        }
+    }
   }
+
+  /** Per store directory, the tombstone list last read and its test. */
+  private val outrankedBy = TrieMap.empty[String, (Seq[String], (String, Long) => Boolean)]
 
   /** A JSON array of strings, the form of `files` and `tombstones`. */
   def strings(xs: Seq[String]): JArray = JArray(xs.map(JString(_)).toList)

@@ -316,6 +316,25 @@ class BM25Spec extends SparkSpec {
         .map(_.toString)).sorted, s"opened $opened")
   }
 
+  test("a term slice decodes only the row groups that hold its terms") {
+    val many = (0 until 3000).map(i =>
+      (i.toLong, s"w${i % 60} w${(i * 7 + 3) % 60} w${(i * 13 + 5) % 60}")).toDF("doc_id", "text")
+    val dest = java.nio.file.Files.createTempDirectory("bm25rg").toString
+    spark.conf.set("parquet.block.size", "1024")
+    try BM25Index.build(many, "doc_id", "text", dest)
+    finally spark.conf.unset("parquet.block.size")
+    def scored(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    val terms = Seq("w7", "w41")
+    val (top, reads) = graft.util.LocalScan.reads(
+      scored(BM25Index.topKMerged(spark, dest, terms, 20)))
+    assert(top == scored(BM25.scoreTopK(many, "doc_id", "text", terms, 20)))
+    // the opened files hold every row of the terms' buckets; only the row
+    // groups whose term statistics admit a query term were decoded
+    val held = spark.read.parquet(reads.files: _*).count()
+    assert(reads.rows < held / 2, s"decoded ${reads.rows} of the opened files' $held rows")
+  }
+
   test("JVM and Column term buckets agree, at more than one modulus") {
     val terms = Seq("spark", "query", "hiring", "a", "0", "zz9")
     for (buckets <- Seq(BM25Index.DefaultTermBuckets, 37)) {

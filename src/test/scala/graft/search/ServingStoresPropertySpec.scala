@@ -424,6 +424,67 @@ class ServingStoresPropertySpec extends SparkSpec {
     }
   }
 
+  /** `body` with the session writing parquet row groups of about `bytes`
+    * (parquet checks the size every 100 rows), so one bucket file holds
+    * several row groups.
+    */
+  private def smallRowGroups[A](bytes: Int)(body: => A): A = {
+    spark.conf.set("parquet.block.size", bytes.toString)
+    try body finally spark.conf.unset("parquet.block.size")
+  }
+
+  test("a probe decodes only the row groups whose key statistics admit " +
+      "it: one bucket written as several row groups, string and long keys") {
+    val facts = (0 until 2000).map(i => (i % 40L, i))
+    for (keyType <- Seq("string", "bigint")) {
+      val df = facts.toDF("fk", "v").withColumn("fk", col("fk").cast(keyType))
+      val dest = java.nio.file.Files.createTempDirectory("graft-tl-rg").toString
+      smallRowGroups(1024)(ServingStores.buildTimeline(df, "fk", dest, buckets = 1))
+      def key(k: Long): Any = if (keyType == "string") k.toString else k
+      def rows(d: DataFrame) = d.select(col("fk").cast("long"), col("v"))
+        .collect().map(r => (r.getLong(0), r.getInt(1))).sorted.toSeq
+      for (k <- Seq(0L, 17L, 39L)) {
+        val (probed, reads) = LocalScan.reads(
+          rows(ServingStores.timelineProbe(spark, dest, "fk", key(k))))
+        assert(probed == rows(df.filter(col("fk") === key(k))), s"$keyType fk $k")
+        assert(reads.rows >= probed.size && reads.rows < facts.size / 4,
+          s"$keyType fk $k: decoded ${reads.rows} of ${facts.size} rows for ${probed.size}")
+      }
+      // with parquet filter push-down off the session reads the bucket whole
+      spark.conf.set("spark.sql.parquet.filterPushdown", "false")
+      val whole = try LocalScan.reads(
+          ServingStores.timelineProbe(spark, dest, "fk", key(17L)).collect())._2
+        finally spark.conf.unset("spark.sql.parquet.filterPushdown")
+      assert(whole.rows == facts.size, s"$keyType: push-down off decoded ${whole.rows}")
+      StoreAdmin.truncate(dest)
+    }
+  }
+
+  test("a probe bounded by Top serves orderBy.limit of its key while holding " +
+      "the bound: one key with more rows than the cap, ties in read order") {
+    val df = (0 until 300).map(i => (i.toLong, if (i % 3 == 0) List("hot", "x") else List("hot"),
+      i % 7)).toDF("id", "tags", "score")
+    val dest = java.nio.file.Files.createTempDirectory("graft-post-top").toString
+    smallRowGroups(1024)(ServingStores.buildPostings(df, col("tags"), dest, buckets = 2))
+    ServingStores.appendPostings((300 until 340).map(i => (i.toLong, List("hot"), i % 7))
+      .toDF("id", "tags", "score"), col("tags"), dest)
+    def ids(d: DataFrame) = d.select(col("id")).collect().map(_.getLong(0)).toSeq
+    for (n <- Seq(0, 1, 25, 339, 340, 1000)) {
+      val total = Seq(col("score").desc, col("id").asc)
+      val bounded = ServingStores.postingProbe(spark, dest, "hot",
+        Some(LocalScan.Top(n, total: _*)))
+      val source = df.unionAll((300 until 340).map(i => (i.toLong, List("hot"), i % 7))
+        .toDF("id", "tags", "score"))
+      assert(ids(bounded) == ids(source.orderBy(total: _*).limit(n)), s"cap $n")
+      // ties only: the bound keeps the read order a full read then a stable sort keeps
+      val ties = ServingStores.postingProbe(spark, dest, "hot",
+        Some(LocalScan.Top(n, col("score").asc)))
+      assert(ids(ties) == ids(LocalScan.top(ServingStores.postingProbe(spark, dest, "hot"),
+        n, col("score").asc)), s"cap $n, ties")
+    }
+    StoreAdmin.truncate(dest)
+  }
+
   test("a probe whose key routes to an absent bucket directory is a typed " +
       "empty frame that starts no Spark job; the append that creates the " +
       "directory is served by the next probe") {
