@@ -2,11 +2,15 @@ package graft.search
 
 import java.nio.file.Paths
 
+import scala.collection.mutable
+
 import graft.util.CacheLedger.CacheOps
-import graft.util.{LocalScan, ManifestLog, Stamp, StoreFs, Tables, Tombstones}
+import graft.util.{Bounded, LocalScan, ManifestLog, Stamp, Tables, Tombstones}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, StructField, StructType}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.json4s.{DefaultFormats, Formats, JArray, JInt, JObject, JString, JValue}
 import org.json4s.jackson.JsonMethods
@@ -65,7 +69,8 @@ import org.json4s.jackson.JsonMethods
   * infers nothing. Every write —
   * build, append, upsert, delete, compact — stages its parquet files
   * (unlisted) and commits version N+1 naming them. [[build]] commits
-  * version 0 of a fresh store. Races follow [[graft.util.ManifestLog]]'s
+  * the whole state: version 0 of a fresh store, or the next version of
+  * an existing one. Races follow [[graft.util.ManifestLog]]'s
   * rules; this index adds one: a compaction never resets the generation
   * counter — its folded base is generation 0 — so a tombstone committed
   * during it still outranks the version it folded. An index without a
@@ -149,6 +154,9 @@ object BM25Index {
 
   private val log = new ManifestLog[Manifest]("BM25 index", parseManifest)
 
+  /** Each part's corpus rows (n, total_len), by its listed corpus files. */
+  private val corpusRows = new Bounded[Seq[String], Seq[(Double, Long)]](1024)
+
   /** Bucket count ∝ vocabulary: ⌈nTerms / TermsPerBucket⌉, floored at
     * [[DefaultTermBuckets]] — a 100M-term corpus derives ~1.5k buckets
     * where the old constant gave 16 giant partitions.
@@ -181,10 +189,12 @@ object BM25Index {
     (c.getValue % buckets).toInt
   }
 
-  /** Build the index from a corpus, committed as manifest version 0 of a
-    * fresh store: any previous index at `dest` — its segments and
-    * tombstones included — is deleted first, so a rebuild serves exactly
-    * `docs`.
+  /** Build the index from a corpus: staged, then committed as the whole
+    * state of the index — manifest version 0 of a fresh store, or over an
+    * existing index its next version and generation, listing only the new
+    * base, so the previous commit serves until this one lands and a
+    * rebuild serves exactly `docs`. The replaced parts, segments and
+    * tombstones leave the disk at the next [[StoreAdmin.reclaim]].
     *
     * `corpus` carries `total_len` (exact integer token count) alongside the
     * derived `avglen` so segment merges ([[topKMerged]]) can recombine
@@ -192,9 +202,11 @@ object BM25Index {
     * division's rounding error per segment.
     */
   def build(docs: DataFrame, idCol: String, textCol: String, dest: String): Unit = {
-    StoreFs.deleteRecursively(Paths.get(dest))
-    val (base, files) = writePart(docs, idCol, textCol, dest, "", 0L)
-    ManifestLog.publish(dest, 0L, Manifest(Seq(base), 0L, files, Nil))
+    val built = isBuilt(dest)
+    val gen = if (built) log.latest(dest).gen + 1 else 0L
+    val (base, files) = writePart(docs, idCol, textCol, dest, "", gen)
+    if (built) log.commitAt(dest, gen)(_ => Manifest(Seq(base), gen, files, Nil))
+    else ManifestLog.publish(dest, 0L, Manifest(Seq(base), 0L, files, Nil))
   }
 
   /** One index part (base or segment) at generation `gen`, staged under
@@ -279,21 +291,21 @@ object BM25Index {
     private lazy val dead = m.outranked(spark, dest)
 
     /** One table's rows of the analyzed `terms` over every part, read on
-      * the calling thread into one local frame: per part only the terms'
-      * bucket files (routed by the part's own persisted modulus) are
-      * opened, inside them only the row groups whose term statistics admit
-      * one of the terms are decoded (the within-bucket term sort keeps a
-      * term's rows together), and a postings row that a listed tombstone
-      * outranks at its part's generation is dropped.
+      * the calling thread: per part only the terms' bucket files (routed by
+      * the part's own persisted modulus) are opened, inside them only the
+      * row groups whose term statistics admit one of the terms are decoded
+      * (the within-bucket term sort keeps a term's rows together), and a
+      * postings row that a listed tombstone outranks at its part's
+      * generation is dropped.
       */
-    def slice(t: String, terms: Seq[String]): DataFrame = {
+    def slice(t: String, terms: Seq[String]): LocalScan.Table = {
       val wanted = terms.toSet
       val layouts = m.parts.map(p => LocalScan.layout(p.schema(t), Seq("tb")))
       require(layouts.map(_.catalogString).distinct.size == 1,
         s"the parts of the BM25 index at $dest disagree on the $t layout")
       val term = layouts.head.fieldIndex("term")
       val doc = if (t == "postings") Some(LocalScan.stringOf(spark, layouts.head, "doc")) else None
-      LocalScan.frame(spark, layouts.head, m.parts.flatMap { p =>
+      LocalScan.Table(layouts.head, m.parts.flatMap { p =>
         val dirs = terms.map(termBucket(_, p.termBuckets)).distinct.map(b => s"${p.root(t)}/tb=$b/")
         LocalScan.rows(spark, dest, p.schema(t), p.root(t), Seq("tb"),
             m.files.filter(f => dirs.exists(f.startsWith)), Seq(sources.In("term", terms.toArray)))(
@@ -301,12 +313,18 @@ object BM25Index {
       })
     }
 
-    /** (N, total length) over every part, read on the calling thread. */
+    /** (N, total length) over every part, read on the calling thread. A
+      * part's corpus rows are read once per listed file set: their names
+      * are unique, so a set never names other rows.
+      */
     def totals: (Double, Long) = {
       val rows = m.parts.flatMap { p =>
-        val c = p.schema("corpus")
-        LocalScan.rows(spark, dest, c, p.root("corpus"), Nil, files(p, "corpus"))()
-          .map(r => r.getDouble(c.fieldIndex("n")) -> r.getLong(c.fieldIndex("total_len")))
+        val fs = files(p, "corpus")
+        corpusRows.getOrElseUpdate(fs.map(Paths.get(dest, _).toAbsolutePath.normalize.toString), {
+          val c = p.schema("corpus")
+          LocalScan.rows(spark, dest, c, p.root("corpus"), Nil, fs)()
+            .map(r => r.getDouble(c.fieldIndex("n")) -> r.getLong(c.fieldIndex("total_len")))
+        })
       }
       rows.map(_._1).sum -> rows.map(_._2).sum
     }
@@ -435,36 +453,60 @@ object BM25Index {
     }
   }
 
-  /** Serving-path top-k over every part, run on the calling thread: per
-    * part only the query terms' bucket files of postings and termstats
-    * are read, on the driver ([[Snapshot.slice]]), and inside them only
-    * the row groups whose term statistics admit a query term, with the
-    * tombstone kill applied; df is summed per term across parts and N/avglen
-    * recombined from exact counts. Each doc's score is ONE projection of
-    * BM25's own expressions over its postings, and the top-k cut is
-    * Spark's ordering on plain values — a local relation of (doc, score),
-    * built with no Spark job. Score is bit-identical to
-    * [[BM25.scoreTopK]] (same idf/tfNorm/rounding over the same
-    * tf/len/df/N values).
+  /** Serving-path top-k over every part, run on the calling thread as
+    * plain rows of (doc, score): per part only the query terms' bucket
+    * files of postings and termstats are read, on the driver
+    * ([[Snapshot.slice]]), and inside them only the row groups whose term
+    * statistics admit a query term, with the tombstone kill applied; df is
+    * summed per term across parts and N/avglen recombined from exact
+    * counts. Each doc's score is ONE evaluation of BM25's own expressions
+    * over its postings, with N and the total length as input fields, so
+    * one resolution serves every index version ([[LocalScan.prepare]]),
+    * and the top-k cut is Spark's ordering on plain values — no query is
+    * built. Score is bit-identical to [[BM25.scoreTopK]] (same
+    * idf/tfNorm/rounding over the same tf/len/df/N values).
     */
-  def topKMerged(spark: SparkSession, dest: String, queryTerms: Seq[String],
-                 k: Int): DataFrame = {
+  def topKRows(spark: SparkSession, dest: String, queryTerms: Seq[String],
+               k: Int): LocalScan.Table = {
     val terms = BM25.analyze(queryTerms)
     require(terms.nonEmpty, "no query terms survive analysis")
     val s = new Snapshot(spark, dest)
     val ts = s.slice("termstats", terms)
-    val df = LocalScan.values(ts, "term").zip(LocalScan.values(ts, "df"))
+    val df = ts.values("term").zip(ts.values("df"))
       .groupMapReduce(_._1.toString)(_._2.asInstanceOf[Double])(_ + _)
-    val stats = spark.createDataFrame(df.toSeq).toDF("__term", "__df")
     val (n, totalLen) = s.totals
-    val avglen = lit(totalLen).cast("double") / lit(n)
-    val scored = LocalScan.gather(LocalScan.join(s.slice("postings", terms), stats, "term", "__term"),
-        Seq(col("doc")), struct(col("tf"), col("len"), col("__df").as("df")), "__hits")
-      .select(col("doc"), round(aggregate(col("__hits"), lit(0.0), (acc, h) =>
-        acc + BM25.idfExpr(lit(n), h("df")) * BM25.tfNormExpr(h("tf"), h("len"), avglen)), 6)
+    val post = s.slice("postings", terms)
+    val Seq(doc, term, tf, len) = Seq("doc", "term", "tf", "len").map(post.schema.fieldIndex)
+    val docType = post.schema(doc).dataType
+    // each doc's (tf, len, df) per matching posting, in read order: the
+    // order the score sums them in
+    val hits = mutable.LinkedHashMap.empty[Any, mutable.Buffer[InternalRow]]
+    post.rows.foreach { r =>
+      df.get(r.getUTF8String(term).toString).foreach { d =>
+        hits.getOrElseUpdate(r.get(doc, docType), mutable.Buffer.empty) +=
+          InternalRow(r.getDouble(tf), r.getDouble(len), d)
+      }
+    }
+    val hit = StructType(Seq(post.schema(tf), post.schema(len), StructField("df", DoubleType, nullable = false)))
+    val layout = StructType(Seq(post.schema(doc),
+      StructField("__hits", ArrayType(hit, containsNull = false), nullable = false),
+      StructField("__n", DoubleType, nullable = false),
+      StructField("__total_len", LongType, nullable = false)))
+    val score = LocalScan.prepare(spark, layout, "bm25 score") {
+      val avglen = col("__total_len").cast("double") / col("__n")
+      Seq(col("doc"), round(aggregate(col("__hits"), lit(0.0), (acc, h) =>
+        acc + BM25.idfExpr(col("__n"), h("df")) * BM25.tfNormExpr(h("tf"), h("len"), avglen)), 6)
         .as("score"))
-    LocalScan.top(scored, k, col("score").desc, col("doc").asc)
+    }
+    LocalScan.top(spark, score(LocalScan.Table(layout, hits.toSeq.map { case (d, hs) =>
+        InternalRow(d, new GenericArrayData(hs.toArray), n, totalLen) })),
+      k, col("score").desc, col("doc").asc)
   }
+
+  /** [[topKRows]] as a local frame of (doc, score). */
+  def topKMerged(spark: SparkSession, dest: String, queryTerms: Seq[String],
+                 k: Int): DataFrame =
+    LocalScan.frame(spark, topKRows(spark, dest, queryTerms, k))
 
   /** True iff the index has a committed manifest. */
   def isBuilt(dest: String): Boolean = ManifestLog.versions(dest).nonEmpty
@@ -550,7 +592,7 @@ object BM25Index {
     require(ordered.nonEmpty, "no phrase terms survive analysis")
     val terms = ordered.distinct
     val s = new Snapshot(spark, dest)
-    val post = s.slice("postings", terms)
+    val post = LocalScan.frame(spark, s.slice("postings", terms))
     val slot = terms.zipWithIndex.toMap
     val joined = terms.zipWithIndex.map { case (t, i) =>
         val keep = Seq(col("doc")) ++ (if (i == 0) Seq(col("len")) else Nil) ++

@@ -9,7 +9,10 @@ import scala.util.control.NonFatal
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import graft.util.LocalScan
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The HTTP layer over [[Serving]] — the reference's three REST endpoints
   * (`Ranking Model/src/main/java/api/Handler.java:33-161`, Spring
@@ -35,9 +38,12 @@ import org.apache.spark.sql.functions._
   * read is key-routed and runs on the calling thread: it opens only the
   * files its terms or keys hash to, on the driver, decodes only the row
   * groups whose statistics admit them, and holds at most the route's cap
-  * of a hashtag's or a user's rows; a whole stored request runs no Spark
-  * job and no task (spec-asserted with a listener), so its cost follows
-  * its keys' row groups, not the store's bucket count or Spark's per-job
+  * of a hashtag's or a user's rows. A stored request builds no query: its
+  * joins, top-n cuts, BM25 scores and envelope are expressions resolved
+  * once per worker thread and row layout, evaluated on plain rows, so it
+  * builds no Dataset, plans nothing and runs no SQL execution, no Spark
+  * job and no task (spec-asserted with a listener); its cost follows its
+  * keys' row groups, not the store's bucket count or Spark's per-query
   * overhead.
   *
   * A request that fails still answers with the reference's error
@@ -99,11 +105,12 @@ object HttpServing {
     * user holding it.
     *
     * With both set, every route reads stores only, and runs on the
-    * calling thread with no Spark job: each read is key-routed and
-    * returns a local relation, and the joins, the ordering, the
-    * 1000-row cap and the top-k cut happen on plain values
-    * ([[graft.util.LocalScan]]) or inside the envelope expression.
-    *  - query: driver top-k ([[BM25Index.topKMerged]]) → `tweets` →
+    * calling thread with no query: each read is key-routed and returns
+    * plain rows, and the joins, the ordering, the 1000-row cap, the top-k
+    * cut and the envelope are evaluated on them
+    * ([[graft.util.LocalScan]], [[Serving.searchJson]],
+    * [[Serving.timelineJson]]).
+    *  - query: driver top-k ([[BM25Index.topKRows]]) → `tweets` →
     *    `users_by_id`;
     *  - hashtag: posting probe → `users_by_id`;
     *  - user: screen-name lookup (`users`) → `by_user`.
@@ -115,92 +122,108 @@ object HttpServing {
   def referenceRoutes(tweets: DataFrame, users: DataFrame,
                       bm25IndexDir: Option[String] = None,
                       tweetIndexDir: Option[String] = None): Map[String, Route] = {
-    val spark = tweets.sparkSession
-    def byId(store: String, ids: Seq[Any]): DataFrame =
-      ServingStores.timelineProbeMany(spark, s"${tweetIndexDir.get}/$store", "id", ids.distinct)
+    val r = new Routes(tweets, users, bm25IndexDir, tweetIndexDir)
+    Map("/api/search/query" -> r.query, "/api/search/hashtag" -> r.hashtag,
+      "/api/search/user" -> r.user)
+  }
+
+  /** The three route bodies of [[referenceRoutes]], one method each, so a
+    * profile names the route a sample ran in.
+    */
+  private final class Routes(tweets: DataFrame, users: DataFrame,
+                             bm25IndexDir: Option[String], tweetIndexDir: Option[String]) {
+    private val spark = tweets.sparkSession
+    private val searchUsers = Seq("userName", "userScreenName")
+
+    private def byId(store: String, ids: Seq[Any]): LocalScan.Table =
+      ServingStores.probeRows(spark, s"${tweetIndexDir.get}/$store", "id", ids.distinct)
+
     // the tweets' authors, by id; a tweet whose author is unknown keeps null user fields
-    def withAuthors(hits: DataFrame): DataFrame =
-      LocalScan.join(hits, byId("users_by_id", LocalScan.values(hits, "userID"))
-        .withColumnRenamed("id", "uid"), "userID", "uid", outer = true)
-    Map(
+    private def withAuthors(hits: LocalScan.Table): LocalScan.Table =
+      LocalScan.join(hits, byId("users_by_id", hits.values("userID")).renamed("id", "uid"),
+        "userID", "uid", outer = true)
+
     // Handler.java:33-74 — free-text query, BM25 top-10, best first
-    "/api/search/query" -> { params =>
+    def query(params: Map[String, String]): String = {
       val terms = params.getOrElse("query", "")
         .toLowerCase.split("\\s+").filter(_.nonEmpty).toSeq
+      val tweetCols = Seq("tweet_id", "tweetText", "score")
       if (terms.isEmpty) ErrorJson
-      else {
-        val results = (bm25IndexDir, tweetIndexDir) match {
-          case (Some(bm25), Some(_)) =>
-            val top = BM25Index.topKMerged(spark, bm25, terms, k = 10)
-            withAuthors(LocalScan.join(top, byId("tweets", LocalScan.values(top, "doc")),
-                "doc", "id"))
-              .select(col("doc").as("tweet_id"), col("score"), col("tweetText"),
-                col("userName"), col("userScreenName"))
-          case (Some(bm25), None) =>
-            Collections.keywordSearchIndexed(tweets, users, bm25, terms, k = 10)
-          case _ =>
-            Collections.keywordSearch(tweets, users, terms, k = 10)
-        }
-        Serving.searchResponse(results, negate(col("score")),
-          userCols = Seq("userName", "userScreenName"),
-          tweetCols = Seq("tweet_id", "tweetText", "score"))
-          .head().getString(0)
-      }
-    },
-    // Handler.java:76-117 — hashtag exact match, id order, cap 1000
-    "/api/search/hashtag" -> { params =>
-      params.get("tag").filter(_.nonEmpty) match {
-        case None => ErrorJson
-        case Some(tag) =>
-          val results = tweetIndexDir match {
-            case Some(dir) =>
-              withAuthors(ServingStores.postingProbe(spark, dir + "/hashtags", tag,
-                Some(LocalScan.Top(1000, col("id").cast("long").asc))))
-            case None =>
-              Collections.hashtagSearch(tweets, tag)
-                .join(users.withColumnRenamed("id", "uid"),
-                  col("userID") === col("uid"), "left")
+      else (bm25IndexDir, tweetIndexDir) match {
+        case (Some(bm25), Some(_)) =>
+          val top = BM25Index.topKRows(spark, bm25, terms, k = 10)
+          Serving.searchJson(spark,
+            withAuthors(LocalScan.join(top, byId("tweets", top.values("doc")), "doc", "id"))
+              .renamed("doc", "tweet_id"),
+            negate(col("score")), searchUsers, tweetCols)
+        case _ =>
+          val results = bm25IndexDir match {
+            case Some(bm25) => Collections.keywordSearchIndexed(tweets, users, bm25, terms, k = 10)
+            case None => Collections.keywordSearch(tweets, users, terms, k = 10)
           }
-          Serving.searchResponse(results, col("id").cast("long"),
-            userCols = Seq("userName", "userScreenName"),
-            tweetCols = Seq("id", "tweetText"))
+          Serving.searchResponse(results, negate(col("score")), searchUsers, tweetCols)
             .head().getString(0)
       }
-    },
+    }
+
+    // Handler.java:76-117 — hashtag exact match, id order, cap 1000
+    def hashtag(params: Map[String, String]): String = {
+      val order = col("id").cast(LongType)
+      val tweetCols = Seq("id", "tweetText")
+      params.get("tag").filter(_.nonEmpty) match {
+        case None => ErrorJson
+        case Some(tag) => tweetIndexDir match {
+          case Some(dir) =>
+            Serving.searchJson(spark, withAuthors(ServingStores.postingRows(spark,
+                dir + "/hashtags", tag, Some(LocalScan.Top(1000, order.asc)))),
+              order, searchUsers, tweetCols)
+          case None =>
+            Serving.searchResponse(Collections.hashtagSearch(tweets, tag)
+                .join(users.withColumnRenamed("id", "uid"), col("userID") === col("uid"), "left"),
+              order, searchUsers, tweetCols)
+              .head().getString(0)
+        }
+      }
+    }
+
     // Handler.java:119-161 — resolve user (`SolrRanker.java:131`:
     // userName:<id>), then newest-first timeline, cap 1000
-    "/api/search/user" -> { params =>
-      params.get("id").filter(_.nonEmpty) match {
-        case None => ErrorJson
-        case Some(id) =>
-          val results = tweetIndexDir match {
-            case Some(dir) =>
-              // two store reads, like the reference's two Solr queries:
-              // resolve the screen name (users lookup), then the userID
-              // buckets of every user holding it — no corpus join at all
-              val u = ServingStores.postingProbe(spark, dir + "/users", id)
-                .select(col("id"), col("userScreenName")).collect()
-              if (u.isEmpty) null
-              else ServingStores.timelineProbeMany(spark, dir + "/by_user",
-                  "userID", u.map(_.getString(0)).toSeq.distinct,
-                  Some(LocalScan.Top(1000, col("tweetDateTime").desc, col("id").cast("long").desc)))
-                .select(lit(u.head.getString(1)).as("userScreenName"),
-                  col("id").as("tweet_id"), col("tweetDateTime"),
-                  col("tweetText"))
-            case None => Collections.userTimeline(tweets, users, id)
-          }
-          val rows =
-            if (results == null) Array.empty[org.apache.spark.sql.Row]
-            else Serving.timelineResponse(results,
-              negate(col("tweet_id").cast("long")),
-              userCols = Seq("userScreenName"),
-              tweetCols = Seq("tweet_id", "tweetText", "tweetDateTime"))
-              .collect()
-          // unknown user → empty result set → reference returns the
-          // error envelope (its user lookup throws on no results)
-          if (rows.isEmpty) ErrorJson else rows.head.getString(0)
+    def user(params: Map[String, String]): String = {
+      val order = negate(col("tweet_id").cast(LongType))
+      val (userCols, tweetCols) = (Seq("userScreenName"), Seq("tweet_id", "tweetText", "tweetDateTime"))
+      val docs = params.get("id").filter(_.nonEmpty) match {
+        case None => Nil
+        case Some(id) => tweetIndexDir match {
+          case Some(dir) =>
+            // two store reads, like the reference's two Solr queries:
+            // resolve the screen name (users lookup), then the userID
+            // buckets of every user holding it — no corpus join at all
+            val u = ServingStores.postingRows(spark, dir + "/users", id)
+            if (u.rows.isEmpty) Nil
+            else {
+              val name = UTF8String.fromString(u.values("userScreenName").head.toString)
+              val timeline = ServingStores.probeRows(spark, dir + "/by_user", "userID",
+                  u.values("id").distinct,
+                  Some(LocalScan.Top(1000, col("tweetDateTime").desc, col("id").cast(LongType).desc)))
+                .renamed("id", "tweet_id")
+              // the one user's screen name beside each of the tweets
+              val kept = timeline.schema.indices.filterNot(timeline.schema(_).name == "userScreenName")
+              val named = LocalScan.Table(
+                StructType(StructField("userScreenName", StringType, nullable = false) +:
+                  kept.map(timeline.schema(_))),
+                timeline.rows.map(r => InternalRow.fromSeq(
+                  name +: kept.map(i => r.get(i, timeline.schema(i).dataType)))))
+              Serving.timelineJson(spark, named, order, userCols, tweetCols)
+            }
+          case None =>
+            Serving.timelineResponse(Collections.userTimeline(tweets, users, id), order,
+              userCols, tweetCols).collect().map(_.getString(0)).toSeq
+        }
       }
-    })
+      // unknown user → empty result set → reference returns the
+      // error envelope (its user lookup throws on no results)
+      docs.headOption.getOrElse(ErrorJson)
+    }
   }
 
   /** The stores of a tweet index, by directory name. */

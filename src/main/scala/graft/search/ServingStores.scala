@@ -1,12 +1,10 @@
 package graft.search
 
-import java.nio.file.{Path, Paths}
+import java.nio.file.Path
 
-import scala.collection.concurrent.TrieMap
-
-import graft.util.{LocalScan, ManifestLog, StoreFs, Tombstones}
+import graft.util.{LocalScan, ManifestLog, Tombstones}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructField, StructType}
@@ -87,10 +85,11 @@ import org.json4s.jackson.JsonMethods
   * staleness stamp intact: before the manifest create nothing a reader
   * opens has changed, and the create is all-or-nothing. What a crash
   * leaves behind — a staging dir, moved-in but uncommitted files — is
-  * unreferenced, and [[StoreAdmin.gcOrphans]] reclaims it. A build
-  * deletes the old store first, so one that crashes before its commit
-  * leaves a dir with no manifest: [[StoreAdmin.maintain]] skips it and
-  * the next build replaces it.
+  * unreferenced, and [[StoreAdmin.gcOrphans]] reclaims it. A rebuild
+  * stages before it commits, like every other write, so one that crashes
+  * leaves the previous build serving; a first build that crashes leaves
+  * a dir with no manifest, which [[StoreAdmin.maintain]] skips and the
+  * next build commits into.
   *
   * == Update/delete semantics (tombstones) ==
   *
@@ -203,8 +202,8 @@ object ServingStores {
 
   // array_distinct: a key repeated within one row must post the row
   // ONCE — the probe replays `array_contains` semantics, not explode's
-  private def postingRows(df: DataFrame, keysCol: Column,
-                          dropCols: Seq[String]): DataFrame =
+  private def exploded(df: DataFrame, keysCol: Column,
+                       dropCols: Seq[String]): DataFrame =
     df.withColumn("__key", explode(array_distinct(keysCol)))
       .drop(dropCols: _*)
 
@@ -214,13 +213,13 @@ object ServingStores {
   def buildPostings(df: DataFrame, keysCol: Column, dest: String,
                     buckets: Int = DefaultBuckets,
                     dropCols: Seq[String] = Nil): Unit =
-    buildTimeline(postingRows(df, keysCol, dropCols), "__key", dest,
+    buildTimeline(exploded(df, keysCol, dropCols), "__key", dest,
       buckets = buckets)
 
   /** [[appendTimeline]] over the batch's exploded postings. */
   def appendPostings(batch: DataFrame, keysCol: Column, dest: String,
                      dropCols: Seq[String] = Nil): Unit =
-    appendTimeline(postingRows(batch, keysCol, dropCols), dest)
+    appendTimeline(exploded(batch, keysCol, dropCols), dest)
 
   /** [[upsertTimeline]] over the batch's exploded postings. The
     * tombstones come from the UNEXPLODED batch, so an edited row that
@@ -228,7 +227,7 @@ object ServingStores {
     */
   def upsertPostings(batch: DataFrame, idCol: String, keysCol: Column,
                      dest: String, dropCols: Seq[String] = Nil): Unit =
-    ingest(dest, Some(postingRows(batch, keysCol, dropCols)),
+    ingest(dest, Some(exploded(batch, keysCol, dropCols)),
       Some(idCol -> batch.select(col(idCol))))
 
   /** Tombstone-only delete (Solr's deleteById): every stored row of the
@@ -284,29 +283,39 @@ object ServingStores {
   def rebucket(spark: SparkSession, dest: String, newBuckets: Int): Unit =
     fold(spark, dest, minFiles = 0, newBuckets = Some(newBuckets))
 
-  /** All source rows posted under `key`: the [[timelineProbeMany]] of
-    * the one key on `__key`, read on the driver; with `top`, only its
-    * first rows.
+  /** All source rows posted under `key`: the [[probeRows]] of the one
+    * key on `__key`, without `__key`; with `top`, only its first rows.
     */
+  def postingRows(spark: SparkSession, dest: String, key: String,
+                  top: Option[LocalScan.Top] = None): LocalScan.Table =
+    probeRows(spark, dest, "__key", Seq(key), top, drop = Seq("__key"))
+
+  /** [[postingRows]] as a local frame. */
   def postingProbe(spark: SparkSession, dest: String, key: String,
                    top: Option[LocalScan.Top] = None): DataFrame =
-    timelineProbe(spark, dest, "__key", key, top).drop("__key")
+    LocalScan.frame(spark, postingRows(spark, dest, key, top))
 
   /** Fact rows partitioned by `pmod(hash(fk), buckets)`, sorted by
-    * (fk, `sortDesc` descending) within each bucket file, committed as
-    * manifest version 0 of a fresh store (any previous store at `dest`
-    * is deleted first). `fkCol` and `sortDesc` are persisted in the
+    * (fk, `sortDesc` descending) within each bucket file: staged, then
+    * committed as the whole state of the store — manifest version 0 of a
+    * fresh store, or over an existing store its next version and
+    * generation, listing only the new files, so the previous commit
+    * serves until this one lands and a racing write to it throws at its
+    * commit. The replaced files leave the disk at the next
+    * [[StoreAdmin.reclaim]]. `fkCol` and `sortDesc` are persisted in the
     * manifest; no later call restates them.
     */
   def buildTimeline(df: DataFrame, fkCol: String, dest: String,
                     sortDesc: Seq[String] = Nil,
                     buckets: Int = DefaultBuckets): Unit = {
-    val rows = tagged(df, fkCol, 0L, buckets)
+    val built = ManifestLog.versions(dest).nonEmpty
+    val gen = if (built) log.latest(dest).gen + 1 else 0L
+    val rows = tagged(df, fkCol, gen, buckets)
     val m = Manifest(JsonMethods.parse(rows.schema.json), fkCol, sortDesc,
-      buckets, 0L, None, Nil, Nil)
-    StoreFs.deleteRecursively(Paths.get(dest))
-    ManifestLog.publish(dest, 0L,
-      m.copy(files = ManifestLog.stage(dest)(writeRows(rows, m.order, _))))
+      buckets, gen, None, Nil, Nil)
+    val files = ManifestLog.stage(dest)(writeRows(rows, m.order, _))
+    if (built) log.commitAt(dest, gen)(_ => m.copy(files = files))
+    else ManifestLog.publish(dest, 0L, m.copy(files = files))
   }
 
   /** Append a NEW batch into an existing store — the
@@ -378,27 +387,32 @@ object ServingStores {
                     value: Any, top: Option[LocalScan.Top] = None): DataFrame =
     timelineProbeMany(spark, dest, fkCol, Seq(value), top)
 
-  /** [[timelineProbe]] for a SET of FK values (an entity resolving to
-    * several keys — shards, aliases, merged accounts), run on the calling
-    * thread. The whole key set is routed by ONE evaluation of the bucket
-    * function itself ([[route]]); ONLY the files the latest manifest lists
-    * for those buckets are read, on the driver and through the persisted
-    * schema, and inside them only the row groups whose min/max statistics
-    * admit one of the keys ([[keyFilter]]) — the within-bucket key sort
-    * keeps each key's rows in few row groups. A row is kept when its key's
-    * string form is one of the values' and no listed tombstone outranks
-    * it; with `top`, only its first rows are held while they stream, so a
-    * key with many rows costs no more memory than the bound. The result is
-    * a local relation: building it lists no directory, infers nothing and
-    * starts no Spark job, and a filter or projection over it folds on the
-    * driver, so request cost is the matching row groups, independent of
-    * the store's bucket count. A key set that routes to no listed file
-    * (EMPTY, or keys no row hashed to) is a typed empty frame — served and
-    * ad-hoc routes degrade identically. `fkCol` must be the store's
+  /** [[probeRows]] as a local frame. */
+  def timelineProbeMany(spark: SparkSession, dest: String, fkCol: String,
+                        values: Seq[Any], top: Option[LocalScan.Top] = None): DataFrame =
+    LocalScan.frame(spark, probeRows(spark, dest, fkCol, values, top))
+
+  /** The fact rows of a SET of FK values (an entity resolving to several
+    * keys — shards, aliases, merged accounts), read on the calling thread
+    * as plain rows. The whole key set is routed by ONE evaluation of the
+    * bucket function itself ([[route]]); ONLY the files the latest manifest
+    * lists for those buckets are read, on the driver and through the
+    * persisted schema, and inside them only the row groups whose min/max
+    * statistics admit one of the keys ([[keyFilter]]) — the within-bucket
+    * key sort keeps each key's rows in few row groups. A row is kept when
+    * its key's string form is one of the values' and no listed tombstone
+    * outranks it; with `top`, only its first rows are held while they
+    * stream, so a key with many rows costs no more memory than the bound.
+    * The rows hold the store's columns but `__bucket`, `__gen` and `drop`.
+    * Building them lists no directory, infers nothing, builds no query and
+    * starts no Spark job, so request cost is the matching row groups,
+    * independent of the store's bucket count. A key set that routes to no
+    * listed file (EMPTY, or keys no row hashed to) has no rows — served
+    * and ad-hoc routes degrade identically. `fkCol` must be the store's
     * persisted key.
     */
-  def timelineProbeMany(spark: SparkSession, dest: String, fkCol: String,
-                        values: Seq[Any], top: Option[LocalScan.Top] = None): DataFrame = {
+  def probeRows(spark: SparkSession, dest: String, fkCol: String, values: Seq[Any],
+                top: Option[LocalScan.Top] = None, drop: Seq[String] = Nil): LocalScan.Table = {
     val m = log.latest(dest)
     require(fkCol == m.key, s"store at $dest is keyed on '${m.key}', not '$fkCol'")
     val routed = route(spark, values, m.buckets)
@@ -408,12 +422,13 @@ object ServingStores {
     val dead = m.outranked(spark, dest)
     val id = m.idCol.map(LocalScan.stringOf(spark, layout, _))
     val gen = layout.fieldIndex("__gen")
-    val served = layout.fieldNames.indices.filterNot(i => Seq("__bucket", "__gen").contains(layout(i).name))
+    val hidden = Seq("__bucket", "__gen") ++ drop
+    val served = layout.fieldNames.indices.filterNot(i => hidden.contains(layout(i).name))
     val rows = LocalScan.rows(spark, dest, m.rowSchema, "", Seq("__bucket"),
         routed.map(_._1).distinct.flatMap(m.inBucket), keyFilter(layout(fkCol), keys).toSeq, top)(
         r => keys(key(r)) && !id.exists(i => dead(i(r), r.getLong(gen))))
       .map(r => InternalRow.fromSeq(served.map(i => r.get(i, layout(i).dataType))))
-    LocalScan.frame(spark, StructType(served.map(layout(_))), rows)
+    LocalScan.Table(StructType(served.map(layout(_))), rows)
   }
 
   /** The row-group filter of a probe of `keys` (string forms) on `field`:
@@ -433,10 +448,10 @@ object ServingStores {
 
   /** Each key's bucket under [[bucketOf]] itself and its string form —
     * the one bucket definition, so the driver routes exactly where
-    * [[tagged]] wrote. The two expressions are resolved once per session
-    * state ([[LocalScan.confs]]), key type and bucket count, then
-    * evaluated over the whole key set on plain values, with no query per
-    * probe. A null key matches no row.
+    * [[tagged]] wrote. The two expressions are resolved once per thread,
+    * session state, key type and bucket count ([[LocalScan.prepare]]),
+    * then evaluated over the whole key set on plain values. A null key
+    * matches no row.
     */
   private def route(spark: SparkSession, values: Seq[Any],
                     buckets: Int): Seq[(Int, String)] =
@@ -446,16 +461,10 @@ object ServingStores {
       val t = keys.head.dataType
       require(keys.forall(_.dataType == t),
         s"probe keys must share one type: ${keys.map(_.dataType).distinct}")
-      val Seq(bucket, string) = routers.getOrElseUpdate((LocalScan.confs(spark), t, buckets),
-        LocalScan.resolve(spark, StructType(Seq(StructField("k", t))),
-          Seq(bucketOf(col("k"), buckets), col("k").cast("string"))))
-      keys.map { k =>
-        val row = InternalRow(k.value)
-        bucket.eval(row).asInstanceOf[Int] -> Option(string.eval(row)).map(_.toString).orNull
-      }
+      LocalScan.prepare(spark, StructType(Seq(StructField("k", t))), "route" -> buckets)(
+          Seq(bucketOf(col("k"), buckets), col("k").cast("string")))(keys.map(k => InternalRow(k.value)))
+        .map(r => r.getInt(0) -> Option(r.getUTF8String(1)).map(_.toString).orNull)
     }
-
-  private val routers = TrieMap.empty[(Map[String, String], DataType, Int), Seq[Expression]]
 
   def defaultDir(sfDir: String): String = {
     graft.util.StoreDirs.resolve("serving-store-v4", sfDir)

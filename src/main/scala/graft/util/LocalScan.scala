@@ -20,29 +20,33 @@ import org.apache.spark.SparkContext
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, BindReferences, BoundReference, Cast, Expression, InterpretedOrdering, Literal}
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, Project, Sort, SubqueryAlias}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, BoundReference, Cast, InterpretedMutableProjection, InterpretedOrdering, Literal, NamedExpression}
+import org.apache.spark.sql.catalyst.optimizer.ReplaceExpressions
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Project, Sort}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.execution.datasources.{DataSourceUtils, FileFormat, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFilters}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources
-import org.apache.spark.sql.types.{ArrayType, StringType, StructType}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{ArrayType, StringType, StructField, StructType}
 import org.apache.spark.sql.{Column, DataFrame, GraftPlanBridge, SparkSession}
 
 /** Key-routed reads on the calling thread: a store's listed parquet files
-  * read on the driver into a local relation, and the few operators a
-  * stored route needs over such relations — top-n, a hash join, a
-  * grouped gather — evaluated on plain values with Spark's own
-  * expressions and orderings.
-  *
-  * Spark folds a Filter or Project over a local relation into a new
-  * local relation at optimization (`ConvertToLocalRelation`), and
-  * collecting one runs no job. A sort, join or aggregate over it does run
-  * a job, which is what [[top]], [[join]] and [[gather]] replace. A frame
-  * whose optimized plan is not a local relation is refused loudly, so a
-  * stored route can never turn back into a Spark job unnoticed.
+  * read on the driver into plain rows ([[Table]]), and the few operators a
+  * stored route needs over them — top-n, a hash join, a grouped gather, a
+  * projection — evaluated on plain values with Spark's own expressions
+  * and orderings. A stored request builds no Dataset, plans nothing and
+  * runs no SQL execution: each expression it needs is resolved once per
+  * thread, session state and row layout ([[prepare]]) and then evaluated
+  * row by row with the interpreted projection Spark's own folding of a
+  * projection over a local relation (`ConvertToLocalRelation`) uses, so
+  * the values are the ones a local frame would give. [[frame]] wraps rows
+  * in a local frame for the callers that want a DataFrame; [[table]]
+  * takes a local frame's rows back, and refuses loudly a frame whose plan
+  * is not local, so a stored route can never turn into a Spark job
+  * unnoticed.
   *
   * Files are read through `ParquetFileFormat.buildReaderWithPartitionValues`,
   * the function a scan task runs. One reader is built per row layout and
@@ -53,7 +57,8 @@ import org.apache.spark.sql.{Column, DataFrame, GraftPlanBridge, SparkSession}
   * in it. A reader's filters are fixed when it is built, so a read's own
   * predicate prunes before the reader runs ([[rows]]): the reader is
   * handed only the byte ranges of the row groups whose min/max statistics
-  * admit the predicate, as Spark's own `ParquetFilters` converts it.
+  * admit the predicate, as Spark's own `ParquetFilters` converts it. Each
+  * listed file's footer is read for that once and kept.
   */
 object LocalScan {
 
@@ -91,14 +96,16 @@ object LocalScan {
   }
 
   /** What the driver reads on one thread did: the store files they
-    * opened, as absolute paths, and the rows the parquet reader decoded
-    * from them before any plain-value test.
+    * opened, as absolute paths, the rows the parquet reader decoded from
+    * them before any plain-value test, and the footers read to prune row
+    * groups (a file's footer is read once, then kept: [[ranges]]).
     */
-  final case class Reads(files: Seq[String], rows: Long)
+  final case class Reads(files: Seq[String], rows: Long, footers: Int)
 
   private final class Recorder {
     val files = mutable.Buffer.empty[String]
     var rows = 0L
+    var footers = 0
   }
 
   private val recording = new ThreadLocal[Recorder]
@@ -110,10 +117,12 @@ object LocalScan {
     val outer = recording.get()
     val mine = new Recorder
     recording.set(mine)
-    try { val a = body; (a, Reads(mine.files.toSeq, mine.rows)) }
+    try { val a = body; (a, Reads(mine.files.toSeq, mine.rows, mine.footers)) }
     finally {
       recording.set(outer)
-      if (outer != null) { outer.files ++= mine.files; outer.rows += mine.rows }
+      if (outer != null) {
+        outer.files ++= mine.files; outer.rows += mine.rows; outer.footers += mine.footers
+      }
     }
   }
 
@@ -213,7 +222,10 @@ object LocalScan {
     val sql = spark.sessionState.conf
     val whole = Seq(0L -> size)
     if (prune.isEmpty || !sql.parquetFilterPushDown) whole
-    else footer(path, size).fold(whole) { meta =>
+    else footers.getOrElseUpdate(path.toAbsolutePath.normalize.toString -> size, {
+      Option(recording.get()).foreach(_.footers += 1)
+      footer(path, size)
+    }).fold(whole) { meta =>
       val file = meta.getFileMetaData
       val filters = new ParquetFilters(file.getSchema, sql.parquetFilterPushDownDate,
         sql.parquetFilterPushDownTimestamp, sql.parquetFilterPushDownDecimal,
@@ -234,6 +246,12 @@ object LocalScan {
       }
     }
   }
+
+  /** Footers already read, by (absolute path, length): a listed store
+    * file never changes, so its row-group extents and statistics are read
+    * once.
+    */
+  private val footers = new Bounded[(String, Long), Option[ParquetMetadata]](4096)
 
   private val Magic = "PAR1".getBytes(StandardCharsets.US_ASCII)
 
@@ -259,129 +277,183 @@ object LocalScan {
     } finally ch.close()
   }
 
+  /** Rows laid out as `schema`: what a driver read returns and what the
+    * row operators below take and give.
+    */
+  final case class Table(schema: StructType, rows: Seq[InternalRow]) {
+    /** The same rows with field `from` named `to`. */
+    def renamed(from: String, to: String): Table =
+      copy(schema = StructType(schema.map(f => if (f.name == from) f.copy(name = to) else f)))
+
+    /** The values of one column, as a collect gives them. */
+    def values(column: String): Seq[Any] = {
+      val i = schema.fieldIndex(column)
+      val t = schema(i).dataType
+      val toScala = CatalystTypeConverters.createToScalaConverter(t)
+      rows.map(row => toScala(row.get(i, t)))
+    }
+  }
+
   /** A local frame of catalyst rows laid out as `schema`. */
   def frame(spark: SparkSession, schema: StructType, rows: Seq[InternalRow]): DataFrame =
     GraftPlanBridge.ofRows(spark, LocalRelation(DataTypeUtils.toAttributes(schema), rows))
 
-  /** `cols` resolved over rows of `schema` and bound to their fields:
-    * expressions to evaluate on plain rows, as Spark's folding of a
-    * projection over a local relation evaluates them.
+  def frame(spark: SparkSession, t: Table): DataFrame = frame(spark, t.schema, t.rows)
+
+  /** Columns resolved over rows of one layout and evaluated on plain rows
+    * as Spark folds a projection over a local relation: the analyzed
+    * projection, with the rewriting Spark applies before that folding
+    * (`ReplaceExpressions`), run by an interpreted projection under the
+    * session's SQL conf. `schema` is the output layout.
     */
-  def resolve(spark: SparkSession, schema: StructType, cols: Seq[Column]): Seq[Expression] =
-    frame(spark, schema, Nil).select(cols: _*).queryExecution.analyzed match {
-      case Project(list, child) => list.map(e => BindReferences.bindReference(e match {
-        case a: Alias => a.child
-        case x => x
-      }, child.output))
-      case p => throw new IllegalStateException(s"unexpected projection plan:\n${p.treeString}")
+  final class Projection private[LocalScan] (conf: SQLConf, exprs: Seq[NamedExpression],
+                                             input: Seq[Attribute]) {
+    val schema: StructType = StructType(exprs.map(e => StructField(e.name, e.dataType, e.nullable)))
+    private val project = new InterpretedMutableProjection(exprs, input)
+    project.initialize(0)
+
+    /** The projection of each of `rows`. */
+    def apply(rows: Seq[InternalRow]): Seq[InternalRow] =
+      SQLConf.withExistingConf(conf)(rows.map(r => project(r).copy()))
+
+    def apply(t: Table): Table = Table(schema, apply(t.rows))
+  }
+
+  /** What a thread resolved, by caller key, session state and input
+    * layout. A bound expression tree holds evaluation state — a lambda's
+    * current element, the JSON writer of `to_json`, a projection's output
+    * row — so no tree is shared between threads: each thread resolves its
+    * own, once, on its first use.
+    */
+  private val resolved = ThreadLocal.withInitial[mutable.HashMap[(Any, Map[String, String], StructType), AnyRef]](
+    () => mutable.HashMap.empty)
+
+  private def perThread[A <: AnyRef](spark: SparkSession, schema: StructType, key: Any)(make: => A): A =
+    resolved.get().getOrElseUpdate((key, confs(spark), schema), make).asInstanceOf[A]
+
+  /** `cols` over rows of `schema`, resolved on this thread's first call
+    * with `key` under this session state and layout, and reused after.
+    * `key` names the columns: equal keys must mean equal columns.
+    */
+  def prepare(spark: SparkSession, schema: StructType, key: Any)(cols: => Seq[Column]): Projection =
+    perThread(spark, schema, key) {
+      ReplaceExpressions(frame(spark, schema, Nil).select(cols: _*).queryExecution.analyzed) match {
+        case Project(list, child) => new Projection(spark.sessionState.conf, list, child.output)
+        case p => throw new IllegalStateException(s"unexpected projection plan:\n${p.treeString}")
+      }
+    }
+
+  /** `order` over rows of `schema`: the ordering of `orderBy(order: _*)`
+    * on plain rows, resolved once per thread, session state and layout.
+    */
+  private def ordering(spark: SparkSession, schema: StructType,
+                       order: Seq[Column]): Ordering[InternalRow] =
+    perThread(spark, schema, "orderBy" -> order) {
+      ReplaceExpressions(frame(spark, schema, Nil).orderBy(order: _*).queryExecution.analyzed) match {
+        case Sort(o, _, child, _) =>
+          val conf = spark.sessionState.conf
+          val by = new InterpretedOrdering(o, child.output)
+          new Ordering[InternalRow] {
+            def compare(a: InternalRow, b: InternalRow): Int =
+              SQLConf.withExistingConf(conf)(by.compare(a, b))
+          }
+        case p => throw new IllegalStateException(s"unexpected sort plan:\n${p.treeString}")
+      }
     }
 
   /** The string form of `field` per row of `schema` — the cast the store
-    * bucket function and the tombstone rule compare under.
+    * bucket function and the tombstone rule compare under, built once per
+    * thread, session state and layout.
     */
   def stringOf(spark: SparkSession, schema: StructType, field: String): InternalRow => String = {
-    val i = schema.fieldIndex(field)
-    val cast = Cast(BoundReference(i, schema(i).dataType, nullable = true), StringType,
-      Some(timeZone(spark)))
+    val cast = perThread(spark, schema, "string" -> field) {
+      val i = schema.fieldIndex(field)
+      Cast(BoundReference(i, schema(i).dataType, nullable = true), StringType, Some(timeZone(spark)))
+    }
     r => Option(cast.eval(r)).map(_.toString).orNull
   }
 
-  /** True iff `df` is a local relation under filters and projections:
-    * Spark folds it on the driver.
+  /** The rows of a local frame (a bare one needs no optimizer run);
+    * anything else throws.
     */
-  def isLocal(df: DataFrame): Boolean = df.queryExecution.analyzed.find {
-    case _: LocalRelation | _: Project | _: Filter | _: SubqueryAlias => false
-    case _ => true
-  }.isEmpty
-
-  /** The folded relation of a local frame (a bare one needs no
-    * optimizer run); anything else throws.
-    */
-  private def relation(df: DataFrame): LocalRelation = df.queryExecution.analyzed match {
-    case r: LocalRelation => r
+  def table(df: DataFrame): Table = df.queryExecution.analyzed match {
+    case r: LocalRelation => Table(r.schema, r.data)
     case _ => df.queryExecution.optimizedPlan match {
-      case r: LocalRelation => r
+      case r: LocalRelation => Table(r.schema, r.data)
       case p => throw new IllegalStateException(
         s"not a driver-local frame, it would run as a Spark job:\n${p.treeString}")
     }
   }
 
-  /** The values of one column of a local frame, as a collect gives them. */
-  def values(df: DataFrame, column: String): Seq[Any] = {
-    val r = relation(df)
-    val i = r.output.indexWhere(_.name == column)
-    require(i >= 0, s"no column $column in ${r.output.map(_.name).mkString(", ")}")
-    val t = r.output(i).dataType
-    val toScala = CatalystTypeConverters.createToScalaConverter(t)
-    r.data.map(row => toScala(row.get(i, t)))
-  }
-
-  /** `order` resolved over rows of `schema`: the ordering of
-    * `orderBy(order: _*)`, on plain rows.
+  /** The first `n` rows under `order`, as `orderBy(order: _*).limit(n)`
+    * gives them, on plain rows.
     */
-  private def ordering(spark: SparkSession, schema: StructType,
-                       order: Seq[Column]): Ordering[InternalRow] =
-    frame(spark, schema, Nil).orderBy(order: _*).queryExecution.analyzed match {
-      case Sort(o, _, child, _) => new InterpretedOrdering(o, child.output)
-      case p => throw new IllegalStateException(s"unexpected sort plan:\n${p.treeString}")
-    }
+  def top(spark: SparkSession, t: Table, n: Int, order: Column*): Table =
+    t.copy(rows = t.rows.sorted(ordering(spark, t.schema, order)).take(n))
 
-  /** The first `n` rows of a local frame under `order` — `orderBy` then
-    * `limit`, with Spark's ordering, on the driver.
-    */
-  def top(df: DataFrame, n: Int, order: Column*): DataFrame = {
-    val r = relation(df)
-    val sorted = r.data.sorted(ordering(df.sparkSession, r.schema, order))
-    GraftPlanBridge.ofRows(df.sparkSession, r.copy(data = sorted.take(n)))
-  }
+  /** [[top]] of a local frame. */
+  def top(df: DataFrame, n: Int, order: Column*): DataFrame =
+    frame(df.sparkSession, top(df.sparkSession, table(df), n, order: _*))
 
   /** Every `left` row with each `right` row whose `rightKey` equals its
     * `leftKey` — an inner join, or with `outer` a left outer join — on
-    * the driver. The result holds both sides' columns.
+    * plain values. The result holds both sides' columns.
     */
-  def join(left: DataFrame, right: DataFrame, leftKey: String, rightKey: String,
-           outer: Boolean = false): DataFrame = {
-    val (l, r) = (relation(left), relation(right))
-    def key(rel: LocalRelation, name: String): InternalRow => Any = {
-      val i = rel.output.indexWhere(_.name == name)
-      require(i >= 0, s"no column $name in ${rel.output.map(_.name).mkString(", ")}")
-      val t = rel.output(i).dataType
-      row => if (row.isNullAt(i)) null else row.get(i, t)
+  def join(left: Table, right: Table, leftKey: String, rightKey: String,
+           outer: Boolean = false): Table = {
+    def key(t: Table, name: String): InternalRow => Any = {
+      val i = t.schema.fieldIndex(name)
+      val dt = t.schema(i).dataType
+      row => if (row.isNullAt(i)) null else row.get(i, dt)
     }
-    val (lk, rk) = (key(l, leftKey), key(r, rightKey))
-    val byKey = r.data.groupBy(rk)
-    val none = InternalRow.fromSeq(r.output.map(_ => null))
-    val rows = l.data.flatMap { row =>
+    val (lk, rk) = (key(left, leftKey), key(right, rightKey))
+    val byKey = right.rows.groupBy(rk)
+    val none = InternalRow.fromSeq(right.schema.map(_ => null))
+    val rows = left.rows.flatMap { row =>
       val k = lk(row)
       val matches = if (k == null) Nil else byKey.getOrElse(k, Nil)
       (if (matches.isEmpty && outer) Seq(none) else matches).map(m =>
-        InternalRow.fromSeq(row.toSeq(l.schema) ++ m.toSeq(r.schema)))
+        InternalRow.fromSeq(row.toSeq(left.schema) ++ m.toSeq(right.schema)))
     }
-    val rightOut = if (outer) r.output.map(_.withNullability(true)) else r.output
-    GraftPlanBridge.ofRows(left.sparkSession, LocalRelation(l.output ++ rightOut, rows))
+    val rightOut = if (outer) right.schema.map(_.copy(nullable = true)) else right.schema
+    Table(StructType(left.schema ++ rightOut), rows)
   }
 
-  /** `collect_list(value)` per distinct `groups` value of a local frame,
-    * on the driver: the groups' columns, then the list as `name`. With no
-    * groups it is one row, as a global aggregate is.
+  /** The last column's values collected per distinct value of the first
+    * `groups` columns, on plain values: the groups' columns, then the list
+    * as `name`, groups in first-seen order and values in row order. With
+    * no groups it is one row, as a global aggregate is.
     */
-  def gather(df: DataFrame, groups: Seq[Column], value: Column, name: String): DataFrame = {
-    val r = relation(df.select(groups :+ value.as(name): _*))
-    val g = groups.size
+  def gather(t: Table, groups: Int, name: String): Table = {
     val entries = mutable.LinkedHashMap.empty[Seq[Any], mutable.Buffer[Any]]
-    if (g == 0) entries(Nil) = mutable.Buffer.empty
-    r.data.foreach { row =>
-      val vals = row.toSeq(r.schema)
-      entries.getOrElseUpdate(vals.take(g), mutable.Buffer.empty) += vals(g)
+    if (groups == 0) entries(Nil) = mutable.Buffer.empty
+    t.rows.foreach { row =>
+      val vals = row.toSeq(t.schema)
+      entries.getOrElseUpdate(vals.take(groups), mutable.Buffer.empty) += vals(groups)
     }
-    val e = r.output(g)
-    val out = r.output.take(g) :+
-      AttributeReference(name, ArrayType(e.dataType, containsNull = false), nullable = false)()
-    GraftPlanBridge.ofRows(df.sparkSession, LocalRelation(out, entries.toSeq.map {
-      case (k, vs) => InternalRow.fromSeq(k :+ new GenericArrayData(vs.toArray))
-    }))
+    val e = t.schema(groups)
+    Table(StructType(t.schema.take(groups) :+
+        StructField(name, ArrayType(e.dataType, containsNull = false), nullable = false)),
+      entries.toSeq.map { case (k, vs) => InternalRow.fromSeq(k :+ new GenericArrayData(vs.toArray)) })
   }
 
   private def timeZone(spark: SparkSession): String =
     spark.sessionState.conf.sessionLocalTimeZone
+}
+
+/** A map that keeps its `max` most recently used entries: for values
+  * derived from immutable inputs, such as a listed file's footer.
+  */
+private[graft] final class Bounded[K, V](max: Int) {
+  private val m = new java.util.LinkedHashMap[K, V](16, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[K, V]): Boolean = size > max
+  }
+
+  def get(k: K): Option[V] = m.synchronized(Option(m.get(k)))
+
+  def put(k: K, v: V): Unit = m.synchronized(m.put(k, v))
+
+  /** The value of `k`, computed by `v` (outside the lock) when absent. */
+  def getOrElseUpdate(k: K, v: => V): V =
+    get(k).getOrElse { val computed = v; put(k, computed); computed }
 }

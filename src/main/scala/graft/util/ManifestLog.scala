@@ -161,12 +161,25 @@ object ManifestLog {
   */
 final class ManifestLog[M <: ManifestLog.Entry](family: String, parse: String => M) {
 
+  /** Per store directory, the text of the manifest last read and its
+    * parse. Keyed on the text, not the version: a store deleted and built
+    * again commits version 0 again.
+    */
+  private val parsed = new Bounded[String, (String, M)](1024)
+
   private def read(dest: String): (Long, M) = {
     val vs = ManifestLog.versions(dest)
     if (vs.isEmpty) throw new IllegalStateException(
       s"$family at $dest has no manifest in ${Paths.get(dest, ManifestLog.Dir)} " +
         "— never built, or built under an older layout; rebuild it")
-    (vs.max, parse(StoreFs.readString(ManifestLog.file(dest, vs.max))))
+    val text = StoreFs.readString(ManifestLog.file(dest, vs.max))
+    val store = Paths.get(dest).toAbsolutePath.normalize.toString
+    val hit = parsed.get(store).collect { case (t, m) if t == text => m }
+    (vs.max, hit.getOrElse {
+      val m = parse(text)
+      parsed.put(store, text -> m)
+      m
+    })
   }
 
   /** The store's latest manifest; a store without one fails loudly. */

@@ -3,17 +3,21 @@ package graft
 import scala.collection.mutable
 
 import org.apache.spark.SparkContext
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
-/** The Spark jobs and tasks a block of driver code starts. */
-final case class SparkWork[A](jobs: Int, tasks: Int, result: A)
+/** The Spark jobs, tasks and SQL executions (a Dataset action's
+  * `withNewExecutionId`, whether or not it runs a job) a block of driver
+  * code starts.
+  */
+final case class SparkWork[A](jobs: Int, tasks: Int, result: A, sqlExecutions: Int = 0)
 
 object SparkWork {
 
   private val seq = new java.util.concurrent.atomic.AtomicLong
 
-  /** Run `body` on this thread under a fresh job group and count the jobs
-    * and tasks started in that group (including jobs on helper threads
+  /** Run `body` on this thread under a fresh job group and count the jobs,
+    * tasks and SQL executions started in that group (including jobs on helper threads
     * that inherit the group, such as file listing and broadcasts). The
     * listener bus is asynchronous but FIFO: once a marker job run AFTER
     * `body` has ended on the bus, every event of `body`'s jobs has been
@@ -26,6 +30,7 @@ object SparkWork {
     val l = new SparkListener {
       var jobs = 0
       var tasks = 0
+      var sqls = 0
       val stages = mutable.Set.empty[Int]
       val markerJobs = mutable.Set.empty[Int]
       @volatile var drained = false
@@ -38,6 +43,11 @@ object SparkWork {
       }
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
         if (stages.contains(e.stageId)) tasks += 1
+      }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart if s.jobGroupId.contains(group) =>
+          synchronized(sqls += 1)
+        case _ => ()
       }
       override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
         if (markerJobs.contains(e.jobId)) drained = true
@@ -52,7 +62,7 @@ object SparkWork {
       val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
       while (!l.drained && System.nanoTime() < deadline) Thread.sleep(5)
       require(l.drained, "listener bus did not deliver the marker job")
-      l.synchronized(SparkWork(l.jobs, l.tasks, result))
+      l.synchronized(SparkWork(l.jobs, l.tasks, result, l.sqls))
     } finally sc.removeSparkListener(l)
   }
 }

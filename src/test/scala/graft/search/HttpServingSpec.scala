@@ -294,6 +294,7 @@ class HttpServingSpec extends SparkSpec {
   test("every stored route runs on the driver: 0 Spark jobs and 0 tasks " +
       "per read, byte-equal to the ad-hoc route — hits, no match and " +
       "unknown users") {
+    // a stored read also runs no SQL execution: no Dataset action at all
     val n = 600
     val manyTweets = (1 to n).map(i => (i.toString, (i % 500 + 1).toString,
         s"spark job post $i", Seq(s"t$i", s"t${i + n}", "jobs"),
@@ -322,12 +323,54 @@ class HttpServingSpec extends SparkSpec {
       "/api/search/user" -> ("id" -> "nobody", null))
     reads.foreach { case (path, ((k, v), count)) =>
       val read = SparkWork(spark.sparkContext)(stored(path)(Map(k -> v)))
-      assert(read.jobs == 0 && read.tasks == 0,
-        s"$path?$k=$v ran ${read.jobs} jobs and ${read.tasks} tasks")
+      assert(read.jobs == 0 && read.tasks == 0 && read.sqlExecutions == 0,
+        s"$path?$k=$v ran ${read.jobs} jobs, ${read.tasks} tasks and " +
+          s"${read.sqlExecutions} SQL executions")
       assert(json(read.result, "$.count") == count, read.result)
       assert(read.result == adhoc(path)(Map(k -> v)),
         s"$path?$k=$v: stored envelope differs from ad hoc")
     }
+  }
+
+  test("4 threads calling the three stored routes over many keys at once " +
+      "serve envelopes byte-equal to the ad-hoc routes") {
+    val n = 120
+    val manyTweets = (1 to n).map(i => (i.toString, (i % 30 + 1).toString,
+        s"spark job post $i word${i % 9}", Seq(s"t${i % 17}", "jobs"),
+        f"2021-03-${i % 28 + 1}%02dT10:00:00Z"))
+      .toDF("id", "userID", "tweetText", "tweetHashtags", "tweetDateTime")
+    val manyUsers = (1 to 31).map(i => (i.toString, s"user$i", s"User $i"))
+      .toDF("id", "userScreenName", "userName")
+    val root = java.nio.file.Files.createTempDirectory("graft-http-threads")
+    val tidx = root.resolve("tidx").toString
+    val bm25 = root.resolve("bm25").toString
+    HttpServing.buildTweetIndex(manyTweets, manyUsers, tidx)
+    BM25Index.build(manyTweets, "id", "tweetText", bm25)
+    val stored = HttpServing.referenceRoutes(manyTweets, manyUsers,
+      bm25IndexDir = Some(bm25), tweetIndexDir = Some(tidx))
+    val adhoc = HttpServing.referenceRoutes(manyTweets, manyUsers)
+    val reads = (0 until 9).map(w => "/api/search/query" -> ("query" -> s"word$w post")) ++
+      (0 until 17).map(t => "/api/search/hashtag" -> ("tag" -> s"t$t")) ++
+      Seq("/api/search/hashtag" -> ("tag" -> "jobs")) ++
+      (1 to 32).map(u => "/api/search/user" -> ("id" -> s"user$u"))
+    val expected = reads.map { case (path, (k, v)) => adhoc(path)(Map(k -> v)) }
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try {
+      // every thread walks every read, each from its own offset, so the
+      // three routes and their shared expressions run side by side
+      val served = (0 until 4).map { t =>
+        pool.submit(() => reads.indices.map { j =>
+          val i = (j + t * reads.size / 4) % reads.size
+          val (path, (k, v)) = reads(i)
+          i -> stored(path)(Map(k -> v))
+        })
+      }.flatMap(_.get())
+      assert(served.size == 4 * reads.size)
+      served.foreach { case (i, body) =>
+        assert(body == expected(i), s"${reads(i)}: stored envelope under 4 threads " +
+          s"differs from ad hoc:\n$body\n${expected(i)}")
+      }
+    } finally pool.shutdown()
   }
 
   test("missing params and unknown users return the error envelope, HTTP 200") {

@@ -460,6 +460,22 @@ class ServingStoresPropertySpec extends SparkSpec {
     }
   }
 
+  test("a repeated probe reads no footer of its own: each listed file's " +
+      "row-group statistics are read once") {
+    val df = (0 until 2000).map(i => (i % 40L, i)).toDF("fk", "v")
+    val dest = java.nio.file.Files.createTempDirectory("graft-tl-footer").toString
+    smallRowGroups(1024)(ServingStores.buildTimeline(df, "fk", dest, buckets = 2))
+    def probe() = LocalScan.reads(ServingStores.timelineProbe(spark, dest, "fk", 17L)
+      .collect().map(_.getInt(1)).sorted.toSeq)
+    val (first, r1) = probe()
+    val (second, r2) = probe()
+    assert(first == (0 until 2000).filter(_ % 40 == 17))
+    assert(r1.footers == r1.files.size && r1.footers > 0, s"first probe: $r1")
+    assert(second == first && r2.files == r1.files && r2.rows == r1.rows)
+    assert(r2.footers == 0, s"the repeated probe read ${r2.footers} footers")
+    StoreAdmin.truncate(dest)
+  }
+
   test("a probe bounded by Top serves orderBy.limit of its key while holding " +
       "the bound: one key with more rows than the cap, ties in read order") {
     val df = (0 until 300).map(i => (i.toLong, if (i % 3 == 0) List("hot", "x") else List("hot"),

@@ -405,6 +405,54 @@ class StoreAdminSpec extends SparkSpec {
     StoreAdmin.truncate(srp)
   }
 
+  test("a rebuild whose manifest create fails leaves the previous build " +
+      "serving, and reclaim removes the files it staged") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft-rebuild-crash")
+    val store = root.resolve("store").toString
+    val bm = root.resolve("bm25").toString
+    val first = Seq(("a", 1), ("a", 2), ("b", 3)).toDF("k", "v")
+    val second = Seq(("a", 10), ("c", 30)).toDF("k", "v")
+    ServingStores.buildTimeline(first, "k", store, buckets = 2)
+    BM25Index.build(Seq((1L, "spark jobs"), (2L, "query engines")).toDF("doc", "text"),
+      "doc", "text", bm)
+    def probe() = ServingStores.timelineProbe(spark, store, "k", "a")
+      .collect().map(_.getInt(1)).sorted.toSeq
+    def served() = BM25Index.topKMerged(spark, bm, Seq("spark", "query"), 10)
+      .collect().map(_.toString).toSeq
+    val (before, old) = (probe(), served())
+    assert(before == Seq(1, 2) && old.size == 2)
+    val crashOnCommit = new graft.util.DelegatingFs {
+      override def createExclusive(p: Path, c: String): Unit =
+        if (p.getFileName.toString.endsWith(".json") &&
+            p.getParent.getFileName.toString == graft.util.ManifestLog.Dir)
+          throw new java.io.IOException(s"crash creating $p")
+        else super.createExclusive(p, c)
+    }
+    intercept[java.io.IOException](StoreFs.withFs(crashOnCommit)(
+      ServingStores.buildTimeline(second, "k", store, buckets = 3)))
+    intercept[java.io.IOException](StoreFs.withFs(crashOnCommit)(
+      BM25Index.build(Seq((3L, "spark spark spark")).toDF("doc", "text"), "doc", "text", bm)))
+    assert(probe() == before, "a failed rebuild changed what the store serves")
+    assert(served() == old, "a failed rebuild changed what the index serves")
+    val staged = ServingStores.unlisted(store) ++ graft.util.ManifestLog.unlisted(bm)
+    assert(staged.exists(_.toString.endsWith(".parquet")),
+      s"the failed rebuilds staged no file: $staged")
+    val reclaimed = StoreAdmin.reclaim(root.toString)
+    staged.foreach { p =>
+      assert(reclaimed.contains(p.toString), s"reclaim missed $p: $reclaimed")
+      assert(!Files.exists(p))
+    }
+    assert(probe() == before && served() == old, "reclaim changed what serves")
+    // a rebuild that commits replaces the whole state; its old files go at reclaim
+    ServingStores.buildTimeline(second, "k", store, buckets = 3)
+    assert(probe() == Seq(10))
+    assert(ServingStores.unlisted(store).exists(_.toString.endsWith(".parquet")))
+    StoreAdmin.reclaim(store)
+    assert(ServingStores.unlisted(store).isEmpty && probe() == Seq(10))
+    StoreAdmin.truncate(root.toString)
+  }
+
   test("maintain skips a store dir a crashed build left without a manifest " +
       "and still sweeps the other stores") {
     import org.apache.spark.sql.functions.col
@@ -417,8 +465,8 @@ class StoreAdminSpec extends SparkSpec {
           throw new java.io.IOException(s"crash creating $p")
         else super.createExclusive(p, c)
     }
-    // the build deletes the old store, moves its files in, then fails to
-    // publish: a dir of data files and no manifest
+    // a first build moves its files in, then fails to publish: a dir of
+    // data files and no manifest
     intercept[java.io.IOException](StoreFs.withFs(crashOnCommit)(
       graft.dedup.SimHashStore.buildAt(simhash,
         Seq((1L, "alpha beta gamma delta")).toDF("doc_id", "text"),
