@@ -5,7 +5,7 @@ import java.nio.file.Paths
 import scala.collection.mutable
 
 import graft.util.CacheLedger.CacheOps
-import graft.util.{Bounded, LocalScan, ManifestLog, Stamp, Tables, Tombstones}
+import graft.util.{LocalScan, ManifestLog, Stamp, Tables, Tombstones}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
@@ -153,9 +153,6 @@ object BM25Index {
   }
 
   private val log = new ManifestLog[Manifest]("BM25 index", parseManifest)
-
-  /** Each part's corpus rows (n, total_len), by its listed corpus files. */
-  private val corpusRows = new Bounded[Seq[String], Seq[(Double, Long)]](1024)
 
   /** Bucket count ∝ vocabulary: ⌈nTerms / TermsPerBucket⌉, floored at
     * [[DefaultTermBuckets]] — a 100M-term corpus derives ~1.5k buckets
@@ -313,18 +310,12 @@ object BM25Index {
       })
     }
 
-    /** (N, total length) over every part, read on the calling thread. A
-      * part's corpus rows are read once per listed file set: their names
-      * are unique, so a set never names other rows.
-      */
+    /** (N, total length) over every part, read on the calling thread. */
     def totals: (Double, Long) = {
       val rows = m.parts.flatMap { p =>
-        val fs = files(p, "corpus")
-        corpusRows.getOrElseUpdate(fs.map(Paths.get(dest, _).toAbsolutePath.normalize.toString), {
-          val c = p.schema("corpus")
-          LocalScan.rows(spark, dest, c, p.root("corpus"), Nil, fs)()
-            .map(r => r.getDouble(c.fieldIndex("n")) -> r.getLong(c.fieldIndex("total_len")))
-        })
+        val c = p.schema("corpus")
+        LocalScan.rows(spark, dest, c, p.root("corpus"), Nil, files(p, "corpus"))()
+          .map(r => r.getDouble(c.fieldIndex("n")) -> r.getLong(c.fieldIndex("total_len")))
       }
       rows.map(_._1).sum -> rows.map(_._2).sum
     }

@@ -20,7 +20,7 @@ import org.apache.spark.SparkContext
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-import org.apache.spark.sql.catalyst.expressions.{Attribute, BoundReference, Cast, InterpretedMutableProjection, InterpretedOrdering, Literal, NamedExpression}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, BoundReference, Cast, InterpretedMutableProjection, InterpretedOrdering, Literal, NamedExpression, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.optimizer.ReplaceExpressions
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Project, Sort}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
@@ -57,8 +57,15 @@ import org.apache.spark.sql.{Column, DataFrame, GraftPlanBridge, SparkSession}
   * in it. A reader's filters are fixed when it is built, so a read's own
   * predicate prunes before the reader runs ([[rows]]): the reader is
   * handed only the byte ranges of the row groups whose min/max statistics
-  * admit the predicate, as Spark's own `ParquetFilters` converts it. Each
-  * listed file's footer is read for that once and kept.
+  * admit the predicate, as Spark's own `ParquetFilters` converts it.
+  *
+  * Every file a store lists is written once under a unique name and never
+  * changed in place: a new write, tombstone or fold arrives as a new
+  * listed name. So what is read from a listed file can be kept under its
+  * (absolute path, length): each file's footer is read once ([[ranges]]),
+  * and the rows decoded from each of its byte ranges are kept in one
+  * process-wide cache bounded by bytes ([[rows]]). Tombstones are applied
+  * after the read, on plain values, so a kept range never hides a write.
   */
 object LocalScan {
 
@@ -96,16 +103,19 @@ object LocalScan {
   }
 
   /** What the driver reads on one thread did: the store files they
-    * opened, as absolute paths, the rows the parquet reader decoded from
-    * them before any plain-value test, and the footers read to prune row
-    * groups (a file's footer is read once, then kept: [[ranges]]).
+    * served, as absolute paths, whether their rows were kept or decoded;
+    * the rows examined before any plain-value test; the footers read to
+    * prune row groups (a file's footer is read once, then kept:
+    * [[ranges]]); and the rows the parquet reader decoded, for the byte
+    * ranges not already kept ([[rows]]).
     */
-  final case class Reads(files: Seq[String], rows: Long, footers: Int)
+  final case class Reads(files: Seq[String], rows: Long, footers: Int, decoded: Long)
 
   private final class Recorder {
     val files = mutable.Buffer.empty[String]
     var rows = 0L
     var footers = 0
+    var decoded = 0L
   }
 
   private val recording = new ThreadLocal[Recorder]
@@ -117,17 +127,18 @@ object LocalScan {
     val outer = recording.get()
     val mine = new Recorder
     recording.set(mine)
-    try { val a = body; (a, Reads(mine.files.toSeq, mine.rows, mine.footers)) }
+    try { val a = body; (a, Reads(mine.files.toSeq, mine.rows, mine.footers, mine.decoded)) }
     finally {
       recording.set(outer)
       if (outer != null) {
         outer.files ++= mine.files; outer.rows += mine.rows; outer.footers += mine.footers
+        outer.decoded += mine.decoded
       }
     }
   }
 
   /** `body`'s result and the store files the driver reads on this thread
-    * opened while it ran, as absolute paths.
+    * served while it ran ([[Reads]]`.files`), as absolute paths.
     */
   def opened[A](body: => A): (A, Seq[String]) = {
     val (a, r) = reads(body)
@@ -154,6 +165,11 @@ object LocalScan {
     * decoded, and a file with no row group left is not opened by the
     * reader. With `top`, only its first rows are held and returned, in
     * its order.
+    *
+    * The rows of each byte range read are kept ([[cached]]), so a later
+    * read of the same range runs `keep` over them and decodes nothing.
+    * The rows returned are those kept copies: read them, never change
+    * them.
     */
   def rows(spark: SparkSession, dest: String, schema: StructType, base: String,
            partitions: Seq[String], files: Seq[String],
@@ -164,33 +180,42 @@ object LocalScan {
       val data = StructType(schema.filterNot(f => partitions.contains(f.name)))
       val parts = StructType(partitions.map(schema(_)))
       val open = reader(spark, data, parts)
-      val out = new Held(top.map(t => t.n -> ordering(spark, layout(schema, partitions), t.order)))
+      val all = layout(schema, partitions)
+      lazy val unsafe = perThread(spark, all, "unsafe")(UnsafeProjection.create(all))
+      val out = new Held(top.map(t => t.n -> ordering(spark, all, t.order)))
       val rec = Option(recording.get())
       files.foreach { f =>
         val path = Paths.get(dest, f)
         rec.foreach(_.files += path.toString)
-        val dirs = Option(Paths.get(dest, base).relativize(path).getParent)
-        val named = dirs.toSeq.flatMap(d => (0 until d.getNameCount).map(d.getName(_).toString))
-          .map(_.split("=", 2))
-          .collect { case Array(k, v) => k -> ExternalCatalogUtils.unescapePathName(v) }.toMap
-        val values = InternalRow.fromSeq(parts.map(p =>
-          Cast(Literal(named(p.name)), p.dataType, Some(timeZone(spark))).eval()))
+        // what the reader needs, worked out only for a range not yet kept
+        lazy val values = {
+          val dirs = Option(Paths.get(dest, base).relativize(path).getParent)
+          val named = dirs.toSeq.flatMap(d => (0 until d.getNameCount).map(d.getName(_).toString))
+            .map(_.split("=", 2))
+            .collect { case Array(k, v) => k -> ExternalCatalogUtils.unescapePathName(v) }.toMap
+          InternalRow.fromSeq(parts.map(p =>
+            Cast(Literal(named(p.name)), p.dataType, Some(timeZone(spark))).eval()))
+        }
+        lazy val file = SparkPath.fromPath(new HPath(path.toUri))
         val size = StoreFs.size(path)
-        val file = SparkPath.fromPath(new HPath(path.toUri))
+        val name = path.toAbsolutePath.normalize.toString
         ranges(spark, path, size, prune).foreach { case (start, end) =>
-          val it = open(PartitionedFile(values, file, start, end - start, Array.empty, 0L, size,
-            Map.empty))
-          try it.foreach { r =>
-            rec.foreach(_.rows += 1)
-            if (keep(r)) out.offer(r)
-          }
-          finally it match { case c: AutoCloseable => c.close(); case _ => () }
+          val kept = cached.getOrElseUpdate((open, name, size, start, end), {
+            val it = open(PartitionedFile(values, file, start, end - start, Array.empty, 0L, size,
+              Map.empty))
+            val rows = try it.map(unsafe(_).copy()).toArray
+              finally it match { case c: AutoCloseable => c.close(); case _ => () }
+            rec.foreach(_.decoded += rows.length)
+            rows
+          })
+          rec.foreach(_.rows += kept.length)
+          kept.foreach(r => if (keep(r)) out.offer(r))
         }
       }
       out.result
     }
 
-  /** Copies of the rows offered: all of them in offer order, or with a
+  /** The rows offered: all of them in offer order, or with a
     * bound `(n, ordering)` the first `n` under the ordering, ties in offer
     * order — a stable sort's first `n`. Cutting back to those `n` whenever
     * twice as many are held keeps the ties' order and holds at most `2n`.
@@ -201,7 +226,7 @@ object LocalScan {
     private def first(n: Int, o: Ordering[InternalRow]) = held.sorted(o).take(n)
 
     def offer(r: InternalRow): Unit = {
-      held += r.copy()
+      held += r
       bound.foreach { case (n, o) =>
         if (held.size - n > n) { val kept = first(n, o); held.clear(); held ++= kept }
       }
@@ -211,11 +236,12 @@ object LocalScan {
   }
 
   /** The byte ranges of the parquet file at `path` that hold the row
-    * groups whose min/max statistics admit every one of `prune`, each
-    * run of such groups up to the next group's start — the reader decodes
-    * the row groups whose midpoints lie in the range it is given. The
-    * whole file when no filter converts; none when every group is ruled
-    * out.
+    * groups whose min/max statistics admit every one of `prune`: one per
+    * admitted group, from its start to the next group's — the reader
+    * decodes the row groups whose midpoints lie in the range it is given —
+    * so a group decoded for one key set serves every later key set
+    * ([[cached]]). The whole file when it holds one row group or no
+    * filter converts; none when every group is ruled out.
     */
   private def ranges(spark: SparkSession, path: Path, size: Long,
                      prune: Seq[sources.Filter]): Seq[(Long, Long)] = {
@@ -236,22 +262,33 @@ object LocalScan {
         val groups = meta.getBlocks.asScala.toIndexedSeq
         val admitted = RowGroupFilter.filterRowGroups(FilterCompat.get(p), meta.getBlocks,
           file.getSchema).asScala.toSeq
-        val kept = groups.indices.filter(i => admitted.exists(_ eq groups(i))).toSet
+        val kept = groups.indices.filter(i => admitted.exists(_ eq groups(i)))
         def end(i: Int) = if (i + 1 < groups.size) groups(i + 1).getStartingPos else size
-        if (kept.size == groups.size) whole
-        else groups.indices.filter(kept).foldLeft(List.empty[(Long, Long)]) {
-          case ((start, _) :: rest, i) if kept(i - 1) => (start, end(i)) :: rest
-          case (acc, i) => (groups(i).getStartingPos, end(i)) :: acc
-        }.reverse
+        if (groups.size <= 1 && kept.size == groups.size) whole
+        else kept.map(i => groups(i).getStartingPos -> end(i))
       }
     }
   }
 
-  /** Footers already read, by (absolute path, length): a listed store
-    * file never changes, so its row-group extents and statistics are read
-    * once.
-    */
+  /** Footers already read, by (absolute path, length). */
   private val footers = new Bounded[(String, Long), Option[ParquetMetadata]](4096)
+
+  /** The heap a kept range and a kept row take beyond the rows' data:
+    * their key, arrays and object headers.
+    */
+  private val RangeBytes = 256L
+  private val RowBytes = 32L
+
+  /** Rows already decoded, by the reader that decoded them — one per
+    * (context, SQL confs, data layout, partition layout), so a session
+    * that changes a parquet conf decodes under its own entries — and the
+    * (absolute path, length, start, end) of the range read. Each range's
+    * rows are compact copies weighed by their bytes; the cache holds at
+    * most a sixteenth of the heap and drops the least recently used
+    * ranges past it.
+    */
+  private val cached = new Bounded[(Reader, String, Long, Long, Long), Array[UnsafeRow]](
+    Runtime.getRuntime.maxMemory / 16, rows => RangeBytes + rows.map(RowBytes + _.getSizeInBytes).sum)
 
   private val Magic = "PAR1".getBytes(StandardCharsets.US_ASCII)
 
@@ -441,17 +478,30 @@ object LocalScan {
     spark.sessionState.conf.sessionLocalTimeZone
 }
 
-/** A map that keeps its `max` most recently used entries: for values
-  * derived from immutable inputs, such as a listed file's footer.
+/** A map that keeps its most recently used entries up to a total
+  * `weight` of `max` (by default each entry weighs 1, so `max` counts
+  * entries): for values derived from immutable inputs, such as a listed
+  * file's footer. An entry heavier than `max` alone is not kept.
   */
-private[graft] final class Bounded[K, V](max: Int) {
-  private val m = new java.util.LinkedHashMap[K, V](16, 0.75f, true) {
-    override def removeEldestEntry(e: java.util.Map.Entry[K, V]): Boolean = size > max
+private[graft] final class Bounded[K, V](max: Long, weight: V => Long = (_: V) => 1L) {
+  // values with their weights, least recently used first
+  private val m = new java.util.LinkedHashMap[K, (V, Long)](16, 0.75f, true)
+  private var total = 0L
+
+  def get(k: K): Option[V] = m.synchronized(Option(m.get(k)).map(_._1))
+
+  def put(k: K, v: V): Unit = {
+    val w = weight(v)
+    m.synchronized {
+      Option(m.remove(k)).foreach(total -= _._2)
+      if (w <= max) {
+        m.put(k, v -> w)
+        total += w
+        val eldest = m.values.iterator
+        while (total > max) { total -= eldest.next()._2; eldest.remove() }
+      }
+    }
   }
-
-  def get(k: K): Option[V] = m.synchronized(Option(m.get(k)))
-
-  def put(k: K, v: V): Unit = m.synchronized(m.put(k, v))
 
   /** The value of `k`, computed by `v` (outside the lock) when absent. */
   def getOrElseUpdate(k: K, v: => V): V =

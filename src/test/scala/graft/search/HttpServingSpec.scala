@@ -355,7 +355,9 @@ class HttpServingSpec extends SparkSpec {
       (1 to 32).map(u => "/api/search/user" -> ("id" -> s"user$u"))
     val expected = reads.map { case (path, (k, v)) => adhoc(path)(Map(k -> v)) }
     val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-    try {
+    // the first pass decodes the stores' row groups as the threads meet
+    // them; the second serves every read from the kept rows
+    try for (pass <- Seq("cold", "warm")) withClue(s"$pass row cache: ") {
       // every thread walks every read, each from its own offset, so the
       // three routes and their shared expressions run side by side
       val served = (0 until 4).map { t =>
@@ -371,6 +373,104 @@ class HttpServingSpec extends SparkSpec {
           s"differs from ad hoc:\n$body\n${expected(i)}")
       }
     } finally pool.shutdown()
+  }
+
+  /** Tweets `ids` by `nUsers` users: tweet `i` is tagged `t<i % 11>` and
+    * `mark`, and its text ends in `mark`.
+    */
+  private def tweetsOf(ids: Seq[Int], nUsers: Int, mark: String) =
+    ids.map(i => (i.toString, (i % nUsers + 1).toString, s"spark job post $i word${i % 7} $mark",
+        Seq(s"t${i % 11}", mark), f"2021-03-${i % 28 + 1}%02dT${i % 24}%02d:00:00Z"))
+      .toDF("id", "userID", "tweetText", "tweetHashtags", "tweetDateTime")
+
+  private def usersOf(ids: Seq[Int], name: Int => String) =
+    ids.map(i => (i.toString, s"user$i", name(i))).toDF("id", "userScreenName", "userName")
+
+  test("a repeated stored read decodes no row: the timeline probe, the " +
+      "BM25 top-k and every stored route serve the same rows from the kept " +
+      "row groups") {
+    val tweets = tweetsOf(1 to 120, 30, "v1")
+    val users = usersOf(1 to 31, i => s"User $i")
+    val root = java.nio.file.Files.createTempDirectory("graft-http-kept")
+    val (tidx, bm25) = (root.resolve("tidx").toString, root.resolve("bm25").toString)
+    HttpServing.buildTweetIndex(tweets, users, tidx)
+    BM25Index.build(tweets, "id", "tweetText", bm25)
+    def plain(t: graft.util.LocalScan.Table) = t.schema.fieldNames.toSeq.map(t.values)
+    def repeated[A](what: String)(read: => A): Unit = {
+      val (first, cold) = graft.util.LocalScan.reads(read)
+      val (second, warm) = graft.util.LocalScan.reads(read)
+      assert(cold.decoded > 0, s"$what: the first read decoded nothing: $cold")
+      assert(warm.decoded == 0, s"$what: the repeated read decoded ${warm.decoded} rows")
+      assert(warm.files == cold.files && warm.rows == cold.rows, s"$what: $cold, then $warm")
+      assert(second == first, s"$what: the repeated read differs:\n$second\n$first")
+    }
+    repeated("timeline probe")(ServingStores.timelineProbe(spark, s"$tidx/by_user", "userID", "7")
+      .collect().toSeq)
+    repeated("BM25 top-k")(plain(BM25Index.topKRows(spark, bm25, Seq("word3", "post"), 10)))
+    // each route first reads a store the reads above left untouched
+    val stored = HttpServing.referenceRoutes(tweets, users,
+      bm25IndexDir = Some(bm25), tweetIndexDir = Some(tidx))
+    val adhoc = HttpServing.referenceRoutes(tweets, users)
+    for ((path, (k, v)) <- Seq("/api/search/query" -> ("query" -> "word5 job"),
+        "/api/search/hashtag" -> ("tag" -> "t4"), "/api/search/user" -> ("id" -> "user9"))) {
+      repeated(s"$path?$k=$v")(stored(path)(Map(k -> v)))
+      assert(stored(path)(Map(k -> v)) == adhoc(path)(Map(k -> v)), s"$path?$k=$v")
+    }
+  }
+
+  test("a warm row cache never serves a stale or missing row: after an " +
+      "append, an upsert, a compaction with reclaim and a rebuild, every " +
+      "stored route is byte-equal to the ad-hoc route") {
+    var tweets = tweetsOf(1 to 80, 20, "v1")
+    var users = usersOf(1 to 20, i => s"User $i")
+    val root = java.nio.file.Files.createTempDirectory("graft-http-stale")
+    val (tidx, bm25) = (root.resolve("tidx").toString, root.resolve("bm25").toString)
+    HttpServing.buildTweetIndex(tweets, users, tidx)
+    BM25Index.build(tweets, "id", "tweetText", bm25)
+    val reads = Seq("spark job", "word3 post", "edited", "v2 word1").map(q =>
+        "/api/search/query" -> ("query" -> q)) ++
+      Seq("t0", "t4", "t9", "v1", "v2", "nosuch").map(t => "/api/search/hashtag" -> ("tag" -> t)) ++
+      Seq(1, 3, 7, 12, 21, 22).map(u => "/api/search/user" -> ("id" -> s"user$u")) ++
+      Seq("/api/search/user" -> ("id" -> "nobody"))
+    // every stored route, byte-equal to the ad-hoc route over the corpus
+    // as it now stands; the stored reads also warm the cache for the next step
+    def check(step: String): Unit = {
+      val stored = HttpServing.referenceRoutes(tweets, users,
+        bm25IndexDir = Some(bm25), tweetIndexDir = Some(tidx))
+      val adhoc = HttpServing.referenceRoutes(tweets, users)
+      reads.foreach { case (path, (k, v)) =>
+        val (a, b) = (adhoc(path)(Map(k -> v)), stored(path)(Map(k -> v)))
+        assert(b == a, s"after $step, $path?$k=$v: stored envelope differs from ad hoc:\n$b\n$a")
+      }
+    }
+    check("the build")
+    // new tweets, two of them by new users
+    val added = tweetsOf(81 to 100, 22, "v1")
+    val newUsers = usersOf(21 to 22, i => s"User $i")
+    HttpServing.appendTweetIndex(added, newUsers, tidx)
+    BM25Index.appendSegment(added, "id", "tweetText", bm25, "seg-00001")
+    tweets = tweets.unionByName(added)
+    users = users.unionByName(newUsers)
+    check("an append")
+    // edited tweets (new text, tags and time) and renamed users: tombstones
+    // in every store; the index's scores refresh only at its compaction
+    val edited = tweetsOf(Seq(5, 50, 90), 22, "v2").withColumn("tweetText",
+      concat(col("tweetText"), lit(" edited")))
+    val renamed = usersOf(Seq(3, 21), i => s"User $i renamed")
+    HttpServing.upsertTweetIndex(edited, renamed, tidx)
+    BM25Index.upsertSegment(edited, "id", "tweetText", bm25, "edit-00001")
+    BM25Index.compact(spark, bm25)
+    tweets = Collections.upsert(tweets, edited, "id")
+    users = Collections.upsert(users, renamed, "id")
+    check("an upsert")
+    HttpServing.compactTweetIndex(spark, tidx)
+    assert(StoreAdmin.reclaim(tidx).nonEmpty && StoreAdmin.reclaim(bm25).nonEmpty)
+    check("a compaction and reclaim")
+    // a rebuild over the existing manifest: the next version, new files
+    users = users.withColumn("userName", concat(col("userName"), lit(" rebuilt")))
+    ServingStores.buildTimeline(users, "id", s"$tidx/users_by_id",
+      buckets = ServingStores.bucketsFor(users))
+    check("a rebuild")
   }
 
   test("missing params and unknown users return the error envelope, HTTP 200") {
