@@ -402,7 +402,8 @@ object ServingStores {
     * key sort keeps each key's rows in few row groups. A row is kept when
     * its key's string form is one of the values' and no listed tombstone
     * outranks it; with `top`, only its first rows are held while they
-    * stream, so a key with many rows costs no more memory than the bound.
+    * stream, so a key with many rows costs no more memory than the bound
+    * and the copies of the one range being kept (`LocalScan.rows`).
     * The rows hold the store's columns but `__bucket`, `__gen` and `drop`.
     * Building them lists no directory, infers nothing, builds no query and
     * starts no Spark job, so request cost is the matching row groups,

@@ -63,13 +63,19 @@ import org.apache.spark.sql.{Column, DataFrame, GraftPlanBridge, SparkSession}
   * changed in place: a new write, tombstone or fold arrives as a new
   * listed name. So what is read from a listed file can be kept under its
   * (absolute path, length): each file's footer is read once ([[ranges]]),
-  * and the rows decoded from each of its byte ranges are kept in one
-  * process-wide cache bounded by bytes ([[rows]]). Tombstones are applied
-  * after the read, on plain values, so a kept range never hides a write.
+  * and the rows decoded from a byte range read again soon after are kept
+  * in one process-wide cache bounded by bytes ([[rows]]). Tombstones are
+  * applied after the read, on plain values, so a kept range never hides a
+  * write.
   */
 object LocalScan {
 
   private type Reader = PartitionedFile => Iterator[InternalRow]
+
+  /** A byte range read: the reader, the file's absolute path and length,
+    * the range's start and end.
+    */
+  private type RangeKey = (Reader, String, Long, Long, Long)
 
   private val readers =
     TrieMap.empty[(SparkContext, Map[String, String], StructType, StructType), Reader]
@@ -82,7 +88,12 @@ object LocalScan {
 
   private def reader(spark: SparkSession, data: StructType, parts: StructType): Reader =
     readers.getOrElseUpdate((spark.sparkContext, confs(spark), data, parts), {
-      readers.keys.filter(_._1.isStopped).foreach(readers.remove)
+      // a stopped context's readers, and the rows they decoded, go
+      readers.keys.filter(_._1.isStopped).foreach(k =>
+        readers.remove(k).foreach { gone =>
+          cached.removeKeys(_._1 eq gone)
+          seen.synchronized(seen.keySet.removeIf(_._1 eq gone))
+        })
       new ParquetFileFormat().buildReaderWithPartitionValues(spark, data, parts, data,
         Nil, Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), hadoopConf(spark))
     })
@@ -106,16 +117,19 @@ object LocalScan {
     * served, as absolute paths, whether their rows were kept or decoded;
     * the rows examined before any plain-value test; the footers read to
     * prune row groups (a file's footer is read once, then kept:
-    * [[ranges]]); and the rows the parquet reader decoded, for the byte
-    * ranges not already kept ([[rows]]).
+    * [[ranges]]); the rows the parquet reader decoded, for the byte
+    * ranges not already kept ([[rows]]); and the most rows one read held
+    * at once for its result.
     */
-  final case class Reads(files: Seq[String], rows: Long, footers: Int, decoded: Long)
+  final case class Reads(files: Seq[String], rows: Long, footers: Int, decoded: Long,
+                         held: Int)
 
   private final class Recorder {
     val files = mutable.Buffer.empty[String]
     var rows = 0L
     var footers = 0
     var decoded = 0L
+    var held = 0
   }
 
   private val recording = new ThreadLocal[Recorder]
@@ -127,12 +141,14 @@ object LocalScan {
     val outer = recording.get()
     val mine = new Recorder
     recording.set(mine)
-    try { val a = body; (a, Reads(mine.files.toSeq, mine.rows, mine.footers, mine.decoded)) }
-    finally {
+    try {
+      val a = body
+      (a, Reads(mine.files.toSeq, mine.rows, mine.footers, mine.decoded, mine.held))
+    } finally {
       recording.set(outer)
       if (outer != null) {
         outer.files ++= mine.files; outer.rows += mine.rows; outer.footers += mine.footers
-        outer.decoded += mine.decoded
+        outer.decoded += mine.decoded; outer.held = outer.held max mine.held
       }
     }
   }
@@ -147,7 +163,8 @@ object LocalScan {
 
   /** The first `n` rows under `order`, as `orderBy(order: _*).limit(n)`
     * gives them: the bound of a read ([[rows]]), which then holds at
-    * most `2n` rows while they stream.
+    * most `2n` rows for its result while they stream, besides the copies
+    * of the one range it may be keeping ([[rangeMax]]).
     */
   final case class Top(n: Int, order: Column*)
 
@@ -166,10 +183,15 @@ object LocalScan {
     * reader. With `top`, only its first rows are held and returned, in
     * its order.
     *
-    * The rows of each byte range read are kept ([[cached]]), so a later
-    * read of the same range runs `keep` over them and decodes nothing.
-    * The rows returned are those kept copies: read them, never change
-    * them.
+    * The rows of a byte range read again soon enough are kept
+    * ([[cached]], [[again]]), so a later read of the same range runs
+    * `keep` over them and decodes nothing. Adjacent ranges not kept are
+    * decoded with one open of the reader, and split into ranges by the
+    * row counts of their footer. The rows of a range not to be kept, or
+    * heavier than [[rangeMax]], stream through `keep` as they decode and
+    * only the rows kept are copied, so reading it holds no more than
+    * [[rangeMax]] beyond the result. The rows returned are copies,
+    * possibly the kept ones: read them, never change them.
     */
   def rows(spark: SparkSession, dest: String, schema: StructType, base: String,
            partitions: Seq[String], files: Seq[String],
@@ -199,19 +221,47 @@ object LocalScan {
         lazy val file = SparkPath.fromPath(new HPath(path.toUri))
         val size = StoreFs.size(path)
         val name = path.toAbsolutePath.normalize.toString
-        ranges(spark, path, size, prune).foreach { case (start, end) =>
-          val kept = cached.getOrElseUpdate((open, name, size, start, end), {
-            val it = open(PartitionedFile(values, file, start, end - start, Array.empty, 0L, size,
-              Map.empty))
-            val rows = try it.map(unsafe(_).copy()).toArray
-              finally it match { case c: AutoCloseable => c.close(); case _ => () }
-            rec.foreach(_.decoded += rows.length)
-            rows
-          })
-          rec.foreach(_.rows += kept.length)
-          kept.foreach(r => if (keep(r)) out.offer(r))
+        val spans = ranges(spark, path, size, prune)
+        def key(s: Span): RangeKey = (open, name, size, s.start, s.end)
+        val found = spans.map(s => cached.get(key(s)))
+        // the rows of a run of spans not kept, each span kept while it fits
+        def decode(run: Seq[Span]): Unit = {
+          val it = open(PartitionedFile(values, file, run.head.start, run.last.end - run.head.start,
+            Array.empty, 0L, size, Map.empty))
+          try run.foreach { s =>
+            var copies = if (again(key(s))) mutable.ArrayBuffer.empty[UnsafeRow] else null
+            var weight = RangeBytes
+            var n = 0L
+            while (n < s.rows && it.hasNext) {
+              val r = it.next()
+              n += 1
+              if (copies == null) { if (keep(r)) out.offer(unsafe(r).copy()) }
+              else {
+                val u = unsafe(r).copy()
+                copies += u
+                weight += RowBytes + u.getSizeInBytes
+                if (weight > rangeMax) { copies = null; heavy(key(s)) }
+                if (keep(u)) out.offer(u)
+              }
+            }
+            rec.foreach { x => x.rows += n; x.decoded += n }
+            if (copies != null) cached.put(key(s), copies.toArray)
+          } finally it match { case c: AutoCloseable => c.close(); case _ => () }
+        }
+        var i = 0
+        while (i < spans.size) found(i) match {
+          case Some(kept) =>
+            rec.foreach(_.rows += kept.length)
+            kept.foreach(r => if (keep(r)) out.offer(r))
+            i += 1
+          case None =>
+            var j = i + 1
+            while (j < spans.size && found(j).isEmpty && spans(j).start == spans(j - 1).end) j += 1
+            decode(spans.slice(i, j))
+            i = j
         }
       }
+      rec.foreach(r => r.held = r.held max out.peak)
       out.result
     }
 
@@ -219,34 +269,42 @@ object LocalScan {
     * bound `(n, ordering)` the first `n` under the ordering, ties in offer
     * order — a stable sort's first `n`. Cutting back to those `n` whenever
     * twice as many are held keeps the ties' order and holds at most `2n`.
+    * `peak` is the most rows held at once.
     */
   private final class Held(bound: Option[(Int, Ordering[InternalRow])]) {
     private val held = mutable.ArrayBuffer.empty[InternalRow]
+    var peak = 0
 
     private def first(n: Int, o: Ordering[InternalRow]) = held.sorted(o).take(n)
 
     def offer(r: InternalRow): Unit = {
-      held += r
       bound.foreach { case (n, o) =>
-        if (held.size - n > n) { val kept = first(n, o); held.clear(); held ++= kept }
+        if (held.size - n >= n) { val kept = first(n, o); held.clear(); held ++= kept }
       }
+      held += r
+      peak = peak max held.size
     }
 
     def result: Seq[InternalRow] = bound.fold(held.toSeq) { case (n, o) => first(n, o).toSeq }
   }
 
+  /** A byte range of a parquet file, from `start` to `end`: the reader
+    * decodes the row groups whose midpoints lie in it. `rows` is their
+    * row count, when the file's footer was read.
+    */
+  private final case class Span(start: Long, end: Long, rows: Long = Long.MaxValue)
+
   /** The byte ranges of the parquet file at `path` that hold the row
     * groups whose min/max statistics admit every one of `prune`: one per
-    * admitted group, from its start to the next group's — the reader
-    * decodes the row groups whose midpoints lie in the range it is given —
-    * so a group decoded for one key set serves every later key set
-    * ([[cached]]). The whole file when it holds one row group or no
-    * filter converts; none when every group is ruled out.
+    * admitted group, from its start to the next group's, so a group
+    * decoded for one key set serves every later key set ([[cached]]).
+    * The whole file when it holds one row group or no filter converts;
+    * none when every group is ruled out.
     */
   private def ranges(spark: SparkSession, path: Path, size: Long,
-                     prune: Seq[sources.Filter]): Seq[(Long, Long)] = {
+                     prune: Seq[sources.Filter]): Seq[Span] = {
     val sql = spark.sessionState.conf
-    val whole = Seq(0L -> size)
+    val whole = Seq(Span(0L, size))
     if (prune.isEmpty || !sql.parquetFilterPushDown) whole
     else footers.getOrElseUpdate(path.toAbsolutePath.normalize.toString -> size, {
       Option(recording.get()).foreach(_.footers += 1)
@@ -264,8 +322,10 @@ object LocalScan {
           file.getSchema).asScala.toSeq
         val kept = groups.indices.filter(i => admitted.exists(_ eq groups(i)))
         def end(i: Int) = if (i + 1 < groups.size) groups(i + 1).getStartingPos else size
-        if (groups.size <= 1 && kept.size == groups.size) whole
-        else kept.map(i => groups(i).getStartingPos -> end(i))
+        def span(i: Int, start: Long) = Span(start, end(i), groups(i).getRowCount)
+        if (groups.size == 1 && kept.size == 1) Seq(span(0, 0L))
+        else if (groups.isEmpty) whole
+        else kept.map(i => span(i, groups(i).getStartingPos))
       }
     }
   }
@@ -274,10 +334,16 @@ object LocalScan {
   private val footers = new Bounded[(String, Long), Option[ParquetMetadata]](4096)
 
   /** The heap a kept range and a kept row take beyond the rows' data:
-    * their key, arrays and object headers.
+    * the range's key and array; a row's object, its byte array's header
+    * and its slot in the range's array (about 60 bytes).
     */
   private val RangeBytes = 256L
-  private val RowBytes = 32L
+  private val RowBytes = 64L
+
+  /** The most the kept rows of one range may weigh: a quarter of the
+    * cache. A heavier range streams on every read. Tests lower it.
+    */
+  @volatile private[graft] var rangeMax: Long = Runtime.getRuntime.maxMemory / 64
 
   /** Rows already decoded, by the reader that decoded them — one per
     * (context, SQL confs, data layout, partition layout), so a session
@@ -287,8 +353,41 @@ object LocalScan {
     * most a sixteenth of the heap and drops the least recently used
     * ranges past it.
     */
-  private val cached = new Bounded[(Reader, String, Long, Long, Long), Array[UnsafeRow]](
+  private val cached = new Bounded[RangeKey, Array[UnsafeRow]](
     Runtime.getRuntime.maxMemory / 16, rows => RangeBytes + rows.map(RowBytes + _.getSizeInBytes).sum)
+
+  /** Ranges read and not kept, least recently read first, each with
+    * whether it may be kept (not once its rows weighed more than
+    * [[rangeMax]]): as many as the cache can hold ranges (at least 16, at
+    * most 65 536).
+    */
+  private val seen = new java.util.LinkedHashMap[RangeKey, java.lang.Boolean](16, 0.75f, true)
+
+  /** Whether range `k` is read again soon enough to be kept: whether it
+    * was read and not kept while at most as many other ranges not kept
+    * were read as the cache can hold. Copying a range's rows costs more
+    * than streaming them (about twice the decode of an orders bucket at
+    * ~sf1), so a range read once, or in a scan over more ranges than the
+    * cache can hold, streams each time rather than being kept and evicted
+    * unread.
+    */
+  private def again(k: RangeKey): Boolean = seen.synchronized {
+    Option(seen.get(k)) match {
+      case Some(light) =>
+        if (light) seen.remove(k)
+        light
+      case None =>
+        seen.put(k, true)
+        val oldest = seen.keySet.iterator
+        while (seen.size > math.max(16L, math.min(cached.capacity, 1L << 16))) {
+          oldest.next(); oldest.remove()
+        }
+        false
+    }
+  }
+
+  /** Marks range `k` as never to be kept. */
+  private def heavy(k: RangeKey): Unit = seen.synchronized(seen.put(k, false))
 
   private val Magic = "PAR1".getBytes(StandardCharsets.US_ASCII)
 
@@ -490,6 +589,9 @@ private[graft] final class Bounded[K, V](max: Long, weight: V => Long = (_: V) =
 
   def get(k: K): Option[V] = m.synchronized(Option(m.get(k)).map(_._1))
 
+  /** How many entries it can hold at its entries' mean weight. */
+  def capacity: Long = m.synchronized(if (total == 0) max else m.size.toLong * max / total)
+
   def put(k: K, v: V): Unit = {
     val w = weight(v)
     m.synchronized {
@@ -500,6 +602,15 @@ private[graft] final class Bounded[K, V](max: Long, weight: V => Long = (_: V) =
         val eldest = m.values.iterator
         while (total > max) { total -= eldest.next()._2; eldest.remove() }
       }
+    }
+  }
+
+  /** Drops the entries whose key `p` accepts. */
+  def removeKeys(p: K => Boolean): Unit = m.synchronized {
+    val it = m.entrySet.iterator
+    while (it.hasNext) {
+      val e = it.next()
+      if (p(e.getKey)) { total -= e.getValue._2; it.remove() }
     }
   }
 

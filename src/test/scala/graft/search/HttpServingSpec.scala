@@ -386,9 +386,9 @@ class HttpServingSpec extends SparkSpec {
   private def usersOf(ids: Seq[Int], name: Int => String) =
     ids.map(i => (i.toString, s"user$i", name(i))).toDF("id", "userScreenName", "userName")
 
-  test("a repeated stored read decodes no row: the timeline probe, the " +
-      "BM25 top-k and every stored route serve the same rows from the kept " +
-      "row groups") {
+  test("a stored read repeated past its second read decodes no row: the " +
+      "timeline probe, the BM25 top-k and every stored route serve the same " +
+      "rows from the row groups the second read kept") {
     val tweets = tweetsOf(1 to 120, 30, "v1")
     val users = usersOf(1 to 31, i => s"User $i")
     val root = java.nio.file.Files.createTempDirectory("graft-http-kept")
@@ -396,13 +396,15 @@ class HttpServingSpec extends SparkSpec {
     HttpServing.buildTweetIndex(tweets, users, tidx)
     BM25Index.build(tweets, "id", "tweetText", bm25)
     def plain(t: graft.util.LocalScan.Table) = t.schema.fieldNames.toSeq.map(t.values)
+    // a range read once streams; read again soon after, its rows are kept
     def repeated[A](what: String)(read: => A): Unit = {
       val (first, cold) = graft.util.LocalScan.reads(read)
-      val (second, warm) = graft.util.LocalScan.reads(read)
+      val (second, _) = graft.util.LocalScan.reads(read)
+      val (third, warm) = graft.util.LocalScan.reads(read)
       assert(cold.decoded > 0, s"$what: the first read decoded nothing: $cold")
-      assert(warm.decoded == 0, s"$what: the repeated read decoded ${warm.decoded} rows")
+      assert(warm.decoded == 0, s"$what: the third read decoded ${warm.decoded} rows")
       assert(warm.files == cold.files && warm.rows == cold.rows, s"$what: $cold, then $warm")
-      assert(second == first, s"$what: the repeated read differs:\n$second\n$first")
+      assert(second == first && third == first, s"$what: a repeated read differs:\n$second\n$third\n$first")
     }
     repeated("timeline probe")(ServingStores.timelineProbe(spark, s"$tidx/by_user", "userID", "7")
       .collect().toSeq)
@@ -433,14 +435,19 @@ class HttpServingSpec extends SparkSpec {
       Seq(1, 3, 7, 12, 21, 22).map(u => "/api/search/user" -> ("id" -> s"user$u")) ++
       Seq("/api/search/user" -> ("id" -> "nobody"))
     // every stored route, byte-equal to the ad-hoc route over the corpus
-    // as it now stands; the stored reads also warm the cache for the next step
+    // as it now stands; reading each twice also keeps its ranges for the
+    // next step
     def check(step: String): Unit = {
       val stored = HttpServing.referenceRoutes(tweets, users,
         bm25IndexDir = Some(bm25), tweetIndexDir = Some(tidx))
       val adhoc = HttpServing.referenceRoutes(tweets, users)
       reads.foreach { case (path, (k, v)) =>
-        val (a, b) = (adhoc(path)(Map(k -> v)), stored(path)(Map(k -> v)))
-        assert(b == a, s"after $step, $path?$k=$v: stored envelope differs from ad hoc:\n$b\n$a")
+        val a = adhoc(path)(Map(k -> v))
+        for (read <- 1 to 2) {
+          val b = stored(path)(Map(k -> v))
+          assert(b == a, s"after $step, $path?$k=$v (read $read): stored envelope differs " +
+            s"from ad hoc:\n$b\n$a")
+        }
       }
     }
     check("the build")

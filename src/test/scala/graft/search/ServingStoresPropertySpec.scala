@@ -476,6 +476,57 @@ class ServingStoresPropertySpec extends SparkSpec {
     StoreAdmin.truncate(dest)
   }
 
+  test("a probe decodes the row groups no earlier read kept, keeps those it " +
+      "reads a second time, and each group it keeps from a run serves later " +
+      "probes alone") {
+    val df = (0 until 2000).map(i => (i % 40L, i)).toDF("fk", "v")
+    val dest = java.nio.file.Files.createTempDirectory("graft-tl-runs").toString
+    smallRowGroups(1024)(ServingStores.buildTimeline(df, "fk", dest, buckets = 1))
+    def vs(d: DataFrame) = d.select(col("v")).collect().map(_.getInt(0)).sorted.toSeq
+    def probe(keys: Seq[Long]) = LocalScan.reads(
+      vs(ServingStores.timelineProbeMany(spark, dest, "fk", keys)))
+    def expected(keys: Seq[Long]) = vs(df.filter(col("fk").isin(keys: _*)))
+    val (one, r1) = probe(Seq(17L))
+    assert(one == expected(Seq(17L)) && r1.decoded == r1.rows && r1.decoded > 0, s"$r1")
+    // read again, the groups of 17 are kept
+    val (again, r2) = probe(Seq(17L))
+    assert(again == one && r2.decoded == r1.decoded, s"the second read: $r2")
+    val (three, r3) = probe(Seq(16L, 17L, 18L))
+    assert(three == expected(Seq(16L, 17L, 18L)), s"$r3")
+    assert(r3.decoded > 0 && r3.decoded == r3.rows - r1.rows, s"$r3")
+    // every group: the first read keeps the groups of 16 and 18 from inside
+    // a run, the second every other group
+    val every = 0L until 40L
+    for ((pass, decoded) <- Seq(1 -> (df.count() - r1.rows), 2 -> (df.count() - r3.rows))) {
+      val (all, ra) = probe(every)
+      assert(all == expected(every) && ra.decoded == decoded, s"pass $pass: $ra")
+    }
+    // each group of those runs was kept under its own range
+    for (k <- Seq(0L, 16L, 17L, 18L, 21L, 39L)) {
+      val (got, r) = probe(Seq(k))
+      assert(got == expected(Seq(k)) && r.decoded == 0, s"fk $k: $r")
+    }
+    StoreAdmin.truncate(dest)
+  }
+
+  test("a range heavier than the kept-range bound is not kept: a Top-bounded " +
+      "probe streams it holding at most 2n rows, and every repeat decodes it again") {
+    val df = (0 until 2000).map(i => (1L, i)).toDF("fk", "v")
+    val dest = java.nio.file.Files.createTempDirectory("graft-tl-heavy").toString
+    ServingStores.buildTimeline(df, "fk", dest, buckets = 1)
+    val bound = LocalScan.rangeMax
+    // the second read passes the bound while it copies the range; the
+    // range then streams on every read
+    LocalScan.rangeMax = 50000L
+    try for (pass <- 1 to 4) {
+      val (top, r) = LocalScan.reads(ServingStores.timelineProbe(spark, dest, "fk", 1L,
+        Some(LocalScan.Top(10, col("v").desc))).select(col("v")).collect().map(_.getInt(0)).toSeq)
+      assert(top == (1999 to 1990 by -1), s"pass $pass")
+      assert(r.decoded == 2000 && r.held <= 20, s"pass $pass: $r")
+    } finally LocalScan.rangeMax = bound
+    StoreAdmin.truncate(dest)
+  }
+
   test("a probe bounded by Top serves orderBy.limit of its key while holding " +
       "the bound: one key with more rows than the cap, ties in read order") {
     val df = (0 until 300).map(i => (i.toLong, if (i % 3 == 0) List("hot", "x") else List("hot"),

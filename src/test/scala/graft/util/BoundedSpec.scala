@@ -46,4 +46,15 @@ class BoundedSpec extends AnyFunSuite {
     assert(heavy == "yyyyy" && computed == 2, "a value not kept is computed again")
     assert(m.get("a").contains("xx"))
   }
+
+  test("removeKeys drops the entries whose key matches and frees their weight") {
+    val m = new Bounded[(Int, String), String](6, _.length.toLong)
+    m.put(1 -> "a", "xx")
+    m.put(2 -> "b", "yy")
+    m.put(1 -> "c", "zz")
+    m.removeKeys(_._1 == 1)
+    assert(m.get(1 -> "a").isEmpty && m.get(1 -> "c").isEmpty && m.get(2 -> "b").contains("yy"))
+    m.put(3 -> "d", "wwww")
+    assert(m.get(2 -> "b").contains("yy") && m.get(3 -> "d").nonEmpty, "6 of 6 fits")
+  }
 }
