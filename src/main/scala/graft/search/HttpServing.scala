@@ -3,6 +3,7 @@ package graft.search
 import java.net.{InetSocketAddress, URLDecoder}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.Executors
+import java.util.concurrent.atomic.AtomicInteger
 
 import scala.util.control.NonFatal
 
@@ -49,43 +50,81 @@ import org.apache.spark.unsafe.types.UTF8String
   * A request that fails still answers with the reference's error
   * envelope, and its cause goes to stderr as
   * `[httpserving] <path> failed: <exception>`.
+  *
+  * Routes match their exact path (`@GetMapping("/query")`): any other
+  * path under a route's prefix answers 404 with an empty body, and any
+  * method but `GET` and `HEAD` answers 405 with `Allow: GET, HEAD`.
+  *
+  * Responses go out on no-delay sockets (`TCP_NODELAY`). The JDK server
+  * flushes a response's headers as their own segment; with Nagle's
+  * algorithm on, the body then waits for the client's delayed ACK of
+  * that segment (about 40 ms on Linux), ten times a stored read's own
+  * cost. The JDK server turns Nagle off only when the
+  * system property `sun.net.httpserver.nodelay` is `true`, and reads it
+  * once, when the first JDK `HttpServer` in the JVM is created. So this
+  * object sets it to `true`, unless it is already set, before its first
+  * server: the setting is process-wide, and it takes effect only if
+  * nothing in the JVM created a JDK `HttpServer` earlier.
   */
 object HttpServing {
 
+  if (System.getProperty("sun.net.httpserver.nodelay") == null)
+    System.setProperty("sun.net.httpserver.nodelay", "true")
+
   /** The reference's one error envelope (`Handler.java:66-71`). */
   private val ErrorJson = """{"status_code":500,"message":"Internal Server Error"}"""
+
+  /** Numbers the worker threads of every server this process starts. */
+  private val workers = new AtomicInteger
 
   /** A route: decoded query params → the response JSON string. */
   type Route = Map[String, String] => String
 
   /** Start an HTTP server on `port` (0 = any free port; read it back from
-    * `server.getAddress.getPort`). Each route's body runs on a worker
-    * thread; exceptions become the reference's error envelope, with the
-    * cause logged to stderr.
+    * `server.getAddress.getPort`). Each route's body runs on one of 4
+    * daemon worker threads named `httpserving-worker-<n>`, which
+    * `server.stop` leaves idle but never keeps the JVM alive; exceptions
+    * become the reference's error envelope, with the cause logged to
+    * stderr. A `HEAD` runs the route and answers its headers only.
     */
   def start(port: Int, routes: Map[String, Route]): HttpServer = {
     val server = HttpServer.create(new InetSocketAddress(port), 0)
     routes.foreach { case (path, route) =>
       server.createContext(path, new HttpHandler {
-        override def handle(ex: HttpExchange): Unit = {
-          val body =
-            try route(parseQuery(ex.getRequestURI.getRawQuery))
-            catch {
-              case NonFatal(e) =>
-                System.err.println(s"[httpserving] $path failed: $e")
-                ErrorJson
+        override def handle(ex: HttpExchange): Unit = try {
+          val method = ex.getRequestMethod
+          if (ex.getRequestURI.getPath != path) ex.sendResponseHeaders(404, -1)
+          else if (method != "GET" && method != "HEAD") {
+            ex.getResponseHeaders.add("Allow", "GET, HEAD")
+            ex.sendResponseHeaders(405, -1)
+          } else {
+            val body =
+              try route(parseQuery(ex.getRequestURI.getRawQuery))
+              catch {
+                case NonFatal(e) =>
+                  System.err.println(s"[httpserving] $path failed: $e")
+                  ErrorJson
+              }
+            val bytes = body.getBytes(UTF_8)
+            ex.getResponseHeaders.add("Content-Type", "application/json")
+            // reference: @CrossOrigin("*") — the Angular UI is a separate origin
+            ex.getResponseHeaders.add("Access-Control-Allow-Origin", "*")
+            if (method == "HEAD") {
+              ex.getResponseHeaders.set("Content-Length", bytes.length.toString)
+              ex.sendResponseHeaders(200, -1)
+            } else {
+              ex.sendResponseHeaders(200, bytes.length.toLong)
+              ex.getResponseBody.write(bytes)
             }
-          val bytes = body.getBytes(UTF_8)
-          ex.getResponseHeaders.add("Content-Type", "application/json")
-          // reference: @CrossOrigin("*") — the Angular UI is a separate origin
-          ex.getResponseHeaders.add("Access-Control-Allow-Origin", "*")
-          ex.sendResponseHeaders(200, bytes.length.toLong)
-          val os = ex.getResponseBody
-          try os.write(bytes) finally os.close()
-        }
+          }
+        } finally ex.close()
       })
     }
-    server.setExecutor(Executors.newFixedThreadPool(4))
+    server.setExecutor(Executors.newFixedThreadPool(4, (r: Runnable) => {
+      val t = new Thread(r, s"httpserving-worker-${workers.incrementAndGet()}")
+      t.setDaemon(true)
+      t
+    }))
     server.start()
     server
   }

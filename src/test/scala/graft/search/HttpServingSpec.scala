@@ -480,6 +480,69 @@ class HttpServingSpec extends SparkSpec {
     check("a rebuild")
   }
 
+  private def send(port: Int, pathAndQuery: String, method: String): HttpResponse[String] =
+    client.send(HttpRequest.newBuilder(URI.create(s"http://localhost:$port$pathAndQuery"))
+        .method(method, HttpRequest.BodyPublishers.noBody()).build(),
+      HttpResponse.BodyHandlers.ofString())
+
+  test("a path that only starts with a route's path answers 404 with an empty body") {
+    withServer { port =>
+      for (q <- Seq("/api/search/queryfoo?query=spark", "/api/search/query/extra?query=spark")) {
+        val resp = get(port, q)
+        assert(resp.statusCode() == 404 && resp.body().isEmpty, s"$q: ${resp.statusCode()} ${resp.body()}")
+      }
+      assert(json(get(port, "/api/search/query?query=spark").body(), "$.count") == "1")
+    }
+  }
+
+  test("a method other than GET or HEAD answers 405 with Allow: GET, HEAD; " +
+      "HEAD answers GET's headers with no body") {
+    withServer { port =>
+      val post = send(port, "/api/search/query?query=spark", "POST")
+      assert(post.statusCode() == 405 && post.body().isEmpty, post.body())
+      assert(post.headers().firstValue("Allow").get() == "GET, HEAD")
+      val got = get(port, "/api/search/hashtag?tag=jobs")
+      val head = send(port, "/api/search/hashtag?tag=jobs", "HEAD")
+      assert(head.statusCode() == 200 && head.body().isEmpty, head.body())
+      assert(head.headers().firstValue("Content-Type").get() == "application/json")
+      assert(head.headers().firstValue("Content-Length").get() ==
+        got.body().getBytes("UTF-8").length.toString)
+    }
+  }
+
+  test("routes run on daemon threads named httpserving-worker-<n>; no " +
+      "non-daemon httpserving thread is alive after stop") {
+    val server = HttpServing.start(0, Map("/thread" -> (_ =>
+      s"${Thread.currentThread.getName} ${Thread.currentThread.isDaemon}")))
+    try {
+      val body = get(server.getAddress.getPort, "/thread").body()
+      assert(body.matches("httpserving-worker-\\d+ true"), body)
+    } finally server.stop(0)
+    val kept = Thread.getAllStackTraces.keySet.toArray(Array.empty[Thread]).filter(t =>
+      t.getName.startsWith("httpserving-") && t.isAlive && !t.isDaemon)
+    assert(kept.isEmpty, s"non-daemon threads outlive stop: ${kept.map(_.getName).toSeq}")
+  }
+
+  test("a response of a few KB does not wait on the client's delayed ACK: " +
+      "40 sequential GETs on one keep-alive connection take under 15 ms at the median") {
+    // with Nagle's algorithm on, the body segment waits for the ACK of the
+    // headers segment, so each request took 40 ms or more
+    val payload = "x" * 4096
+    val server = HttpServing.start(0, Map("/const" -> (_ => payload)))
+    val http1 = HttpClient.newBuilder().version(HttpClient.Version.HTTP_1_1).build()
+    try {
+      val req = HttpRequest.newBuilder(
+        URI.create(s"http://localhost:${server.getAddress.getPort}/const")).build()
+      val ms = (1 to 40).map { _ =>
+        val t0 = System.nanoTime()
+        val resp = http1.send(req, HttpResponse.BodyHandlers.ofString())
+        assert(resp.statusCode() == 200 && resp.body() == payload)
+        (System.nanoTime() - t0) / 1e6
+      }.sorted
+      assert(ms(ms.size / 2) < 15, s"median ${ms(ms.size / 2)} ms; all: ${ms.map(m => f"$m%.1f")}")
+    } finally server.stop(0)
+  }
+
   test("missing params and unknown users return the error envelope, HTTP 200") {
     withServer { port =>
       // the reference embeds errors in the body and always answers 200
